@@ -1,4 +1,5 @@
-"""Long-form differential fuzz: batch_extract_simple vs extract_turn.
+"""Long-form differential fuzz: batch_extract_simple and extract_batch
+vs extract_turn.
 
 The committed hypothesis suite (tests/test_fastbatch.py) runs 250
 derandomized examples per CI pass; this harness is the sustained
@@ -9,7 +10,11 @@ form-feed, entities incl. &#10;/&#60;/surrogate refs, lone and paired
 surrogates) that keeps the fallback gates honest — asserted
 match-or-fallback per row under seven configs (flagship, default,
 merge off, merge threshold 0, max_rec_lines=None, restricted
-dictionary, min_score=1.0).
+dictionary, min_score=1.0). Every batch is also run through
+``fastbatch.extract_batch`` (the engine's one dispatch), which must
+answer every row byte-identically to the per-turn oracle: with no
+roles in the plain and allow_formfeed modes, with the roles array in
+the routing mode.
 
 Last full run (2026-08-19, 3000 batches x 64 rows, seeds 1000..3999,
 markup + document grammars, cycling plain/allow_formfeed/roles modes
@@ -67,7 +72,7 @@ from sparkocr.config import DEFAULT_CONFIG, FLAGSHIP_CONFIG
 # enforce a weaker byte-exactness contract than CI; the module is
 # dependency-light (no pytest/hypothesis), so this harness stays
 # runnable from a bare interpreter.
-from fastbatch_compare import assert_matches
+from fastbatch_compare import assert_extract_batch, assert_matches
 
 PLAIN = (
     list("abcdefgh XYZ 0123456789")
@@ -167,6 +172,7 @@ def main(n_batches=2000, batch_size=64, seed0=1000):
         try:
             n_fast = assert_matches(texts, cfg, allow_formfeed=aff,
                                     roles=roles)
+            assert_extract_batch(texts, cfg, roles=roles)
         except AssertionError as e:
             raise AssertionError(
                 f"config {name} mode={mode}: {e}") from e

@@ -17,13 +17,13 @@ Row counts scale linearly with sf (sf1 == 10x the driver's sf0.1):
     embeddings 20k/sf
 
 Usage: python scripts/make_testdata.py SF OUTDIR  [--seed 42]
-e.g.   python scripts/make_testdata.py 1 /root/repo/.localdata/sf1
+e.g.   python scripts/make_testdata.py 1 .localdata/sf1 --seed 7
 """
 
 from __future__ import annotations
 
+import argparse
 import os
-import sys
 
 import numpy as np
 import pyarrow as pa
@@ -186,13 +186,14 @@ def gen(sf: float, outdir: str, seed: int = 42) -> None:
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    if len(args) != 2:
-        sys.exit(__doc__)
-    seed = 42
-    if "--seed" in sys.argv:
-        seed = int(sys.argv[sys.argv.index("--seed") + 1])
-    gen(float(args[0]), args[1], seed)
+    ap = argparse.ArgumentParser(
+        description=__doc__,
+        formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("sf", type=float, help="scale factor")
+    ap.add_argument("outdir", help="directory for the parquet tables")
+    ap.add_argument("--seed", type=int, default=42, help="RNG seed")
+    a = ap.parse_args()
+    gen(a.sf, a.outdir, a.seed)
 
 
 if __name__ == "__main__":

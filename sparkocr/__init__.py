@@ -12,8 +12,9 @@ Public surface map (reference analog in parens):
 
 - single-turn core:   :func:`extract_turn` (process_ocr), Det/Rec-level
   :func:`find_text_boxes` / :func:`predict_str`
-- Spark engine:       :class:`sparkocr.engine.SparkOcrEngine` — the 7
-  verbs (OcrRequest enum) as DataFrame functions
+- Spark engine:       :class:`sparkocr.engine.SparkOcrEngine` — the
+  OcrRequest verbs as DataFrame functions; per-row stage dispatch in
+  :func:`sparkocr.fastbatch.extract_batch`
 - layout parser:      :mod:`sparkocr.layout` (embedded documents)
 - scale machinery:    :mod:`sparkocr.checkpoint` (resume),
   :mod:`sparkocr.streaming`, :mod:`sparkocr.sources`

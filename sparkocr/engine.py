@@ -1,15 +1,19 @@
-"""The Spark engine: the reference's 7 public verbs (OcrRequest enum,
+"""The Spark engine: the reference's public verbs (OcrRequest enum,
 engine.rs:16-90) as DataFrame-returning functions.
 
 | reference request       | verb here                | shape |
 |-------------------------|--------------------------|-------|
 | GetTextRects            | ``spans(df)``            | + array<box struct> |
 | DetectText/GetTextImages| ``blocks(df)``           | + array<string> crops |
-| GetTextImagesEfficient  | ``blocks_fast(df)``      | same plan — AQE/Catalyst replaces the reference's cardinality-based crop-strategy dispatch (det.rs:167-171), intentionally not reimplemented |
 | RecognizeText           | ``recognize(df, col)``   | + struct(text, confidence, block_type) |
 | ProcessOcr              | ``extract(df)``          | full fused pipeline |
-| ProcessOcrEfficient     | ``extract_fast(df)``     | same plan (see above) |
 | Shutdown                | ``spark.stop()``         | session-managed |
+
+The reference's ``*Efficient`` requests differ only in choosing a crop
+strategy by cardinality (det.rs:167-171); Catalyst/AQE plans the same
+DataFrame either way, so they have no verb here. Per-row stage
+dispatch is ``fastbatch.extract_batch``; the verbs only move columns
+in and out of it.
 
 Execution model: all per-turn compute runs inside Arrow-batched pandas
 UDFs / mapInPandas (zero per-row Python UDFs); the fused ``extract`` is a
@@ -26,7 +30,7 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -39,7 +43,7 @@ from pyspark.sql.types import (
 )
 
 from .barrier import pin
-from .config import DEFAULT_CONFIG, FLAGSHIP_CONFIG, EngineConfig
+from .config import FLAGSHIP_CONFIG, EngineConfig
 from .detect import (
     TurnGrid,
     box_span,
@@ -47,8 +51,6 @@ from .detect import (
     find_text_boxes,
     find_text_boxes_batch,
 )
-from .pipeline import extract_turn
-from .recognize import classify_block, recognize_crop
 
 # ---------------------------------------------------------------------------
 # schemas
@@ -98,67 +100,14 @@ def _clean_text(v) -> Optional[str]:
     return v
 
 
-def _recognize_batch(raw_texts, cfg):
-    """Kernel of the RecognizeText verb, module-level so the surrogate
-    and poison-pool fallback paths are directly testable. In-domain
-    rows (markup-free canon, no surrogates) pool into one flat decode;
-    everything else goes through recognize_crop per row — markup canons
-    for the markup scoring branch, surrogate rows so the per-row
-    UTF-32 encode failure yields the same all-None row the old loop
-    produced. Returns (texts, confs, btypes) aligned with input."""
-    from .fastbatch import (
-        _canon_in_domain,
-        _no_surrogates,
-        decode_canons_flat,
-    )
-    from .recognize import canonicalize
-
-    n = len(raw_texts)
-    texts: list = [None] * n
-    confs: list = [None] * n
-    btypes: list = [None] * n
-    pool_idx, pool_canons = [], []
-    resid = []  # (row index, cleaned text)
-    for i, text in enumerate(raw_texts):
-        text = _clean_text(text)
-        if text is None:
-            continue
-        try:
-            canon = canonicalize(text, cfg.max_rec_lines)
-            if _no_surrogates(canon) and _canon_in_domain(canon):
-                pool_idx.append(i)
-                pool_canons.append(canon)
-                btypes[i] = classify_block(canon)
-                continue
-            resid.append((i, text))
-        except Exception:  # poison row must not kill the task
-            pass
-    if pool_canons:
-        try:
-            p_texts, p_confs = decode_canons_flat(pool_canons, cfg)
-            for i, t, c in zip(pool_idx, p_texts, p_confs):
-                texts[i], confs[i] = t, c
-        except Exception:  # poison pool → per-row containment
-            resid.extend((i, _clean_text(raw_texts[i])) for i in pool_idx)
-            for i in pool_idx:
-                btypes[i] = None
-    for i, text in resid:
-        try:
-            decoded, conf, canon = recognize_crop(text, cfg)
-            texts[i], confs[i] = decoded, conf
-            btypes[i] = classify_block(canon)
-        except Exception:  # poison row must not kill the task
-            texts[i] = confs[i] = btypes[i] = None
-    return texts, confs, btypes
-
-
-def _batched_grids(s):
-    """Shared prep for the detection-only verbs: clean every row, build
+def _detect_rows(s, cfg, to_row) -> pd.Series:
+    """Shared body of the detection-only verbs: clean every row, build
     a TurnGrid per valid row (per-row try — a surrogate-bearing row
-    fails its UTF-32 encode HERE and stays an empty result, the same
-    poison containment the per-row loops had), and return
-    (out, grids, idx) where ``out`` is pre-filled with [] and ``idx``
-    maps grids back to row positions."""
+    fails its UTF-32 encode HERE and stays an empty result), detect the
+    whole batch at once and map each row's boxes through
+    ``to_row(grid, boxes)``. If the batch call raises, every row is
+    retried alone, and a row that still raises gets ``[]``: one poison
+    row never empties its neighbours or kills the task."""
     out: list = [[] for _ in range(len(s))]
     grids, idx = [], []
     for i, text in enumerate(s):
@@ -170,7 +119,17 @@ def _batched_grids(s):
             idx.append(i)
         except Exception:  # poison row → no boxes, not a dead task
             pass
-    return out, grids, idx
+    try:
+        all_boxes = find_text_boxes_batch(grids, cfg)
+        for i, grid, boxes in zip(idx, grids, all_boxes):
+            out[i] = to_row(grid, boxes)
+    except Exception:  # poison batch → per-row containment
+        for i, grid in zip(idx, grids):
+            try:
+                out[i] = to_row(grid, find_text_boxes(grid, cfg))
+            except Exception:
+                out[i] = []
+    return pd.Series(out)
 
 
 # ---------------------------------------------------------------------------
@@ -204,7 +163,7 @@ class SparkOcrEngine:
         stateless map stage).
         ``route_documents`` sends tool-role turns carrying multi-page
         document payloads through the layout-region parser instead
-        (requires a ``role`` column; see pipeline.extract_turn_auto)."""
+        (requires a ``role`` column; see fastbatch.extract_batch)."""
         cfg = self.config
         keep = [c for c in passthrough if c in df.columns]
         if route_documents and "role" not in df.columns:
@@ -224,62 +183,25 @@ class SparkOcrEngine:
         )
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from .fastbatch import batch_extract_simple
-            from .pipeline import extract_turn_auto
+            from .fastbatch import extract_batch
 
             for pdf in batches:
-                n = len(pdf)
-                blocks_col, ftext_col = [], []
-                nb_col = np.zeros(n, dtype=np.int32)
-                ec_col, em_col = [None] * n, [None] * n
-                texts = pdf["__text__"].to_numpy(dtype=object)
+                texts = [_clean_text(t)
+                         for t in pdf["__text__"].to_numpy(dtype=object)]
                 roles = (pdf["__role__"].to_numpy(dtype=object)
                          if route_documents else None)
-                cleaned = [_clean_text(t) for t in texts]
-                # batch fast path: the common simple-turn shape decodes
-                # in one vectorized pass over the whole Arrow batch
-                # (byte-identical to the per-turn path — differential-
-                # tested); residue rows fall through below. Form-feed
-                # rows batch in BOTH modes: without routing they run
-                # the stage-3 general machine (extract_turn folds \f to
-                # \n — same semantics, batched); with routing the roles
-                # array sends tool-role documents through the stage-4
-                # machine (batched layout parse + pooled decode) and
-                # other \f rows through stage 3, mirroring
-                # extract_turn_auto's own dispatch.
-                # roles is only populated when route_documents is on
-                fast = batch_extract_simple(
-                    cleaned, cfg,
-                    allow_formfeed=not route_documents,
-                    roles=roles)
-                for i in range(n):
-                    r = fast[i]
-                    if r is None:
-                        if route_documents:
-                            r = extract_turn_auto(cleaned[i], roles[i], cfg)
-                        else:
-                            r = extract_turn(cleaned[i], cfg)
-                    blocks_col.append([b.__dict__ for b in r.blocks])
-                    ftext_col.append(r.full_text)
-                    nb_col[i] = len(r.blocks)
-                    ec_col[i] = r.error_code
-                    em_col[i] = r.error_msg
+                res = extract_batch(texts, roles, cfg)
                 out = pdf[keep].copy()
-                out["n_blocks"] = nb_col
-                out["blocks"] = blocks_col
-                out["full_text"] = ftext_col
-                out["error_code"] = ec_col
-                out["error_msg"] = em_col
+                out["n_blocks"] = np.fromiter(
+                    (len(r.blocks) for r in res), dtype=np.int32,
+                    count=len(res))
+                out["blocks"] = [[b.__dict__ for b in r.blocks] for r in res]
+                out["full_text"] = [r.full_text for r in res]
+                out["error_code"] = [r.error_code for r in res]
+                out["error_msg"] = [r.error_msg for r in res]
                 yield out
 
         return src.mapInPandas(run, out_schema)
-
-    def extract_fast(self, df: DataFrame, **kw) -> DataFrame:
-        """ProcessOcrEfficient parity alias: the reference's efficient
-        variant picks crop strategies by cardinality (engine.rs:532-556);
-        Catalyst/AQE already does runtime strategy selection, so the plan
-        is identical here."""
-        return self.extract(df, **kw)
 
     # -- stage-level verbs ---------------------------------------------------
 
@@ -289,30 +211,19 @@ class SparkOcrEngine:
         get (pos, box) rows."""
         cfg = self.config
 
+        def to_rows(grid, boxes):
+            rows = []
+            for b in boxes:
+                start, end = box_span(grid, b)
+                rows.append(
+                    {"left": b.left, "top": b.top, "width": b.width,
+                     "height": b.height, "start": start, "end": end}
+                )
+            return rows
+
         @F.pandas_udf(ArrayType(BOX_STRUCT))
         def detect_udf(s: pd.Series) -> pd.Series:
-            def to_rows(grid, boxes):
-                rows = []
-                for b in boxes:
-                    start, end = box_span(grid, b)
-                    rows.append(
-                        {"left": b.left, "top": b.top, "width": b.width,
-                         "height": b.height, "start": start, "end": end}
-                    )
-                return rows
-
-            out, grids, idx = _batched_grids(s)
-            try:
-                all_boxes = find_text_boxes_batch(grids, cfg)
-                for i, grid, boxes in zip(idx, grids, all_boxes):
-                    out[i] = to_rows(grid, boxes)
-            except Exception:  # poison batch → per-row containment
-                for i, grid in zip(idx, grids):
-                    try:
-                        out[i] = to_rows(grid, find_text_boxes(grid, cfg))
-                    except Exception:
-                        out[i] = []
-            return pd.Series(out)
+            return _detect_rows(s, cfg, to_rows)
 
         return df.withColumn("boxes", detect_udf(F.col(text_col)))
 
@@ -322,27 +233,14 @@ class SparkOcrEngine:
         order."""
         cfg = self.config
 
+        def to_crops(grid, boxes):
+            return [crop_box(grid, b)[0] for b in boxes]
+
         @F.pandas_udf(ArrayType(StringType()))
         def crops_udf(s: pd.Series) -> pd.Series:
-            out, grids, idx = _batched_grids(s)
-            try:
-                all_boxes = find_text_boxes_batch(grids, cfg)
-                for i, grid, boxes in zip(idx, grids, all_boxes):
-                    out[i] = [crop_box(grid, b)[0] for b in boxes]
-            except Exception:  # poison batch → per-row containment
-                for i, grid in zip(idx, grids):
-                    try:
-                        out[i] = [crop_box(grid, b)[0]
-                                  for b in find_text_boxes(grid, cfg)]
-                    except Exception:
-                        out[i] = []
-            return pd.Series(out)
+            return _detect_rows(s, cfg, to_crops)
 
         return df.withColumn("crops", crops_udf(F.col(text_col)))
-
-    def blocks_fast(self, df: DataFrame, text_col: str = "text") -> DataFrame:
-        """GetTextImagesEfficient parity alias (see extract_fast)."""
-        return self.blocks(df, text_col)
 
     def recognize(self, df: DataFrame, text_col: str = "text") -> DataFrame:
         """RecognizeText: decode an arbitrary text column (one block per
@@ -352,16 +250,15 @@ class SparkOcrEngine:
 
         @F.pandas_udf(RECOGNIZED_STRUCT)
         def rec_udf(s: pd.Series) -> pd.DataFrame:
-            texts, confs, btypes = _recognize_batch(list(s), cfg)
+            from .fastbatch import recognize_batch
+
+            texts, confs, btypes = recognize_batch(
+                [_clean_text(t) for t in s], cfg)
             return pd.DataFrame(
                 {"text": texts, "confidence": confs, "block_type": btypes}
             )
 
         return df.withColumn("recognized", rec_udf(F.col(text_col)))
-
-    def detect(self, df: DataFrame, text_col: str = "text") -> DataFrame:
-        """Alias of spans() — the lib.rs 'advanced users' low-level path."""
-        return self.spans(df, text_col)
 
 
 # ---------------------------------------------------------------------------
@@ -469,33 +366,9 @@ def get_instance() -> SparkOcrEngine:
     return _INSTANCE
 
 
-# module-level singleton verbs (the engine.rs free-function surface:
-# `ocr::process_ocr(img)` etc. delegate to the initialized manager) —
-# each raises the not-initialized error until initialize() has run
+# module-level singleton verb (the engine.rs free-function surface:
+# `ocr::process_ocr(img)` delegates to the initialized manager) — raises
+# the not-initialized error until initialize() has run
 
 def process_ocr(df: DataFrame, **kw) -> DataFrame:
     return get_instance().extract(df, **kw)
-
-
-def process_ocr_efficient(df: DataFrame, **kw) -> DataFrame:
-    return get_instance().extract_fast(df, **kw)
-
-
-def detect_text(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return get_instance().blocks(df, text_col)
-
-
-def get_text_rects(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return get_instance().spans(df, text_col)
-
-
-def get_text_images(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return get_instance().blocks(df, text_col)
-
-
-def get_text_images_efficient(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return get_instance().blocks_fast(df, text_col)
-
-
-def recognize_text(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return get_instance().recognize(df, text_col)

@@ -1,5 +1,16 @@
 """Batch-vectorized fast paths for common turn shapes (round-4 work).
 
+Entry points (what the Spark engine's UDFs call):
+
+- ``extract_batch(texts, roles, config)`` — the one extraction
+  dispatch: every row gets a ``TurnResult``; the batch stages below
+  answer what they can and the residue runs the per-turn
+  ``pipeline.extract_turn_auto``. No other module decides which stage
+  a row takes.
+- ``recognize_batch(texts, config)`` — the RecognizeText kernel:
+  in-domain rows pool into the flat decode, the rest run
+  ``recognize_crop`` per row.
+
 The per-turn pipeline already short-circuits the common chat-message
 shape — one line, no markup, no ANSI — inside ``detect.find_text_boxes``
 (det.py fast path), but the per-turn cost was still dominated by the
@@ -94,8 +105,8 @@ from .detect import (
     crop_box,
     find_text_boxes_batch,
 )
-from .pipeline import Block, TurnResult
-from .recognize import canonicalize, classify_block, decode
+from .pipeline import Block, TurnResult, extract_turn_auto
+from .recognize import canonicalize, classify_block, decode, recognize_crop
 from .textgrid import (
     _NL,
     is_boiler_line,
@@ -357,6 +368,8 @@ def batch_extract_simple(
     already-``_clean_text``-ed values) in one vectorized pass. Returns a
     list aligned with ``texts``: a ``TurnResult`` where a fast path
     applied, ``None`` where the caller must run the per-turn pipeline.
+    This is the batch half of ``extract_batch``, which answers the
+    ``None`` rows too; call that unless the split itself is measured.
 
     ``allow_formfeed=True`` additionally routes form-feed rows through
     the stage-3 general machine (byte-identical to ``extract_turn``,
@@ -464,6 +477,27 @@ def batch_extract_simple(
             # the per-turn path's own poison-row containment
             for i, _, _ in rows:
                 out[i] = None
+    return out
+
+
+def extract_batch(texts, roles=None,
+                  config: EngineConfig = DEFAULT_CONFIG) -> list[TurnResult]:
+    """Extract every row of ``texts`` (already-``_clean_text``-ed
+    values): one ``TurnResult`` per row, never ``None``. The batch
+    stages answer what they can; every residue row runs the per-turn
+    ``pipeline.extract_turn_auto``.
+
+    ``roles`` (aligned with ``texts``) turns on document routing,
+    exactly ``extract_turn_auto(t, role)`` per row. ``roles=None`` means
+    no routing, exactly ``extract_turn(t)`` per row: form-feed rows then
+    batch through the stage-3 general machine, and the residue call
+    ``extract_turn_auto(t, None)`` is ``extract_turn(t)``."""
+    out = batch_extract_simple(texts, config,
+                               allow_formfeed=roles is None, roles=roles)
+    for i, r in enumerate(out):
+        if r is None:
+            role = None if roles is None else roles[i]
+            out[i] = extract_turn_auto(texts[i], role, config)
     return out
 
 
@@ -586,3 +620,49 @@ def _decode_flat(rows, canons, metas, out, config: EngineConfig) -> None:
             ))
         out[i] = TurnResult(
             blocks=blocks, full_text="\n".join(b.text for b in blocks))
+
+
+def recognize_batch(texts, config: EngineConfig = DEFAULT_CONFIG):
+    """Recognize each row of ``texts`` (already-``_clean_text``-ed
+    values) as one block. In-domain rows (markup-free canon, no
+    surrogates) pool into one flat decode; everything else goes through
+    ``recognize_crop`` per row — markup canons for the markup scoring
+    branch, surrogate rows so the per-row UTF-32 encode failure yields
+    an all-None row. ``None`` rows and poison rows stay all-None.
+    Returns ``(texts, confs, btypes)`` aligned with the input."""
+    n = len(texts)
+    dec: list = [None] * n
+    confs: list = [None] * n
+    btypes: list = [None] * n
+    pool_idx, pool_canons = [], []
+    resid = []  # row indices for the per-row path
+    for i, text in enumerate(texts):
+        if text is None:
+            continue
+        try:
+            canon = canonicalize(text, config.max_rec_lines)
+            if _no_surrogates(canon) and _canon_in_domain(canon):
+                pool_idx.append(i)
+                pool_canons.append(canon)
+                btypes[i] = classify_block(canon)
+                continue
+            resid.append(i)
+        except Exception:  # poison row must not kill the task
+            pass
+    if pool_canons:
+        try:
+            p_texts, p_confs = decode_canons_flat(pool_canons, config)
+            for i, t, c in zip(pool_idx, p_texts, p_confs):
+                dec[i], confs[i] = t, c
+        except Exception:  # poison pool → per-row containment
+            resid.extend(pool_idx)
+            for i in pool_idx:
+                btypes[i] = None
+    for i in resid:
+        try:
+            decoded, conf, canon = recognize_crop(texts[i], config)
+            dec[i], confs[i] = decoded, conf
+            btypes[i] = classify_block(canon)
+        except Exception:  # poison row must not kill the task
+            dec[i] = confs[i] = btypes[i] = None
+    return dec, confs, btypes

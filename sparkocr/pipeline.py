@@ -15,10 +15,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import numpy as np
-
 from .config import DEFAULT_CONFIG, EngineConfig
-from .detect import Box, TurnGrid, crop_box, find_text_boxes
+from .detect import TurnGrid, crop_box, find_text_boxes
 from .recognize import classify_block, recognize_crop
 
 

@@ -7,8 +7,17 @@ dependency-light: plain asserts, no pytest/hypothesis imports, usable
 from a bare interpreter."""
 
 from sparkocr.config import FLAGSHIP_CONFIG
-from sparkocr.fastbatch import batch_extract_simple
+from sparkocr.fastbatch import batch_extract_simple, extract_batch
 from sparkocr.pipeline import extract_turn, extract_turn_auto
+
+
+def _assert_same(t, r, want):
+    assert r.error_code == want.error_code, ascii(t)
+    assert r.error_msg == want.error_msg, ascii(t)
+    assert r.full_text == want.full_text, ascii(t)
+    assert len(r.blocks) == len(want.blocks), ascii(t)
+    for a, b in zip(r.blocks, want.blocks):
+        assert a == b, (ascii(t), a, b)  # frozen dataclass: bitwise fields
 
 
 def assert_matches(texts, config=FLAGSHIP_CONFIG, min_eligible=None,
@@ -36,11 +45,24 @@ def assert_matches(texts, config=FLAGSHIP_CONFIG, min_eligible=None,
             want = extract_turn_auto(t, roles[k], config)
         else:
             want = extract_turn(t, config)
-        assert r.error_code == want.error_code, ascii(t)
-        assert r.full_text == want.full_text, ascii(t)
-        assert len(r.blocks) == len(want.blocks), ascii(t)
-        for a, b in zip(r.blocks, want.blocks):
-            assert a == b, (ascii(t), a, b)  # frozen dataclass: bitwise fields
+        _assert_same(t, r, want)
     if min_eligible is not None:
         assert n_fast >= min_eligible, (n_fast, min_eligible)
     return n_fast
+
+
+def assert_extract_batch(texts, config=FLAGSHIP_CONFIG, roles=None):
+    """Full coverage of the engine's one dispatch: ``extract_batch``
+    answers EVERY row (never None), byte-identical to
+    ``extract_turn_auto(t, role)`` when ``roles`` is given and to
+    ``extract_turn(t)`` when it is not. Returns the row count."""
+    got = extract_batch(list(texts), roles, config)
+    assert len(got) == len(texts), (len(got), len(texts))
+    for k, (t, r) in enumerate(zip(texts, got)):
+        assert r is not None, ascii(t)
+        if roles is not None:
+            want = extract_turn_auto(t, roles[k], config)
+        else:
+            want = extract_turn(t, config)
+        _assert_same(t, r, want)
+    return len(got)

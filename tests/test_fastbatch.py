@@ -2,7 +2,8 @@
 for every input, either the batch result is byte-identical to
 pipeline.extract_turn (text, confidence BITS, spans, geometry, block
 type) or the row is declared ineligible (None) and falls back. Same
-pattern as tests/test_batch_invariance.py."""
+pattern as tests/test_batch_invariance.py. The same inputs also drive
+``extract_batch``, which must answer every row exactly."""
 
 import random
 
@@ -13,47 +14,119 @@ from sparkocr.config import DEFAULT_CONFIG, FLAGSHIP_CONFIG
 from sparkocr.fastbatch import batch_extract_simple
 
 # shared comparator home (also used by scripts/fuzz_fastbatch.py)
+from fastbatch_compare import assert_extract_batch as _assert_extract_batch
 from fastbatch_compare import assert_matches as _assert_matches
+
+SIMPLE_TURNS = [
+    "hello world, this is a plain chat message.",
+    "   leading and trailing whitespace   ",
+    "tabs\tbecome\tspaces here ok",
+    "punctuation!!! runs??? collapse... yes.",
+    "短い日本語のメッセージですがこれはテストです",
+    "mixed 英語 and 日本語 with punct、。！",
+    "a _ b _ c underscores are dropped chars",
+    "emoji 😀😀 are low-confidence and dropped here",
+    "x" * 2000,
+    "a b",            # too narrow -> empty
+    "",               # empty -> empty
+    "      ",         # all whitespace -> empty
+    "[PAGE 3]",       # boiler -> empty
+    "=== PAGE 7 ===",  # boiler -> empty
+    "normal line with = equals sign stays",
+    "entities &amp; stay simple &quot;quoted&quot;",
+]
+
+INELIGIBLE_TURNS = [
+    None,
+    float("nan"),  # engine._clean_text maps to None before the call
+    "form\ffeed",  # NO stage takes \f: the document router
+    #              (extract_turn_auto) keys on it for tool turns
+    "<form\ffeed>",  # markup plus \f still falls back (router)
+    "emoji \f😀 after a page break",
+    "entity-minted markup &lt;script&gt; stays exact",
+    "multi\nline with entity-minted markup &lt;tag&gt; falls back",
+    # stage-3 rows whose CROP canonicalizes back into REAL markup
+    # leave the flat machine's domain (char_scores' markup branch)
+    "<b>tag</b> then minted &lt;i&gt; inside the crop",
+    "markup <b>plus</b> a minted ansi run &#27;[31m colour",
+    # a document whose body region mints markup: stage 4 cannot take
+    # it, and the routed fallback differs from extract_turn
+    ("RUNNING HEAD\nbody with minted &lt;b&gt;markup&lt;/b&gt; here\n12\f"
+     "RUNNING HEAD\nsecond page body | a | b |\n| c | d |\n13\f"
+     "RUNNING HEAD\nthird page closing body line\n14"),
+    # surrogates: the per-turn UTF-32 encode fails (InferenceError row)
+    "lone \ud800 surrogate in a long enough row",
+    "paired \ud83d\ude00 surrogates in a long enough row",
+    "x\ud800",  # too narrow for a box: still an error row per turn
+]
+
+MARKUP_TURNS = [
+    "<b>markup</b>",
+    "ansi \x1b[31mred text here\x1b[0m trailing",
+    "<p>para one</p>\n<p>para two with more text</p>",
+    "nav <a href=/x>link one</a> <a href=/y>link two</a> end",
+    "<!-- comment hiding <a>anchor</a> --> visible text after",
+    "<script>var x = '<a>';</script>body text that stays here",
+    "text <b>spanning</b> tags\nsecond line plain and long",
+    "[HEADER] masthead\n<p>body line kept alive</p>\n[PAGE 2]",
+    "<style>p{color:red}</style>styled body content here",
+    "unclosed <a href=z>anchor flows to end of the turn",
+    "<td>c1</td><td>c2</td>\n<td>c3 wider cell</td>",
+    "entities &amp; markup <i>mixed</i> stay&nbsp;exact",
+    "tag-split   <br/>   runs left and right of the break",
+    "\x1b[2J\x1b[Hcleared screen then a prompt $ ls -la output",
+    "<1notag> is not a tag so it survives as text",
+    "bare escape \x1b scores as a blank on both paths",
+    "CJK 漢字 <b>太字</b> かな混じりの行です。",
+]
+
+FORMFEED_TURNS = [
+    "one\fpage two\fpage three",
+    "\f\f\f",
+    "[PAGE 1]\fbody text of page two here\f--- 42 ---",
+    "<b>markup</b>\fwith a page break",
+]
+
+# hand-built document payloads: headers/footers/page numbers, tables,
+# a page-number-only page, an empty page
+DOCUMENT_TURNS = [
+    ("RUNNING HEAD\nbody text of the first page here\n12\f"
+     "RUNNING HEAD\nsecond page body | a | b |\n| c | d |\n13\f"
+     "RUNNING HEAD\nthird page closing body line\n14"),
+    "one page only, no headers",
+    "\f\f",
+    "x\f" + "y" * 40,
+]
+
+MULTILINE_TURNS = [
+    "two\nlines",
+    "carriage\rreturn",
+    "crlf line one\r\nline two",
+    "para one line one\npara one line two\n\n\npara two after gap",
+    "   indented first\n\tand a tabbed second line here\n",
+    "short\na much much longer second line that dominates\ntiny",
+    "[PAGE 3]\nreal content between boiler lines\n=== PAGE 7 ===",
+    "a b\nnarrow lines get dropped\nc d",
+    "日本語の行がひとつ\nそしてもうひとつの行",
+    "ends with newline\n",
+    "\n\nstarts with blank lines\n\n",
+    "punct!!! runs\nacross??? lines... collapse per crop",
+    "&#10; minted newline inside\na real multi-line turn &#65;",
+    "x" * 300 + "\n" + "y" * 300,
+]
+
+
+def _cleaned(texts):
+    """What the engine hands the kernels: pandas NaN becomes None."""
+    return [t if isinstance(t, str) else None for t in texts]
 
 
 def test_simple_turns_match_and_take_the_fast_path():
-    texts = [
-        "hello world, this is a plain chat message.",
-        "   leading and trailing whitespace   ",
-        "tabs\tbecome\tspaces here ok",
-        "punctuation!!! runs??? collapse... yes.",
-        "短い日本語のメッセージですがこれはテストです",
-        "mixed 英語 and 日本語 with punct、。！",
-        "a _ b _ c underscores are dropped chars",
-        "emoji 😀😀 are low-confidence and dropped here",
-        "x" * 2000,
-        "a b",            # too narrow -> empty
-        "",               # empty -> empty
-        "      ",         # all whitespace -> empty
-        "[PAGE 3]",       # boiler -> empty
-        "=== PAGE 7 ===",  # boiler -> empty
-        "normal line with = equals sign stays",
-        "entities &amp; stay simple &quot;quoted&quot;",
-    ]
-    _assert_matches(texts, min_eligible=len(texts))
+    _assert_matches(SIMPLE_TURNS, min_eligible=len(SIMPLE_TURNS))
 
 
 def test_ineligible_shapes_fall_back():
-    texts = [
-        None,
-        float("nan"),  # engine._clean_text maps to None before the call
-        "form\ffeed",  # NO stage takes \f: the document router
-        #              (extract_turn_auto) keys on it for tool turns
-        "<form\ffeed>",  # markup plus \f still falls back (router)
-        "entity-minted markup &lt;script&gt; stays exact",
-        "multi\nline with entity-minted markup &lt;tag&gt; falls back",
-        # stage-3 rows whose CROP canonicalizes back into REAL markup
-        # leave the flat machine's domain (char_scores' markup branch)
-        "<b>tag</b> then minted &lt;i&gt; inside the crop",
-        "markup <b>plus</b> a minted ansi run &#27;[31m colour",
-    ]
-    got = batch_extract_simple(
-        [t if isinstance(t, str) else None for t in texts], FLAGSHIP_CONFIG)
+    got = batch_extract_simple(_cleaned(INELIGIBLE_TURNS), FLAGSHIP_CONFIG)
     # None/ineligible rows must all be None (fallback), never a result
     assert all(r is None for r in got)
 
@@ -62,26 +135,7 @@ def test_markup_turns_match_and_take_the_fast_path():
     """Stage 3: markup/ANSI-bearing turns run the exact general
     detection semantics with batched run extraction, crops pooled into
     the shared flat decode — byte-identical to the per-turn path."""
-    texts = [
-        "<b>markup</b>",
-        "ansi \x1b[31mred text here\x1b[0m trailing",
-        "<p>para one</p>\n<p>para two with more text</p>",
-        "nav <a href=/x>link one</a> <a href=/y>link two</a> end",
-        "<!-- comment hiding <a>anchor</a> --> visible text after",
-        "<script>var x = '<a>';</script>body text that stays here",
-        "text <b>spanning</b> tags\nsecond line plain and long",
-        "[HEADER] masthead\n<p>body line kept alive</p>\n[PAGE 2]",
-        "<style>p{color:red}</style>styled body content here",
-        "unclosed <a href=z>anchor flows to end of the turn",
-        "<td>c1</td><td>c2</td>\n<td>c3 wider cell</td>",
-        "entities &amp; markup <i>mixed</i> stay&nbsp;exact",
-        "tag-split   <br/>   runs left and right of the break",
-        "\x1b[2J\x1b[Hcleared screen then a prompt $ ls -la output",
-        "<1notag> is not a tag so it survives as text",
-        "bare escape \x1b scores as a blank on both paths",
-        "CJK 漢字 <b>太字</b> かな混じりの行です。",
-    ]
-    _assert_matches(texts, min_eligible=len(texts))
+    _assert_matches(MARKUP_TURNS, min_eligible=len(MARKUP_TURNS))
 
 
 def test_formfeed_turns_match_under_allow_formfeed():
@@ -95,12 +149,7 @@ def test_formfeed_turns_match_under_allow_formfeed():
     df = turns_pandas(seed=3, n_convs=40)
     ff = [t for t in df["text"] if isinstance(t, str) and "\f" in t]
     assert len(ff) > 50
-    texts = ff + [
-        "one\fpage two\fpage three",
-        "\f\f\f",
-        "[PAGE 1]\fbody text of page two here\f--- 42 ---",
-        "<b>markup</b>\fwith a page break",
-    ]
+    texts = ff + FORMFEED_TURNS
     _assert_matches(texts, allow_formfeed=True, min_eligible=len(texts))
     got = batch_extract_simple(texts, FLAGSHIP_CONFIG)
     assert all(r is None for r in got)  # default: every \f row falls back
@@ -120,16 +169,37 @@ def test_routing_mode_document_turns_match():
     assert n == len(texts)  # full coverage in routing mode too
     _assert_matches(texts, DEFAULT_CONFIG, roles=roles,
                     min_eligible=len(texts))
-    # hand-built document payloads: headers/footers/page numbers,
-    # tables, a page-number-only page, an empty page
-    doc = ("RUNNING HEAD\nbody text of the first page here\n12\f"
-           "RUNNING HEAD\nsecond page body | a | b |\n| c | d |\n13\f"
-           "RUNNING HEAD\nthird page closing body line\n14")
-    cases = [doc, "one page only, no headers", "\f\f", "x\f" + "y" * 40]
+    cases = DOCUMENT_TURNS
     _assert_matches(cases, roles=["tool"] * len(cases),
                     min_eligible=len(cases))
     _assert_matches(cases, roles=["assistant"] * len(cases),
                     min_eligible=len(cases))
+
+
+@pytest.mark.parametrize("routing", [False, True], ids=["plain", "routing"])
+def test_extract_batch_answers_every_row(routing):
+    """The engine's one dispatch: ``extract_batch`` answers every row of
+    the inputs above — fast-path and residue alike, null, NaN, \\f,
+    entity-minted markup and surrogate rows included — exactly as
+    ``extract_turn`` (no routing) or ``extract_turn_auto(t, role)``
+    (routing) does."""
+    from sparkocr.fixtures import turns_pandas
+
+    df = turns_pandas(seed=3, n_convs=40)
+    hand = _cleaned(SIMPLE_TURNS + INELIGIBLE_TURNS + MARKUP_TURNS
+                    + FORMFEED_TURNS + DOCUMENT_TURNS + MULTILINE_TURNS)
+    cycle = ("user", "assistant", "tool")
+    inputs = [
+        (_cleaned(df["text"]), list(df["role"])),
+        (hand, [cycle[i % 3] for i in range(len(hand))]),
+        (DOCUMENT_TURNS, ["tool"] * len(DOCUMENT_TURNS)),
+        (_cleaned(INELIGIBLE_TURNS), ["tool"] * len(INELIGIBLE_TURNS)),
+    ]
+    for texts, roles in inputs:
+        for cfg in (FLAGSHIP_CONFIG, DEFAULT_CONFIG):
+            n = _assert_extract_batch(texts, cfg,
+                                      roles=roles if routing else None)
+            assert n == len(texts)
 
 
 def test_fixture_markup_turns_all_match():
@@ -179,22 +249,7 @@ def test_multiline_plain_turns_match_and_take_the_fast_path():
     """Stage 2: newline-bearing plain turns run the flat machine —
     per-line detection, the verbatim transitive merge, multi-crop
     reassembly — and must be byte-identical to the per-turn path."""
-    texts = [
-        "two\nlines",
-        "carriage\rreturn",
-        "crlf line one\r\nline two",
-        "para one line one\npara one line two\n\n\npara two after gap",
-        "   indented first\n\tand a tabbed second line here\n",
-        "short\na much much longer second line that dominates\ntiny",
-        "[PAGE 3]\nreal content between boiler lines\n=== PAGE 7 ===",
-        "a b\nnarrow lines get dropped\nc d",
-        "日本語の行がひとつ\nそしてもうひとつの行",
-        "ends with newline\n",
-        "\n\nstarts with blank lines\n\n",
-        "punct!!! runs\nacross??? lines... collapse per crop",
-        "&#10; minted newline inside\na real multi-line turn &#65;",
-        "x" * 300 + "\n" + "y" * 300,
-    ]
+    texts = MULTILINE_TURNS
     _assert_matches(texts, min_eligible=len(texts))
     # merge disabled / zero threshold change box topology — still exact
     _assert_matches(texts, DEFAULT_CONFIG.with_merge_boxes(False),

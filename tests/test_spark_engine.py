@@ -142,13 +142,13 @@ def test_recognize_kernel_surrogate_and_poison_paths(monkeypatch):
     row must become an all-None row (the per-row UTF-32 encode failure,
     same as the old loop), and a failing pooled decode must fall back
     per-row with btypes re-derived — not leave half-written state."""
-    from sparkocr import engine as eng_mod
+    import sparkocr.fastbatch as fb
     from sparkocr.config import FLAGSHIP_CONFIG
     from sparkocr.recognize import recognize_crop
 
     rows = ["plain text row", "\ud800 lone surrogate", None,
             "<b>markup</b> row", "second plain row!!"]
-    texts, confs, btypes = eng_mod._recognize_batch(rows, FLAGSHIP_CONFIG)
+    texts, confs, btypes = fb.recognize_batch(rows, FLAGSHIP_CONFIG)
     assert texts[1] is None and confs[1] is None and btypes[1] is None
     assert texts[2] is None
     assert texts[0] == recognize_crop("plain text row", FLAGSHIP_CONFIG)[0]
@@ -157,13 +157,11 @@ def test_recognize_kernel_surrogate_and_poison_paths(monkeypatch):
 
     # poison pool: force decode_canons_flat to blow up — every pooled
     # row must re-derive per-row, bit-identical to recognize_crop
-    import sparkocr.fastbatch as fb
-
     def boom(canons, cfg):
         raise RuntimeError("forced pool failure")
 
     monkeypatch.setattr(fb, "decode_canons_flat", boom)
-    texts2, confs2, btypes2 = eng_mod._recognize_batch(rows, FLAGSHIP_CONFIG)
+    texts2, confs2, btypes2 = fb.recognize_batch(rows, FLAGSHIP_CONFIG)
     assert (texts2, confs2, btypes2) == (texts, confs, btypes)
 
 
@@ -418,8 +416,8 @@ def test_stratified_sample_and_hash_split_deterministic(spark):
 
 
 def test_module_level_singleton_verbs(spark):
-    """engine.rs free-function parity: the 7 verbs as module functions
-    over the initialized singleton; uninitialized use raises."""
+    """engine.rs free-function parity: process_ocr over the initialized
+    singleton; uninitialized use raises."""
     import sparkocr.engine as eng_mod
 
     old = eng_mod._INSTANCE
@@ -434,13 +432,6 @@ def test_module_level_singleton_verbs(spark):
             [("c", 0, "a plain prose sentence for the verbs")],
             "conv_id string, turn_idx int, text string")
         assert eng_mod.process_ocr(df).collect()[0]["n_blocks"] == 1
-        assert len(eng_mod.get_text_rects(df).collect()[0]["boxes"]) == 1
-        assert len(eng_mod.get_text_images(df).collect()[0]["crops"]) == 1
-        assert eng_mod.recognize_text(df).collect()[0]["recognized"]["text"]
-        assert eng_mod.process_ocr_efficient(df).collect()[0]["n_blocks"] == 1
-        assert len(eng_mod.get_text_images_efficient(df)
-                   .collect()[0]["crops"]) == 1
-        assert len(eng_mod.detect_text(df).collect()[0]["crops"]) == 1
     finally:
         eng_mod._INSTANCE = old
 
