@@ -810,11 +810,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             committed = spark.read.parquet(out) \
                 .withColumn("bucket", bucket_of)
             n_in = docs.count()
-            n_out = committed.count()
-            if n_out != n_in:
+            # one query for both counts: a lost turn plus a duplicated
+            # one keeps the row count but not the distinct keys
+            n_out, n_keys = committed.agg(
+                F.count("*"), F.countDistinct("conv_id", "turn_idx")).first()
+            if n_out != n_in or n_keys != n_in:
                 raise RuntimeError(
-                    f"restart broke exactly-once: {n_out} output turns vs "
-                    f"{n_in} input (duplicates or loss across the resume)")
+                    f"restart broke exactly-once: {n_out} output turns, "
+                    f"{n_keys} distinct (conv_id, turn_idx), vs {n_in} "
+                    "input (duplicates or loss across the resume)")
             ledger = (
                 committed.groupBy("bucket")
                 .agg(F.count("*").alias("n_turns"),

@@ -22,8 +22,8 @@ scalability, not the box's.
 
 Jobs measured per pass (interleaved A/B, best-of-``--passes``):
 
-- **extract**: the flagship per-turn extraction (one narrow mapInPandas,
-  no shuffle) over the replicated transcript corpus — turns/sec.
+- **extract**: the flagship per-turn extraction (one narrow mapInArrow
+  stage, no shuffle) over the replicated transcript corpus — turns/sec.
 - **substr**: exact-substring dedup (window-hash generate → rank
   shuffle → span merge → rewrite) — the shuffle-heavy corpus op —
   docs/sec.

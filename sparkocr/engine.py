@@ -16,20 +16,20 @@ dispatch is ``fastbatch.extract_batch``; the verbs only move columns
 in and out of it.
 
 Execution model: all per-turn compute runs inside Arrow-batched pandas
-UDFs / mapInPandas (zero per-row Python UDFs); the fused ``extract`` is a
-single narrow mapInPandas stage — one job over the whole table with NO
-shuffle, the columnar replacement for the reference's one-request-per-
-image worker loop (engine.rs:413-437). Ordering is never implicit: use
-``ordered()`` / ``with_rank()`` before any order-sensitive sink
-(Catalyst does not preserve order through exchanges)."""
+UDFs / mapInArrow (zero per-row Python UDFs); the fused ``extract`` is
+one narrow ``mapInArrow`` stage — one job over the whole table with NO
+shuffle and no pandas in between, the columnar replacement for the
+reference's one-request-per-image worker loop (engine.rs:413-437).
+Ordering is never implicit: use ``ordered()`` / ``with_rank()`` before
+any order-sensitive sink (Catalyst does not preserve order through
+exchanges)."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Optional
 
-import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -154,7 +154,10 @@ class SparkOcrEngine:
         repartition: int | None = None,
         route_documents: bool = False,
     ) -> DataFrame:
-        """ProcessOcr over the whole table: one narrow mapInPandas stage.
+        """ProcessOcr over the whole table: one narrow ``mapInArrow``
+        stage. Each Arrow batch goes to ``fastbatch.extract_batch`` and
+        comes back as its result columns after the untouched
+        ``passthrough`` columns.
 
         ``passthrough`` columns are carried alongside the results;
         ``repartition`` optionally rebalances input rows first
@@ -182,26 +185,19 @@ class SparkOcrEngine:
             [df.schema[c] for c in keep] + EXTRACT_RESULT_FIELDS
         )
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def run(batches):
             from .fastbatch import extract_batch
 
-            for pdf in batches:
-                texts = [_clean_text(t)
-                         for t in pdf["__text__"].to_numpy(dtype=object)]
-                roles = (pdf["__role__"].to_numpy(dtype=object)
+            for batch in batches:
+                roles = (batch.column("__role__").to_pylist()
                          if route_documents else None)
-                res = extract_batch(texts, roles, cfg)
-                out = pdf[keep].copy()
-                out["n_blocks"] = np.fromiter(
-                    (len(r.blocks) for r in res), dtype=np.int32,
-                    count=len(res))
-                out["blocks"] = [[b.__dict__ for b in r.blocks] for r in res]
-                out["full_text"] = [r.full_text for r in res]
-                out["error_code"] = [r.error_code for r in res]
-                out["error_msg"] = [r.error_msg for r in res]
-                yield out
+                res = extract_batch(batch.column("__text__").to_pylist(),
+                                    roles, cfg)
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(c) for c in keep] + res.columns,
+                    names=keep + res.schema.names)
 
-        return src.mapInPandas(run, out_schema)
+        return src.mapInArrow(run, out_schema)
 
     # -- stage-level verbs ---------------------------------------------------
 

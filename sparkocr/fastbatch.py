@@ -3,10 +3,18 @@
 Entry points (what the Spark engine's UDFs call):
 
 - ``extract_batch(texts, roles, config)`` — the one extraction
-  dispatch: every row gets a ``TurnResult``; the batch stages below
-  answer what they can and the residue runs the per-turn
+  dispatch: every row is answered; the batch stages below answer what
+  they can and the residue runs the per-turn
   ``pipeline.extract_turn_auto``. No other module decides which stage
-  a row takes.
+  a row takes. The result is columnar: an Arrow ``RecordBatch`` with
+  the engine's ``EXTRACT_RESULT_FIELDS`` columns, typed by Spark's own
+  Arrow mapping, ready for ``mapInArrow`` to hand back as is. Its block
+  columns are gathered straight from the flat decode's per-crop lists
+  in row order — no ``Block``/``TurnResult`` objects for batch rows;
+  only the residue rows' ``TurnResult`` objects are spliced in.
+  ``batch_extract_simple`` is the ``TurnResult`` view of the same
+  per-crop lists (residue rows ``None``), for callers that time the
+  batch stages alone.
 - ``recognize_batch(texts, config)`` — the RecognizeText kernel:
   in-domain rows pool into the flat decode, the rest run
   ``recognize_crop`` per row.
@@ -85,7 +93,12 @@ across crops.
 
 from __future__ import annotations
 
+from operator import attrgetter
+
 import numpy as np
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .config import (
     DEFAULT_CONFIG,
@@ -105,6 +118,7 @@ from .detect import (
     crop_box,
     find_text_boxes_batch,
 )
+from .engine import EXTRACT_RESULT_FIELDS
 from .pipeline import Block, TurnResult, extract_turn_auto
 from .recognize import canonicalize, classify_block, decode, recognize_crop
 from .textgrid import (
@@ -115,11 +129,34 @@ from .textgrid import (
     word_char_mask,
 )
 
-def _empty() -> TurnResult:
-    """Fresh empty result per row — the per-turn path also returns a
-    new TurnResult each time, and a shared singleton's ``blocks`` list
-    would be mutable state aliased across every empty row."""
-    return TurnResult(blocks=[], full_text="")
+# the Arrow form of the engine's result columns (Spark's own type
+# mapping, so the engine can hand the batch to Spark as is)
+_RESULT_SCHEMA = to_arrow_schema(StructType(EXTRACT_RESULT_FIELDS))
+_BLOCK_TYPE = _RESULT_SCHEMA.field("blocks").type.value_type
+# the per-crop block columns: every block field after ``pos``, which
+# the gather derives from the row's slice
+_BLOCK_COLS = tuple(f.name for f in _BLOCK_TYPE)[1:]
+_block_values = attrgetter(*_BLOCK_COLS)
+
+
+class _Pool:
+    """One batch's flat-decode pool. ``spans[i]`` is row i's
+    ``(k0, k1)`` slice of the per-crop lists once a batch stage has
+    answered it (``k0 == k1``: no blocks) and ``None`` while the row is
+    residue. A crop's meta is ``(left, top, width, height, start, end,
+    block_type)``; ``block_type`` is ``None`` unless the stage already
+    knows it (stage 4's layout region)."""
+
+    def __init__(self, n: int):
+        self.spans: list = [None] * n
+        self.canons: list[str] = []
+        self.metas: list[tuple] = []
+
+    def add(self, i: int, canons: list, metas: list) -> None:
+        k0 = len(self.canons)
+        self.spans[i] = (k0, k0 + len(canons))
+        self.canons.extend(canons)
+        self.metas.extend(metas)
 
 
 def _no_surrogates(t: str) -> bool:
@@ -199,8 +236,7 @@ def _eligible_formfeed(t) -> bool:
     return isinstance(t, str) and "\f" in t and _no_surrogates(t)
 
 
-def _document_batch(d_rows, config: EngineConfig,
-                    out, rows, canons, metas) -> None:
+def _document_batch(d_rows, config: EngineConfig, pool: _Pool) -> None:
     """Stage-4: routing-mode document turns (tool role + form-feed).
     The layout parse runs batched (``layout.parse_documents_batch`` —
     every page of every payload shares one detection pass) and the
@@ -208,8 +244,8 @@ def _document_batch(d_rows, config: EngineConfig,
     Byte-identical to ``pipeline.extract_turn_auto``'s document branch:
     blocks carry the region type as block_type and page-granular
     geometry (left=0, top=page·LINE_HEIGHT, width=span length), pos
-    counts only the decoded body/table blocks — all encoded in the
-    4-element metas consumed by ``_decode_flat``."""
+    counts only the decoded body/table blocks — the region type rides
+    in the crop's meta, so ``_decode_flat`` does not classify it."""
     from .layout import parse_documents_batch
 
     texts = [t for _, t in d_rows]
@@ -225,22 +261,15 @@ def _document_batch(d_rows, config: EngineConfig,
             if not _canon_in_domain(canon):
                 in_domain = False
                 break
-            box = Box(0, reg.page * LINE_HEIGHT,
-                      reg.end - reg.start, LINE_HEIGHT)
             r_canons.append(canon)
-            r_metas.append((box, reg.start, reg.end, reg.region_type))
-        if not in_domain:
-            continue
-        if not r_canons:
-            out[i] = _empty()
-            continue
-        rows.append((i, len(canons), len(canons) + len(r_canons)))
-        canons.extend(r_canons)
-        metas.extend(r_metas)
+            r_metas.append((0, reg.page * LINE_HEIGHT, reg.end - reg.start,
+                            LINE_HEIGHT, reg.start, reg.end,
+                            reg.region_type))
+        if in_domain:
+            pool.add(i, r_canons, r_metas)
 
 
-def _markup_batch(m_rows, config: EngineConfig, border: int,
-                  out, rows, canons, metas) -> None:
+def _markup_batch(m_rows, config: EngineConfig, pool: _Pool) -> None:
     """Stage-3 detection + crop assembly for a batch of markup-bearing
     (or, under ``allow_formfeed``, form-feed) turns. Detection is
     ``detect.find_text_boxes_batch`` — the exact general-path semantics
@@ -248,13 +277,10 @@ def _markup_batch(m_rows, config: EngineConfig, border: int,
     and ``crop_box`` is the per-turn function. Successful rows append
     their crops to the shared flat-decode pool; a row whose crop
     canonicalizes out of the flat machine's domain (see
-    ``_canon_in_domain``) is left at ``None`` (per-turn fallback)."""
+    ``_canon_in_domain``) stays residue (per-turn fallback)."""
     grids = [TurnGrid(t) for _, t in m_rows]
     all_boxes = find_text_boxes_batch(grids, config)
     for (i, _), grid, boxes in zip(m_rows, grids, all_boxes):
-        if not boxes:
-            out[i] = _empty()
-            continue
         r_canons: list[str] = []
         r_metas: list[tuple] = []
         in_domain = True
@@ -265,12 +291,10 @@ def _markup_batch(m_rows, config: EngineConfig, border: int,
                 in_domain = False   # markup scoring: per-turn path
                 break
             r_canons.append(canon)
-            r_metas.append((box, start, end))
-        if not in_domain:
-            continue
-        rows.append((i, len(canons), len(canons) + len(r_canons)))
-        canons.extend(r_canons)
-        metas.extend(r_metas)
+            r_metas.append((box.left, box.top, box.width, box.height,
+                            start, end, None))
+        if in_domain:
+            pool.add(i, r_canons, r_metas)
 
 
 def _plain_multiline_crops(t: str, config: EngineConfig, border: int):
@@ -291,10 +315,10 @@ def _plain_multiline_crops(t: str, config: EngineConfig, border: int):
     - crop text: line slices joined by \\n (nothing to blank); spans
       via the box_span arithmetic
 
-    Returns (canons, metas) where metas are per-crop
-    (box, span_start, span_end), or None when any crop leaves the flat
-    machine's domain (entity decode minting '<'/ESC) — the caller
-    falls the whole row back to the per-turn path.
+    Returns (canons, metas) where metas are per-crop ``_Pool`` metas,
+    or None when any crop leaves the flat machine's domain (entity
+    decode minting '<'/ESC) — the caller falls the whole row back to
+    the per-turn path.
     """
     folded = t.replace("\r\n", " \n").replace("\r", "\n")
     lines = folded.split("\n")
@@ -355,8 +379,97 @@ def _plain_multiline_crops(t: str, config: EngineConfig, border: int):
         start = offs[y0] + min(box.left, lens[y0])
         end = offs[y1] + min(b_right, lens[y1])
         canons.append(canon)
-        metas.append((box, start, end))
+        metas.append((box.left, box.top, box.width, box.height,
+                      start, end, None))
     return canons, metas
+
+
+def _batch_stages(texts, config: EngineConfig, allow_formfeed: bool,
+                  roles) -> tuple[list, list[list]]:
+    """Run batch stages 1-4 over ``texts`` and decode their pool once.
+    Returns ``(spans, cols)``: ``cols`` are the per-crop block columns
+    (``_BLOCK_COLS`` order, pool order) and ``spans[i]`` is row i's
+    ``(k0, k1)`` slice of them, or ``None`` for a residue row that the
+    caller must run through the per-turn pipeline. Flags as in
+    ``batch_extract_simple``."""
+    n = len(texts)
+    pool = _Pool(n)
+    border = config.rect_border_size
+    grid_h1 = LINE_HEIGHT  # stage-1 grid: single line
+    top1 = max(GLYPH_TOP - border, 0)
+    bottom1 = min(GLYPH_BOTTOM + border, grid_h1 - 1)
+    height1 = bottom1 - top1 + 1
+
+    m_rows: list[tuple] = []  # stage-3 (markup/general) rows: (row index, text)
+    d_rows: list[tuple] = []  # stage-4 (routed document) rows: (row index, text)
+    for i in range(n):
+        t = texts[i]
+        if _eligible(t):
+            # stage 1: single line — one box by construction
+            if ("[" in t or "=" in t) and is_boiler_line(t):
+                pool.add(i, [], [])
+                continue
+            c0 = len(t) - len(t.lstrip(" \t"))
+            c1 = len(t.rstrip(" \t")) - 1
+            if c1 - c0 <= MIN_BOX_SIZE:
+                pool.add(i, [], [])
+                continue
+            left = max(c0 - border, 0)
+            right = min(c1 + border, len(t) - 1)
+            canon = canonicalize(t[left:right + 1], config.max_rec_lines)
+            # post-canon gate: entity decode can mint '<' (markup
+            # scoring leaves the flat machine's domain) — those rows
+            # take the exact per-turn path. Minted '\n' needs no gate:
+            # canonicalize caps line count, and the flat machine
+            # reproduces recognize_crop's newline handling bit-for-bit
+            # (see module docstring).
+            if not _canon_in_domain(canon):
+                continue
+            pool.add(i, [canon], [(left, top1, right - left + 1, height1,
+                                   left, right + 1, None)])
+        elif _eligible_multiline(t):
+            # stage 2: per-line detection + verbatim merge
+            got = _plain_multiline_crops(t, config, border)
+            if got is None:
+                continue  # a crop minted markup: per-turn path
+            pool.add(i, *got)
+        elif _eligible_markup(t):
+            m_rows.append((i, t))
+        elif _eligible_formfeed(t):
+            if roles is not None:
+                (d_rows if roles[i] == "tool" else m_rows).append((i, t))
+            elif allow_formfeed:
+                m_rows.append((i, t))
+
+    for batch_fn, batch_rows in ((_markup_batch, m_rows),
+                                 (_document_batch, d_rows)):
+        if not batch_rows:
+            continue
+        n_can0 = len(pool.canons)
+        try:
+            batch_fn(batch_rows, config, pool)
+        except Exception:
+            # defensive backstop (no known trigger — surrogates are
+            # gated up front and the batch machines reuse the exact
+            # per-turn primitives): roll the pool back and send every
+            # row of this stage down the per-turn path, which
+            # re-derives any empty rows identically
+            del pool.canons[n_can0:]
+            del pool.metas[n_can0:]
+            for i, _ in batch_rows:
+                pool.spans[i] = None
+
+    if pool.canons:
+        try:
+            return pool.spans, _decode_flat(pool.canons, pool.metas, config)
+        except Exception:
+            # defensive backstop for a poison batch (no known trigger —
+            # surrogates are gated up front and entity decode/NFC cannot
+            # mint them): retry nothing here — per-row fallback preserves
+            # the per-turn path's own poison-row containment
+            pool.spans = [None if s and s[0] != s[1] else s
+                          for s in pool.spans]
+    return pool.spans, [[] for _ in _BLOCK_COLS]
 
 
 def batch_extract_simple(
@@ -364,12 +477,13 @@ def batch_extract_simple(
     allow_formfeed: bool = False,
     roles=None,
 ) -> list:
-    """Process every eligible turn of ``texts`` (a sequence of
-    already-``_clean_text``-ed values) in one vectorized pass. Returns a
-    list aligned with ``texts``: a ``TurnResult`` where a fast path
-    applied, ``None`` where the caller must run the per-turn pipeline.
-    This is the batch half of ``extract_batch``, which answers the
-    ``None`` rows too; call that unless the split itself is measured.
+    """Process every eligible turn of ``texts`` (``str`` or ``None``
+    values) in one vectorized pass. Returns a list aligned with
+    ``texts``: a ``TurnResult`` where a fast path applied, ``None``
+    where the caller must run the per-turn pipeline. This is a
+    ``TurnResult`` view of the batch half of ``extract_batch``, which
+    answers the ``None`` rows too; call that unless the split itself
+    is measured.
 
     ``allow_formfeed=True`` additionally routes form-feed rows through
     the stage-3 general machine (byte-identical to ``extract_turn``,
@@ -384,121 +498,70 @@ def batch_extract_simple(
     form-feed turns with any other role run the stage-3 general machine
     (``extract_turn_auto`` sends exactly those to ``extract_turn``).
     Mutually exclusive with ``allow_formfeed``."""
-    n = len(texts)
-    out: list = [None] * n
-    border = config.rect_border_size
-    grid_h1 = LINE_HEIGHT  # stage-1 grid: single line
-    top1 = max(GLYPH_TOP - border, 0)
-    bottom1 = min(GLYPH_BOTTOM + border, grid_h1 - 1)
-    height1 = bottom1 - top1 + 1
-
-    canons: list[str] = []    # canonical crop text, all rows flattened
-    metas: list[tuple] = []   # per crop: (box, span_start, span_end)
-    rows: list[tuple] = []    # per flat row: (row index, k0, k1) crop slice
-    m_rows: list[tuple] = []  # stage-3 (markup/general) rows: (row index, text)
-    d_rows: list[tuple] = []  # stage-4 (routed document) rows: (row index, text)
-    for i in range(n):
-        t = texts[i]
-        if _eligible(t):
-            # stage 1: single line — one box by construction
-            if ("[" in t or "=" in t) and is_boiler_line(t):
-                out[i] = _empty()
-                continue
-            c0 = len(t) - len(t.lstrip(" \t"))
-            c1 = len(t.rstrip(" \t")) - 1
-            if c1 - c0 <= MIN_BOX_SIZE:
-                out[i] = _empty()
-                continue
-            left = max(c0 - border, 0)
-            right = min(c1 + border, len(t) - 1)
-            canon = canonicalize(t[left:right + 1], config.max_rec_lines)
-            # post-canon gate: entity decode can mint '<' (markup
-            # scoring leaves the flat machine's domain) — those rows
-            # take the exact per-turn path. Minted '\n' needs no gate:
-            # canonicalize caps line count, and the flat machine
-            # reproduces recognize_crop's newline handling bit-for-bit
-            # (see module docstring).
-            if not _canon_in_domain(canon):
-                continue
-            box = Box(left, top1, right - left + 1, height1)
-            rows.append((i, len(canons), len(canons) + 1))
-            canons.append(canon)
-            metas.append((box, left, right + 1))
-        elif _eligible_multiline(t):
-            # stage 2: per-line detection + verbatim merge
-            got = _plain_multiline_crops(t, config, border)
-            if got is None:
-                continue  # a crop minted markup: per-turn path
-            r_canons, r_metas = got
-            if not r_canons:
-                out[i] = _empty()
-                continue
-            rows.append((i, len(canons), len(canons) + len(r_canons)))
-            canons.extend(r_canons)
-            metas.extend(r_metas)
-        elif _eligible_markup(t):
-            m_rows.append((i, t))
-        elif _eligible_formfeed(t):
-            if roles is not None:
-                (d_rows if roles[i] == "tool" else m_rows).append((i, t))
-            elif allow_formfeed:
-                m_rows.append((i, t))
-
-    for batch_fn, batch_rows in (
-        (lambda br: _markup_batch(br, config, border,
-                                  out, rows, canons, metas), m_rows),
-        (lambda br: _document_batch(br, config,
-                                    out, rows, canons, metas), d_rows),
-    ):
-        if not batch_rows:
+    spans, cols = _batch_stages(texts, config, allow_formfeed, roles)
+    out: list = []
+    for s in spans:
+        if s is None:
+            out.append(None)
             continue
-        n_rows0, n_can0 = len(rows), len(canons)
-        try:
-            batch_fn(batch_rows)
-        except Exception:
-            # defensive backstop (no known trigger — surrogates are
-            # gated up front and the batch machines reuse the exact
-            # per-turn primitives): roll the pool back and send every
-            # row of this stage down the per-turn path, which
-            # re-derives any _empty() rows identically
-            del rows[n_rows0:]
-            del canons[n_can0:]
-            del metas[n_can0:]
-            for i, _ in batch_rows:
-                out[i] = None
-
-    if rows:
-        try:
-            _decode_flat(rows, canons, metas, out, config)
-        except Exception:
-            # defensive backstop for a poison batch (no known trigger —
-            # surrogates are gated up front and entity decode/NFC cannot
-            # mint them): retry nothing here — per-row fallback preserves
-            # the per-turn path's own poison-row containment
-            for i, _, _ in rows:
-                out[i] = None
+        blocks = [Block(pos, *vals) for pos, vals in
+                  enumerate(zip(*(c[s[0]:s[1]] for c in cols)))]
+        out.append(TurnResult(blocks=blocks,
+                              full_text="\n".join(cols[0][s[0]:s[1]])))
     return out
 
 
 def extract_batch(texts, roles=None,
-                  config: EngineConfig = DEFAULT_CONFIG) -> list[TurnResult]:
-    """Extract every row of ``texts`` (already-``_clean_text``-ed
-    values): one ``TurnResult`` per row, never ``None``. The batch
-    stages answer what they can; every residue row runs the per-turn
-    ``pipeline.extract_turn_auto``.
+                  config: EngineConfig = DEFAULT_CONFIG) -> pa.RecordBatch:
+    """Extract every row of ``texts`` (``str`` or ``None`` values) into
+    one Arrow ``RecordBatch`` with the ``EXTRACT_RESULT_FIELDS``
+    columns, row i answering ``texts[i]``. The batch stages answer what
+    they can; every residue row runs the per-turn
+    ``pipeline.extract_turn_auto`` and its ``TurnResult`` is spliced
+    into the same columns.
 
     ``roles`` (aligned with ``texts``) turns on document routing,
     exactly ``extract_turn_auto(t, role)`` per row. ``roles=None`` means
     no routing, exactly ``extract_turn(t)`` per row: form-feed rows then
     batch through the stage-3 general machine, and the residue call
     ``extract_turn_auto(t, None)`` is ``extract_turn(t)``."""
-    out = batch_extract_simple(texts, config,
-                               allow_formfeed=roles is None, roles=roles)
-    for i, r in enumerate(out):
-        if r is None:
-            role = None if roles is None else roles[i]
-            out[i] = extract_turn_auto(texts[i], role, config)
-    return out
+    spans, cols = _batch_stages(texts, config, roles is None, roles)
+    n = len(texts)
+    full_text: list = [None] * n
+    error_code: list = [None] * n
+    error_msg: list = [None] * n
+    for i, s in enumerate(spans):
+        if s is not None:
+            full_text[i] = "\n".join(cols[0][s[0]:s[1]])
+            continue
+        r = extract_turn_auto(texts[i], None if roles is None else roles[i],
+                              config)
+        k0 = len(cols[0])
+        for col, vals in zip(cols, zip(*map(_block_values, r.blocks))):
+            col.extend(vals)
+        spans[i] = (k0, k0 + len(r.blocks))
+        full_text[i], error_code[i], error_msg[i] = (
+            r.full_text, r.error_code, r.error_msg)
+
+    # gather the block columns into row order: output block b of row i
+    # is pool crop k0_i + pos_b
+    k = np.array(spans, dtype=np.int64).reshape(-1, 2)
+    n_blocks = (k[:, 1] - k[:, 0]).astype(np.int32)
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(n_blocks, out=offsets[1:])
+    row_start = np.repeat(offsets[:-1], n_blocks)
+    pos = np.arange(offsets[-1], dtype=np.int32) - row_start
+    take = pa.array(np.repeat(k[:, 0], n_blocks) + pos)
+    fields = list(_BLOCK_TYPE)
+    children = [pa.array(pos, fields[0].type)] + [
+        pa.array(col, f.type).take(take) for col, f in zip(cols, fields[1:])]
+    blocks = pa.ListArray.from_arrays(
+        pa.array(offsets), pa.StructArray.from_arrays(children, fields=fields),
+        type=_RESULT_SCHEMA.field("blocks").type)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(n_blocks), blocks, pa.array(full_text, pa.string()),
+         pa.array(error_code, pa.string()), pa.array(error_msg, pa.string())],
+        schema=_RESULT_SCHEMA)
 
 
 # Flat-decode block size, in characters. The machine allocates ~15
@@ -600,26 +663,15 @@ def _decode_canons_chunk(canons, config: EngineConfig):
     return texts, confs
 
 
-def _decode_flat(rows, canons, metas, out, config: EngineConfig) -> None:
-    texts_all, confs_all = decode_canons_flat(canons, config)
-    for i, k0, k1 in rows:
-        blocks = []
-        for j in range(k0, k1):
-            meta = metas[j]
-            box, start, end = meta[0], meta[1], meta[2]
-            # 4-element metas (stage 4) carry the block type — the
-            # region classification from the layout parser — instead
-            # of deriving it from the crop text
-            btype = meta[3] if len(meta) > 3 else classify_block(canons[j])
-            blocks.append(Block(
-                pos=j - k0, text=texts_all[j], confidence=confs_all[j],
-                block_type=btype,
-                left=box.left, top=box.top,
-                width=box.width, height=box.height,
-                start=start, end=end,
-            ))
-        out[i] = TurnResult(
-            blocks=blocks, full_text="\n".join(b.text for b in blocks))
+def _decode_flat(canons, metas, config: EngineConfig) -> list[list]:
+    """Decode the pool and classify its crops: the per-crop block
+    columns in ``_BLOCK_COLS`` order. Stage-4 crops carry their layout
+    region type in the meta instead of classifying the crop text."""
+    texts, confs = decode_canons_flat(canons, config)
+    *geom, rtypes = zip(*metas)
+    btypes = [rt if rt is not None else classify_block(c)
+              for rt, c in zip(rtypes, canons)]
+    return [texts, confs, btypes, *map(list, geom)]
 
 
 def recognize_batch(texts, config: EngineConfig = DEFAULT_CONFIG):

@@ -206,7 +206,7 @@ def parse_layout(
     config: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """Vectorized layout parse over a DataFrame of document payloads:
-    one narrow mapInPandas stage (same execution shape as
+    one narrow mapInPandas stage (no shuffle, like
     ``SparkOcrEngine.extract``). Adds per-row page/region counts, the
     classified region array, and ``body_text`` — body+table regions
     joined in reading order (headers/footers/page numbers stripped, the

@@ -817,7 +817,7 @@ def bpe_encode(
     word is encoded once and cached — web text repeats words heavily,
     so per-batch cost is ∝ distinct words, not tokens. Per-row Python
     exists only INSIDE the Arrow batch, the same budget the extraction
-    engine's mapInPandas already spends.
+    engine's mapInArrow already spends.
     """
     from pyspark.sql.types import ArrayType, StringType
 

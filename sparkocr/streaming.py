@@ -4,11 +4,12 @@ The reference is strictly request/response batch (engine.rs:382-475) and
 the north rule's 10^12-turn job is batch-with-checkpoints — but a
 transcript corpus at that scale is usually APPENDED to continuously, so
 the engine verbs are also exposed over streaming DataFrames. The fused
-``mapInPandas`` extract is stateless per-row, which makes it directly
-streamable: same UDF, same schema, no state store needed. Spark's
-streaming checkpoint (source offsets + file-sink log) then provides the
-incremental-processing half of the resumability story: a restarted query
-processes exactly the files that arrived since the last commit —
+extract (one narrow ``mapInArrow`` stage) is stateless per-row, which
+makes it directly streamable: same UDF, same schema, no state store
+needed. Spark's streaming checkpoint (source offsets + file-sink log)
+then provides the incremental-processing half of the resumability
+story: a restarted query processes exactly the files that arrived
+since the last commit —
 complementing ``sparkocr.checkpoint``, which makes one large batch
 restartable from the middle.
 

@@ -6,7 +6,10 @@ Block grows a field, both update together). Deliberately
 dependency-light: plain asserts, no pytest/hypothesis imports, usable
 from a bare interpreter."""
 
+import numpy as np
+
 from sparkocr.config import FLAGSHIP_CONFIG
+from sparkocr.engine import EXTRACT_RESULT_FIELDS
 from sparkocr.fastbatch import batch_extract_simple, extract_batch
 from sparkocr.pipeline import extract_turn, extract_turn_auto
 
@@ -53,16 +56,28 @@ def assert_matches(texts, config=FLAGSHIP_CONFIG, min_eligible=None,
 
 def assert_extract_batch(texts, config=FLAGSHIP_CONFIG, roles=None):
     """Full coverage of the engine's one dispatch: ``extract_batch``
-    answers EVERY row (never None), byte-identical to
+    answers EVERY row of its Arrow result, byte-identical to
     ``extract_turn_auto(t, role)`` when ``roles`` is given and to
-    ``extract_turn(t)`` when it is not. Returns the row count."""
+    ``extract_turn(t)`` when it is not: every block field, and the
+    confidence as float32 bits. Returns the row count."""
     got = extract_batch(list(texts), roles, config)
-    assert len(got) == len(texts), (len(got), len(texts))
-    for k, (t, r) in enumerate(zip(texts, got)):
-        assert r is not None, ascii(t)
+    assert got.schema.names == [f.name for f in EXTRACT_RESULT_FIELDS]
+    rows = got.to_pylist()
+    assert len(rows) == len(texts), (len(rows), len(texts))
+    for k, (t, r) in enumerate(zip(texts, rows)):
         if roles is not None:
             want = extract_turn_auto(t, roles[k], config)
         else:
             want = extract_turn(t, config)
-        _assert_same(t, r, want)
-    return len(got)
+        assert r["error_code"] == want.error_code, ascii(t)
+        assert r["error_msg"] == want.error_msg, ascii(t)
+        assert r["full_text"] == want.full_text, ascii(t)
+        assert r["n_blocks"] == len(want.blocks), ascii(t)
+        assert len(r["blocks"]) == len(want.blocks), ascii(t)
+        for a, b in zip(r["blocks"], want.blocks):
+            w = dict(b.__dict__)
+            a_bits = np.float32(a.pop("confidence")).view(np.uint32)
+            w_bits = np.float32(w.pop("confidence")).view(np.uint32)
+            assert a_bits == w_bits, (ascii(t), a_bits, w_bits)
+            assert a == w, (ascii(t), a, w)
+    return len(rows)

@@ -1,7 +1,7 @@
 """Arrow batch-boundary invariance: every pandas/Arrow kernel in the
 package is designed batch-local (the rolling window hash's flat cumsum,
 the Gopher battery's per-doc Counters, bpe_encode's per-batch word
-cache, the extraction engine's mapInPandas) — so shrinking
+cache, the extraction engine's mapInArrow) — so shrinking
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` to a handful of rows
 must change NOTHING in any output. A cross-batch state leak or a
 flat-array stitching bug shows up immediately at batch size 3."""

@@ -202,6 +202,35 @@ def test_extract_batch_answers_every_row(routing):
             assert n == len(texts)
 
 
+@pytest.mark.parametrize("poison", ["decode", "markup_stage"])
+def test_extract_batch_poison_backstops(monkeypatch, poison):
+    """A batch machine that raises sends its rows to the per-turn path:
+    a failed flat decode hands back every row that had crops, a failed
+    stage-3 pass rolls its crops out of the pool. Either way
+    ``extract_batch`` still answers every row exactly."""
+    import sparkocr.fastbatch as fb
+
+    hand = _cleaned(SIMPLE_TURNS + MARKUP_TURNS + FORMFEED_TURNS
+                    + DOCUMENT_TURNS + MULTILINE_TURNS)
+    roles = [("user", "assistant", "tool")[i % 3] for i in range(len(hand))]
+    if poison == "decode":
+        def boom(*a, **k):
+            raise RuntimeError("poison decode")
+        monkeypatch.setattr(fb, "decode_canons_flat", boom)
+    else:
+        markup_batch = fb._markup_batch
+
+        def boom(*a, **k):
+            markup_batch(*a, **k)   # fill the pool, then fail
+            raise RuntimeError("poison stage")
+        monkeypatch.setattr(fb, "_markup_batch", boom)
+    for r in (roles, None):
+        assert _assert_extract_batch(hand, FLAGSHIP_CONFIG,
+                                     roles=r) == len(hand)
+    fast = batch_extract_simple(hand, FLAGSHIP_CONFIG, roles=roles)
+    assert any(r is None for r in fast)
+
+
 def test_fixture_markup_turns_all_match():
     """Every markup-bearing row of the benchmark transcript fixture is
     stage-3 eligible and byte-identical (the shape the SCALING_NOTES

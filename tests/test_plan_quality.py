@@ -50,7 +50,8 @@ def test_extract_is_single_narrow_stage(spark, sf):
     )
     plan = _plan(SparkOcrEngine(spark).extract(docs))
     assert "Exchange" not in plan  # no shuffle anywhere in the fused map
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
+    assert "MapInPandas" not in plan
     # only conv_id/doc_id/text read from the file, and exactly one scan
     assert plan.count("FileScan") == 1
 

@@ -1,5 +1,5 @@
 """Spark engine ≡ oracle equality (the correctness gate of the north
-rule): the fused mapInPandas pipeline must reproduce the single-node
+rule): the fused mapInArrow pipeline must reproduce the single-node
 oracle byte-for-byte under window-ranked (conv_id, turn_idx) ordering,
 at any parallelism."""
 
@@ -81,8 +81,8 @@ def test_extract_parallelism_invariance(engine, corpus_df, extracted):
 
 
 def test_extract_plan_is_single_narrow_stage(engine, corpus_df):
-    """The fused pipeline must not shuffle: ArrowEvalPython/mapInPandas
-    directly over the scan."""
+    """The fused pipeline must not shuffle: one mapInArrow directly
+    over the scan."""
     plan = engine.extract(corpus_df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 
@@ -191,6 +191,94 @@ def test_null_text_yields_error_row(engine, spark):
     )
     r = engine.extract(df).collect()[0]
     assert r.error_code == "InputError" and r.n_blocks == 0
+
+
+# rows the batch stages hand to the per-turn pipeline: entity-minted
+# markup (single line, multi-line, inside a routed document)
+RESIDUE_TEXTS = [
+    "&lt;b&gt;minted bold tag&lt;/b&gt; here",
+    "first plain line of text\n&lt;i&gt;minted italic&lt;/i&gt; line",
+    "Body text on page one.\n\fBody &lt;b&gt;minted&lt;/b&gt; page two.",
+]
+
+
+def _boundary_frames(spark):
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    ts = datetime.datetime(2024, 5, 1, 12, 30)
+    mixed = [
+        ("c1", 0, "user", "hello brave new world", ts),
+        ("c1", 1, "assistant", None, ts),
+        ("c1", 2, "user", "", None),
+        ("c1", 3, "tool",
+         "Quarterly report body text.\n\fTable: a | b | c\n\fMore body.",
+         ts),
+        ("c1", 4, "user", "two lines\nof plain text here", ts),
+        ("c1", 5, "user", "<div>markup <b>bearing</b> turn</div>", ts),
+    ] + [("c2", k, "tool", t, ts) for k, t in enumerate(RESIDUE_TEXTS)]
+    schema = ("conv_id string, turn_idx int, role string, text string, "
+              "ts timestamp")
+    df = spark.createDataFrame(mixed, schema).coalesce(1)
+    residue = df.where(F.col("conv_id") == "c2")
+    return df, residue
+
+
+@pytest.mark.parametrize("case", ["ts_passthrough", "route_drop_role",
+                                  "all_residue", "zero_rows"])
+def test_extract_arrow_boundary(engine, spark, case):
+    """The cases the ``mapInArrow`` boundary changes: a timestamp
+    passthrough (as ``streaming.quality_metrics_stream`` passes it),
+    routing with a passthrough that drops ``role``, null/empty rows and
+    a batch whose every row is residue, and a zero-row input. The output
+    schema is exactly the passthrough fields plus
+    ``EXTRACT_RESULT_FIELDS``; every row equals the per-turn pipeline
+    (confidence as float32 bits)."""
+    import numpy as np
+    from pyspark.sql.types import StructType
+
+    from sparkocr.engine import EXTRACT_RESULT_FIELDS
+    from sparkocr.fastbatch import batch_extract_simple
+    from sparkocr.pipeline import extract_turn_auto
+
+    df, residue = _boundary_frames(spark)
+    # the all-residue frame really is all residue, routed or not
+    for ff, roles in ((True, None), (False, ["tool"] * len(RESIDUE_TEXTS))):
+        assert batch_extract_simple(RESIDUE_TEXTS, FLAGSHIP_CONFIG, ff,
+                                    roles) == [None] * 3
+    passthrough, route = ("conv_id", "turn_idx", "role", "ts"), False
+    if case == "route_drop_role":
+        passthrough, route = ("conv_id", "turn_idx"), True
+    elif case == "all_residue":
+        df = residue
+    elif case == "zero_rows":
+        df = df.limit(0)
+    keep = [c for c in passthrough if c in df.columns]
+
+    out = engine.extract(df, passthrough=passthrough, route_documents=route)
+    assert out.schema == StructType(
+        [df.schema[c] for c in keep] + EXTRACT_RESULT_FIELDS)
+    got = {(r.conv_id, r.turn_idx): r for r in out.collect()}
+    src = df.collect()
+    assert len(got) == len(src)
+    if case != "zero_rows":
+        assert len(src) >= 3
+    for row in src:
+        g = got[(row.conv_id, row.turn_idx)]
+        for c in keep:
+            assert g[c] == row[c], c
+        want = extract_turn_auto(row.text, row.role if route else None,
+                                 FLAGSHIP_CONFIG)
+        assert (g.n_blocks, g.full_text, g.error_code, g.error_msg) == (
+            len(want.blocks), want.full_text, want.error_code,
+            want.error_msg)
+        assert len(g.blocks) == len(want.blocks)
+        for gb, wb in zip(g.blocks, want.blocks):
+            gd, wd = gb.asDict(), dict(wb.__dict__)
+            assert (np.float32(gd.pop("confidence")).view(np.uint32)
+                    == np.float32(wd.pop("confidence")).view(np.uint32))
+            assert gd == wd
 
 
 def test_simhash_neardup_pairs(spark):
