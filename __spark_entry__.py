@@ -29,6 +29,7 @@ prior round AND remain pytest-gated.
 
 from __future__ import annotations
 
+import errno
 import os as _os
 
 from collections.abc import Callable
@@ -39,6 +40,11 @@ from pyspark.sql import functions as F
 
 _SHIPPED: set = set()
 _ZIP_PATH: str | None = None
+
+# Queries that read a data file from outside testdata. They fail fast
+# with a FileNotFoundError naming the file when it is absent; the local
+# mirror (scripts/check_correctness.py) reports that as a `skip` line.
+DATA_FILE_QUERIES = ("extract_keys_documents",)
 
 
 def _ensure_pkg(spark: SparkSession) -> None:
@@ -904,9 +910,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             # vocabulary would hash-mismatch and masquerade as an
             # engine regression (review finding)
             raise FileNotFoundError(
-                f"keys file {keys_path} not found — extract_keys_documents "
+                errno.ENOENT,
+                "keys file not found — extract_keys_documents "
                 "requires the reference checkout; its oracle pin is tied "
-                "to that exact vocabulary")
+                "to that exact vocabulary", keys_path)
         keys = load_keys_file(keys_path)
         eng = SparkOcrEngine(spark, FLAGSHIP_CONFIG.with_dictionary(keys))
         out = eng.extract(_as_transcripts(_t(spark, sf, "documents")))

@@ -2,7 +2,17 @@
 
 The session IS the engine singleton (the analog of OcrEngineManager,
 engine.rs:615-835 — ``SparkSession.builder.getOrCreate()`` already
-provides once-per-process semantics)."""
+provides once-per-process semantics).
+
+Local sessions (``get_spark``) run their Python workers under
+``sparkocr.pydaemon``: PySpark's own daemon, except that a zip archive
+on ``sys.path`` is re-read only when it has changed. PySpark's worker
+calls ``importlib.invalidate_caches()`` at the start of every task,
+and before CPython 3.13 that re-reads ``pyspark.zip``'s directory once
+per imported pyspark subpackage, about 0.25 s of CPU per task. The
+daemon module must be importable when the daemon starts, which the
+``PYTHONPATH`` export below guarantees for local sessions only; the
+spark-submit path (``build_submit_session``) keeps PySpark's daemon."""
 
 from __future__ import annotations
 
@@ -52,7 +62,12 @@ def build_submit_session(app: str):
     shared engine config dict so the cluster path can never drift from
     the local/bench/test entry points. THE single home of this policy —
     both ``scripts/run_extract.py`` and ``scripts/run_corpus_build.py``
-    call it."""
+    call it.
+
+    Its workers run under PySpark's own daemon, not
+    ``sparkocr.pydaemon``: on a cluster the package arrives as
+    ``--py-files``, which reach a worker's ``sys.path`` per task, after
+    the daemon has started, so the daemon could not import the module."""
     from pyspark.sql import SparkSession
 
     b = SparkSession.builder.appName(app)
@@ -72,6 +87,11 @@ def get_spark(
 
     ``cores``: int → ``local[n]``; "*" → ``local[*]``; None → respect
     $SPARK_GRAFT_CPUS, default ``local[*]``.
+
+    The Python workers run under ``sparkocr.pydaemon``
+    (``spark.python.daemon.module``), which skips the per-task re-read
+    of unchanged zip archives; the package root is on the workers'
+    ``PYTHONPATH`` from the start, so the daemon can import it.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -82,6 +102,7 @@ def get_spark(
     for k, v in _ENGINE_CONF.items():
         b = b.config(k, v)
     b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    b = b.config("spark.python.daemon.module", "sparkocr.pydaemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, str(v))
     return b.getOrCreate()

@@ -109,7 +109,8 @@ def test_full_suite_completes_inside_wall_budget():
     hard wall-clock budget (~3× the current quiet-box time) — harness
     truncation by slowness must be visible to the builder, not just the
     judge. Also re-asserts end-to-end that every query passes its
-    oracle."""
+    oracle. The only queries allowed to skip are ``DATA_FILE_QUERIES``
+    whose data file is absent from this box."""
     t0 = time.time()
     proc = subprocess.run(
         [sys.executable,
@@ -123,6 +124,11 @@ def test_full_suite_completes_inside_wall_budget():
         f"correctness mirror failed after {wall:.0f}s:\n{tail}\n"
         f"{proc.stderr[-1000:]}")
     assert "0 fail" in proc.stdout, tail
+    for line in proc.stdout.splitlines():
+        if line.startswith("skip "):
+            name, path = line.split()[1].rstrip(":"), line.split()[4]
+            assert name in entrymod.DATA_FILE_QUERIES, line
+            assert not os.path.exists(path), line
 
 
 def test_least_verified_queries_stay_first():
