@@ -1338,33 +1338,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }.items()}
 
 
-def bench_probes() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Bench-only probes keeping BENCH/BASELINE.md per-query
-    comparability across the round-4 contract merges: the pinned
-    baseline times `ann_cosine_topk` and `lsh_topk_embeddings` as
-    standalone queries, but the driver contract now verifies that work
-    inside the merged `embed_topk_neardup_exact` /
-    `lsh_topk_neardup_embeddings` rows. These callables reproduce the
-    OLD per-query work exactly (same operators, same parameters) so the
-    bench's round-over-round comparison stays apples-to-apples; they
-    are NOT part of queries() and carry no oracle."""
-    from sparkocr.ann import cosine_topk, lsh_topk
-
-    def ann_cosine_topk(spark, sf):
-        _ensure_pkg(spark)
-        emb = _t(spark, sf, "embeddings")
-        return cosine_topk(emb, _query_vec(emb, 0), k=10)
-
-    def lsh_topk_embeddings(spark, sf):
-        _ensure_pkg(spark)
-        emb = _t(spark, sf, "embeddings")
-        qv = _query_vec(emb, 0)
-        return lsh_topk(emb, qv, dim=len(qv), k=10)
-
-    return {"ann_cosine_topk": ann_cosine_topk,
-            "lsh_topk_embeddings": lsh_topk_embeddings}
-
-
 # dedup_battery plants: a 25-token passage (duplicated windows for
 # ExactSubstr, and the 13-gram decontamination probe) and a shared
 # paragraph; corpus_funnels reuses doc 0's 15-token prefix as its

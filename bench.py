@@ -1,20 +1,44 @@
 """Benchmark runner (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line to stdout:
+Runs the headline queries at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+data set named by ``SF_DIR``) on local[cpus], where cpus is the number
+of CPUs this process may use (``len(os.sched_getaffinity(0))``), and
+prints ONE JSON line to stdout. It starts timing as soon as its session is up: no
+load or capacity waits. The 1-minute load average at start and end is
+recorded as context only.
 
-    {"metric": "...", "value": <total headline sec>, "unit": "sec",
-     "queries": {...per-query sec...}, "sf": ...,
-     "turns_per_sec_2exec": ..., "turns_per_sec_8exec": ...,
-     "scaling_efficiency": ...}
+Each headline query writes every output column to a ``noop`` sink
+(``.count()`` would let Catalyst prune projected UDF columns); its time
+is the best of 3 interleaved passes (q1 … qN, three times).
 
 The scaling block evidences the north-rule "N → 4N executors at ≥0.8
-efficiency" criterion in-sandbox with one cohort of 8 pinned single-core
-executor JVMs over salted shards of a deterministic 200k-turn corpus:
-interleaved lockstep passes where either 2 (the N cluster) or all 8 (the
-4N cluster) compute. See BENCH/SCALING_NOTES.md for the methodology and
-the two estimators reported. Skip with SPARK_GRAFT_BENCH_SCALING=0.
+efficiency" criterion with one cohort of 4N single-CPU executor JVMs,
+N = max(1, min(8, cpus) // 4), each pinned to its own CPU, over salted
+shards of a deterministic corpus: interleaved lockstep passes where
+either the first N (the N cluster) or all 4N (the 4N cluster) compute.
+Below 4 CPUs the cohort does not run. See BENCH/SCALING_NOTES.md for the
+methodology and the two estimators reported.
+
+JSON keys:
+
+    metric, value, unit     headline sum of the per-query seconds
+    queries                 {query: best-of-3 seconds}
+    sf, sf_dir, cpus        data set and local[cpus]
+    load1_at_start          1-minute load average when timing began
+    load1_at_end            ... after the scaling cohort
+    failed_queries          headline queries that failed in every pass
+                            (present only when one did)
+    ratio_to_pin            {query: seconds / BENCH/pin.json seconds}
+    ratio_to_pin_median     present only when sf_dir and cpus equal the pin's
+    scaling_corpus_turns    turns over all 4N shards
+    scaling_executor_cores  CPUs per cohort executor (1)
+    scaling_n_executors     [N, 4N]
+    turns_per_sec_n         throughput of the N cluster
+    turns_per_sec_4n        throughput of the 4N cluster
+    scaling_efficiency      per-executor self-ratio (see SCALING_NOTES)
+    scaling_efficiency_wall (turns_per_sec_4n / turns_per_sec_n) / 4
+    scaling_error           why the cohort was skipped or failed; present
+                            instead of the scaling_* / turns_* keys
 
 All diagnostics go to stderr; stdout carries exactly the one JSON line.
 """
@@ -25,52 +49,20 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-# the driver invokes `python bench.py` bare; config travels via env vars
-# (below). -h/--help must NOT fall through into a multi-minute bench run;
-# any other stray argument is ignored loudly rather than rejected, so an
-# unexpected driver-side argument can never zero out a round's bench.
-if any(a in ("-h", "--help") for a in sys.argv[1:]):
-    sys.stderr.write(
-        "usage: python bench.py   (no arguments)\n"
-        "config via env: SPARK_GRAFT_SF_DIR SPARK_GRAFT_CPUS "
-        "SPARK_GRAFT_BENCH_SCALING SPARK_GRAFT_SCALING_CORES "
-        "SPARK_GRAFT_BENCH_REPS SPARK_GRAFT_BENCH_BESTOF\n")
-    sys.exit(0)
-if sys.argv[1:]:
-    sys.stderr.write(f"bench.py: ignoring unexpected args {sys.argv[1:]}\n")
-
-# the driver-contract queries() memoizes the shared extraction across
-# queries (correctness-harness wall-time fix); a TIMING loop must never
-# see that cache — best-of-3 over a memoized plan measures the cache,
-# not the engine
-os.environ["SPARKOCR_EXTRACT_MEMO"] = "0"
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-RUN_SCALING = os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0"
-# executor width for the N→4N scaling runs. Default 1 CPU/executor keeps
-# even the 4-executor point at ~12% machine utilisation, well under this
-# box's ~30k turns/sec memory-bandwidth ceiling — measuring executor-count
-# scaling, not the sandbox's shared memory bus (see BENCH/SCALING_NOTES.md
-# for the saturation study at wider executors).
-SCALING_CORES = int(os.environ.get("SPARK_GRAFT_SCALING_CORES", "1"))
-# corpus sized to the executor width: long enough timed passes that
-# fixed job-submit overheads (~0.3s) stay under ~3% of a pass
-SCALING_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS",
-                                  str(40 * SCALING_CORES)))
+CPUS = len(os.sched_getaffinity(0))
+PIN_PATH = os.path.join(REPO, "BENCH", "pin.json")
 
 # Headline subset of __spark_entry__.queries(): the flagship extraction
 # plus one representative per operator family (dedup, near-dup, ANN,
-# window, interval merge, quality, layout). Full coverage runs in
+# window, interval merge, quality). Full coverage runs in
 # scripts/check_correctness.py; the bench measures throughput.
-# ann_cosine_topk / lsh_topk_embeddings live in entrymod.bench_probes()
-# since round 4 (their contract queries merged with the near-dup pair
-# probes); the bench still times the ORIGINAL per-query work so the
-# pinned BENCH/BASELINE.md comparison stays apples-to-apples.
 HEADLINE = [
     "extract_documents",
     "extract_blocks_flat",
@@ -78,56 +70,40 @@ HEADLINE = [
     "minhash_lsh_pairs_documents",
     "jaccard_pairs_documents",
     "simhash_documents",
-    "ann_cosine_topk",
-    "lsh_topk_embeddings",
+    "ivf_topk_embeddings",
     "window_funcs_events",
     "interval_merge_events",
     "doc_metrics_documents",
 ]
 
-# The hand-committed BENCH/BASELINE.md pin (round-4 final re-pin, quiet
-# box, capacity-gated). Mirrored here so every run emits a per-query
-# ratio_to_pin column: a degraded-box run (like BENCH_r04's load-1.97
-# start) then grades ITSELF — near-uniform ratios across queries no
-# commit touched read as box state, a single query's outlier ratio reads
-# as code drift. Only meaningful at the pin's conditions (sf0.1, 32
-# cpus); ratios are omitted at any other sf_dir.
-PIN_SF_DIR = "/root/testdata/sf0.1"
-PIN_QUERIES = {
-    "extract_documents": 0.913,
-    "extract_blocks_flat": 0.918,
-    "exact_dedup_documents": 0.343,
-    "minhash_lsh_pairs_documents": 1.359,
-    "jaccard_pairs_documents": 1.268,
-    "simhash_documents": 0.210,
-    "ann_cosine_topk": 0.324,
-    "lsh_topk_embeddings": 0.414,
-    "window_funcs_events": 0.137,
-    "interval_merge_events": 0.230,
-    "doc_metrics_documents": 0.745,
-}
+# Cohort pass plan: "A" = only the N cluster computes, "B" = all 4N do.
+PLAN = "ABABAB"
+# documents replicated this many times: 200k turns at sf0.1, long enough
+# timed passes that fixed job-submit overheads (~0.3 s) stay under ~3%
+SCALING_REPS = 40
 
-# One "executor": a pinned local[k] JVM processing its 1/8 shard of the
-# corpus. A single cohort of 8 executors measures BOTH cluster sizes:
-# in "A" (=N) passes only executors 0-1 compute while the rest idle at
-# the barrier; in "B" (=4N) passes all 8 compute. Interleaved lockstep
-# passes (ABABAB) mean the same JVMs, same shards, and same machine state
-# appear in both configurations, so per-JVM speed lottery cancels in the
-# ratio — efficiency reduces to wall_A / wall_B. This is the in-sandbox
-# analog of running the identical spark-submit job on a 2-executor and an
-# 8-executor cluster (executor size fixed, count scaled 4×).
+# One "executor": a local[1] JVM pinned to one CPU, processing its 1/4N
+# shard of the corpus. A single cohort of 4N executors measures BOTH
+# cluster sizes: in "A" passes only the first N compute while the rest
+# idle at the barrier; in "B" passes all compute. Interleaved lockstep
+# passes (ABABAB) mean the same JVMs, shards and machine state appear in
+# both configurations, so per-JVM speed lottery cancels in the ratio.
+# This is the in-sandbox analog of running the identical spark-submit job
+# on an N-executor and a 4N-executor cluster (executor size fixed).
 _SCALING_WORKER = r'''
 import os, sys, time
+sf_dir, reps = sys.argv[1], int(sys.argv[2])
+n_shards, shard, ready_path, go_path = (
+    int(sys.argv[3]), int(sys.argv[4]), sys.argv[5], sys.argv[6])
+plan, n_small = sys.argv[7], int(sys.argv[8])
+# pin BEFORE the JVM spawns: the java child inherits the affinity mask
+os.sched_setaffinity(0, {sorted(os.sched_getaffinity(0))[shard]})
 from pyspark.sql import functions as F
 from sparkocr.session import get_spark
 from sparkocr.engine import SparkOcrEngine
 
-cores, sf_dir, reps = int(sys.argv[1]), sys.argv[2], int(sys.argv[3])
-n_shards, shard, ready_path, go_path = (
-    int(sys.argv[4]), int(sys.argv[5]), sys.argv[6], sys.argv[7])
-plan, n_small = sys.argv[8], int(sys.argv[9])
-spark = get_spark(cores=cores, app_name=f"scaling-{n_shards}x{cores}-{shard}",
-                  shuffle_partitions=cores * 2,
+spark = get_spark(cores=1, app_name=f"scaling-{n_shards}x1-{shard}",
+                  shuffle_partitions=2,
                   extra_conf={"spark.ui.showConsoleProgress": "false",
                               "spark.ui.enabled": "false",
                               "spark.driver.memory": "6g"})
@@ -143,20 +119,21 @@ corpus = (
 )
 # row-level (salted) sharding: pure conv-hash shards are ±13% uneven on
 # this corpus (few distinct convs) and the wall clock pays the worst
-# shard — the whale-conversation skew problem in miniature. The per-turn
-# map is stateless, so salting with turn_idx is exactly the north-rule
-# "salted repartition on conv_id" move and balances shards to <1%.
+# shard. The per-turn map is stateless, so salting with turn_idx is the
+# north-rule "salted repartition on conv_id" move and balances shards.
 shardf = corpus.where(
     F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_shards)) == shard
-).repartition(cores * 4).cache()
+).repartition(4).cache()
 n = shardf.count()
 eng = SparkOcrEngine(spark)
-# full-pass warmup: spawns+warms ALL python workers and JITs the UDF path
-eng.extract(shardf).count()
-# lockstep passes: a barrier before EVERY timed pass keeps the
-# concurrent executors aligned, so per-pass wall = max over the pass's
-# ACTIVE executors and measures true contention, not scheduling drift.
-# "A" passes: only executors < n_small compute; "B" passes: all compute.
+
+def run_pass():
+    eng.extract(shardf).write.format("noop").mode("overwrite").save()
+
+# full-pass warmup: spawns+warms the python worker and JITs the UDF path
+run_pass()
+# a barrier before EVERY timed pass keeps the concurrent executors
+# aligned, so per-pass wall = max over the pass's ACTIVE executors
 mine = set("AB") if shard < n_small else {"B"}
 dts = []
 for p, label in enumerate(plan):
@@ -171,7 +148,7 @@ for p, label in enumerate(plan):
     if label not in mine:
         continue
     t0 = time.time()
-    eng.extract(shardf).count()
+    run_pass()
     dts.append(f"{label}{p}:{time.time() - t0:.4f}")
 print("SCALING %d %d %s" % (shard, n, " ".join(dts)), flush=True)
 spark.stop()
@@ -190,102 +167,29 @@ def _load1() -> float | None:
         return None
 
 
-def _wait_for_quiet(max_wait_s: int = 120,
-                    threshold: float = 1.0) -> float | None:
-    """This shared box carries bursty external load (observed 1-min
-    load-avg spikes to 8+ for minutes at a time, inflating the
-    contention-sensitive dedup queries 2-5×). Measurement hygiene: wait
-    for the 1-minute load average to fall below ``threshold`` before
-    timing, bounded to ``max_wait_s`` so a busy box still produces a
-    (flagged) result. Returns the residual load at the moment timing
-    starts — surfaced in the JSON so every BENCH artifact records the
-    conditions it ran under (the pinned BASELINE.md demands load < 1;
-    a higher residual flags the comparison as conditions-skewed)."""
-    t0 = time.time()
-    load1 = _load1()
-    while time.time() - t0 < max_wait_s:
-        load1 = _load1()
-        if load1 is None:
-            return None
-        if load1 < threshold:
-            if time.time() - t0 > 1:
-                _log(f"bench: waited {time.time() - t0:.0f}s for quiet "
-                     f"(load {load1:.2f})")
-            return load1
-        time.sleep(10)
-    _log(f"bench: proceeding despite load {load1} (hygiene budget spent); "
-         "timings may be inflated — see ratio_to_pin in the JSON")
-    return load1
-
-
-def _capacity_worker(q, n_iters: int, n_elems: int) -> None:
-    """One parallel-capacity worker: a memory-bus-bound kernel with a
-    FRESH allocation per iteration (first-touch page faults are the
-    dimension that collapses in the box's degraded state — see
-    BENCH/BASELINE.md's box-capacity caveat)."""
-    import numpy as _np  # noqa: PLC0415 — child process import
-    t0 = time.perf_counter()
-    for _ in range(n_iters):
-        a = _np.ones(n_elems, dtype=_np.int64)
-        s = _np.cumsum(a)
-        assert int(s[-1]) == n_elems
-    q.put(time.perf_counter() - t0)
-
-
-def parallel_capacity_median(n_probes: int = 3) -> float | None:
-    """Median of ``n_probes`` :func:`_parallel_capacity` readings — the
-    classifier value the bench JSON carries. Single readings swing 2-3x
-    within a degraded episode (the steal is bursty below the probe
-    timescale); the median over ~15 s still separates the regimes
-    cleanly (healthy ≈ 0.6+, degraded well below 0.4)."""
-    vals = [v for v in (_parallel_capacity() for _ in range(n_probes))
-            if v is not None]
-    if not vals:
+def cohort_size(cpus: int) -> tuple[int, int] | None:
+    """(N, 4N) single-CPU executors for ``cpus`` usable CPUs, or None
+    when there are too few CPUs for 4N pinned executors."""
+    if cpus < 4:
         return None
-    return sorted(vals)[len(vals) // 2]
+    n_small = max(1, min(8, cpus) // 4)
+    return n_small, 4 * n_small
 
 
-def _parallel_capacity(p: int = 8, n_iters: int = 8,
-                       n_elems: int = 8_000_000) -> float | None:
-    """Classify the box's PARALLEL memory capacity: the same fixed
-    kernel timed in one process, then in ``p`` concurrent processes;
-    returns mean(t_single) / mean(t_parallel) (1.0 = the p-way run is
-    as fast per worker as the solo run). This box degrades transiently
-    in a way loadavg and single-core probes cannot see (single-core
-    flat while 32-core −37%); this ratio makes every bench artifact
-    self-classifying. Healthy reference on this box ≈ 0.65-0.9 (real
-    shared-bus cost included); the degraded state reads well below.
-    ~5 s total."""
-    import multiprocessing as mp
-    try:
-        ctx = mp.get_context("fork")
-        # solo reference: best of two runs (a single run can land on a
-        # transiently stolen core and undercount the denominator)
-        t_solo = None
-        for _ in range(2):
-            q = ctx.Queue()
-            w = ctx.Process(target=_capacity_worker,
-                            args=(q, n_iters, n_elems))
-            w.start()
-            t = q.get(timeout=120)
-            w.join()
-            t_solo = t if t_solo is None else min(t_solo, t)
-        q = ctx.Queue()
-        ws = [ctx.Process(target=_capacity_worker,
-                          args=(q, n_iters, n_elems)) for _ in range(p)]
-        for w in ws:
-            w.start()
-        times = sorted(q.get(timeout=120) for _ in ws)
-        for w in ws:
-            w.join()
-        t_par = times[len(times) // 2]  # median worker
-        return round(t_solo / t_par, 3)
-    except Exception as e:  # the probe must never sink the bench
-        _log(f"parallel-capacity probe failed: {e}")
-        return None
+def ratios_to_pin(timings: dict[str, float], sf_dir: str, cpus: int,
+                  pin: dict) -> dict[str, float]:
+    """Per-query ratio of ``timings`` to the pinned times, or {} unless
+    the run's sf_dir and CPU count equal the pin's. A degraded box reads
+    as near-uniform ratios across queries, code drift as one query's
+    outlier ratio."""
+    if (os.path.realpath(sf_dir) != os.path.realpath(pin["sf_dir"])
+            or cpus != pin["cpus"]):
+        return {}
+    return {k: round(v / pin["queries"][k], 2)
+            for k, v in timings.items() if k in pin["queries"]}
 
 
-def run_headline() -> tuple[dict[str, float], float]:
+def run_headline() -> tuple[dict[str, float], float, list[str]]:
     import __spark_entry__ as entrymod
     from sparkocr.session import get_spark
 
@@ -293,25 +197,18 @@ def run_headline() -> tuple[dict[str, float], float]:
                       shuffle_partitions=CPUS,
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    qs = {**entrymod.queries(), **entrymod.bench_probes()}
+    qs = entrymod.queries()
     timings: dict[str, float] = {}
     # warm the session (JVM/Arrow/python-worker spinup outside timings)
     spark.range(1000).selectExpr("sum(id)").collect()
-    # best-of-3 with INTERLEAVED passes (q1 q2 … qN, three times): this
-    # box carries unpredictable multi-minute background-load bursts
-    # (observed load-avg 8+), and consecutive per-query reps put all
-    # three samples of one query inside one burst — a round-3 run
-    # recorded minhash at 7.9s (best-of-3!) vs its 1.8s quiet floor.
-    # Round-robin passes spread each query's samples ~minutes apart so
-    # a burst costs one sample, not a query's whole budget.
-    counts: dict[str, int] = {}
+    # INTERLEAVED passes spread each query's samples apart, so a burst
+    # of external load costs one sample, not a query's whole best-of-3
     for _pass in range(3):
         for name in HEADLINE:
-            if name not in qs:
-                continue
             try:
                 t0 = time.time()
-                counts[name] = qs[name](spark, SF_DIR).count()
+                (qs[name](spark, SF_DIR)
+                 .write.format("noop").mode("overwrite").save())
                 dt = time.time() - t0
                 if name not in timings or dt < timings[name]:
                     timings[name] = dt
@@ -319,160 +216,159 @@ def run_headline() -> tuple[dict[str, float], float]:
                 _log(f"bench {name}: FAILED {e}")
     timings = {k: round(v, 3) for k, v in timings.items()}
     for name, best in timings.items():
-        _log(f"bench {name}: {counts[name]} rows in {best}s")
+        _log(f"bench {name}: {best}s")
     spark.stop()
     # queries that never succeeded in any pass: surfaced in the JSON —
     # a silently shrunken sum would read as a FASTER bench
-    failed = [n for n in HEADLINE if n in qs and n not in timings]
+    failed = [n for n in HEADLINE if n not in timings]
     return timings, round(sum(timings.values()), 3), failed
 
 
-def _run_cohort(n_execs: int = 8, n_small: int = 2, cores_per: int = 1,
-                plan: str = "ABABAB") -> dict | None:
-    """Launch one cohort of ``n_execs`` pinned local[cores_per] executors
-    over disjoint corpus shards + disjoint CPU sets, then run the
-    interleaved lockstep pass plan: "A" passes = only the first
-    ``n_small`` executors compute (the N-executor cluster), "B" passes =
-    all compute (the 4N cluster). Returns turns+wall for both configs."""
-    import tempfile
+def _executor_error(shard: int, what: str, err_path: str) -> RuntimeError:
+    """Log a dead executor's stderr tail; the error carries its last
+    line (usually the exception) so the JSON says why."""
+    try:
+        with open(err_path) as f:
+            tail = f.read()[-1500:]
+    except OSError:
+        tail = "<stderr unavailable>"
+    _log(tail)
+    last = next((l for l in reversed(tail.splitlines()) if l.strip()), "")
+    return RuntimeError(f"executor {shard} {what}: {last.strip()}")
 
+
+def _run_cohort() -> dict:
+    """Launch one cohort of 4N pinned local[1] executors over disjoint
+    corpus shards, then run the interleaved lockstep pass plan. Returns
+    turns+wall for both configs; raises RuntimeError when an executor
+    dies or the barrier times out."""
+    n_small, n_execs = cohort_size(CPUS)
+    # the worker's `import sparkocr` must resolve regardless of the
+    # parent's cwd (python -c puts cwd on sys.path, not this directory)
+    env = dict(os.environ)
+    env["PYTHONPATH"] = REPO + (
+        os.pathsep + env["PYTHONPATH"] if env.get("PYTHONPATH") else "")
     with tempfile.TemporaryDirectory() as td:
         go = os.path.join(td, "go")
         procs, readies, err_paths = [], [], []
-        for shard in range(n_execs):
-            ready = os.path.join(td, f"ready{shard}")
-            readies.append(ready)
-            cmd = [sys.executable, "-c", _SCALING_WORKER, str(cores_per),
-                   SF_DIR, str(SCALING_REPS), str(n_execs), str(shard),
-                   ready, go, plan, str(n_small)]
-            if os.path.exists("/usr/bin/taskset"):
-                lo = shard * cores_per
-                cmd = ["taskset", "-c", f"{lo}-{lo + cores_per - 1}"] + cmd
-            # stderr to a FILE, not a pipe: Spark error stack traces can
-            # exceed the 64KB pipe buffer and an undrained pipe would
-            # block the JVM mid-pass, hanging the whole cohort barrier
-            err_path = os.path.join(td, f"stderr{shard}")
-            err_paths.append(err_path)
-            # the worker's `import sparkocr` must resolve regardless of
-            # the parent's cwd (python -c puts '' = cwd on sys.path, not
-            # this file's directory) — ship the repo root via PYTHONPATH
-            repo = os.path.dirname(os.path.abspath(__file__))
-            env = dict(os.environ)
-            env["PYTHONPATH"] = repo + (
-                os.pathsep + env["PYTHONPATH"] if env.get("PYTHONPATH")
-                else "")
-            procs.append(subprocess.Popen(
-                cmd, stdout=subprocess.PIPE,
-                stderr=open(err_path, "w"), text=True, env=env))
-        for pno in range(len(plan)):
-            t0 = time.time()
-            while not all(os.path.exists(f"{r}.{pno}") for r in readies):
-                time.sleep(0.1)
-                if time.time() - t0 > 900 or any(p.poll() not in (None, 0)
-                                                 for p in procs):
-                    for p in procs:
-                        p.kill()
-                    _log("scaling: barrier timed out / executor died")
-                    return None
-            with open(f"{go}.{pno}", "w") as f:
-                f.write("go")
-        n_by_shard: dict[int, int] = {}
-        dt: dict[str, dict[int, float]] = {}  # "A3" -> {shard: dt}
-        for i, p in enumerate(procs):
-            out_s, _ = p.communicate(timeout=1800)
-            line = next((l for l in out_s.splitlines() if l.startswith("SCALING")), None)
-            if p.returncode != 0 or line is None:
-                try:
-                    with open(err_paths[i]) as ef:
-                        tail = ef.read()[-1500:]
-                except OSError:
-                    tail = "<stderr unavailable>"
-                _log(f"scaling executor failed:\n{tail}")
-                return None
-            parts = line.split()
-            shard = int(parts[1])
-            n_by_shard[shard] = int(parts[2])
-            for item in parts[3:]:
-                key, val = item.split(":")
-                dt.setdefault(key, {})[shard] = float(val)
-        # per-pass wall = slowest active executor; best (min) pass per config
-        wall_a = min(max(d.values()) for k, d in dt.items() if k[0] == "A")
-        wall_b = min(max(d.values()) for k, d in dt.items() if k[0] == "B")
-        # per-executor contention ratio: each of the N-config executors
-        # compared with ITSELF across configs (best A pass vs best B pass)
-        # — cancels the per-JVM speed lottery entirely and excludes the
-        # static-shard straggler artifact (a real Spark scheduler levels
-        # stragglers by feeding tasks dynamically; these fixed shards
-        # can't, so the wall-based number understates a real cluster)
-        per_exec_eff = []
-        for s in range(n_small):
-            best_a = min(d[s] for k, d in dt.items() if k[0] == "A" and s in d)
-            best_b = min(d[s] for k, d in dt.items() if k[0] == "B" and s in d)
-            per_exec_eff.append(best_a / best_b)
-        return {
-            "turns_a": sum(n_by_shard[s] for s in range(n_small)),
-            "wall_a": wall_a,
-            "turns_b": sum(n_by_shard.values()),
-            "wall_b": wall_b,
-            "per_exec_eff": sum(per_exec_eff) / len(per_exec_eff),
-        }
+        try:
+            for shard in range(n_execs):
+                ready = os.path.join(td, f"ready{shard}")
+                readies.append(ready)
+                cmd = [sys.executable, "-c", _SCALING_WORKER, SF_DIR,
+                       str(SCALING_REPS), str(n_execs), str(shard), ready,
+                       go, PLAN, str(n_small)]
+                # stderr to a FILE, not a pipe: Spark error stack traces
+                # can exceed the 64KB pipe buffer, and an undrained pipe
+                # would block the JVM mid-pass, hanging the barrier
+                err_paths.append(os.path.join(td, f"stderr{shard}"))
+                with open(err_paths[-1], "w") as ef:
+                    procs.append(subprocess.Popen(
+                        cmd, stdout=subprocess.PIPE, stderr=ef, text=True,
+                        env=env))
+            for pno in range(len(PLAN)):
+                t0 = time.time()
+                while not all(os.path.exists(f"{r}.{pno}") for r in readies):
+                    time.sleep(0.1)
+                    dead = [i for i, p in enumerate(procs)
+                            if p.poll() not in (None, 0)]
+                    if dead:
+                        i = dead[0]
+                        raise _executor_error(
+                            i, f"exited with code {procs[i].returncode} "
+                               f"before pass {pno}", err_paths[i])
+                    if time.time() - t0 > 900:
+                        raise RuntimeError(f"barrier before pass {pno} "
+                                           "timed out after 900 s")
+                with open(f"{go}.{pno}", "w") as f:
+                    f.write("go")
+            n_by_shard: dict[int, int] = {}
+            dt: dict[str, dict[int, float]] = {}  # "A3" -> {shard: dt}
+            for i, p in enumerate(procs):
+                out_s, _ = p.communicate(timeout=1800)
+                line = next((l for l in out_s.splitlines()
+                             if l.startswith("SCALING")), None)
+                if p.returncode != 0 or line is None:
+                    raise _executor_error(
+                        i, f"exited with code {p.returncode} without a "
+                           "result", err_paths[i])
+                parts = line.split()
+                shard = int(parts[1])
+                n_by_shard[shard] = int(parts[2])
+                for item in parts[3:]:
+                    key, val = item.split(":")
+                    dt.setdefault(key, {})[shard] = float(val)
+        finally:
+            for p in procs:
+                if p.poll() is None:
+                    p.kill()
+                    p.wait()
+    # per-pass wall = slowest active executor; best (min) pass per config
+    wall_a = min(max(d.values()) for k, d in dt.items() if k[0] == "A")
+    wall_b = min(max(d.values()) for k, d in dt.items() if k[0] == "B")
+    # per-executor contention ratio: each of the N-config executors
+    # compared with ITSELF across configs (best A pass vs best B pass)
+    # — cancels the per-JVM speed lottery entirely and excludes the
+    # static-shard straggler artifact (a real Spark scheduler levels
+    # stragglers by feeding tasks dynamically; these fixed shards
+    # can't, so the wall-based number understates a real cluster)
+    per_exec_eff = []
+    for s in range(n_small):
+        best_a = min(d[s] for k, d in dt.items() if k[0] == "A" and s in d)
+        best_b = min(d[s] for k, d in dt.items() if k[0] == "B" and s in d)
+        per_exec_eff.append(best_a / best_b)
+    return {
+        "n_executors": [n_small, n_execs],
+        "turns_a": sum(n_by_shard[s] for s in range(n_small)),
+        "wall_a": wall_a,
+        "turns_b": sum(n_by_shard.values()),
+        "wall_b": wall_b,
+        "per_exec_eff": sum(per_exec_eff) / len(per_exec_eff),
+    }
 
 
 def run_scaling() -> dict:
-    w = SCALING_CORES
-    # no _wait_for_quiet() here: right after the 32-core headline phase
-    # the 1-min load average reflects OUR OWN work (~8) and would stall
-    # the threshold for minutes (review finding). A short fixed cooldown
-    # lets the worst self-load decay; the cohort's own warm-up pass and
-    # the per-executor self-ratio estimator absorb the rest.
-    time.sleep(20)
-    r = _run_cohort(n_execs=8, n_small=2, cores_per=w)
-    if not r:
-        return {}
+    if cohort_size(CPUS) is None:
+        return {"scaling_error": f"skipped: the N→4N cohort needs at "
+                                 f"least 4 CPUs, this process may use {CPUS}"}
+    try:
+        r = _run_cohort()
+    except Exception as e:  # headline results must still reach stdout
+        _log(f"scaling phase failed: {e}")
+        return {"scaling_error": f"failed: {type(e).__name__}: {e}"}
+    n, n4 = r["n_executors"]
     tps_n = r["turns_a"] / r["wall_a"]
     tps_4n = r["turns_b"] / r["wall_b"]
     eff_wall = (tps_4n / tps_n) / 4.0
     eff = r["per_exec_eff"]
-    _log(f"scaling N=2 executors (2 × local[{w}]): {r['turns_a']} turns, "
+    _log(f"scaling N={n} executors: {r['turns_a']} turns, "
          f"{r['wall_a']:.1f}s wall → {tps_n:.0f} turns/sec")
-    _log(f"scaling 4N=8 executors (8 × local[{w}]): {r['turns_b']} turns, "
+    _log(f"scaling 4N={n4} executors: {r['turns_b']} turns, "
          f"{r['wall_b']:.1f}s wall → {tps_4n:.0f} turns/sec")
     _log(f"scaling efficiency: {eff:.3f} (per-executor self-ratio; "
          f"wall-based incl. static-shard stragglers: {eff_wall:.3f})")
     return {
         "scaling_corpus_turns": r["turns_b"],
-        "scaling_executor_cores": w,
-        "scaling_n_executors": [2, 8],
-        "turns_per_sec_2exec": round(tps_n, 1),
-        "turns_per_sec_8exec": round(tps_4n, 1),
+        "scaling_executor_cores": 1,
+        "scaling_n_executors": [n, n4],
+        "turns_per_sec_n": round(tps_n, 1),
+        "turns_per_sec_4n": round(tps_4n, 1),
         "scaling_efficiency": round(eff, 3),
         "scaling_efficiency_wall": round(eff_wall, 3),
     }
 
 
-def write_baseline_md(result: dict) -> None:
-    # anchor next to this file — running bench.py from another cwd must
-    # not scatter BENCH/ directories around the filesystem. Written to
-    # LAST_RUN.md, never BASELINE.md: the baseline is a FIXED, hand-
-    # committed reference (with its measurement conditions stated) that
-    # must not drift to whatever the latest — possibly loaded-box — run
-    # produced (round-2 judge finding).
-    bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
-    os.makedirs(bench_dir, exist_ok=True)
+def write_last_run_md(result: dict) -> None:
+    # LAST_RUN.md, never the pin: the pin is a fixed, hand-committed
+    # reference that must not drift to whatever the latest run produced
     lines = [
-        "# BENCH — latest run (see BASELINE.md for the fixed reference)",
+        "# BENCH — latest run (BENCH/pin.json is the fixed reference)",
         "",
-        f"- sf dir: `{result['sf_dir']}`  ·  headline total: "
-        f"**{result['value']} s** across {len(result['queries'])} queries",
-        # box conditions, so a degraded-capacity run is self-describing
-        # in this artifact too (the pinned BASELINE.md demands load < 1
-        # and parallel capacity ≥ 0.55 — a run below that is NOT
-        # comparable to the pin)
-        f"- box conditions: load1 {result.get('load1_at_start')} at "
-        f"start · parallel capacity "
-        f"{result.get('parallel_capacity_at_start')} at start, "
-        f"{result.get('parallel_capacity_at_end')} at end "
-        f"(pin requires load < 1, capacity ≥ 0.55)",
+        f"- sf dir: `{result['sf_dir']}` · local[{result['cpus']}] · "
+        f"headline total: **{result['value']} s** across "
+        f"{len(result['queries'])} queries",
+        f"- load1: {result['load1_at_start']} at start, "
+        f"{result['load1_at_end']} at end",
         "",
         "| query | sec | ratio to pin |",
         "|---|---|---|",
@@ -480,87 +376,51 @@ def write_baseline_md(result: dict) -> None:
     ratios = result.get("ratio_to_pin", {})
     for k, v in result["queries"].items():
         lines.append(f"| {k} | {v} | {ratios.get(k, 'n/a')} |")
+    if "failed_queries" in result:
+        lines.append(f"\nFailed in every pass: {result['failed_queries']}")
     if "ratio_to_pin_median" in result:
         lines.append(
             f"\nMedian ratio to pin: **{result['ratio_to_pin_median']}** — "
             "near-uniform per-query ratios ≫1 indicate degraded box "
             "state, a lone outlier indicates code drift in that query.")
-    if "scaling_efficiency" in result:
+    lines += ["", "## N → 4N executor scaling (north-rule criterion)", ""]
+    if "scaling_error" in result:
+        lines.append(f"Not measured: {result['scaling_error']}")
+    else:
+        n, n4 = result["scaling_n_executors"]
         lines += [
+            f"One cohort of {n4} pinned `local[1]` executors; interleaved "
+            f"lockstep passes where {n} (the N cluster) or all {n4} (the "
+            "4N cluster) compute. Method: `BENCH/SCALING_NOTES.md`.",
             "",
-            "## N → 4N executor scaling (north-rule criterion)",
-            "",
-            "Executor size is held fixed (a pinned `local[k]` JVM = one "
-            "executor) and executor COUNT scales 2 → 8 within one cohort: "
-            "interleaved lockstep passes where either only 2 executors "
-            "compute (the N cluster) or all 8 do (the 4N cluster), so the "
-            "same JVMs/shards appear in both configs and per-JVM variance "
-            "cancels — the in-sandbox analog of the identical spark-submit "
-            "job on two cluster sizes.",
-            "",
-            f"- corpus: {result['scaling_corpus_turns']} turns "
-            "(documents replicated, deterministic; salted 8-way shards)",
-            f"- N = 2 executors ({2 * result['scaling_executor_cores']} CPUs):  "
-            f"**{result['turns_per_sec_2exec']} turns/sec**",
-            f"- 4N = 8 executors ({8 * result['scaling_executor_cores']} CPUs): "
-            f"**{result['turns_per_sec_8exec']} turns/sec**",
-            f"- scaling efficiency, per-executor self-ratio (the "
-            f"cluster-faithful estimator — see SCALING_NOTES.md): "
+            f"- corpus: {result['scaling_corpus_turns']} turns",
+            f"- N = {n}: **{result['turns_per_sec_n']} turns/sec**",
+            f"- 4N = {n4}: **{result['turns_per_sec_4n']} turns/sec**",
+            f"- scaling efficiency, per-executor self-ratio: "
             f"**{result['scaling_efficiency']}** (target ≥ 0.8)",
             f"- scaling efficiency, wall-based (tps_4N/tps_N)/4: "
-            f"**{result.get('scaling_efficiency_wall', 'n/a')}** "
-            f"(noisier: static shards pay the straggler penalty a real "
-            f"scheduler avoids)",
-            "",
-            "Wider-executor points and the single-box memory-bandwidth "
-            "ceiling they hit are documented in `BENCH/SCALING_NOTES.md`.",
+            f"**{result['scaling_efficiency_wall']}**",
         ]
-    with open(os.path.join(bench_dir, "LAST_RUN.md"), "w") as f:
+    with open(os.path.join(REPO, "BENCH", "LAST_RUN.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
 
 
-def _wait_for_capacity(min_cap: float = 0.55,
-                       max_wait_s: int | None = None) -> float | None:
-    """Second hygiene phase after :func:`_wait_for_quiet`: this box's
-    degraded parallel-capacity episodes are INVISIBLE to loadavg
-    (single-core throughput flat while 32-core walls inflate ~35% —
-    see BENCH/BASELINE.md), so also wait, bounded, for the capacity
-    probe to read healthy before timing. Re-probes every ~2 min (each
-    probe costs ~45 s itself); proceeds with a flagged reading when
-    the budget runs out — the JSON field makes the run
-    self-classifying either way. The budget is deliberately modest
-    (10 min default — the one fully-observed degraded episode took
-    ~10 min to clear, see SCALING_NOTES "capacity-gated bench";
-    ``SPARKOCR_BENCH_CAP_WAIT_S`` overrides): the caller may itself
-    run under a timeout, and a degraded-but-recorded artifact beats a
-    killed run."""
-    if max_wait_s is None:
-        max_wait_s = int(os.environ.get("SPARKOCR_BENCH_CAP_WAIT_S", "600"))
-    t0 = time.time()
-    cap = parallel_capacity_median()
-    while (cap is not None and cap < min_cap
-           and time.time() - t0 < max_wait_s):
-        _log(f"bench: parallel capacity {cap} < {min_cap} (degraded box "
-             f"state); waiting before timing")
-        time.sleep(120)
-        cap = parallel_capacity_median()
-    return cap
-
-
 def main() -> None:
-    # ONE shared hygiene budget (default 10 min) across BOTH pin
-    # conditions — load < 1 (quiet) first, then parallel capacity ≥ 0.55
-    # — so a run either starts under the pin's full conditions or has
-    # spent its whole budget trying and says so in its fields. Before
-    # round 5 the load wait was a separate 120 s bound with threshold
-    # 2.0: BENCH_r04 started at load 1.97, passing the old gate while
-    # violating the pin (round-4 judge finding #1).
-    budget = int(os.environ.get("SPARKOCR_BENCH_CAP_WAIT_S", "600"))
-    t_hyg = time.time()
-    load_start = _wait_for_quiet(max_wait_s=budget)
-    remaining = max(0, budget - int(time.time() - t_hyg))
-    cap_start = _wait_for_capacity(max_wait_s=remaining)
-    _log(f"bench: parallel capacity at start {cap_start}")
+    # bench.py takes no arguments. -h/--help must NOT fall through into
+    # a multi-minute bench run; any other stray argument is ignored
+    # loudly rather than rejected, so an unexpected argument from a
+    # caller can never zero out a bench run.
+    if any(a in ("-h", "--help") for a in sys.argv[1:]):
+        sys.stderr.write("usage: python bench.py   (no arguments)\n"
+                         "config via env: SPARK_GRAFT_SF_DIR\n")
+        sys.exit(0)
+    if sys.argv[1:]:
+        _log(f"bench.py: ignoring unexpected args {sys.argv[1:]}")
+    # __spark_entry__.queries() memoizes the shared extraction across
+    # queries; a best-of-3 over a memoized plan measures the cache, not
+    # the engine
+    os.environ["SPARKOCR_EXTRACT_MEMO"] = "0"
+    load_start = _load1()
     timings, total, failed = run_headline()
     result = {
         "metric": "headline query wall time (sum) + extraction scaling",
@@ -570,42 +430,24 @@ def main() -> None:
         "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
         "sf_dir": SF_DIR,
         "cpus": CPUS,
-        # measurement conditions: 1-min load average when timing began /
-        # ended — the pinned BASELINE.md is a quiet-box (<1) reference,
-        # so a loaded run is visibly non-comparable in the artifact
         "load1_at_start": load_start,
-        # 8-way vs solo throughput ratio of a fixed memory-bound kernel
-        # (see _parallel_capacity): classifies the box's transient
-        # parallel-capacity degradation that loadavg cannot see
-        "parallel_capacity_at_start": cap_start,
     }
-    if os.path.realpath(SF_DIR) == os.path.realpath(PIN_SF_DIR):
-        # self-normalization: per-query ratio to the committed pin.
-        # A degraded-box run shows near-uniform inflation across all
-        # queries; code drift shows as one query's outlier ratio.
-        ratios = {k: round(v / PIN_QUERIES[k], 2)
-                  for k, v in timings.items() if k in PIN_QUERIES}
-        if ratios:
-            vals = sorted(ratios.values())
-            result["ratio_to_pin"] = ratios
-            result["ratio_to_pin_median"] = vals[len(vals) // 2]
     if failed:
         # machine-readable failure signal: "value" only sums the queries
         # that ran, so without this a broken query reads as a speedup
         result["failed_queries"] = failed
-    if RUN_SCALING:
-        try:
-            result.update(run_scaling())
-        except Exception as e:  # headline results must still reach stdout
-            _log(f"scaling phase failed: {e}")
-    # captured AFTER the scaling cohort so the artifact describes the
-    # whole run's box conditions, not just the headline phase
+    with open(PIN_PATH) as f:
+        ratios = ratios_to_pin(timings, SF_DIR, CPUS, json.load(f))
+    if ratios:
+        result["ratio_to_pin"] = ratios
+        vals = sorted(ratios.values())
+        result["ratio_to_pin_median"] = vals[len(vals) // 2]
+    result.update(run_scaling())
     result["load1_at_end"] = _load1()
-    result["parallel_capacity_at_end"] = parallel_capacity_median()
     try:
-        write_baseline_md(result)
-    except Exception as e:
-        _log(f"BASELINE.md write failed: {e}")
+        write_last_run_md(result)
+    except OSError as e:
+        _log(f"LAST_RUN.md write failed: {e}")
     print(json.dumps(result))
 
 

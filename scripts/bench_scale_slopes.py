@@ -44,8 +44,6 @@ QUERIES = [
     "minhash_lsh_pairs_documents",
     "jaccard_pairs_documents",
     "simhash_documents",
-    "ann_cosine_topk",
-    "lsh_topk_embeddings",
     "window_funcs_events",
     "interval_merge_events",
     "doc_metrics_documents",
@@ -69,12 +67,12 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from sparkocr.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = len(os.sched_getaffinity(0))
     spark = get_spark(cores=cpus, app_name="scale-slopes",
                       shuffle_partitions=cpus,
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    qs = {**entrymod.queries(), **entrymod.bench_probes()}
+    qs = entrymod.queries()
     spark.range(1000).selectExpr("sum(id)").collect()
 
     t: dict[str, dict[float, float]] = {q: {} for q in QUERIES}

@@ -7,8 +7,7 @@ clearly-marked :class:`NotImplementedError` path for real formats (gated
 behind an import-try for PIL, which is absent here). Everything around
 the stub is real Spark engineering and is tested: the binary+metadata
 schema, Arrow transfer of bytes into pandas UDFs, batch shapes,
-per-row error capture, frame-explode plumbing, and the
-size-aware repartitioning story for skewed blob sizes.
+per-row error capture and frame-explode plumbing.
 
 Fake payload wire format (deterministic, versioned by the magic):
   ``FAKEIMG1`` + u16 width + u16 height + blake2b-derived pixel bytes
@@ -227,18 +226,3 @@ def sample_frames(
             yield out
 
     return src.mapInPandas(run, out_schema)
-
-
-def rebalance_by_size(df: DataFrame, payload_col: str = "payload",
-                      target_bytes: int = 64 << 20) -> DataFrame:
-    """Size-aware repartition for skewed blob tables: rows are spread so
-    each partition carries ~``target_bytes`` of payload (a handful of
-    4K videos must not land in one task while thumbnails starve the
-    rest). One cheap aggregate sizes the partition count, then a
-    round-robin shuffle spreads rows independent of their origin file —
-    at 100 TB, replace the aggregate with the table's file statistics."""
-    import math
-
-    total = df.select(F.sum(F.length(F.col(payload_col)))).head()[0] or 0
-    n_parts = max(1, math.ceil(total / target_bytes))
-    return df.repartition(n_parts)

@@ -13,7 +13,6 @@ from sparkocr.multimodal import (
     fake_video,
     image_features,
     media_rows,
-    rebalance_by_size,
     sample_frames,
 )
 
@@ -86,12 +85,6 @@ def test_sample_frames_truncated_header_is_skipped(spark, media):
     rows = sample_frames(bad, every_n=1).collect()
     assert {r["media_id"] for r in rows} == {3}
     assert len(rows) == 3
-
-
-def test_rebalance_by_size(spark, media):
-    out = rebalance_by_size(media, target_bytes=16 << 10)
-    assert out.count() == media.count()
-    assert out.rdd.getNumPartitions() >= 1
 
 
 def test_image_features_zero_size_is_decode_error(spark):
