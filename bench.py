@@ -2,8 +2,8 @@
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default: the sf0.1
 data set named by ``SF_DIR``) on local[cpus], where cpus is the number
-of CPUs this process may use (``len(os.sched_getaffinity(0))``), and
-prints ONE JSON line to stdout. It starts timing as soon as its session is up: no
+of CPUs this process may use (``affinity()``), and prints ONE JSON
+line to stdout. It starts timing as soon as its session is up: no
 load or capacity waits. The 1-minute load average at start and end is
 recorded as context only.
 
@@ -13,7 +13,8 @@ is the best of 3 interleaved passes (q1 … qN, three times).
 
 The scaling block evidences the north-rule "N → 4N executors at ≥0.8
 efficiency" criterion with one cohort of 4N single-CPU executor JVMs,
-N = max(1, min(8, cpus) // 4), each pinned to its own CPU, over salted
+N = ``cohort_size(cpus)`` = max(1, min(8, cpus) // 4), shard i pinned by
+``pin(i)`` (the rule the scripts/ scaling harnesses share), over salted
 shards of a deterministic corpus: interleaved lockstep passes where
 either the first N (the N cluster) or all 4N (the 4N cluster) compute.
 Below 4 CPUs the cohort does not run. See BENCH/SCALING_NOTES.md for the
@@ -37,6 +38,8 @@ JSON keys:
     turns_per_sec_4n        throughput of the 4N cluster
     scaling_efficiency      per-executor self-ratio (see SCALING_NOTES)
     scaling_efficiency_wall (turns_per_sec_4n / turns_per_sec_n) / 4
+    scaling_pass_s          {pass label: {shard: seconds}}: every timed
+                            pass of every active shard ("A0", "B1", ...)
     scaling_error           why the cohort was skipped or failed; present
                             instead of the scaling_* / turns_* keys
 
@@ -45,6 +48,7 @@ All diagnostics go to stderr; stdout carries exactly the one JSON line.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import subprocess
@@ -56,7 +60,22 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = len(os.sched_getaffinity(0))
+
+
+def affinity() -> list[int]:
+    """This process's CPUs in id order: the one read of its mask."""
+    return sorted(os.sched_getaffinity(0))
+
+
+def pin(first: int, count: int = 1) -> functools.partial:
+    """``preexec_fn`` pinning a child (and the JVM it execs) to ``count``
+    CPUs of ``affinity()`` from its ``first``-th on (the set is
+    ``.args[1]``), never to ``range`` ids: a mask need not start at 0."""
+    return functools.partial(os.sched_setaffinity, 0,
+                             set(affinity()[first:first + count]))
+
+
+CPUS = len(affinity())
 PIN_PATH = os.path.join(REPO, "BENCH", "pin.json")
 
 # Headline subset of __spark_entry__.queries(): the flagship extraction
@@ -96,11 +115,10 @@ sf_dir, reps = sys.argv[1], int(sys.argv[2])
 n_shards, shard, ready_path, go_path = (
     int(sys.argv[3]), int(sys.argv[4]), sys.argv[5], sys.argv[6])
 plan, n_small = sys.argv[7], int(sys.argv[8])
-# pin BEFORE the JVM spawns: the java child inherits the affinity mask
-os.sched_setaffinity(0, {sorted(os.sched_getaffinity(0))[shard]})
 from pyspark.sql import functions as F
 from sparkocr.session import get_spark
 from sparkocr.engine import SparkOcrEngine
+from sparkocr.sources import docs_as_transcripts
 
 spark = get_spark(cores=1, app_name=f"scaling-{n_shards}x1-{shard}",
                   shuffle_partitions=2,
@@ -108,10 +126,7 @@ spark = get_spark(cores=1, app_name=f"scaling-{n_shards}x1-{shard}",
                               "spark.ui.enabled": "false",
                               "spark.driver.memory": "6g"})
 spark.sparkContext.setLogLevel("ERROR")
-docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-    F.col("source").alias("conv_id"),
-    F.col("doc_id").cast("int").alias("turn_idx"),
-    F.lit("user").alias("role"), "text")
+docs = docs_as_transcripts(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 corpus = (
     docs.crossJoin(spark.range(reps).select(F.col("id").alias("rep")))
     .select(F.concat_ws("-", "conv_id", "rep").alias("conv_id"),
@@ -237,12 +252,11 @@ def _executor_error(shard: int, what: str, err_path: str) -> RuntimeError:
     return RuntimeError(f"executor {shard} {what}: {last.strip()}")
 
 
-def _run_cohort() -> dict:
-    """Launch one cohort of 4N pinned local[1] executors over disjoint
-    corpus shards, then run the interleaved lockstep pass plan. Returns
-    turns+wall for both configs; raises RuntimeError when an executor
-    dies or the barrier times out."""
-    n_small, n_execs = cohort_size(CPUS)
+def _run_cohort(n_small: int, n_execs: int) -> tuple[dict, dict]:
+    """Run the pass plan on ``n_execs`` local[1] executors, shard i pinned
+    by ``pin(i)``. Returns ({shard: turns}, {pass label: {shard:
+    seconds}}); raises RuntimeError when an executor dies or the barrier
+    times out."""
     # the worker's `import sparkocr` must resolve regardless of the
     # parent's cwd (python -c puts cwd on sys.path, not this directory)
     env = dict(os.environ)
@@ -265,7 +279,7 @@ def _run_cohort() -> dict:
                 with open(err_paths[-1], "w") as ef:
                     procs.append(subprocess.Popen(
                         cmd, stdout=subprocess.PIPE, stderr=ef, text=True,
-                        env=env))
+                        env=env, preexec_fn=pin(shard)))
             for pno in range(len(PLAN)):
                 t0 = time.time()
                 while not all(os.path.exists(f"{r}.{pno}") for r in readies):
@@ -303,58 +317,49 @@ def _run_cohort() -> dict:
                 if p.poll() is None:
                     p.kill()
                     p.wait()
-    # per-pass wall = slowest active executor; best (min) pass per config
-    wall_a = min(max(d.values()) for k, d in dt.items() if k[0] == "A")
-    wall_b = min(max(d.values()) for k, d in dt.items() if k[0] == "B")
-    # per-executor contention ratio: each of the N-config executors
-    # compared with ITSELF across configs (best A pass vs best B pass)
-    # — cancels the per-JVM speed lottery entirely and excludes the
-    # static-shard straggler artifact (a real Spark scheduler levels
-    # stragglers by feeding tasks dynamically; these fixed shards
-    # can't, so the wall-based number understates a real cluster)
-    per_exec_eff = []
-    for s in range(n_small):
-        best_a = min(d[s] for k, d in dt.items() if k[0] == "A" and s in d)
-        best_b = min(d[s] for k, d in dt.items() if k[0] == "B" and s in d)
-        per_exec_eff.append(best_a / best_b)
-    return {
-        "n_executors": [n_small, n_execs],
-        "turns_a": sum(n_by_shard[s] for s in range(n_small)),
-        "wall_a": wall_a,
-        "turns_b": sum(n_by_shard.values()),
-        "wall_b": wall_b,
-        "per_exec_eff": sum(per_exec_eff) / len(per_exec_eff),
-    }
+    return n_by_shard, dt
 
 
 def run_scaling() -> dict:
-    if cohort_size(CPUS) is None:
+    size = cohort_size(CPUS)
+    if size is None:
         return {"scaling_error": f"skipped: the N→4N cohort needs at "
                                  f"least 4 CPUs, this process may use {CPUS}"}
+    n, n4 = size
     try:
-        r = _run_cohort()
+        n_by_shard, dt = _run_cohort(n, n4)
     except Exception as e:  # headline results must still reach stdout
         _log(f"scaling phase failed: {e}")
         return {"scaling_error": f"failed: {type(e).__name__}: {e}"}
-    n, n4 = r["n_executors"]
-    tps_n = r["turns_a"] / r["wall_a"]
-    tps_4n = r["turns_b"] / r["wall_b"]
+    turns_a = sum(n_by_shard[s] for s in range(n))
+    turns_b = sum(n_by_shard.values())
+    # per-pass wall = slowest active executor; best (min) pass per config
+    wall_a, wall_b = (min(max(d.values()) for k, d in dt.items()
+                          if k[0] == c) for c in "AB")
+    tps_n, tps_4n = turns_a / wall_a, turns_b / wall_b
     eff_wall = (tps_4n / tps_n) / 4.0
-    eff = r["per_exec_eff"]
-    _log(f"scaling N={n} executors: {r['turns_a']} turns, "
-         f"{r['wall_a']:.1f}s wall → {tps_n:.0f} turns/sec")
-    _log(f"scaling 4N={n4} executors: {r['turns_b']} turns, "
-         f"{r['wall_b']:.1f}s wall → {tps_4n:.0f} turns/sec")
+    # per-executor self-ratio: each N-config executor's best A pass over
+    # its best B pass cancels the per-JVM speed lottery and excludes the
+    # static-shard straggler, which a real Spark scheduler levels by
+    # feeding tasks dynamically; wall-based understates a real cluster
+    def best(c: str, s: int) -> float:
+        return min(d[s] for k, d in dt.items() if k[0] == c and s in d)
+    eff = sum(best("A", s) / best("B", s) for s in range(n)) / n
+    _log(f"scaling N={n} executors: {turns_a} turns, "
+         f"{wall_a:.1f}s wall → {tps_n:.0f} turns/sec")
+    _log(f"scaling 4N={n4} executors: {turns_b} turns, "
+         f"{wall_b:.1f}s wall → {tps_4n:.0f} turns/sec")
     _log(f"scaling efficiency: {eff:.3f} (per-executor self-ratio; "
          f"wall-based incl. static-shard stragglers: {eff_wall:.3f})")
     return {
-        "scaling_corpus_turns": r["turns_b"],
+        "scaling_corpus_turns": turns_b,
         "scaling_executor_cores": 1,
         "scaling_n_executors": [n, n4],
         "turns_per_sec_n": round(tps_n, 1),
         "turns_per_sec_4n": round(tps_4n, 1),
         "scaling_efficiency": round(eff, 3),
         "scaling_efficiency_wall": round(eff_wall, 3),
+        "scaling_pass_s": dt,
     }
 
 

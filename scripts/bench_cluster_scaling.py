@@ -1,20 +1,21 @@
 """N → 4N scaling on a REAL multi-executor Spark standalone cluster.
 
-The north rule's criterion is the same spark-submit job run on a
-2-executor and an 8-executor cluster with ≥ 0.8 throughput scaling
+The north rule's criterion is the same spark-submit job run on an
+N-executor and a 4N-executor cluster with ≥ 0.8 throughput scaling
 efficiency. This script is the closest in-sandbox realization: it
 stands up an actual Spark standalone cluster on this box — one master
-plus eight SINGLE-CORE worker JVMs, each `taskset`-pinned to its own
-CPU — and runs the identical job twice per pass, once with
-``spark.cores.max=2`` (the N cluster) and once with ``=8`` (4N).
-Executors are real separate JVMs scheduled by the standalone master,
-the `sparkocr` package ships to them via py-files (the production
-``spark-submit --py-files`` path), and shuffles cross executor
-boundaries through the real block-transfer service — none of the
-single-JVM shortcuts of ``local[k]``.
+plus 4N SINGLE-CORE worker JVMs, worker i pinned by ``bench.pin(i)``
+to the i-th CPU of the launcher's affinity mask — and runs the identical
+job twice per pass, with ``spark.cores.max`` = N and = 4N. N comes from
+``bench.cohort_size``: 1 on 4 CPUs, 2 on 8 or more (the 32-CPU shape of
+the recorded 2 vs 8 numbers). Executors are real separate JVMs
+scheduled by the standalone master, the `sparkocr` package ships to
+them via py-files (the production ``spark-submit --py-files`` path),
+and shuffles cross executor boundaries through the real block-transfer
+service — none of the single-JVM shortcuts of ``local[k]``.
 
 What one box still cannot emulate is per-node memory bandwidth: all
-eight workers share one memory bus, where a real 4N cluster brings 4×
+4N workers share one memory bus, where a real 4N cluster brings 4×
 the nodes and 4× the buses. The pinned single-core-executor shape keeps
 per-core bandwidth demand well under the bus ceiling documented in
 BENCH/SCALING_NOTES.md, so the measured ratio reflects the JOB's
@@ -31,13 +32,13 @@ Jobs measured per pass (interleaved A/B, best-of-``--passes``):
 Usage: python scripts/bench_cluster_scaling.py [--reps 40] [--passes 2]
        [--keep-cluster] [--skip-substr] [--transcripts]
 
-The defaults give a ~50k-turn smoke run. The numbers recorded in
-BENCH/SCALING_NOTES.md used sustained corpora — ``--reps 800
---transcripts`` (1,010,400 turns, raw 0.923) and ``--reps 400`` on the
-documents corpus (2M turns, raw 0.875); short runs under-measure the
-larger cluster (per-executor JIT warmup) and are not comparable.
+The defaults give a 200k-turn run. Short runs under-measure the larger
+cluster (per-executor JIT warmup); the 2 vs 8 numbers recorded in
+BENCH/SCALING_NOTES.md used ``--reps 800 --transcripts`` and ``--reps
+400`` (1M and 2M turns).
 
-Prints one JSON line. The cluster is torn down on exit unless
+Prints one JSON line; ``n_executors`` is [N, 4N] and the per-size keys
+are named from it. The cluster is torn down on exit unless
 ``--keep-cluster`` or it was already running (an external master on
 port 7077 is reused, never killed).
 """
@@ -53,16 +54,20 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+sys.path.insert(0, REPO)
+
+from bench import SF_DIR, affinity, cohort_size, pin  # noqa: E402
+
 MASTER_URL = "spark://127.0.0.1:7077"
-N_WORKERS = 8
 CLUSTER_DIR = "/tmp/sparkocr-standalone"
 
 
-def _spark_home() -> str:
-    import pyspark
-
-    return os.path.dirname(os.path.abspath(pyspark.__file__))
+def cluster_size() -> tuple[int, int, int]:
+    """(N, 4N, partitions): bench.py's executor pair for this launcher's
+    CPUs, and one partition count for both sizes, 4 per 4N slot."""
+    n, n4 = cohort_size(len(affinity())) or sys.exit(
+        "the N → 4N cluster needs at least 4 CPUs")
+    return n, n4, 4 * n4
 
 
 def _port_open(port: int) -> bool:
@@ -70,18 +75,22 @@ def _port_open(port: int) -> bool:
         return s.connect_ex(("127.0.0.1", port)) == 0
 
 
-def _spawn(cmd: list[str], log: str, env: dict) -> subprocess.Popen:
+def _spawn(cmd: list[str], log: str, env: dict,
+           preexec_fn=None) -> subprocess.Popen:
     with open(log, "w") as f:
         return subprocess.Popen(cmd, stdout=f, stderr=subprocess.STDOUT,
-                                env=env)
+                                env=env, preexec_fn=preexec_fn)
 
 
 def start_cluster() -> list[subprocess.Popen]:
-    """Master + N_WORKERS single-core workers, worker i pinned to CPU i.
+    """Master + 4N single-core workers, worker i pinned to ``pin(i)``.
     Pinning happens on the worker launcher, so the executor JVMs (and
     their python workers) it forks inherit the affinity mask — each
     'node' of the emulated cluster owns exactly one CPU."""
-    home = _spark_home()
+    import pyspark
+
+    n_workers = cluster_size()[1]
+    home = os.path.dirname(os.path.abspath(pyspark.__file__))
     env = {**os.environ, "SPARK_HOME": home,
            "SPARK_NO_DAEMONIZE": "1"}
     os.makedirs(f"{CLUSTER_DIR}/logs", exist_ok=True)
@@ -97,21 +106,21 @@ def start_cluster() -> list[subprocess.Popen]:
                     "standalone master did not bind :7077 — "
                     f"see {CLUSTER_DIR}/logs/master.log")
             time.sleep(0.5)
-        for i in range(N_WORKERS):
+        for i in range(n_workers):
             wd = f"{CLUSTER_DIR}/work{i}"
             os.makedirs(wd, exist_ok=True)
             procs.append(_spawn(
-                ["taskset", "-c", str(i), f"{home}/bin/spark-class",
+                [f"{home}/bin/spark-class",
                  "org.apache.spark.deploy.worker.Worker",
                  "--cores", "1", "--memory", "4g", "--work-dir", wd,
                  "--webui-port", str(8100 + i), "-h", "127.0.0.1",
                  MASTER_URL],
-                f"{CLUSTER_DIR}/logs/worker{i}.log", env))
+                f"{CLUSTER_DIR}/logs/worker{i}.log", env, pin(i)))
         deadline = time.time() + 90
         while True:
             # fail fast with the right diagnosis when a worker JVM dies
-            # before registering (port conflict, missing taskset, OOM) —
-            # waiting out the full deadline hides the real cause
+            # before registering (port conflict, OOM) — waiting out the
+            # full deadline hides the real cause
             for i, p in enumerate(procs[1:]):
                 rc = p.poll()
                 if rc is not None:
@@ -119,15 +128,14 @@ def start_cluster() -> list[subprocess.Popen]:
                         f"worker {i} exited rc={rc} before registering "
                         f"— see {CLUSTER_DIR}/logs/worker{i}.log")
             n = sum(
-                1 for i in range(N_WORKERS)
-                if os.path.exists(f"{CLUSTER_DIR}/logs/worker{i}.log")
-                and "Successfully registered with master" in
+                1 for i in range(n_workers)
+                if "Successfully registered with master" in
                 open(f"{CLUSTER_DIR}/logs/worker{i}.log").read())
-            if n == N_WORKERS:
+            if n == n_workers:
                 return procs
             if time.time() > deadline:
                 raise RuntimeError(
-                    f"only {n}/{N_WORKERS} workers registered — see "
+                    f"only {n}/{n_workers} workers registered — see "
                     f"{CLUSTER_DIR}/logs/")
             time.sleep(1)
     except Exception:
@@ -138,11 +146,9 @@ def start_cluster() -> list[subprocess.Popen]:
 
 
 def teardown(procs: list) -> None:
-    """Terminate → wait → kill. THE shared cluster teardown: a JVM
-    stuck in SIGTERM (e.g. mid-registration) must not stay bound to
-    :7077 and be mistaken for an external cluster by the next run —
-    used by this script, demo_fault_tolerance, and the except path of
-    start_cluster."""
+    """Terminate → wait → kill, shared with demo_fault_tolerance: a JVM
+    stuck in SIGTERM must not stay bound to :7077 and be mistaken for an
+    external cluster by the next run."""
     for p in reversed(procs):
         try:
             p.terminate()
@@ -182,9 +188,7 @@ def _session(cores_max: int, zpath: str):
         .config("spark.executor.memory", "3g")
         .config("spark.driver.host", "127.0.0.1")
         .config("spark.submit.pyFiles", zpath)
-        # one fixed layout for BOTH cluster sizes — the provisioned-job
-        # contract: the small cluster runs more tasks per slot
-        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.shuffle.partitions", str(cluster_size()[2]))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
@@ -203,7 +207,7 @@ def _replicate(base, spark, reps: int):
         base.crossJoin(spark.range(reps).select(F.col("id").alias("rep")))
         .select(F.concat_ws("-", "conv_id", "rep").alias("conv_id"),
                 "turn_idx", "role", "text")
-        .repartition(32, "conv_id", "turn_idx")  # salted spread
+        .repartition(cluster_size()[2], "conv_id", "turn_idx")  # salted
     )
 
 
@@ -219,12 +223,10 @@ def _corpus(spark, reps: int):
 
 def _corpus_transcripts(spark, reps: int):
     """Transcript-SHAPED corpus (the north rule's actual input mix):
-    the deterministic `fixtures.turns_pandas` conversations — ~16%
-    single-line chat, ~53% multi-line plain, ~12% markup, plus tool/
-    document rows — replicated ``reps``× with replica-unique conv ids.
-    Exercises the full fastbatch stage-1/stage-2/fallback composition
-    on the real cluster, where `_corpus` (single-line documents) only
-    ever hits stage 1."""
+    `fixtures.turns_pandas` — ~16% single-line chat, ~53% multi-line
+    plain, ~12% markup, plus tool/document rows — replicated ``reps``×.
+    Exercises fastbatch stages 1/2 and the fallback, where `_corpus`
+    (single-line documents) only ever hits stage 1."""
     from sparkocr.fixtures import turns_pandas
 
     base = spark.createDataFrame(
@@ -247,20 +249,17 @@ def run_pass(cores_max: int, reps: int, zpath: str,
         corpus = mk(spark, reps).localCheckpoint(eager=True)
         n_turns = corpus.count()
         eng = SparkOcrEngine(spark)
-        # warmup: every executor's python daemon forks, Arrow paths JIT,
-        # code ships — ~5 s of per-session cost that would otherwise
-        # bias the ratio against the larger cluster (same absolute
-        # warmup over a shorter timed run). The 1/8 sample touches all
-        # executors; the timed runs measure SUSTAINED throughput, which
-        # is what the north rule's criterion is about.
+        # warmup: python daemons fork, Arrow paths JIT, code ships —
+        # ~5 s per session that would bias the ratio against the larger
+        # cluster. The 1/8 sample touches all executors; the timed runs
+        # measure SUSTAINED throughput, as the north rule asks.
         sample = corpus.where(
             F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(8)) == 0)
         eng.extract(sample).write.format("noop").mode("overwrite").save()
         out = {"cores_max": cores_max, "n_turns": n_turns}
-        # sustained = best of 3 timed runs: each executor JVM JITs
-        # independently, and on the large cluster per-run time is short
-        # so C2 compilation needs several runs of cumulative hot time —
-        # a cold single shot biases the ratio against the large cluster
+        # sustained = best of 3 timed runs: each executor JVM JITs on
+        # its own, and the large cluster's short runs need several for
+        # C2 — a cold single shot biases the ratio against it
         secs = []
         for _ in range(3):
             t = time.time()
@@ -306,43 +305,44 @@ def main() -> None:
                          "single-line documents")
     args = ap.parse_args()
 
-    sys.path.insert(0, REPO)
+    n, n4, _ = cluster_size()
     # zip BEFORE starting the cluster: a zip failure (disk full) after
     # start_cluster but outside the try/finally would leak the daemons
     zpath = _zip_pkg()
     procs: list = []
-    external = _port_open(7077)
-    if not external:
+    if not _port_open(7077):
         procs = start_cluster()
         print("# standalone cluster up: master + "
-              f"{N_WORKERS} pinned 1-core workers", file=sys.stderr)
+              f"{n4} pinned 1-core workers", file=sys.stderr)
     try:
-        results: dict[int, list[dict]] = {2: [], 8: []}
+        results: dict[int, list[dict]] = {n: [], n4: []}
         for _ in range(args.passes):
-            for cm in (2, 8):  # interleaved so load bursts spread
+            for cm in (n, n4):  # interleaved so load bursts spread
                 r = run_pass(cm, args.reps, zpath, args.skip_substr,
                              transcripts=args.transcripts)
                 print(f"# cores.max={cm}: {r}", file=sys.stderr, flush=True)
                 results[cm].append(r)
         best = {cm: min(rs, key=lambda r: r["extract_sec"])
                 for cm, rs in results.items()}
-        eff = (best[8]["turns_per_sec"] / best[2]["turns_per_sec"]) / 4
+        eff = (best[n4]["turns_per_sec"] / best[n]["turns_per_sec"]) / 4
+        keys = (f"N={n}", f"4N={n4}")
         out = {
-            "metric": "standalone-cluster scaling, 2 vs 8 real "
+            "metric": f"standalone-cluster scaling, {n} vs {n4} real "
                       "single-core executors (pinned worker JVMs, "
                       "py-files ship, real shuffle service)"
                       + (", transcript-shaped corpus"
                          if args.transcripts else ""),
-            "n_turns": best[2]["n_turns"],
-            "turns_per_sec": {"N=2": best[2]["turns_per_sec"],
-                              "4N=8": best[8]["turns_per_sec"]},
+            "n_executors": [n, n4],
+            "n_turns": best[n]["n_turns"],
+            "turns_per_sec": {k: best[c]["turns_per_sec"]
+                              for k, c in zip(keys, (n, n4))},
             "extract_scaling_efficiency": round(eff, 3),
         }
         if not args.skip_substr:
-            s2 = min(r["substr_sec"] for r in results[2])
-            s8 = min(r["substr_sec"] for r in results[8])
-            out["substr_sec"] = {"N=2": s2, "4N=8": s8}
-            out["substr_scaling_efficiency"] = round(s2 / s8 / 4, 3)
+            s_n, s_4n = (min(r["substr_sec"] for r in results[c])
+                         for c in (n, n4))
+            out["substr_sec"] = dict(zip(keys, (s_n, s_4n)))
+            out["substr_scaling_efficiency"] = round(s_n / s_4n / 4, 3)
         print(json.dumps(out))
     finally:
         if procs and not args.keep_cluster:

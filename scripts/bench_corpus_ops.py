@@ -7,29 +7,28 @@ cohort study lives in bench.py / BENCH/SCALING_NOTES.md; the cohort
 design can't be reused here because these operators are SHUFFLE-heavy —
 sharding the corpus per executor would dedup each shard independently
 and change the semantics — so this probe scales task slots inside one
-session instead, with the process CPU-pinned so local[N] really has N
-CPUs rather than N task slots on a 32-CPU box.)
+session instead, each config in a fresh subprocess that ``bench.pin``
+pins to the first c CPUs of this process's affinity mask, so local[c]
+really has c CPUs.)
 
-The job is IDENTICAL at both sizes — same shuffle-partition count, same
-packer shard count, same corpus layout, all sized for the LARGE config
-(exactly how a production job is provisioned once and then run on
-whatever cluster is available). An earlier probe variant derived those
-knobs from the core count; that measures two different jobs, and at
-this corpus size the extra partitions' fixed per-task cost made the
-large config read *slower* — a probe artifact, not a property of the
-operators. N defaults to 2 (so 4N = 8): both configs stay far below the
-box's ~30k turns/sec shared-memory-bus ceiling documented in
-BENCH/SCALING_NOTES.md, which a 32-core config slams into.
+N and 4N come from ``bench.cohort_size``: 1 and 4 on 4 CPUs, 2 and 8
+on 8 or more, far below the ~30k turns/sec shared-memory-bus ceiling
+documented in BENCH/SCALING_NOTES.md, which a 32-core config slams
+into. The job is IDENTICAL at both sizes — same shuffle-partition
+count, packer shard count and corpus layout, all sized for the LARGE
+config, exactly how a production job is provisioned once and then run
+on whatever cluster is available. Deriving them from each config's
+core count measures two different jobs: at this corpus size the extra
+partitions' fixed per-task cost made the large config read *slower*.
 
-Usage: python scripts/bench_corpus_ops.py [--replicas 40] [--n 2]
+Usage: python scripts/bench_corpus_ops.py [--replicas 40]
 
-The corpus is the sf0.1 documents table replicated --replicas times;
-each replica appends a replica-unique token so replication itself does
-not manufacture whole-document duplicates (the natural duplicate rate
-of the base corpus is preserved; substring dedup still finds the real
-planted passages in every replica). Each config runs in a fresh
-CPU-pinned subprocess; passes interleave N/4N so one machine-load burst
-cannot poison a single config. Results print as one JSON line.
+The corpus is the documents table at bench.py's SF_DIR replicated
+--replicas times; each replica appends a replica-unique token so
+replication itself does not manufacture whole-document duplicates
+(substring dedup still finds the real planted passages in every
+replica). Passes interleave N/4N so one machine-load burst cannot
+poison a single config. Results print as one JSON line.
 """
 
 from __future__ import annotations
@@ -42,26 +41,19 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF_DIR = "/root/testdata/sf0.1"
+sys.path.insert(0, REPO)
 
-# ---------------------------------------------------------------------------
-# child mode: pin to the first N CPUs, run the operator suite once
+from bench import SF_DIR, affinity, cohort_size, pin  # noqa: E402
 
 
-def _child(cores: int, replicas: int, big_cores: int) -> None:
-    # pin BEFORE the JVM spawns: pyspark's java child inherits the
-    # affinity mask, so local[N] gets N real CPUs, not N slots on 32
-    os.sched_setaffinity(0, set(range(cores)))
-    sys.path.insert(0, REPO)
+# child mode (launched pinned to its CPUs): run the operator suite once
+def _child(cores: int, replicas: int, n_parts: int, n_shards: int) -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from sparkocr.analysis import (dedup_paragraphs, dedup_substrings,
                                    mix_corpus, pack_sequences)
 
-    # every layout knob derives from the LARGE config so the two runs
-    # execute the same physical job; only the resource count differs
-    n_parts = 4 * big_cores
     spark = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(f"corpus-ops-scaling-{cores}")
@@ -110,11 +102,7 @@ def _child(cores: int, replicas: int, big_cores: int) -> None:
         # and the phase degenerates to pure per-job fixed cost
         chosen = mix_corpus(toks, {"web": 0.6, "books": 0.3, "code": 0.1},
                             2_000_000 * max(1, replicas // 40))
-        # shard count sized for the LARGE cluster and held fixed — the
-        # small config just runs more shards per slot, exactly like a
-        # provisioned job on a half-size cluster (at a fixed 4 shards
-        # the packer tops out at sources×4 tasks and could not scale)
-        pack_sequences(chosen, max_tokens=4096, n_shards=2 * big_cores) \
+        pack_sequences(chosen, max_tokens=4096, n_shards=n_shards) \
             .write.format("noop").mode("overwrite").save()
         out["mix_pack_sec"] = round(time.time() - t, 2)
 
@@ -126,13 +114,15 @@ def _child(cores: int, replicas: int, big_cores: int) -> None:
         spark.stop()
 
 
-def _run(cores: int, replicas: int, big_cores: int) -> dict:
+def _run(cores: int, replicas: int, layout: tuple[int, int]) -> dict:
+    # pinned BEFORE the child's JVM spawns: the JVM inherits the mask, so
+    # local[c] gets c real CPUs, not c slots on every CPU of the box
     p = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--_child",
          str(cores), "--replicas", str(replicas),
-         "--_big", str(big_cores)],
+         "--_layout", *map(str, layout)],
         stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
-        timeout=1800, check=True)
+        timeout=1800, check=True, preexec_fn=pin(0, cores))
     line = next(l for l in p.stdout.splitlines() if l.startswith("RESULT "))
     return json.loads(line[len("RESULT "):])
 
@@ -140,26 +130,28 @@ def _run(cores: int, replicas: int, big_cores: int) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--replicas", type=int, default=40)
-    ap.add_argument("--n", type=int, default=2,
-                    help="small cluster size; the large one is 4n")
     ap.add_argument("--_child", type=int, default=None, help=argparse.SUPPRESS)
-    ap.add_argument("--_big", type=int, default=None, help=argparse.SUPPRESS)
+    ap.add_argument("--_layout", type=int, nargs=2, help=argparse.SUPPRESS)
     args = ap.parse_args()
     if args._child is not None:
-        _child(args._child, args.replicas, args._big or 4 * args._child)
+        _child(args._child, args.replicas, *args._layout)
         return
+    n, n4 = cohort_size(len(affinity())) or sys.exit(
+        "local[N] vs local[4N] needs at least 4 CPUs")
+    # (shuffle partitions, packer shards), sized for 4N at both sizes
+    layout = (4 * n4, 2 * n4)
 
     # interleave N / 4N passes (best of 2 each) so one machine-load
     # burst cannot poison a single config
-    results: dict[int, list[dict]] = {args.n: [], 4 * args.n: []}
+    results: dict[int, list[dict]] = {n: [], n4: []}
     for _ in range(2):
-        for cores in (args.n, 4 * args.n):
-            r = _run(cores, args.replicas, 4 * args.n)
+        for cores in (n, n4):
+            r = _run(cores, args.replicas, layout)
             print(f"# local[{cores}]: {r}", file=sys.stderr, flush=True)
             results[cores].append(r)
     best = {c: min(rs, key=lambda r: r["total_sec"])
             for c, rs in results.items()}
-    small, large = best[args.n], best[4 * args.n]
+    small, large = best[n], best[n4]
     eff = (large["docs_per_sec"] / small["docs_per_sec"]) / 4
     per_op_eff = {
         op: round(small[op] / large[op] / 4, 3)
@@ -168,12 +160,12 @@ def main() -> None:
     print(json.dumps({
         "metric": "corpus-ops throughput, local[N] vs local[4N], CPU-pinned",
         "n_docs": small["n_docs"],
-        "n_cores": [args.n, 4 * args.n],
+        "n_cores": [n, n4],
         "per_op_sec": {f"local[{c}]": {k: v for k, v in best[c].items()
                                        if k.endswith("_sec")}
-                       for c in (args.n, 4 * args.n)},
+                       for c in (n, n4)},
         "docs_per_sec": {f"local[{c}]": best[c]["docs_per_sec"]
-                         for c in (args.n, 4 * args.n)},
+                         for c in (n, n4)},
         "scaling_efficiency": round(eff, 3),
         "per_op_efficiency": per_op_eff,
     }))

@@ -67,7 +67,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from sparkocr.session import get_spark
 
-    cpus = len(os.sched_getaffinity(0))
+    from bench import CPUS as cpus
     spark = get_spark(cores=cpus, app_name="scale-slopes",
                       shuffle_partitions=cpus,
                       extra_conf={"spark.ui.showConsoleProgress": "false"})

@@ -16,10 +16,10 @@ package's barriers flow through `sparkocr.barrier.pin`: with
 `sc.setCheckpointDir` configured every pin becomes a reliable
 checkpoint that survives executor loss (tests/test_barrier.py).
 
-Usage: python scripts/demo_fault_tolerance.py   (starts the standard
-8-worker cluster if none is running — the job itself is capped at 4
-executors via spark.cores.max — and tears it down only if it started
-one)
+Usage: python scripts/demo_fault_tolerance.py   (starts the 4N-worker
+cluster of bench_cluster_scaling.py if none is running, caps the job at
+4N executors via spark.cores.max, and tears down only a cluster it
+started)
 """
 
 from __future__ import annotations
@@ -34,7 +34,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from scripts.bench_cluster_scaling import (  # noqa: E402
-    _corpus, _port_open, _session, _zip_pkg, start_cluster, teardown)
+    _corpus, _port_open, _session, _zip_pkg, cluster_size, start_cluster,
+    teardown)
 
 
 def main() -> int:
@@ -43,7 +44,7 @@ def main() -> int:
         procs = start_cluster()
         print("# started standalone cluster", file=sys.stderr)
     try:
-        spark = _session(4, _zip_pkg())
+        spark = _session(cluster_size()[1], _zip_pkg())
         spark.sparkContext.setLogLevel("ERROR")
         from sparkocr.engine import SparkOcrEngine
 
