@@ -225,8 +225,9 @@ def _corpus_transcripts(spark, reps: int):
     """Transcript-SHAPED corpus (the north rule's actual input mix):
     `fixtures.turns_pandas` — ~16% single-line chat, ~53% multi-line
     plain, ~12% markup, plus tool/document rows — replicated ``reps``×.
-    Exercises fastbatch stages 1/2 and the fallback, where `_corpus`
-    (single-line documents) only ever hits stage 1."""
+    Exercises the fastbatch plain and markup stages and the fallback,
+    where `_corpus` (single-line documents) only ever hits the plain
+    stage."""
     from sparkocr.fixtures import turns_pandas
 
     base = spark.createDataFrame(

@@ -128,7 +128,7 @@ def _zero_boiler_lines(score: np.ndarray, lines) -> np.ndarray:
     return score
 
 
-def line_scores(grid: TurnGrid, line_ids: np.ndarray | None = None) -> np.ndarray:
+def line_scores(grid: TurnGrid) -> np.ndarray:
     """Per-line content score in 0..255 — the probability map.
 
     score = 255 * text_density * (1 - link_density), truncated like the
@@ -136,12 +136,6 @@ def line_scores(grid: TurnGrid, line_ids: np.ndarray | None = None) -> np.ndarra
     text_density = text_chars / (text_chars + MARKUP_WEIGHT*markup_chars)
     and link_density = anchor text chars / text chars. Layout boilerplate
     lines ([HEADER]/[FOOTER]/[PAGE n] markers) score 0.
-
-    ``line_ids`` optionally supplies the per-char line-index array
-    (``np.cumsum(cp == 10) - (cp == 10)``) when the caller already
-    computed it — the batch fast path (fastbatch stage 3) needs the
-    same array for its run mask and passes it in to avoid a duplicate
-    O(n) pass per turn.
     """
     n_lines = len(grid.lines)
     cp, mk = grid.cp, grid.mk
@@ -156,21 +150,11 @@ def line_scores(grid: TurnGrid, line_ids: np.ndarray | None = None) -> np.ndarra
     # loop; the two are equal when the box is healthy). Explicit dtype
     # makes the cost state-independent — on a 32-thread executor node
     # the bus pressure is the NORMAL state.
-    line_id = (np.cumsum(nl, dtype=np.int64) - nl
-               if line_ids is None else line_ids)
+    line_id = np.cumsum(nl, dtype=np.int64) - nl
     ws = (cp == 9) | (cp == 32) | nl
     vis_ns = ~mk & ~ws
     an = anchor_mask(grid.text, grid.opq)
-
-    if not mk.any() and not an.any():
-        # fast path — no markup, no anchors (plain-text turns): density
-        # is 1 wherever the line has any visible character, so the score
-        # is exactly 255 or 0. Equivalent to the general formula below
-        # with n_markup = n_anchor = 0.
-        n_text_i = np.bincount(line_id[vis_ns], minlength=n_lines)
-        score = np.where(n_text_i > 0, np.int64(255), np.int64(0))
-    else:
-        score = _density_scores(line_id, vis_ns, mk, an, n_lines)
+    score = _density_scores(line_id, vis_ns, mk, an, n_lines)
     return _zero_boiler_lines(score, grid.lines)
 
 
@@ -186,24 +170,6 @@ def find_text_boxes(
     transcript turns (short texts — the fixed cost of full-array passes
     exceeds the loop it saves; only lines above threshold do any work
     here)."""
-    text = grid.text
-    if "\n" not in text and "<" not in text and "\x1b" not in text:
-        # exact fast path — a single line with no markup/anchors (the
-        # common chat-message turn): density is 1 wherever visible text
-        # exists, so the whole cascade reduces to the trimmed run. The
-        # general path below computes precisely this for such input.
-        if ("[" in text or "=" in text) and is_boiler_line(text):
-            return []
-        c0 = len(text) - len(text.lstrip(" \t"))      # ws = {tab, space}
-        c1 = len(text.rstrip(" \t")) - 1
-        if c1 - c0 <= MIN_BOX_SIZE:
-            return []
-        border = config.rect_border_size
-        left = max(c0 - border, 0)
-        right = min(c1 + border, len(text) - 1)
-        top = max(GLYPH_TOP - border, 0)
-        bottom = min(GLYPH_BOTTOM + border, grid.grid_h - 1)
-        return [Box(left, top, right - left + 1, bottom - top + 1)]
     scores = line_scores(grid)
     on = scores > THRESHOLD
     border = config.rect_border_size
@@ -248,11 +214,11 @@ def find_text_boxes_batch(
     ``flatnonzero`` calls per line) replaced by ONE diff/searchsorted
     pass over all grids' concatenated character arrays, and the
     per-grid ``line_scores`` call replaced by ONE global per-line
-    bincount/divide pass over the same concatenation (value-identical:
-    the general density formula subsumes line_scores' no-markup fast
-    path, and the boiler-line tail runs per line verbatim). Semantics
-    are the general path exactly — ``merge_overlapping_boxes`` is still
-    called per grid, and the run arithmetic mirrors the per-line code:
+    bincount/divide pass over the same concatenation (the same
+    ``_density_scores`` formula; the boiler-line tail runs per line
+    verbatim). Semantics are the general path exactly —
+    ``merge_overlapping_boxes`` is still called per grid, and the run
+    arithmetic mirrors the per-line code:
 
     - ok = not markup, not newline, line score > THRESHOLD; a one-slot
       False gap between grids keeps runs from bridging grids (newlines
@@ -266,10 +232,7 @@ def find_text_boxes_batch(
     Run order (ascending global position) IS discovery order (top line
     first, left to right within a line), so per-grid box order matches
     ``find_text_boxes`` by construction. Differential-tested against
-    the per-grid function by the fastbatch and layout suites. The
-    single-line fast path of ``find_text_boxes`` is intentionally NOT
-    special-cased: the general path computes the identical box for that
-    shape (the equivalence the fast path's own comment documents).
+    the per-grid function by the fastbatch and layout suites.
 
     Detection runs in grid-aligned blocks of ``DETECT_CHUNK`` chars —
     grids are independent, so splitting the batch is result-identical;
@@ -310,11 +273,7 @@ def _find_text_boxes_block(
     # run detection cannot bridge grids. Line SCORING then runs once
     # over the concatenation — per-line bincounts/divides replace a
     # line_scores call per grid (the measured per-grid overhead on
-    # short transcript turns). The per-grid fast path of line_scores
-    # (no markup, no anchors → int 255/0) needs no global analog: the
-    # general float formula with n_markup = n_anchor = 0 yields the
-    # identical scores (line_scores' own fast-path comment), so one
-    # formula covers every grid.
+    # short transcript turns).
     gap_cp = np.full(1, 10, dtype=np.uint32)
     gap_b = np.zeros(1, dtype=bool)
     cp_parts: list[np.ndarray] = []

@@ -12,14 +12,15 @@ engine.rs:16-90) as DataFrame-returning functions.
 The reference's ``*Efficient`` requests differ only in choosing a crop
 strategy by cardinality (det.rs:167-171); Catalyst/AQE plans the same
 DataFrame either way, so they have no verb here. Per-row stage
-dispatch is ``fastbatch.extract_batch``; the verbs only move columns
-in and out of it.
+dispatch is ``fastbatch.extract_batch`` (its ``_stage``); the verbs
+only move columns in and out of it.
 
-Execution model: all per-turn compute runs inside Arrow-batched pandas
-UDFs / mapInArrow (zero per-row Python UDFs); the fused ``extract`` is
-one narrow ``mapInArrow`` stage — one job over the whole table with NO
-shuffle and no pandas in between, the columnar replacement for the
-reference's one-request-per-image worker loop (engine.rs:413-437).
+Execution model: all per-turn compute runs in Arrow-batched Python
+(zero per-row Python UDFs): ``spans``, ``blocks`` and ``recognize`` are
+pandas UDFs, and the fused ``extract`` is one narrow ``mapInArrow``
+stage — one job over the whole table with NO shuffle and no pandas in
+between, the columnar replacement for the reference's
+one-request-per-image worker loop (engine.rs:413-437).
 Ordering is never implicit: use ``ordered()`` / ``with_rank()`` before
 any order-sensitive sink (Catalyst does not preserve order through
 exchanges)."""

@@ -1,4 +1,4 @@
-"""Batch-vectorized fast paths for common turn shapes (round-4 work).
+"""Arrow-batch extraction kernels.
 
 Entry points (what the Spark engine's UDFs call):
 
@@ -6,9 +6,10 @@ Entry points (what the Spark engine's UDFs call):
   dispatch: every row is answered; the batch stages below answer what
   they can and the residue runs the per-turn
   ``pipeline.extract_turn_auto``. No other module decides which stage
-  a row takes. The result is columnar: an Arrow ``RecordBatch`` with
-  the engine's ``EXTRACT_RESULT_FIELDS`` columns, typed by Spark's own
-  Arrow mapping, ready for ``mapInArrow`` to hand back as is. Its block
+  a row takes: ``_stage`` is the one per-row decision. The result is
+  columnar: an Arrow ``RecordBatch`` with the engine's
+  ``EXTRACT_RESULT_FIELDS`` columns, typed by Spark's own Arrow
+  mapping, ready for ``mapInArrow`` to hand back as is. Its block
   columns are gathered straight from the flat decode's per-crop lists
   in row order — no ``Block``/``TurnResult`` objects for batch rows;
   only the residue rows' ``TurnResult`` objects are spliced in.
@@ -19,57 +20,45 @@ Entry points (what the Spark engine's UDFs call):
   in-domain rows pool into the flat decode, the rest run
   ``recognize_crop`` per row.
 
-The per-turn pipeline already short-circuits the common chat-message
-shape — one line, no markup, no ANSI — inside ``detect.find_text_boxes``
-(det.py fast path), but the per-turn cost was still dominated by the
-~40 small numpy allocations each ``recognize_crop`` call makes. This
-module lifts that work to the Arrow-batch level, in two stages:
+The per-turn cost is dominated by the ~40 small numpy allocations each
+``recognize_crop`` call makes, so the batch stages detect and crop per
+row and pool every crop into ONE flat decode per batch. Three stages:
 
-- **Stage 1 (single-line)**: eligible turns are detected with cheap
-  C-level string scans and their canonical crops enter the flat decode
-  directly (one box per turn by construction).
-- **Stage 2 (multi-line plain)**: turns with newlines but still no
-  markup/ANSI/form-feed — 60%+ of transcript-shaped corpora — run
-  per-LINE detection with the same C-level string ops (for plain text
-  the whole probability-map cascade reduces to "has a visible char and
-  is not boilerplate": density is 1, score is exactly 255 or 0), then
-  the verbatim transitive merge (``detect.merge_overlapping_boxes`` —
-  the exact fixpoint, not a re-implementation) over each turn's
-  handful of line boxes, then crop assembly by plain string slicing
-  (no markup to blank).
+- **plain** — no markup, ANSI or form-feed, one line or many (the
+  chat-message and multi-line prose shapes, ~70% of transcript-shaped
+  corpora): per-LINE detection with C-level string ops
+  (``_plain_batch``). For plain text the whole probability-map cascade
+  reduces to "has a visible char and is not boilerplate" (density is
+  1, score is exactly 255 or 0); the transitive merge is detect's own
+  fixpoint (``detect._merge_ltrb``) over each turn's handful of line
+  boxes, and crops assemble by plain string slicing (no markup to
+  blank).
+- **markup** — ``<`` or ESC, and form-feed rows that take the general
+  machine (see ``_stage``): the EXACT general detection semantics
+  (``TurnGrid``, the density formula, ``detect.merge_overlapping_boxes``'
+  fixpoint) batched by ``detect.find_text_boxes_batch`` — one
+  diff/searchsorted pass over the whole batch's concatenated character
+  grid replaces the per-ON-line segment loop. Crops assemble through
+  ``detect.crop_box`` (markup blanked, so their canonical form is
+  normally markup-free and in the flat decode's domain).
+- **document** — routing mode only: the rows
+  ``pipeline.routes_document`` sends to the layout parser. The parse
+  runs batched (``layout.parse_documents_batch``) and the body/table
+  regions pool into the same flat decode.
 
-Crops from BOTH stages are concatenated into ONE flat codepoint array
+Crops from all stages are concatenated into ONE flat codepoint array
 (NUL separators) and decoded by the shared state machine
 (``recognize.decode`` with ``seg_ids`` — the single home of the decode
 semantics, rec.rs:344-398) in a handful of numpy passes. Per-row
 Python shrinks to string slicing plus one small float32 reduction.
 
-Byte-exactness contract: for every eligible turn the result equals
-``pipeline.extract_turn`` EXACTLY (text, confidence bits, spans,
+Byte-exactness contract: for every batch-answered turn the result
+equals the per-turn path EXACTLY (text, confidence bits, spans,
 geometry, block type) — enforced by the differential suite in
 tests/test_fastbatch.py. Anything the flat machine cannot reproduce
 bit-for-bit (entities decoding into markup, lone surrogates) is
-declared ineligible and falls back to the per-turn path; eligibility
-errs toward fallback, never toward approximation.
-
-Stage-1 eligible = text is a str containing none of ``\\n \\r \\f <
-\\x1b`` whose canonical crop still contains no ``<``/ESC (entity
-decode can mint them). Stage-2 eligible = str containing a newline
-(``\\n``/``\\r``) but no ``< \\x1b \\f`` — form-feed turns stay on the
-per-turn path so the document router (pipeline.extract_turn_auto)
-keeps seeing them.
-
-- **Stage 3 (markup-bearing)**: turns containing ``<`` or ESC (but no
-  form-feed) run the EXACT general detection semantics — ``TurnGrid``
-  and ``line_scores`` are the per-turn functions themselves, and the
-  transitive merge is ``detect.merge_overlapping_boxes`` — but the
-  per-ON-line segment loop of ``find_text_boxes`` (3 ``flatnonzero``
-  calls per line, the measured hot spot on markup rows) is replaced by
-  ONE diff/searchsorted pass over the whole batch's concatenated
-  character grid. Crops assemble through ``detect.crop_box`` (markup
-  blanked — so their canonical form is normally markup-free and in the
-  flat decode's domain) and pool into the same flat decode as stages
-  1/2.
+residue and falls back to the per-turn path; the decision errs toward
+fallback, never toward approximation.
 
 The domain gate is shared by all three stages (``_canon_in_domain``):
 a crop whose canonical form would make ``char_scores`` see a non-empty
@@ -111,15 +100,9 @@ from .config import (
     SCORE_WORD,
     EngineConfig,
 )
-from .detect import (
-    Box,
-    TurnGrid,
-    _merge_ltrb,
-    crop_box,
-    find_text_boxes_batch,
-)
+from .detect import TurnGrid, _merge_ltrb, crop_box, find_text_boxes_batch
 from .engine import EXTRACT_RESULT_FIELDS
-from .pipeline import Block, TurnResult, extract_turn_auto
+from .pipeline import Block, TurnResult, extract_turn_auto, routes_document
 from .recognize import canonicalize, classify_block, decode, recognize_crop
 from .textgrid import (
     _NL,
@@ -145,7 +128,7 @@ class _Pool:
     answered it (``k0 == k1``: no blocks) and ``None`` while the row is
     residue. A crop's meta is ``(left, top, width, height, start, end,
     block_type)``; ``block_type`` is ``None`` unless the stage already
-    knows it (stage 4's layout region)."""
+    knows it (the document stage's layout region)."""
 
     def __init__(self, n: int):
         self.spans: list = [None] * n
@@ -192,52 +175,34 @@ def _canon_in_domain(canon: str) -> bool:
     return not markup_mask(canon).any()
 
 
-def _eligible(t) -> bool:
-    """The det.py fast-path shape: one line (no \\n, and no \\r/\\f that
-    TurnGrid would fold into one), no markup, no ANSI."""
-    return (
-        isinstance(t, str)
-        and "\n" not in t and "\r" not in t and "\f" not in t
-        and "<" not in t and "\x1b" not in t
-        and _no_surrogates(t)
-    )
+def _stage(t, role, routing: bool, allow_formfeed: bool) -> str | None:
+    """THE per-row batch-stage decision: ``"plain"``, ``"markup"``,
+    ``"document"`` or ``None`` (residue: the per-turn path answers).
 
-
-def _eligible_multiline(t) -> bool:
-    """Stage 2: multi-line plain text. No markup/ANSI, and no form-feed
-    (the document router keys on \\f — those rows must keep reaching
-    pipeline.extract_turn_auto on the per-turn path)."""
-    return (
-        isinstance(t, str)
-        and ("\n" in t or "\r" in t) and "\f" not in t
-        and "<" not in t and "\x1b" not in t
-        and _no_surrogates(t)
-    )
-
-
-def _eligible_markup(t) -> bool:
-    """Stage 3: markup/ANSI-bearing turns. Form-feed rows stay on the
-    per-turn path (document router); surrogate rows fall back up front
-    (same reason as stages 1/2)."""
-    return (
-        isinstance(t, str)
-        and ("<" in t or "\x1b" in t) and "\f" not in t
-        and _no_surrogates(t)
-    )
-
-
-def _eligible_formfeed(t) -> bool:
-    """Form-feed rows for the NON-routing extract path: when the caller
-    is ``extract_turn`` (no document router in play), ``TurnGrid``
-    folds ``\\f`` to ``\\n`` and the turn is just another general-path
-    turn — the stage-3 machine handles it exactly. Callers that route
-    documents (``extract_turn_auto``) must NOT enable this: the router
-    keys on ``\\f`` and those rows need to reach it."""
-    return isinstance(t, str) and "\f" in t and _no_surrogates(t)
+    - non-``str`` and surrogate-bearing rows are residue (see
+      ``_no_surrogates``);
+    - form-feed rows: in routing mode (``routing``, a roles array is
+      given — even where this row's role is ``None``) the document rule
+      (``pipeline.routes_document``) picks ``"document"`` and every
+      other \\f row is ``"markup"``, the general machine
+      ``extract_turn_auto`` sends it to; without routing they are
+      ``"markup"`` only under ``allow_formfeed`` (``TurnGrid`` folds
+      \\f to \\n), else residue;
+    - ``<`` or ESC: ``"markup"``;
+    - the rest, one line or many: ``"plain"``."""
+    if not isinstance(t, str) or not _no_surrogates(t):
+        return None
+    if "\f" in t:
+        if routing:
+            return "document" if routes_document(t, role) else "markup"
+        return "markup" if allow_formfeed else None
+    if "<" in t or "\x1b" in t:
+        return "markup"
+    return "plain"
 
 
 def _document_batch(d_rows, config: EngineConfig, pool: _Pool) -> None:
-    """Stage-4: routing-mode document turns (tool role + form-feed).
+    """The document stage (routing mode, ``routes_document`` rows).
     The layout parse runs batched (``layout.parse_documents_batch`` —
     every page of every payload shares one detection pass) and the
     body/table region decodes pool into the shared flat decode.
@@ -270,8 +235,8 @@ def _document_batch(d_rows, config: EngineConfig, pool: _Pool) -> None:
 
 
 def _markup_batch(m_rows, config: EngineConfig, pool: _Pool) -> None:
-    """Stage-3 detection + crop assembly for a batch of markup-bearing
-    (or, under ``allow_formfeed``, form-feed) turns. Detection is
+    """The markup stage: detection + crop assembly for a batch of
+    markup-bearing and general-machine form-feed turns. Detection is
     ``detect.find_text_boxes_batch`` — the exact general-path semantics
     with the per-ON-line segment loop batched over all turns at once —
     and ``crop_box`` is the per-turn function. Successful rows append
@@ -297,13 +262,14 @@ def _markup_batch(m_rows, config: EngineConfig, pool: _Pool) -> None:
             pool.add(i, r_canons, r_metas)
 
 
-def _plain_multiline_crops(t: str, config: EngineConfig, border: int):
-    """Detection + crop assembly for one multi-line plain turn, with
-    C-level string ops only — semantics verbatim from the general path
-    (TurnGrid fold → line_scores → find_text_boxes → crop_box):
+def _plain_batch(p_rows, config: EngineConfig, pool: _Pool) -> None:
+    """The plain stage: per-LINE detection + crop assembly for a batch
+    of plain turns (no markup, ANSI or form-feed; one line or many),
+    with C-level string ops only — semantics verbatim from the general
+    path (TurnGrid fold → line_scores → find_text_boxes → crop_box):
 
     - fold: ``\\r\\n`` → `` \\n`` (same length, offsets preserved),
-      ``\\r`` → ``\\n`` (no \\f by eligibility)
+      ``\\r`` → ``\\n``
     - per-line score: for text with no markup and no anchors the
       probability map is exactly 255 (any visible char, not boiler)
       or 0, so ON = visible and not boilerplate
@@ -312,81 +278,82 @@ def _plain_multiline_crops(t: str, config: EngineConfig, border: int):
       clamped to the line and the grid
     - the transitive merge is detect's fixpoint ITSELF (``_merge_ltrb``,
       the tuple kernel inside ``merge_overlapping_boxes``)
-    - crop text: line slices joined by \\n (nothing to blank); spans
-      via the box_span arithmetic
+    - crop text: the covered lines' ``[left, right]`` slices joined by
+      \\n (nothing to blank); spans via the box_span arithmetic
 
-    Returns (canons, metas) where metas are per-crop ``_Pool`` metas,
-    or None when any crop leaves the flat machine's domain (entity
-    decode minting '<'/ESC) — the caller falls the whole row back to
-    the per-turn path.
-    """
-    folded = t.replace("\r\n", " \n").replace("\r", "\n")
-    lines = folded.split("\n")
-    grid_h = len(lines) * LINE_HEIGHT
-    # (left, top, right, bottom) tuples end-to-end: the merge fixpoint
-    # runs on ltrb tuples anyway (detect._merge_ltrb), so building Box
-    # objects before the merge just paid a conversion both ways
-    ltrb: list[tuple] = []
-    for y, ln in enumerate(lines):
-        c0 = len(ln) - len(ln.lstrip(" \t"))
-        if c0 == len(ln):  # empty or all-whitespace: score 0
-            continue
-        if ("[" in ln or "=" in ln) and is_boiler_line(ln):
-            continue
-        c1 = len(ln.rstrip(" \t")) - 1
-        if c1 - c0 <= MIN_BOX_SIZE:
-            continue
-        left = max(c0 - border, 0)
-        right = min(c1 + border, len(ln) - 1)
-        top = max(y * LINE_HEIGHT + GLYPH_TOP - border, 0)
-        bottom = min(y * LINE_HEIGHT + GLYPH_BOTTOM + border, grid_h - 1)
-        ltrb.append((left, top, right, bottom))
-    if config.merge_boxes and len(ltrb) > 1:
-        ltrb = _merge_ltrb(ltrb, config.merge_threshold)
-    if not ltrb:
-        return [], []
-    boxes = [Box(l, tp, r - l + 1, b - tp + 1) for (l, tp, r, b) in ltrb]
-    lens = list(map(len, lines))
-    offs, pos = [], 0
-    for n_ln in lens:
-        offs.append(pos)
-        pos += n_ln + 1
-    maxlen = max(lens)
-    canons: list[str] = []
-    metas: list[tuple] = []
-    last = len(lines) - 1
-    for box in boxes:
-        y0 = min(box.top // LINE_HEIGHT, last)
-        y1 = min(box.bottom // LINE_HEIGHT, last)
-        b_right = box.right + 1
-        if box.left == 0 and b_right >= maxlen:
-            # full-width box (the dominant shape: unindented text whose
-            # merged box spans every covered line end-to-end): every
-            # covered line's clamp is [0, len(ln)], so the per-line
-            # slice+join IS the contiguous folded substring — one slice
-            crop = folded[offs[y0]:offs[y1] + lens[y1]]
-        else:
-            parts = []
-            for y in range(y0, y1 + 1):
-                n_ln = lens[y]
-                a = box.left if box.left < n_ln else n_ln
-                b = b_right if b_right < n_ln else n_ln
-                parts.append(lines[y][a:b] if b > a else "")
-            crop = "\n".join(parts)
-        canon = canonicalize(crop, config.max_rec_lines)
-        if not _canon_in_domain(canon):
-            return None
-        start = offs[y0] + min(box.left, lens[y0])
-        end = offs[y1] + min(b_right, lens[y1])
-        canons.append(canon)
-        metas.append((box.left, box.top, box.width, box.height,
-                      start, end, None))
-    return canons, metas
+    Boxes stay ``(left, top, right, bottom)`` tuples end to end (the
+    merge fixpoint runs on them anyway; no ``Box`` objects) and the
+    config is read once per batch: a one-line turn, nearly every row
+    of a document-shaped corpus, pays the line loop for one line
+    (about 1 µs a row over straight-line code; BENCH/SCALING_NOTES.md).
+    A row whose crop leaves the flat machine's domain (entity decode
+    minting '<'/ESC) stays residue (per-turn fallback)."""
+    border = config.rect_border_size
+    merge = config.merge_boxes
+    threshold = config.merge_threshold
+    max_lines = config.max_rec_lines
+    for i, t in p_rows:
+        if "\r" in t:
+            t = t.replace("\r\n", " \n").replace("\r", "\n")
+        lines = t.split("\n")
+        bottom_max = len(lines) * LINE_HEIGHT - 1
+        ltrb: list[tuple] = []
+        offs: list[int] = []  # each line's offset in the folded text
+        pos = 0
+        for y, ln in enumerate(lines):
+            n_ln = len(ln)
+            offs.append(pos)
+            pos += n_ln + 1
+            c0 = n_ln - len(ln.lstrip(" \t"))
+            if c0 == n_ln:  # empty or all-whitespace: score 0
+                continue
+            if ("[" in ln or "=" in ln) and is_boiler_line(ln):
+                continue
+            c1 = len(ln.rstrip(" \t")) - 1
+            if c1 - c0 <= MIN_BOX_SIZE:
+                continue
+            top = y * LINE_HEIGHT + GLYPH_TOP - border
+            bottom = y * LINE_HEIGHT + GLYPH_BOTTOM + border
+            ltrb.append((c0 - border if c0 > border else 0,
+                         top if top > 0 else 0,
+                         c1 + border if c1 + border < n_ln else n_ln - 1,
+                         bottom if bottom < bottom_max else bottom_max))
+        if merge and len(ltrb) > 1:
+            ltrb = _merge_ltrb(ltrb, threshold)
+        r_canons: list[str] = []
+        r_metas: list[tuple] = []
+        in_domain = True
+        for left, top, right, bottom in ltrb:
+            y0 = top // LINE_HEIGHT
+            y1 = bottom // LINE_HEIGHT
+            b_right = right + 1
+            n0 = len(lines[y0])
+            n1 = len(lines[y1])
+            start = offs[y0] + (left if left < n0 else n0)
+            end = offs[y1] + (b_right if b_right < n1 else n1)
+            if y0 == y1 or (left == 0 and b_right >= max(
+                    map(len, lines[y0:y1 + 1]))):
+                # a one-line box, or a full-width one (the dominant
+                # merged shape: unindented text): the per-line slices
+                # joined by \n ARE the folded text's [start, end)
+                crop = t[start:end]
+            else:
+                crop = "\n".join([ln[left:b_right]
+                                  for ln in lines[y0:y1 + 1]])
+            canon = canonicalize(crop, max_lines)
+            if not _canon_in_domain(canon):
+                in_domain = False   # markup scoring: per-turn path
+                break
+            r_canons.append(canon)
+            r_metas.append((left, top, b_right - left, bottom - top + 1,
+                            start, end, None))
+        if in_domain:
+            pool.add(i, r_canons, r_metas)
 
 
 def _batch_stages(texts, config: EngineConfig, allow_formfeed: bool,
                   roles) -> tuple[list, list[list]]:
-    """Run batch stages 1-4 over ``texts`` and decode their pool once.
+    """Run the batch stages over ``texts`` and decode their pool once.
     Returns ``(spans, cols)``: ``cols`` are the per-crop block columns
     (``_BLOCK_COLS`` order, pool order) and ``spans[i]`` is row i's
     ``(k0, k1)`` slice of them, or ``None`` for a residue row that the
@@ -394,55 +361,20 @@ def _batch_stages(texts, config: EngineConfig, allow_formfeed: bool,
     ``batch_extract_simple``."""
     n = len(texts)
     pool = _Pool(n)
-    border = config.rect_border_size
-    grid_h1 = LINE_HEIGHT  # stage-1 grid: single line
-    top1 = max(GLYPH_TOP - border, 0)
-    bottom1 = min(GLYPH_BOTTOM + border, grid_h1 - 1)
-    height1 = bottom1 - top1 + 1
-
-    m_rows: list[tuple] = []  # stage-3 (markup/general) rows: (row index, text)
-    d_rows: list[tuple] = []  # stage-4 (routed document) rows: (row index, text)
+    routing = roles is not None
+    # each stage's rows, in row order: (row index, text)
+    batched: dict[str, list[tuple]] = {"plain": [], "markup": [],
+                                       "document": []}
     for i in range(n):
         t = texts[i]
-        if _eligible(t):
-            # stage 1: single line — one box by construction
-            if ("[" in t or "=" in t) and is_boiler_line(t):
-                pool.add(i, [], [])
-                continue
-            c0 = len(t) - len(t.lstrip(" \t"))
-            c1 = len(t.rstrip(" \t")) - 1
-            if c1 - c0 <= MIN_BOX_SIZE:
-                pool.add(i, [], [])
-                continue
-            left = max(c0 - border, 0)
-            right = min(c1 + border, len(t) - 1)
-            canon = canonicalize(t[left:right + 1], config.max_rec_lines)
-            # post-canon gate: entity decode can mint '<' (markup
-            # scoring leaves the flat machine's domain) — those rows
-            # take the exact per-turn path. Minted '\n' needs no gate:
-            # canonicalize caps line count, and the flat machine
-            # reproduces recognize_crop's newline handling bit-for-bit
-            # (see module docstring).
-            if not _canon_in_domain(canon):
-                continue
-            pool.add(i, [canon], [(left, top1, right - left + 1, height1,
-                                   left, right + 1, None)])
-        elif _eligible_multiline(t):
-            # stage 2: per-line detection + verbatim merge
-            got = _plain_multiline_crops(t, config, border)
-            if got is None:
-                continue  # a crop minted markup: per-turn path
-            pool.add(i, *got)
-        elif _eligible_markup(t):
-            m_rows.append((i, t))
-        elif _eligible_formfeed(t):
-            if roles is not None:
-                (d_rows if roles[i] == "tool" else m_rows).append((i, t))
-            elif allow_formfeed:
-                m_rows.append((i, t))
+        stage = _stage(t, roles[i] if routing else None, routing,
+                       allow_formfeed)
+        if stage is not None:
+            batched[stage].append((i, t))
 
-    for batch_fn, batch_rows in ((_markup_batch, m_rows),
-                                 (_document_batch, d_rows)):
+    for batch_fn, batch_rows in ((_plain_batch, batched["plain"]),
+                                 (_markup_batch, batched["markup"]),
+                                 (_document_batch, batched["document"])):
         if not batch_rows:
             continue
         n_can0 = len(pool.canons)
@@ -485,19 +417,19 @@ def batch_extract_simple(
     answers the ``None`` rows too; call that unless the split itself
     is measured.
 
-    ``allow_formfeed=True`` additionally routes form-feed rows through
-    the stage-3 general machine (byte-identical to ``extract_turn``,
-    which folds ``\\f`` to ``\\n``). ONLY valid when the caller's
-    fallback is ``extract_turn`` — with ``route_documents`` the router
-    keys on ``\\f`` and those rows must fall back to it instead.
+    ``allow_formfeed=True`` additionally sends form-feed rows through
+    the markup stage (byte-identical to ``extract_turn``, which folds
+    ``\\f`` to ``\\n``). ONLY valid when the caller's fallback is
+    ``extract_turn`` — with ``route_documents`` the router keys on
+    ``\\f`` and those rows must fall back to it instead.
 
     ``roles`` (aligned with ``texts``) enables the ROUTING-mode
-    equivalent instead: form-feed turns with role ``tool`` run the
-    stage-4 document machine (batched layout parse + pooled decode,
-    byte-identical to ``extract_turn_auto``'s document branch) and
-    form-feed turns with any other role run the stage-3 general machine
-    (``extract_turn_auto`` sends exactly those to ``extract_turn``).
-    Mutually exclusive with ``allow_formfeed``."""
+    equivalent instead: form-feed turns the document rule routes run
+    the document stage (batched layout parse + pooled decode,
+    byte-identical to ``extract_turn_auto``'s document branch) and the
+    other form-feed turns run the markup stage (``extract_turn_auto``
+    sends exactly those to ``extract_turn``). Takes precedence over
+    ``allow_formfeed``."""
     spans, cols = _batch_stages(texts, config, allow_formfeed, roles)
     out: list = []
     for s in spans:
@@ -523,7 +455,7 @@ def extract_batch(texts, roles=None,
     ``roles`` (aligned with ``texts``) turns on document routing,
     exactly ``extract_turn_auto(t, role)`` per row. ``roles=None`` means
     no routing, exactly ``extract_turn(t)`` per row: form-feed rows then
-    batch through the stage-3 general machine, and the residue call
+    batch through the markup stage, and the residue call
     ``extract_turn_auto(t, None)`` is ``extract_turn(t)``."""
     spans, cols = _batch_stages(texts, config, roles is None, roles)
     n = len(texts)
@@ -665,7 +597,7 @@ def _decode_canons_chunk(canons, config: EngineConfig):
 
 def _decode_flat(canons, metas, config: EngineConfig) -> list[list]:
     """Decode the pool and classify its crops: the per-crop block
-    columns in ``_BLOCK_COLS`` order. Stage-4 crops carry their layout
+    columns in ``_BLOCK_COLS`` order. Document-stage crops carry their layout
     region type in the meta instead of classifying the crop text."""
     texts, confs = decode_canons_flat(canons, config)
     *geom, rtypes = zip(*metas)

@@ -55,21 +55,28 @@ ERR_INPUT = "InputError"          # null/absent text (error.rs: InputError)
 ERR_INFERENCE = "InferenceError"  # any per-turn processing exception
 
 
+def routes_document(text: str, role: str | None) -> bool:
+    """The document-routing rule: a tool-role turn carrying a multi-page
+    document payload (form-feed page separators — the pdftotext
+    convention). ``extract_turn_auto`` and the batch dispatch
+    (``fastbatch._stage``) both decide with this one predicate."""
+    return role == "tool" and "\f" in text
+
+
 def extract_turn_auto(
     text: str | None,
     role: str | None,
     config: EngineConfig = DEFAULT_CONFIG,
 ) -> TurnResult:
-    """Route one turn by payload kind: tool-role turns carrying a
-    multi-page document payload (form-feed page separators — the
-    pdftotext convention) go through the layout-region parser, with
+    """Route one turn by payload kind: document turns
+    (``routes_document``) go through the layout-region parser, with
     headers/footers/page numbers stripped and body/table regions decoded
     through the same recognize stage; everything else takes the standard
     detect→recognize path. Geometry for document blocks is
     page-granular: top = page_no·LINE_HEIGHT, span = global offsets."""
     if text is None:
         return TurnResult(error_code=ERR_INPUT, error_msg="null text")
-    if role != "tool" or "\f" not in text:
+    if not routes_document(text, role):
         return extract_turn(text, config)
     from .config import LINE_HEIGHT
     from .layout import parse_document

@@ -212,6 +212,16 @@ def _punct_collapse(e_cp, e_sc, e_punct, e_id):
     return e_cp[keep], e_sc[keep]
 
 
+def _decode_canon(
+    canon: str, config: EngineConfig
+) -> tuple[str, np.ndarray]:
+    """Score + decode one canonical crop → (decoded text, per-char
+    scores of the kept characters)."""
+    cp, scores, blank = char_scores(canon)
+    d_cp, d_sc = decode(cp, scores, blank, config)
+    return d_cp.tobytes().decode("utf-32-le"), d_sc
+
+
 def recognize_crop(
     crop: str, config: EngineConfig = DEFAULT_CONFIG
 ) -> tuple[str, float, str]:
@@ -220,9 +230,7 @@ def recognize_crop(
     (float32 average, rec.rs:179-186) — engine UDFs and the per-turn
     pipeline both call this so the math can never diverge."""
     canon = canonicalize(crop, config.max_rec_lines)
-    cp, scores, blank = char_scores(canon)
-    d_cp, d_sc = decode(cp, scores, blank, config)
-    text = d_cp.tobytes().decode("utf-32-le")
+    text, d_sc = _decode_canon(canon, config)
     if len(d_sc) == 0:
         conf = 0.0
     else:
@@ -234,10 +242,7 @@ def predict_char_score(
     text: str, config: EngineConfig = DEFAULT_CONFIG
 ) -> tuple[str, np.ndarray]:
     """R6 (rec.rs:152-159): crop text → (decoded text, per-char scores)."""
-    canon = canonicalize(text, config.max_rec_lines)
-    cp, scores, blank = char_scores(canon)
-    d_cp, d_sc = decode(cp, scores, blank, config)
-    return d_cp.tobytes().decode("utf-32-le"), d_sc
+    return _decode_canon(canonicalize(text, config.max_rec_lines), config)
 
 
 def predict_str(text: str, config: EngineConfig = DEFAULT_CONFIG) -> str:
@@ -249,10 +254,7 @@ def predict_with_confidence(
     text: str, config: EngineConfig = DEFAULT_CONFIG
 ) -> tuple[str, float]:
     """R8 (rec.rs:172-187): avg f32 confidence; ("",0.0) when empty."""
-    decoded, scores = predict_char_score(text, config)
-    if len(scores) == 0:
-        return "", 0.0
-    return decoded, float(np.float32(scores.sum(dtype=np.float32)) / np.float32(len(scores)))
+    return recognize_crop(text, config)[:2]
 
 
 _LIST_RE = re.compile(r"\s*([-*•]|\d+[.)])\s")

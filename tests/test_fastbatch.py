@@ -174,6 +174,10 @@ def test_routing_mode_document_turns_match():
                     min_eligible=len(cases))
     _assert_matches(cases, roles=["assistant"] * len(cases),
                     min_eligible=len(cases))
+    # routing mode is "a roles array is given", not "this row's role is
+    # set": role-less \f rows still batch (general machine)
+    _assert_matches(cases, roles=[None] * len(cases),
+                    min_eligible=len(cases))
 
 
 @pytest.mark.parametrize("routing", [False, True], ids=["plain", "routing"])
@@ -411,14 +415,15 @@ def test_transcript_mix_shares_match_documented():
     benchmark fixture). A round-4 review found the multi-line figure
     had drifted to a conflated number; this keeps the documented mix
     honest and catches fixture-generator regressions."""
-    from sparkocr.fastbatch import _eligible, _eligible_multiline
+    from sparkocr.fastbatch import _stage
     from sparkocr.fixtures import turns_pandas
 
     # the exact fixture the real-cluster transcript bench replicates
     df = turns_pandas(seed=3, n_convs=40)
     n = len(df)
-    s1 = sum(_eligible(t) for t in df["text"]) / n
-    s2 = sum(_eligible_multiline(t) for t in df["text"]) / n
+    plain = [t for t in df["text"] if _stage(t, None, False, False) == "plain"]
+    s1 = sum("\n" not in t and "\r" not in t for t in plain) / n
+    s2 = len(plain) / n - s1
     markup = sum(isinstance(t, str) and "<" in t for t in df["text"]) / n
     assert n == 1263  # 1263 x reps 800 = 1,010,400 turns in the notes
     assert 0.13 <= s1 <= 0.19, s1         # ~16% single-line chat

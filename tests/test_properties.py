@@ -113,10 +113,9 @@ single_line_texts = st.lists(
 @settings(max_examples=200, deadline=None)
 @given(single_line_texts)
 def test_single_line_fast_path_matches_general_path(text):
-    """The single-line/no-markup detection fast path must be
-    byte-equivalent to the general cascade. Forcing the general path by
-    appending a newline (an empty second line contributes no box and,
-    with border ≤ 16, does not change the first line's clamps)."""
+    """One markup-free line detects exactly as it does with a trailing
+    empty line: the empty second line contributes no box and, with
+    border ≤ 16, does not change the first line's clamps."""
     assert "\n" not in text and "<" not in text and "\x1b" not in text
     for cfg in (DEFAULT_CONFIG, FLAGSHIP_CONFIG):
         fast = find_text_boxes(TurnGrid(text), cfg)
