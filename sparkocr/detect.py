@@ -32,7 +32,13 @@ from .config import (
     THRESHOLD,
     VERTICAL_CLOSENESS,
 )
-from .textgrid import anchor_mask, codepoints, is_boiler_line, markup_mask, opaque_mask
+from .textgrid import (
+    anchor_mask,
+    codepoints,
+    is_boiler_line,
+    markup_mask,
+    opaque_mask,
+)
 
 
 @dataclass(frozen=True)
@@ -55,28 +61,81 @@ class Box:
 
 
 class TurnGrid:
-    """Parsed grid for one turn's text: lines, offsets, markup mask."""
+    """The character grid of one text or of a batch of texts, as ONE
+    character stream: each text, then one gap slot. ``TurnGrid(text)``
+    is the one-text case (row 0); ``TurnGrid(texts)`` is the batch grid
+    every batch caller builds once — no grid per row.
 
-    __slots__ = ("text", "lines", "line_offsets", "cp", "mk", "opq", "grid_h")
+    - each text is folded first: \\r and \\f are line separators too,
+      and same-length replacements keep char offsets identical to the
+      original text. "\\r\\n" maps to " \\n" (trailing space, trimmed by
+      the box bounds) — mapping it to "\\n\\n" would insert a phantom
+      blank line per CRLF break and silently defeat vertical block
+      merging for CRLF documents. A text is folded alone, so its
+      trailing \\r never pairs with the gap.
+    - the gap slot is "\\n": every row's last line ends like its inner
+      lines, and no run, line or escape sequence crosses rows.
+    - ``cp`` (codepoints), ``opq``/``mk``/``an`` (opaque, markup and
+      anchor masks, see textgrid) cover the whole stream; the regexes
+      run per row (``rows``), so no markup bridges two rows. ``mkb`` is
+      ``mk`` as bytes, for ``crop_box``'s C-level markup probes.
+    - line table: ``line_offsets[g]`` is where stream line ``g`` starts
+      (its text ends one char before the next line's start; the last
+      entry is the stream length), and row ``r``'s lines are
+      ``line0[r]`` … ``line0[r + 1] - 1``. ``starts[r]`` is where row
+      ``r`` starts (``starts[-1]`` is the stream length).
 
-    def __init__(self, text: str):
-        # \r and \f are line separators too; same-length replacements keep
-        # char offsets identical to the original text. "\r\n" maps to
-        # " \n" (trailing space, trimmed by the box bounds) — mapping it
-        # to "\n\n" would insert a phantom blank line per CRLF break and
-        # silently defeat vertical block merging for CRLF documents.
-        self.text = (text.replace("\r\n", " \n")
-                     .replace("\r", "\n").replace("\f", "\n"))
-        self.lines = self.text.split("\n")
-        offs, pos = [], 0
-        for ln in self.lines:
-            offs.append(pos)
-            pos += len(ln) + 1
-        self.line_offsets = offs
-        self.cp = codepoints(self.text)
-        self.opq = opaque_mask(self.text)
-        self.mk = markup_mask(self.text, self.opq)
-        self.grid_h = len(self.lines) * LINE_HEIGHT
+    Encoding raises on a lone surrogate, for the whole batch; batch
+    callers keep such rows out (``no_surrogates``)."""
+
+    __slots__ = ("text", "cp", "opq", "mk", "mkb", "an", "starts", "line0",
+                 "line_offsets")
+
+    def __init__(self, texts):
+        if isinstance(texts, str):
+            texts = [texts]
+        text = "\n".join(texts) + "\n" if texts else ""
+        if "\r" in text or "\f" in text:
+            text = "\n".join([t.replace("\r\n", " \n").replace("\r", "\n")
+                              .replace("\f", "\n") for t in texts]) + "\n"
+        self.text = text
+        lens = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
+        self.starts = starts = np.zeros(len(texts) + 1, dtype=np.int64)
+        np.cumsum(lens + 1, out=starts[1:])
+        self.cp = cp = codepoints(text)
+        rows = [(s, s + n) for s, n, t in zip(starts.tolist(), lens.tolist(),
+                                              texts) if "<" in t] \
+            if "<" in text else []
+        self.opq = opaque_mask(text, rows)
+        self.mk = markup_mask(text, self.opq, rows, cp)
+        self.mkb = self.mk.tobytes()  # one byte per char, for crop_box
+        self.an = anchor_mask(text, self.opq, rows)
+        nl_pos = np.flatnonzero(cp == 10)
+        self.line_offsets = [0] + (nl_pos + 1).tolist()
+        self.line0 = np.searchsorted(nl_pos, starts).tolist()
+
+    @property
+    def lines(self) -> list[str]:
+        """Every row's lines, in stream order (the one-text case: its
+        lines)."""
+        return self.text[:-1].split("\n")
+
+
+def no_surrogates(t: str) -> bool:
+    """True unless ``t`` holds a surrogate code unit, which makes the
+    grid's UTF-32 encode raise (the per-turn path then returns an
+    InferenceError row). ascii fast-gate first; the utf-16 probe is a C
+    loop that raises on ANY surrogate code unit — lone or
+    adjacent-paired (a str CAN hold '\\ud83d\\ude00' via surrogatepass
+    round-trips; both shapes make the UTF-32 encode raise) — and passes
+    astral-plane characters."""
+    if t.isascii():
+        return True
+    try:
+        t.encode("utf-16-le")
+        return True
+    except UnicodeEncodeError:
+        return False
 
 
 def _density_scores(
@@ -93,12 +152,9 @@ def _density_scores(
         text_density = n_text / (n_text + MARKUP_WEIGHT * n_markup)
         link_density = n_anchor / max(n_text, 1)
 
-    over per-line char counts bincounted from ``line_id``. Both scorers
-    — the per-grid :func:`line_scores` and the batched
-    ``_find_text_boxes_block`` (which feeds it one concatenated
-    gap-joined stream) — call this helper, so an edit to the scoring
-    semantics lands in both by construction. ``an`` is the raw anchor
-    mask; the visible-anchor intersection happens here."""
+    over per-line char counts bincounted from ``line_id``. ``an`` is
+    the raw anchor mask; the visible-anchor intersection happens
+    here."""
     n_text = np.bincount(line_id[vis_ns], minlength=n_lines).astype(np.float64)
     n_markup = np.bincount(line_id[mk], minlength=n_lines).astype(np.float64)
     n_anchor = np.bincount(line_id[an & vis_ns],
@@ -116,142 +172,98 @@ def _density_scores(
     ).astype(np.int64)
 
 
-def _zero_boiler_lines(score: np.ndarray, lines) -> np.ndarray:
-    """Boiler-line tail of the scorer: [HEADER]/[FOOTER]/[PAGE n] marker
-    lines score 0. The '['/'=' substring test is an exact fast gate —
-    every ``_BOILER_LINE_RE`` alternative requires one of the two (the
-    batched detector applies the same gate vectorized over char codes
-    0x5B/0x3D; ``tests/test_detect.py`` pins gate↔regex agreement)."""
-    for y, ln in enumerate(lines):
-        if score[y] > 0 and ("[" in ln or "=" in ln) and is_boiler_line(ln):
+def _block_scores(grid: TurnGrid, r0: int, r1: int):
+    """The probability map of rows ``r0 … r1-1``, one pass over their
+    slice of the stream: ``(a, cp, mk, nl, line_id, score)`` — the
+    slice's stream offset, its codepoints, markup and newline masks,
+    each char's line (block-local; a newline or gap slot belongs to the
+    line it ends) and each line's score in 0..255.
+
+    score = 255 * text_density * (1 - link_density) (``_density_scores``),
+    and layout boilerplate lines ([HEADER]/[FOOTER]/[PAGE n] markers)
+    score 0. Every ``_BOILER_LINE_RE`` alternative needs a '[' or '='
+    (``tests/test_detect.py`` pins gate↔regex agreement), so only
+    positive lines holding one run the regex."""
+    a, b = int(grid.starts[r0]), int(grid.starts[r1])
+    l0 = grid.line0[r0]
+    n_lines = grid.line0[r1] - l0
+    cp, mk = grid.cp[a:b], grid.mk[a:b]
+    nl = cp == 10
+    # dtype=int64 keeps the accumulate single-dtype: numpy's buffered
+    # bool→int64 cast INSIDE add.accumulate collapses under memory-bus
+    # pressure (measured on a degraded-capacity box, 16M elements:
+    # 45-700 ns/el vs a flat 5-7 ns/el for the same-dtype loop; the two
+    # are equal when the box is healthy)
+    line_id = np.cumsum(nl, dtype=np.int64) - nl
+    vis_ns = ~mk & ~((cp == 9) | (cp == 32) | nl)
+    score = _density_scores(line_id, vis_ns, mk, grid.an[a:b], n_lines)
+    bracket = (cp == 0x5B) | (cp == 0x3D)   # '[' or '='
+    has_bracket = np.bincount(line_id[bracket], minlength=n_lines) > 0
+    offs, text = grid.line_offsets, grid.text
+    for y in np.flatnonzero((score > 0) & has_bracket).tolist():
+        g = l0 + y
+        if is_boiler_line(text[offs[g]:offs[g + 1] - 1]):
             score[y] = 0
-    return score
+    return a, cp, mk, nl, line_id, score
 
 
 def line_scores(grid: TurnGrid) -> np.ndarray:
-    """Per-line content score in 0..255 — the probability map.
-
-    score = 255 * text_density * (1 - link_density), truncated like the
-    reference's ``(p*255).min(255) as u8`` (det.rs:342), where
-    text_density = text_chars / (text_chars + MARKUP_WEIGHT*markup_chars)
-    and link_density = anchor text chars / text chars. Layout boilerplate
-    lines ([HEADER]/[FOOTER]/[PAGE n] markers) score 0.
-    """
-    n_lines = len(grid.lines)
-    cp, mk = grid.cp, grid.mk
-    if len(cp) == 0:
-        return np.zeros(n_lines, dtype=np.int64)
-    nl = cp == 10
-    # newline char belongs to the line it ends
-    # dtype=int64 keeps the accumulate single-dtype: numpy's buffered
-    # bool→int64 cast INSIDE add.accumulate collapses under memory-bus
-    # pressure (measured on this box's degraded-capacity state, 16M
-    # elements: 45-700 ns/el vs a flat 5-7 ns/el for the same-dtype
-    # loop; the two are equal when the box is healthy). Explicit dtype
-    # makes the cost state-independent — on a 32-thread executor node
-    # the bus pressure is the NORMAL state.
-    line_id = np.cumsum(nl, dtype=np.int64) - nl
-    ws = (cp == 9) | (cp == 32) | nl
-    vis_ns = ~mk & ~ws
-    an = anchor_mask(grid.text, grid.opq)
-    score = _density_scores(line_id, vis_ns, mk, an, n_lines)
-    return _zero_boiler_lines(score, grid.lines)
+    """Per-line content score in 0..255 — the probability map — for
+    every line of ``grid`` (see ``_block_scores``)."""
+    return _block_scores(grid, 0, len(grid.line0) - 1)[-1]
 
 
 def find_text_boxes(
     grid: TurnGrid, config: EngineConfig = DEFAULT_CONFIG
 ) -> list[Box]:
-    """Full detection: grid → ordered list of boxes (find_text_rect,
-    det.rs:121-132). Order = discovery order: top line first, left to
-    right within a line (contour discovery order analog).
-
-    Deliberately a per-ON-line loop, not a whole-grid vectorization: a
-    measured global diff/searchsorted variant was ~20% SLOWER on real
-    transcript turns (short texts — the fixed cost of full-array passes
-    exceeds the loop it saves; only lines above threshold do any work
-    here)."""
-    scores = line_scores(grid)
-    on = scores > THRESHOLD
-    border = config.rect_border_size
-    boxes: list[Box] = []
-    for y in np.flatnonzero(on):
-        ls = grid.line_offsets[y]
-        le = ls + len(grid.lines[y])
-        if le <= ls:
-            continue
-        seg_ok = ~grid.mk[ls:le]
-        d = np.diff(np.concatenate(([0], seg_ok.astype(np.int8), [0])))
-        starts = np.flatnonzero(d == 1)
-        ends = np.flatnonzero(d == -1)
-        seg_cp = grid.cp[ls:le]
-        ws = (seg_cp == 9) | (seg_cp == 32)
-        for s, e in zip(starts, ends):
-            nz = np.flatnonzero(~ws[s:e])
-            if nz.size == 0:
-                continue
-            c0 = int(s + nz[0])
-            c1 = int(s + nz[-1])
-            # width without +1, mirroring bounding_rect (det.rs:509-510);
-            # glyph height is constant 15 so only width can fail the filter
-            if c1 - c0 <= MIN_BOX_SIZE:
-                continue
-            left = max(c0 - border, int(s))
-            right = min(c1 + border, int(e) - 1)
-            top = max(int(y) * LINE_HEIGHT + GLYPH_TOP - border, 0)
-            bottom = min(int(y) * LINE_HEIGHT + GLYPH_BOTTOM + border, grid.grid_h - 1)
-            # +1 here, mirroring find_box (det.rs:375-376)
-            boxes.append(Box(left, top, right - left + 1, bottom - top + 1))
-    if config.merge_boxes:
-        boxes = merge_overlapping_boxes(boxes, config.merge_threshold)
-    return boxes
+    """Full detection of a one-text grid: grid → ordered list of boxes
+    (find_text_rect, det.rs:121-132) — the one-row case of
+    ``find_text_boxes_batch``."""
+    return _find_text_boxes_block(grid, 0, 1, config)[0]
 
 
 def find_text_boxes_batch(
-    grids: list[TurnGrid], config: EngineConfig = DEFAULT_CONFIG
+    grid: TurnGrid, config: EngineConfig = DEFAULT_CONFIG
 ) -> list[list[Box]]:
-    """``find_text_boxes`` over MANY grids with the per-ON-line segment
-    loop (the measured hot spot on multi-line/markup input — three
-    ``flatnonzero`` calls per line) replaced by ONE diff/searchsorted
-    pass over all grids' concatenated character arrays, and the
-    per-grid ``line_scores`` call replaced by ONE global per-line
-    bincount/divide pass over the same concatenation (the same
-    ``_density_scores`` formula; the boiler-line tail runs per line
-    verbatim). Semantics are the general path exactly —
-    ``merge_overlapping_boxes`` is still called per grid, and the run
-    arithmetic mirrors the per-line code:
+    """Detection over every row of a batch grid: one list of boxes per
+    row. Order = discovery order: top line first, left to right within
+    a line (contour discovery order analog). A list of one-text grids
+    is joined into one stream first.
 
-    - ok = not markup, not newline, line score > THRESHOLD; a one-slot
-      False gap between grids keeps runs from bridging grids (newlines
-      already break runs within a grid, so runs never cross lines)
-    - per run, the visible-char trim (per-line ``nz``) becomes two
-      searchsorteds into the global visible-position index
-    - width filter (c1-c0 without +1, det.rs:509-510), border
-      expansion clamped at the run ends, and the +1 box construction
+    One diff/searchsorted pass over the stream replaces a per-line
+    segment loop, and one per-line bincount/divide pass scores every
+    line (``_block_scores``):
+
+    - ok = not markup, not newline, line score > THRESHOLD; newlines
+      and gap slots break runs, so runs never cross lines or rows
+    - per run, the visible-char trim becomes two searchsorteds into
+      the visible-position index
+    - width filter (c1-c0 without +1, det.rs:509-510), border expansion
+      clamped at the run ends, and the +1 box construction
       (det.rs:375-376) are vectorized over all runs
+    - ``_merge_ltrb`` (det.rs:388-424) runs per row
 
-    Run order (ascending global position) IS discovery order (top line
-    first, left to right within a line), so per-grid box order matches
-    ``find_text_boxes`` by construction. Differential-tested against
-    the per-grid function by the fastbatch and layout suites.
+    Run order (ascending stream position) IS discovery order, so each
+    row's box order is the per-text order by construction.
 
-    Detection runs in grid-aligned blocks of ``DETECT_CHUNK`` chars —
-    grids are independent, so splitting the batch is result-identical;
+    Detection runs in row-aligned blocks of ``DETECT_CHUNK`` chars —
+    rows are independent, so splitting the stream is result-identical;
     blocking keeps the ~12 stream-sized temporaries allocator-warm and
     cache-sized instead of paying a fresh first-touch mmap per batch
     (the same page-fault effect measured on the flat decode — see
-    fastbatch.FLAT_DECODE_CHUNK)."""
-    total = sum(len(g.cp) for g in grids)
-    if total <= DETECT_CHUNK:
-        return _find_text_boxes_block(grids, config)
+    fastbatch.FLAT_DECODE_CHUNK). Document pages and the ``blocks``
+    verb make streams of several MB."""
+    if not isinstance(grid, TurnGrid):
+        grid = TurnGrid([g.text[:-1] for g in grid])
+    n_rows = len(grid.line0) - 1
     out: list[list[Box]] = []
-    i, k = 0, len(grids)
-    while i < k:
-        j, acc = i, 0
-        while j < k and (acc == 0 or acc + len(grids[j].cp) <= DETECT_CHUNK):
-            acc += len(grids[j].cp)
-            j += 1
-        out.extend(_find_text_boxes_block(grids[i:j], config))
-        i = j
+    r0 = 0
+    while r0 < n_rows:
+        r1 = int(np.searchsorted(grid.starts, grid.starts[r0] + DETECT_CHUNK,
+                                 side="right")) - 1
+        r1 = max(r1, r0 + 1)
+        out.extend(_find_text_boxes_block(grid, r0, r1, config))
+        r0 = r1
     return out
 
 
@@ -259,119 +271,56 @@ DETECT_CHUNK = 1 << 18  # chars per detection block (see docstring above)
 
 
 def _find_text_boxes_block(
-    grids: list[TurnGrid], config: EngineConfig = DEFAULT_CONFIG
+    grid: TurnGrid, r0: int, r1: int, config: EngineConfig = DEFAULT_CONFIG
 ) -> list[list[Box]]:
-    """One detection block: the whole-stream pass of
-    ``find_text_boxes_batch`` over a grid-aligned slice."""
+    """One detection block: the boxes of rows ``r0 … r1-1`` (see
+    ``find_text_boxes_batch``)."""
     border = config.rect_border_size
-    boxes_out: list[list[Box]] = [[] for _ in grids]
-    if not grids:
-        return boxes_out
-    # Global character arrays: every grid contributes its chars plus ONE
-    # gap slot marked as a newline, so line segmentation ("newline
-    # belongs to the line it ends") closes each grid's final line and
-    # run detection cannot bridge grids. Line SCORING then runs once
-    # over the concatenation — per-line bincounts/divides replace a
-    # line_scores call per grid (the measured per-grid overhead on
-    # short transcript turns).
-    gap_cp = np.full(1, 10, dtype=np.uint32)
-    gap_b = np.zeros(1, dtype=bool)
-    cp_parts: list[np.ndarray] = []
-    mk_parts: list[np.ndarray] = []
-    an_parts: list[np.ndarray] = []
-    for grid in grids:
-        cp_parts.append(grid.cp)
-        cp_parts.append(gap_cp)
-        mk_parts.append(grid.mk)
-        mk_parts.append(gap_b)
-        an_parts.append(anchor_mask(grid.text, grid.opq))
-        an_parts.append(gap_b)
-    cp_all = np.concatenate(cp_parts)
-    mk_all = np.concatenate(mk_parts)
-    an_all = np.concatenate(an_parts)
-    nl = cp_all == 10
-    # explicit dtype: see line_scores — a bool-input accumulate pays a
-    # buffered per-element cast that collapses under memory-bus
-    # pressure (13.9 s of a 26.5 s profile on a 39k-grid batch in the
-    # box's degraded state; equal-cost when healthy)
-    line_id = np.cumsum(nl, dtype=np.int64) - nl
-    ws = (cp_all == 9) | (cp_all == 32) | nl
-    vis_ns = ~mk_all & ~ws
-    n_lines_total = sum(len(g.lines) for g in grids)
-    score = _density_scores(line_id, vis_ns, mk_all, an_all, n_lines_total)
-    # boiler-line zeroing — the exact _zero_boiler_lines tail. The
-    # per-line Python sweep (score>0 + two substring scans per line) is
-    # replaced by its vectorized equivalent: the '['/'=' gate comes
-    # from the already-built global char stream (a bracket char is
-    # never a newline, so per-line bincount over line_id sees exactly
-    # the chars the per-line `in` scans saw), and only the surviving
-    # candidate lines run the verbatim is_boiler_line regex.
-    lines_per_grid = np.fromiter((len(g.lines) for g in grids),
-                                 dtype=np.int64, count=len(grids))
-    grid_line_base = np.concatenate(([0], np.cumsum(lines_per_grid)[:-1]))
-    bracket = (cp_all == 0x5B) | (cp_all == 0x3D)   # '[' or '='
-    has_bracket = np.bincount(line_id[bracket],
-                              minlength=n_lines_total) > 0
-    cand = np.flatnonzero((score > 0) & has_bracket)
-    if cand.size:
-        cand_g = np.searchsorted(grid_line_base, cand, side="right") - 1
-        cand_y = cand - grid_line_base[cand_g]
-        for gl, g, y in zip(cand.tolist(), cand_g.tolist(),
-                            cand_y.tolist()):
-            if is_boiler_line(grids[g].lines[y]):
-                score[gl] = 0
-    on_line = score > THRESHOLD
-    ok_all = ~mk_all & ~nl & on_line[line_id]
-    vis_all = ok_all & (cp_all != 0x20) & (cp_all != 0x09)
-    sizes = np.fromiter((len(g.cp) + 1 for g in grids),
-                        dtype=np.int64, count=len(grids))
-    bases = np.concatenate(([0], np.cumsum(sizes)[:-1]))
-
-    d = np.diff(ok_all.astype(np.int8), prepend=np.int8(0),
-                append=np.int8(0))
-    starts = np.flatnonzero(d == 1)
-    ends = np.flatnonzero(d == -1)
+    boxes_out: list[list[Box]] = [[] for _ in range(r0, r1)]
+    a, cp, mk, nl, line_id, score = _block_scores(grid, r0, r1)
+    ok_all = ~mk & ~nl & (score > THRESHOLD)[line_id]
+    vis_all = ok_all & (cp != 0x20) & (cp != 0x09)
+    # run edges alternate start, end: every change of ok_all, padded
+    # with False on both sides
+    padded = np.zeros(len(ok_all) + 2, dtype=bool)
+    padded[1:-1] = ok_all
+    edges = np.flatnonzero(padded[1:] != padded[:-1])
+    starts, ends = edges[0::2], edges[1::2]
     vis_idx = np.flatnonzero(vis_all)
     lo = np.searchsorted(vis_idx, starts)
     hi = np.searchsorted(vis_idx, ends)
     keep = hi > lo                       # run has a visible char
     starts, ends, lo, hi = starts[keep], ends[keep], lo[keep], hi[keep]
-    if starts.size:
-        c0 = vis_idx[lo]
-        c1 = vis_idx[hi - 1]
-        keep = (c1 - c0) > MIN_BOX_SIZE
-        starts, ends, c0, c1 = starts[keep], ends[keep], c0[keep], c1[keep]
-    else:
-        c0 = c1 = starts
-    g_of = np.searchsorted(bases, starts, side="right") - 1
+    if not starts.size:
+        return boxes_out  # no runs anywhere: every row stays []
+    c0 = vis_idx[lo]
+    c1 = vis_idx[hi - 1]
+    keep = (c1 - c0) > MIN_BOX_SIZE
+    starts, ends, c0, c1 = starts[keep], ends[keep], c0[keep], c1[keep]
+    if not starts.size:
+        return boxes_out
     left_g = np.maximum(c0 - border, starts)
     right_g = np.minimum(c1 + border, ends - 1)
-
-    if not len(starts):
-        return boxes_out  # no runs anywhere: every grid stays []
-    # Per-run geometry, vectorized (this was a per-run Python loop with
-    # a bisect and a Box construction per run — 240k Box.__init__ on a
-    # 40k-grid batch). Runs never cross lines, so the global line index
-    # of a run's first visible char supplies both the grid-local line
-    # (minus the grid's first line) and the line's global text start
-    # (global line starts = 0 plus every newline position + 1 — gap
-    # slots included, consistent with line_id's numbering). The
-    # original's ``min(bisect-1, last)`` clamp needs no analog: c0 is a
-    # visible char inside its grid, so its line is always in range.
+    # Per-run geometry, vectorized. Runs never cross lines, so the
+    # block line of a run's first visible char gives its row (rows'
+    # first lines are ascending), the row-local line y, and the line's
+    # start in the block (0, then every newline position + 1).
+    row_l0 = np.array(grid.line0[r0:r1 + 1], dtype=np.int64) - grid.line0[r0]
     line_starts = np.concatenate(([0], np.flatnonzero(nl) + 1))
-    y_glob = line_id[c0]
-    y = y_glob - grid_line_base[g_of]          # grid-local line of run
-    ls = line_starts[y_glob]                   # global offset of line
+    y_blk = line_id[c0]
+    row = np.searchsorted(row_l0, y_blk, side="right") - 1
+    y = y_blk - row_l0[row]
+    ls = line_starts[y_blk]
     tops = np.maximum(y * LINE_HEIGHT + GLYPH_TOP - border, 0)
     bottoms = np.minimum(y * LINE_HEIGHT + GLYPH_BOTTOM + border,
-                         lines_per_grid[g_of] * LINE_HEIGHT - 1)
-    l_l = (left_g - ls).tolist()               # grid-coord left/right:
-    r_l = (right_g - ls).tolist()              # (pos - base) - (ls - base)
+                         (row_l0[row + 1] - row_l0[row]) * LINE_HEIGHT - 1)
+    l_l = (left_g - ls).tolist()               # row-coord left/right
+    r_l = (right_g - ls).tolist()
     t_l = tops.tolist()
     b_l = bottoms.tolist()
-    grid_ids = np.arange(len(grids))
-    run_lo = np.searchsorted(g_of, grid_ids, side="left")
-    run_hi = np.searchsorted(g_of, grid_ids, side="right")
+    row_ids = np.arange(r1 - r0)
+    run_lo = np.searchsorted(row, row_ids, side="left")
+    run_hi = np.searchsorted(row, row_ids, side="right")
     for k in np.flatnonzero(run_hi > run_lo).tolist():
         a, b = int(run_lo[k]), int(run_hi[k])
         items = list(zip(l_l[a:b], t_l[a:b], r_l[a:b], b_l[a:b]))
@@ -478,74 +427,75 @@ def merge_overlapping_boxes(boxes: list[Box], threshold: int) -> list[Box]:
     return [Box(l, t, r - l + 1, b - t + 1) for (l, t, r, b) in merged]
 
 
-def box_span(grid: TurnGrid, box: Box) -> tuple[int, int]:
-    """Half-open char span of a box in the original text — the offsets
-    crop_box computes, WITHOUT materializing the crop string (the cheap
-    path for detection-only queries like GetTextRects).
+def _span(grid: TurnGrid, box: Box, row: int):
+    """``(base, y0, y1, start, end)``: row ``row``'s stream offset, the
+    box's first and last stream lines (clamped to the row's last line)
+    and its half-open char span in the row's text. THE single home of
+    the span arithmetic: ``box_span`` returns it, ``crop_box`` crops
+    it, so the property suite's box_span == crop_box offsets holds by
+    construction.
 
-    Clamping mirrors crop_box exactly: for merged multi-line boxes whose
-    LAST line is shorter than the widest line, box.right+1 must clamp to
-    that line's length or the span would bleed past the line break (and
-    past len(text) on the final line) and disagree with extract's spans
-    for the same box."""
-    y0 = min(box.top // LINE_HEIGHT, len(grid.lines) - 1)
-    y1 = min(box.bottom // LINE_HEIGHT, len(grid.lines) - 1)
-    start = grid.line_offsets[y0] + min(box.left, len(grid.lines[y0]))
-    end = grid.line_offsets[y1] + min(box.right + 1, len(grid.lines[y1]))
-    return start, end
+    Clamping: for merged multi-line boxes whose LAST line is shorter
+    than the widest line, box.right+1 must clamp to that line's length
+    or the span would bleed past the line break (and past len(text) on
+    the final line) and disagree with extract's spans for the same
+    box."""
+    offs = grid.line_offsets
+    l0 = grid.line0[row]
+    last = grid.line0[row + 1] - 1
+    y0 = min(l0 + box.top // LINE_HEIGHT, last)
+    y1 = min(l0 + box.bottom // LINE_HEIGHT, last)
+    base = offs[l0]
+    o0, o1 = offs[y0], offs[y1]
+    start = o0 + min(box.left, offs[y0 + 1] - 1 - o0) - base
+    end = o1 + min(box.left + box.width, offs[y1 + 1] - 1 - o1) - base
+    return base, y0, y1, start, end
 
 
-def crop_box(grid: TurnGrid, box: Box) -> tuple[str, int, int]:
-    """Extract a box's text (find_text_img / crop_imm analog, det.rs:137-152).
+def box_span(grid: TurnGrid, box: Box, row: int = 0) -> tuple[int, int]:
+    """Half-open char span of a box in row ``row``'s original text —
+    the offsets crop_box computes, WITHOUT materializing the crop string
+    (the cheap path for detection-only queries like GetTextRects)."""
+    return _span(grid, box, row)[3:]
+
+
+def crop_box(grid: TurnGrid, box: Box, row: int = 0) -> tuple[str, int, int]:
+    """Extract a box's text from row ``row`` of the grid (find_text_img
+    / crop_imm analog, det.rs:137-152), read straight from the stream.
 
     Markup characters inside the crop window are blanked to spaces (they
-    are background pixels); lines joined by \\n. Returns
-    (crop_text, span_start, span_end) with char offsets into the original
-    turn text (half-open)."""
-    y0 = min(box.top // LINE_HEIGHT, len(grid.lines) - 1)
-    y1 = min(box.bottom // LINE_HEIGHT, len(grid.lines) - 1)
-    right = box.right
-    # span arithmetic has exactly ONE home: the property suite asserts
-    # box_span == crop_box offsets, and sharing the code makes that
-    # true by construction
-    span_start, span_end = box_span(grid, box)
-    if not grid.mk[span_start:span_end].any():
+    are background pixels); lines joined by \n. Returns
+    (crop_text, span_start, span_end) with char offsets into the row's
+    original text (half-open)."""
+    offs, text, mkb = grid.line_offsets, grid.text, grid.mkb
+    base, y0, y1, span_start, span_end = _span(grid, box, row)
+    left, b_right = box.left, box.left + box.width
+    parts = []
+    if mkb.find(1, base + span_start, base + span_end) < 0:
         # markup-free span (the dominant shape — detection runs exclude
         # markup chars, so a crop only carries markup pulled in by the
         # border or a vertical merge): nothing to blank anywhere
-        if box.left == 0:
-            for y in range(y0, y1 + 1):
-                if right + 1 < len(grid.lines[y]):
-                    break
-            else:
-                # full-width too: every covered line's clamp is
-                # [0, len(ln)], so the per-line slice+join IS the
-                # contiguous text substring — one slice
-                return grid.text[span_start:span_end], span_start, span_end
-        parts = []
+        if left == 0 and all(offs[y + 1] - 1 - offs[y] <= b_right
+                             for y in range(y0, y1 + 1)):
+            # full-width too: every covered line's clamp is [0, len],
+            # so the per-line slice+join IS the contiguous text
+            # substring — one slice
+            return (text[base + span_start:base + span_end],
+                    span_start, span_end)
         for y in range(y0, y1 + 1):
-            ln = grid.lines[y]
-            a = min(box.left, len(ln))
-            b = min(right + 1, len(ln))
-            parts.append(ln[a:b] if b > a else "")
+            o, n = offs[y], offs[y + 1] - 1 - offs[y]
+            parts.append(text[o + min(left, n):o + min(b_right, n)])
         return "\n".join(parts), span_start, span_end
-    parts = []
     for y in range(y0, y1 + 1):
-        ln = grid.lines[y]
-        off = grid.line_offsets[y]
-        a = min(box.left, len(ln))
-        b = min(right + 1, len(ln))
-        if b <= a:
-            parts.append("")
+        o, n = offs[y], offs[y + 1] - 1 - offs[y]
+        a, b = o + min(left, n), o + min(b_right, n)
+        if mkb.find(1, a, b) < 0:
+            # nothing to blank (or an empty clamp): the crop is a plain
+            # slice of the line — skip the copy/fancy-index/UTF-32
+            # round-trip for the common shape
+            parts.append(text[a:b])
             continue
-        mk_win = grid.mk[off + a : off + b]
-        if not mk_win.any():
-            # nothing to blank: the crop is a plain slice of the line
-            # (cp[off+i] ≡ ln[i] by TurnGrid construction) — skip the
-            # copy/fancy-index/UTF-32 round-trip for the common shape
-            parts.append(ln[a:b])
-            continue
-        seg = grid.cp[off + a : off + b].copy()
-        seg[mk_win] = 32
+        seg = grid.cp[a:b].copy()
+        seg[grid.mk[a:b]] = 32
         parts.append(seg.tobytes().decode("utf-32-le"))
     return "\n".join(parts), span_start, span_end

@@ -51,6 +51,7 @@ from .detect import (
     crop_box,
     find_text_boxes,
     find_text_boxes_batch,
+    no_surrogates,
 )
 
 # ---------------------------------------------------------------------------
@@ -103,31 +104,30 @@ def _clean_text(v) -> Optional[str]:
 
 def _detect_rows(s, cfg, to_row) -> pd.Series:
     """Shared body of the detection-only verbs: clean every row, build
-    a TurnGrid per valid row (per-row try — a surrogate-bearing row
-    fails its UTF-32 encode HERE and stays an empty result), detect the
-    whole batch at once and map each row's boxes through
-    ``to_row(grid, boxes)``. If the batch call raises, every row is
-    retried alone, and a row that still raises gets ``[]``: one poison
-    row never empties its neighbours or kills the task."""
+    ONE batch grid over the valid rows, detect the whole batch at once
+    and map each row's boxes through ``to_row(grid, row, boxes)``. A
+    surrogate-bearing row would fail the grid's UTF-32 encode, so it is
+    kept out up front and stays an empty result. If the batch call
+    raises, every row is retried alone on its own grid, and a row that
+    still raises gets ``[]``: one poison row never empties its
+    neighbours or kills the task."""
     out: list = [[] for _ in range(len(s))]
-    grids, idx = [], []
+    texts, idx = [], []
     for i, text in enumerate(s):
         text = _clean_text(text)
-        if text is None:
-            continue
-        try:
-            grids.append(TurnGrid(text))
+        if isinstance(text, str) and no_surrogates(text):
+            texts.append(text)
             idx.append(i)
-        except Exception:  # poison row → no boxes, not a dead task
-            pass
     try:
-        all_boxes = find_text_boxes_batch(grids, cfg)
-        for i, grid, boxes in zip(idx, grids, all_boxes):
-            out[i] = to_row(grid, boxes)
+        grid = TurnGrid(texts)
+        for r, (i, boxes) in enumerate(
+                zip(idx, find_text_boxes_batch(grid, cfg))):
+            out[i] = to_row(grid, r, boxes)
     except Exception:  # poison batch → per-row containment
-        for i, grid in zip(idx, grids):
+        for i, text in zip(idx, texts):
             try:
-                out[i] = to_row(grid, find_text_boxes(grid, cfg))
+                grid = TurnGrid(text)
+                out[i] = to_row(grid, 0, find_text_boxes(grid, cfg))
             except Exception:
                 out[i] = []
     return pd.Series(out)
@@ -208,10 +208,10 @@ class SparkOcrEngine:
         get (pos, box) rows."""
         cfg = self.config
 
-        def to_rows(grid, boxes):
+        def to_rows(grid, row, boxes):
             rows = []
             for b in boxes:
-                start, end = box_span(grid, b)
+                start, end = box_span(grid, b, row)
                 rows.append(
                     {"left": b.left, "top": b.top, "width": b.width,
                      "height": b.height, "start": start, "end": end}
@@ -230,8 +230,8 @@ class SparkOcrEngine:
         order."""
         cfg = self.config
 
-        def to_crops(grid, boxes):
-            return [crop_box(grid, b)[0] for b in boxes]
+        def to_crops(grid, row, boxes):
+            return [crop_box(grid, b, row)[0] for b in boxes]
 
         @F.pandas_udf(ArrayType(StringType()))
         def crops_udf(s: pd.Series) -> pd.Series:

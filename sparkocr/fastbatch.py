@@ -20,9 +20,9 @@ Entry points (what the Spark engine's UDFs call):
   in-domain rows pool into the flat decode, the rest run
   ``recognize_crop`` per row.
 
-The per-turn cost is dominated by the ~40 small numpy allocations each
-``recognize_crop`` call makes, so the batch stages detect and crop per
-row and pool every crop into ONE flat decode per batch. Three stages:
+A per-turn call pays a fixed cost of small numpy passes per row, so
+the batch stages detect and crop over whole batches and pool every
+crop into ONE flat decode per batch. Three stages:
 
 - **plain** — no markup, ANSI or form-feed, one line or many (the
   chat-message and multi-line prose shapes, ~70% of transcript-shaped
@@ -34,12 +34,15 @@ row and pool every crop into ONE flat decode per batch. Three stages:
   boxes, and crops assemble by plain string slicing (no markup to
   blank).
 - **markup** — ``<`` or ESC, and form-feed rows that take the general
-  machine (see ``_stage``): the EXACT general detection semantics
-  (``TurnGrid``, the density formula, ``detect.merge_overlapping_boxes``'
-  fixpoint) batched by ``detect.find_text_boxes_batch`` — one
-  diff/searchsorted pass over the whole batch's concatenated character
-  grid replaces the per-ON-line segment loop. Crops assemble through
-  ``detect.crop_box`` (markup blanked, so their canonical form is
+  machine (see ``_stage``): the EXACT general detection semantics over
+  ONE batch grid, ``detect.TurnGrid(texts)`` — a single character
+  stream (each text, then one gap slot) whose codepoints, markup and
+  anchor masks and line table are built once per batch, with the tag
+  scan vectorized over the stream and the comment/script/anchor
+  regexes run per row so no markup bridges rows. No ``TurnGrid`` per
+  row: ``detect.find_text_boxes_batch`` extracts every row's runs in
+  one diff/searchsorted pass over the stream, and ``detect.crop_box``
+  reads each crop from it (markup blanked, so the canonical form is
   normally markup-free and in the flat decode's domain).
 - **document** — routing mode only: the rows
   ``pipeline.routes_document`` sends to the layout parser. The parse
@@ -48,9 +51,13 @@ row and pool every crop into ONE flat decode per batch. Three stages:
 
 Crops from all stages are concatenated into ONE flat codepoint array
 (NUL separators) and decoded by the shared state machine
-(``recognize.decode`` with ``seg_ids`` — the single home of the decode
-semantics, rec.rs:344-398) in a handful of numpy passes. Per-row
-Python shrinks to string slicing plus one small float32 reduction.
+(``recognize.decode_markup_free``: the class table scores each
+codepoint by its kind, and with no BORDERLINE kind — the default
+thresholds — the machine takes its "previous state-changing position
+= i-1" branch; ``recognize.decode`` stays the single home of the
+decode semantics, rec.rs:344-398) in a handful of numpy passes.
+Per-row Python shrinks to string slicing plus one small float32
+reduction per crop.
 
 Byte-exactness contract: for every batch-answered turn the result
 equals the per-turn path EXACTLY (text, confidence bits, spans,
@@ -95,22 +102,24 @@ from .config import (
     GLYPH_TOP,
     LINE_HEIGHT,
     MIN_BOX_SIZE,
-    SCORE_OTHER,
-    SCORE_PUNCT,
-    SCORE_WORD,
     EngineConfig,
 )
-from .detect import TurnGrid, _merge_ltrb, crop_box, find_text_boxes_batch
+from .detect import (
+    TurnGrid,
+    _merge_ltrb,
+    crop_box,
+    find_text_boxes_batch,
+    no_surrogates,
+)
 from .engine import EXTRACT_RESULT_FIELDS
 from .pipeline import Block, TurnResult, extract_turn_auto, routes_document
-from .recognize import canonicalize, classify_block, decode, recognize_crop
-from .textgrid import (
-    _NL,
-    is_boiler_line,
-    markup_mask,
-    punct_mask,
-    word_char_mask,
+from .recognize import (
+    canonicalize,
+    classify_block,
+    decode_markup_free,
+    recognize_crop,
 )
+from .textgrid import is_boiler_line, markup_mask
 
 # the Arrow form of the engine's result columns (Spark's own type
 # mapping, so the engine can hand the batch to Spark as is)
@@ -142,26 +151,6 @@ class _Pool:
         self.metas.extend(metas)
 
 
-def _no_surrogates(t: str) -> bool:
-    """Lone surrogates make the per-turn path fail its UTF-32 encode in
-    TurnGrid and return an InferenceError ROW — the flat machine's
-    short-circuits (empty/boiler/narrow) would otherwise answer before
-    ever encoding, so surrogate-bearing turns must fall back up front
-    to reproduce that error behavior exactly. ascii fast-gate first;
-    the utf-16 probe is a C loop that raises on ANY surrogate code
-    unit — lone or adjacent-paired (a str CAN hold '\\ud83d\\ude00'
-    via surrogatepass round-trips; both shapes must fall back, since
-    both make the per-turn UTF-32 encode raise) — and passes
-    astral-plane characters."""
-    if t.isascii():
-        return True
-    try:
-        t.encode("utf-16-le")
-        return True
-    except UnicodeEncodeError:
-        return False
-
-
 def _canon_in_domain(canon: str) -> bool:
     """True when the flat machine scores this canonical crop exactly as
     ``char_scores`` would: the machine assumes the markup mask is empty,
@@ -180,7 +169,9 @@ def _stage(t, role, routing: bool, allow_formfeed: bool) -> str | None:
     ``"document"`` or ``None`` (residue: the per-turn path answers).
 
     - non-``str`` and surrogate-bearing rows are residue (see
-      ``_no_surrogates``);
+      ``detect.no_surrogates``: the per-turn path answers them with an
+      InferenceError row, which the flat machine's short-circuits
+      would not reproduce);
     - form-feed rows: in routing mode (``routing``, a roles array is
       given — even where this row's role is ``None``) the document rule
       (``pipeline.routes_document``) picks ``"document"`` and every
@@ -190,7 +181,7 @@ def _stage(t, role, routing: bool, allow_formfeed: bool) -> str | None:
       \\f to \\n), else residue;
     - ``<`` or ESC: ``"markup"``;
     - the rest, one line or many: ``"plain"``."""
-    if not isinstance(t, str) or not _no_surrogates(t):
+    if not isinstance(t, str) or not no_surrogates(t):
         return None
     if "\f" in t:
         if routing:
@@ -236,21 +227,22 @@ def _document_batch(d_rows, config: EngineConfig, pool: _Pool) -> None:
 
 def _markup_batch(m_rows, config: EngineConfig, pool: _Pool) -> None:
     """The markup stage: detection + crop assembly for a batch of
-    markup-bearing and general-machine form-feed turns. Detection is
-    ``detect.find_text_boxes_batch`` — the exact general-path semantics
-    with the per-ON-line segment loop batched over all turns at once —
-    and ``crop_box`` is the per-turn function. Successful rows append
-    their crops to the shared flat-decode pool; a row whose crop
-    canonicalizes out of the flat machine's domain (see
+    markup-bearing and general-machine form-feed turns, over ONE batch
+    grid (``TurnGrid(texts)``: one character stream, its masks and line
+    table built once). Detection is ``detect.find_text_boxes_batch`` and
+    crops come from ``crop_box`` reading that stream — the general
+    path's own functions, whose one-text case ``extract_turn`` runs.
+    Successful rows append their crops to the shared flat-decode pool; a
+    row whose crop canonicalizes out of the flat machine's domain (see
     ``_canon_in_domain``) stays residue (per-turn fallback)."""
-    grids = [TurnGrid(t) for _, t in m_rows]
-    all_boxes = find_text_boxes_batch(grids, config)
-    for (i, _), grid, boxes in zip(m_rows, grids, all_boxes):
+    grid = TurnGrid([t for _, t in m_rows])
+    all_boxes = find_text_boxes_batch(grid, config)
+    for r, ((i, _), boxes) in enumerate(zip(m_rows, all_boxes)):
         r_canons: list[str] = []
         r_metas: list[tuple] = []
         in_domain = True
         for box in boxes:
-            crop, start, end = crop_box(grid, box)
+            crop, start, end = crop_box(grid, box, r)
             canon = canonicalize(crop, config.max_rec_lines)
             if not _canon_in_domain(canon):
                 in_domain = False   # markup scoring: per-turn path
@@ -555,44 +547,29 @@ def _decode_canons_chunk(canons, config: EngineConfig):
     seg = lens + 1  # each crop + its trailing separator (last has none)
     ids = np.repeat(np.arange(k, dtype=np.int32), seg)[:len(cp)]
 
-    # char_scores for the markup-free case (textgrid.char_scores with
-    # mk all-false): word/space/nl → SCORE_WORD, punct → SCORE_PUNCT,
-    # rest SCORE_OTHER
-    word = word_char_mask(cp)
-    punct = punct_mask(cp)
-    nl = cp == _NL
-    space = cp == 0x20
-    scores = np.full(len(cp), SCORE_OTHER, dtype=np.float32)
-    scores[word | space | nl] = SCORE_WORD
-    scores[punct] = SCORE_PUNCT
-    # blank = control chars except \n (the NUL separator included — the
-    # crop-boundary reset); the dictionary-blank rule is decode's own
-    blank = (cp < 0x20) & ~nl
-
-    # decode the WHOLE flat array in one call of the shared machine
-    # (recognize.decode with seg_ids — the single home of the decode
-    # semantics; this module owns only the scoring and the reassembly)
-    f_cp, f_sc, f_id = decode(cp, scores, blank, config, seg_ids=ids,
-                              punct=punct)
+    # the shared machine over the WHOLE flat array in one call, scored
+    # by the class table (recognize.decode_markup_free — the
+    # markup-free char_scores). The NUL separators are BLANK: a crop
+    # boundary resets the state.
+    f_cp, f_sc, f_id = decode_markup_free(cp, config, ids)
 
     # per-crop slice bounds in the kept stream (f_id ascending)
     bounds = np.searchsorted(f_id, np.arange(k + 1))
+    n_kept = np.diff(bounds)
+    bl = bounds.tolist()
     # decode the kept stream ONCE; per-crop text is then a plain string
     # slice (UTF-32 is fixed-width, so codepoint index == char index)
     full = f_cp.tobytes().decode("utf-32-le")
-    texts, confs = [], []
-    for j in range(k):
-        a, b = int(bounds[j]), int(bounds[j + 1])
-        d_sc = f_sc[a:b]
-        texts.append(full[a:b])
-        if len(d_sc) == 0:
-            confs.append(0.0)
-        else:
-            # float32 pairwise sum over the same-length slice — the
-            # exact arithmetic of recognize_crop (rec.rs:179-186)
-            confs.append(float(np.float32(d_sc.sum(dtype=np.float32))
-                               / np.float32(len(d_sc))))
-    return texts, confs
+    texts = [full[a:b] for a, b in zip(bl, bl[1:])]
+    # float32 pairwise sum per crop over the same-length slice, then
+    # the float32 mean — the exact arithmetic of recognize_crop
+    # (rec.rs:179-186); np.add.reduceat would sum sequentially and
+    # change the bits. An empty crop scores 0.0.
+    sums = np.array([np.add.reduce(f_sc[a:b], dtype=np.float32)
+                     for a, b in zip(bl, bl[1:])], dtype=np.float32)
+    confs = np.divide(sums, n_kept.astype(np.float32),
+                      out=np.zeros(k, dtype=np.float32), where=n_kept > 0)
+    return texts, confs.tolist()
 
 
 def _decode_flat(canons, metas, config: EngineConfig) -> list[list]:
@@ -625,7 +602,7 @@ def recognize_batch(texts, config: EngineConfig = DEFAULT_CONFIG):
             continue
         try:
             canon = canonicalize(text, config.max_rec_lines)
-            if _no_surrogates(canon) and _canon_in_domain(canon):
+            if no_surrogates(canon) and _canon_in_domain(canon):
                 pool_idx.append(i)
                 pool_canons.append(canon)
                 btypes[i] = classify_block(canon)

@@ -84,38 +84,42 @@ def parse_document(text: str | None,
 def parse_documents_batch(
     texts, config: EngineConfig = DEFAULT_CONFIG
 ) -> list[list[Region]]:
-    """``parse_document`` over many payloads with per-page region
-    detection batched through ``detect.find_text_boxes_batch`` — ALL
-    pages of ALL documents share one vectorized run-extraction pass
-    (the measured hot spot of the single-doc parser; the head/foot
-    counters and classification are per-doc logic and stay as they
-    were). The single-payload ``parse_document`` delegates here, so the
-    existing golden/oracle suites pin this implementation directly."""
+    """``parse_document`` over many payloads: ALL pages of ALL documents
+    are the rows of ONE batch grid (one character stream, its masks and
+    line table built once), detected by ``detect.find_text_boxes_batch``
+    in one vectorized pass and cropped by ``crop_box`` from the same
+    stream (the head/foot counters and classification are per-doc
+    logic). The single-payload ``parse_document`` delegates here, so
+    the existing golden/oracle suites pin this implementation
+    directly."""
     pages_per_doc: list[list[str] | None] = []
-    grids: list[TurnGrid] = []
-    slices: list[tuple[int, int]] = []
+    all_pages: list[str] = []
     for text in texts:
         if not text:
             pages_per_doc.append(None)
-            slices.append((len(grids), len(grids)))
             continue
         pages = text.split(PAGE_SEP)
         pages_per_doc.append(pages)
-        s = len(grids)
-        grids.extend(TurnGrid(p) for p in pages)
-        slices.append((s, len(grids)))
-    boxes_all = find_text_boxes_batch(grids, config)
-    return [
-        [] if pages is None else _classify_document(
-            pages, grids[s:e], boxes_all[s:e])
-        for pages, (s, e) in zip(pages_per_doc, slices)
-    ]
+        all_pages.extend(pages)
+    grid = TurnGrid(all_pages)
+    boxes_all = find_text_boxes_batch(grid, config)
+    out: list[list[Region]] = []
+    row0 = 0
+    for pages in pages_per_doc:
+        if pages is None:
+            out.append([])
+            continue
+        out.append(_classify_document(pages, grid, row0,
+                                      boxes_all[row0:row0 + len(pages)]))
+        row0 += len(pages)
+    return out
 
 
-def _classify_document(pages, page_grids, page_boxes) -> list[Region]:
+def _classify_document(pages, grid, row0, page_boxes) -> list[Region]:
     """Passes 1-3 of the document parser for one payload, given each
-    page's already-detected boxes (classification itself is
-    config-independent — the config acts only through detection)."""
+    page's already-detected boxes; page ``k`` is row ``row0 + k`` of the
+    batch grid (classification itself is config-independent — the
+    config acts only through detection)."""
     # pass 1: crop regions per page (global offsets via page_base).
     # Page-number lines are shorter than the detector's MIN_BOX_SIZE
     # noise filter (det.rs:37 semantics — a bare "3" is noise to the
@@ -125,10 +129,9 @@ def _classify_document(pages, page_grids, page_boxes) -> list[Region]:
     page_numbers: list[tuple[int, str, int, int] | None] = []
     page_base = 0
     for page_no, page_text in enumerate(pages):
-        grid = page_grids[page_no]
         rows = []
         for b in page_boxes[page_no]:
-            crop, start, end = crop_box(grid, b)
+            crop, start, end = crop_box(grid, b, row0 + page_no)
             rows.append((crop, page_base + start, page_base + end))
         pn = None
         tail = page_text.rstrip("\n")

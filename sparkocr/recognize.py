@@ -16,7 +16,9 @@ Pipeline (reference analog in parens, all /root/reference/src/rec.rs):
 The decode state machine is fully vectorized (numpy): positions are
 classified RESET / HIGH / BORDERLINE; for every HIGH position the previous
 state-changing position decides duplicate suppression, computed with one
-searchsorted — no per-char Python.
+running-max pass — or, when no position is BORDERLINE, simply i-1 — no
+per-char Python. Markup-free text (every batch crop) is classified
+through the class table (``decode_markup_free``), not per-char scores.
 """
 
 from __future__ import annotations
@@ -27,7 +29,14 @@ import unicodedata
 import numpy as np
 
 from .config import DEFAULT_CONFIG, EngineConfig
-from .textgrid import char_scores, punct_mask
+from .textgrid import (
+    KIND_BLANK,
+    KIND_PUNCT,
+    KIND_SCORE,
+    char_kinds,
+    char_scores,
+    punct_mask,
+)
 
 _ENTITY_RE = re.compile(r"&(amp|lt|gt|quot|apos|nbsp|#\d{1,7});")
 _ENTITY_MAP = {
@@ -100,7 +109,6 @@ def decode(
     blank: np.ndarray,
     config: EngineConfig = DEFAULT_CONFIG,
     seg_ids: np.ndarray | None = None,
-    punct: np.ndarray | None = None,
 ):
     """R3+R4+R5 greedy decode. Returns (codepoints, scores) of the kept
     characters, in order. Semantics verbatim from rec.rs:344-398:
@@ -113,20 +121,16 @@ def decode(
     - post-pass: consecutive identical punctuation collapsed to the first
 
     ``seg_ids`` (optional, same length as ``cp``) runs the identical
-    machine over a FLAT CONCATENATION of independent crops — the
-    Arrow-batch fast path (fastbatch.py) concatenates every eligible
-    crop into one array and decodes the whole batch in one call. With
-    it, the repeat rule and the punct collapse are additionally
-    id-guarded so no state crosses a crop boundary (for fastbatch's
-    input the dup guard is redundant — its NUL separators are blanks
-    that reset state — but the guard makes the kernel correct for
-    separator-less segmented input too), and the return grows a third
-    element: the kept characters' segment ids. This is THE single home
-    of the decode state machine; fastbatch owns no copy of it.
+    machine over a FLAT CONCATENATION of independent crops. With it,
+    the repeat rule and the punct collapse are additionally id-guarded
+    so no state crosses a crop boundary, and the return grows a third
+    element: the kept characters' segment ids.
 
-    ``punct`` (optional) lets a caller that already computed
-    ``punct_mask(cp)`` pass it in instead of paying the LUT pass twice;
-    it must be exactly ``punct_mask(cp)`` for the same ``cp``.
+    This is THE single home of the decode state machine
+    (``_classify`` → ``_emit`` → ``_punct_collapse``).
+    ``decode_markup_free`` — the Arrow-batch flat decode's entry —
+    feeds the same machine from the class table instead of per-char
+    scores.
     """
     n = len(cp)
     if n == 0:
@@ -136,8 +140,19 @@ def decode(
         # only land inside the keys table, rec.rs:16; an unrecognizable
         # glyph yields blank): emit nothing AND reset last_char
         blank = blank | ~_in_vocab(cp, config.dictionary)
-    if punct is None:
-        punct = punct_mask(cp)
+    punct = punct_mask(cp)
+    high, borderline = _classify(scores, blank, punct, config)
+    emit = _emit(cp, high, borderline if borderline.any() else None, punct,
+                 seg_ids)
+    return _punct_collapse(
+        cp[emit], scores[emit], punct[emit],
+        seg_ids[emit] if seg_ids is not None else None)
+
+
+def _classify(scores, blank, punct, config: EngineConfig):
+    """The threshold step: ``(high, borderline)``. HIGH sets last_char;
+    BORDERLINE (punctuation failing its threshold but above 0.8 of it)
+    is kept with the state untouched; everything else is a RESET."""
     thr = np.where(punct, np.float32(config.punct_min_score),
                    np.float32(config.min_score))
     high = (scores > thr) & ~blank
@@ -145,55 +160,69 @@ def decode(
         ~high & ~blank & punct
         & (scores > np.float32(config.punct_min_score) * np.float32(0.8))
     )
-    # cls: 1 = HIGH (sets last_char), 2 = BORDERLINE (state untouched),
-    # 0 = RESET (blank or failed threshold)
-    cls = np.zeros(n, dtype=np.int8)
-    cls[high] = 1
-    cls[borderline] = 2
+    return high, borderline
 
-    if not np.any(cls != 1):
-        # fast path — every position HIGH (the common case: a clean
-        # prose crop, no blanks/markup/borderline): the previous
-        # state-changing position is simply i-1, so the repeat rule
-        # reduces to one shifted comparison. Exactly equivalent to the
-        # general machine below when cls is all ones.
-        dup_f = np.zeros(n, dtype=bool)
-        dup_f[1:] = (cp[1:] == cp[:-1]) & ~punct[1:]
+
+def _emit(cp, high, borderline, punct, seg_ids):
+    """The state machine: which positions are emitted. ``borderline``
+    is ``None`` when no position is BORDERLINE."""
+    n = len(cp)
+    if borderline is None:
+        # every position is HIGH or RESET, both state-changing: the
+        # previous state-changing position is simply i-1, so the repeat
+        # rule reduces to one shifted comparison
+        dup = np.zeros(n, dtype=bool)
+        dup[1:] = high[:-1] & (cp[1:] == cp[:-1]) & ~punct[1:]
         if seg_ids is not None:
-            # id-guard only needed here: multi-crop fastbatch input
-            # always carries blank separators (cls 0) and never takes
-            # this branch, but a separator-less segmented caller must
-            # not dedup across crops
-            dup_f[1:] &= seg_ids[1:] == seg_ids[:-1]
-        keep_f = ~dup_f
-        e_cp = cp[keep_f]
-        e_sc = scores[keep_f]
-        e_punct = punct[keep_f]
-        return _punct_collapse(
-            e_cp, e_sc, e_punct,
-            seg_ids[keep_f] if seg_ids is not None else None)
-
-    # previous state-changing position (the last index < i with cls != 2)
-    # via one running-max pass; positions with no predecessor read -1.
-    # When every position is BORDERLINE (possible under custom
-    # thresholds) prev stays -1 everywhere and nothing is a repeat.
-    state_pos = np.where(cls != 2, np.arange(n, dtype=np.int32),
-                         np.int32(-1))
+            dup[1:] &= seg_ids[1:] == seg_ids[:-1]
+        return high & ~dup
+    # previous state-changing position (the last index < i that is not
+    # BORDERLINE) via one running-max pass; positions with no
+    # predecessor read -1. When every position is BORDERLINE (possible
+    # under custom thresholds) prev stays -1 everywhere and nothing is a
+    # repeat.
+    state_pos = np.where(borderline, np.int32(-1),
+                         np.arange(n, dtype=np.int32))
     prev = np.empty(n, dtype=np.int32)
-    prev[0] = -1
+    prev[:1] = -1
     np.maximum.accumulate(state_pos[:-1], out=prev[1:])
-    has_prev = prev >= 0
     prev_safe = np.maximum(prev, 0)
     dup = (
-        high & ~punct & has_prev
-        & (cls[prev_safe] == 1) & (cp[prev_safe] == cp)
+        high & ~punct & (prev >= 0)
+        & high[prev_safe] & (cp[prev_safe] == cp)
     )
     if seg_ids is not None:
         dup &= seg_ids[prev_safe] == seg_ids
-    emit = (high & ~dup) | borderline
+    return (high & ~dup) | borderline
 
+
+_KINDS = np.arange(len(KIND_SCORE))
+
+
+def decode_markup_free(cp: np.ndarray, config: EngineConfig,
+                       seg_ids: np.ndarray | None = None):
+    """``decode`` of ``char_scores``' markup-free scoring, from the
+    class table: the scoring depends only on the codepoint's kind
+    (``textgrid.char_kinds``), so ``_classify`` runs once on the four
+    kinds — ``config``'s (high, borderline) per kind — and the
+    per-position masks are lookups. No per-char score or threshold
+    pass; the kept characters' scores are looked up at the end.
+    Out-of-vocabulary characters (a ``config.dictionary``) become
+    BLANK. When no kind is BORDERLINE (the default thresholds), the
+    machine takes its "previous state-changing position = i-1" branch.
+    Same return as ``decode``."""
+    kind = char_kinds(cp)
+    if config.dictionary is not None:
+        kind[~_in_vocab(cp, config.dictionary)] = KIND_BLANK
+    high, borderline = _classify(KIND_SCORE, _KINDS == KIND_BLANK,
+                                 _KINDS == KIND_PUNCT, config)
+    punct = kind == KIND_PUNCT
+    emit = _emit(cp, high[kind],
+                 borderline[kind] if borderline.any() else None, punct,
+                 seg_ids)
+    e_kind = kind[emit]
     return _punct_collapse(
-        cp[emit], scores[emit], punct[emit],
+        cp[emit], KIND_SCORE[e_kind], e_kind == KIND_PUNCT,
         seg_ids[emit] if seg_ids is not None else None)
 
 

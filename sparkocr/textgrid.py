@@ -10,6 +10,7 @@ pandas UDFs.
 from __future__ import annotations
 
 import re
+from bisect import bisect_right
 
 import numpy as np
 
@@ -56,77 +57,158 @@ def codepoints(text: str) -> np.ndarray:
     return np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
 
 
-def opaque_mask(text: str) -> np.ndarray:
+# Every mask below runs over one text or over a STREAM of many (a batch
+# grid: each text followed by one gap slot). ``rows`` lists the
+# ``(start, end)`` bounds of the stream's texts that contain ``<`` — the
+# only texts a comment, script, tag or anchor can start in; ``None``
+# means the whole text is one row. Each regex runs per row with
+# ``finditer(text, start, end)``: with ``endpos``, ``\Z`` matches at the
+# row end, so an unclosed comment or script stops there instead of
+# running into the next row.
+
+
+def _rows(text: str, rows):
+    if rows is None:
+        return [(0, len(text))] if "<" in text else []
+    return rows
+
+
+def _span_mask(n: int, starts, ends) -> np.ndarray:
+    """Union of the half-open spans ``[starts[i], ends[i])`` as a
+    length-``n`` mask, whatever the number of spans: the spans merge
+    (sorted by start, a running max of the ends) into disjoint runs, and
+    the mask is one ``np.repeat`` of alternating False/True run lengths
+    — span-sized work plus one pass writing the mask, no stream-sized
+    integer temporaries."""
+    if not len(starts):
+        return np.zeros(n, dtype=bool)
+    order = np.argsort(starts, kind="stable")
+    s = np.asarray(starts, dtype=np.int64)[order]
+    e = np.maximum.accumulate(np.asarray(ends, dtype=np.int64)[order])
+    first = np.flatnonzero(np.concatenate(([True], s[1:] > e[:-1])))
+    run_s = s[first]
+    run_e = e[np.append(first[1:] - 1, len(s) - 1)]
+    lengths = np.empty(2 * len(first) + 1, dtype=np.int64)
+    lengths[0::2] = np.append(run_s, n) - np.append(0, run_e)
+    lengths[1::2] = run_e - run_s
+    return np.repeat(np.arange(len(lengths)) % 2 == 1, lengths)
+
+
+def opaque_mask(text: str, rows=None) -> np.ndarray:
     """Mask of OPAQUE markup regions — comments, <script>/<style>
     bodies, ANSI escapes — whose content must not influence any other
     analysis (in particular, an ``<a>`` inside a comment or a JS string
     is not a real anchor boundary)."""
-    mask = np.zeros(len(text), dtype=bool)
-    # exact fast gates: every comment/script match contains '<', every
-    # ANSI match contains ESC — a C-level substring scan skips the regex
-    # engines entirely on clean text (the common case for recognition
-    # crops, whose markup was already blanked by crop_box)
-    if "<" in text:
-        for m in _COMMENT_RE.finditer(text):
-            mask[m.start() : m.end()] = True
-        for m in _SCRIPT_RE.finditer(text):
+    starts: list[int] = []
+    ends: list[int] = []
+    for s, e in _rows(text, rows):
+        comments = [m.span() for m in _COMMENT_RE.finditer(text, s, e)]
+        for m in _SCRIPT_RE.finditer(text, s, e):
             # comments really do match BEFORE script (the ordering the
             # header comment promises): a <script> opener inside a
             # comment is inert text, and honoring it would extend the
             # unclosed-script fallback mask over the rest of the turn —
-            # '<!-- <script src=x> --> Visible.' must keep 'Visible.'
-            if mask[m.start()]:
-                continue
-            mask[m.start() : m.end()] = True
+            # '<!-- <script src=x> --> Visible.' must keep 'Visible.'.
+            # Script matches never overlap each other, so only a
+            # comment can hold an opener.
+            p = m.start()
+            if comments:
+                k = bisect_right(comments, (p, e + 1)) - 1
+                if k >= 0 and p < comments[k][1]:
+                    continue
+            starts.append(p)
+            ends.append(m.end())
+        for a, b in comments:
+            starts.append(a)
+            ends.append(b)
+    # exact gate: every ANSI match contains ESC, and none can cross a
+    # row (a gap slot is "\n", outside the escape's character class)
     if "\x1b" in text:
         for m in _ANSI_RE.finditer(text):
-            mask[m.start() : m.end()] = True
-    return mask
+            starts.append(m.start())
+            ends.append(m.end())
+    return _span_mask(len(text), starts, ends)
 
 
-def markup_mask(text: str, opaque: np.ndarray | None = None) -> np.ndarray:
+def tag_spans(cp: np.ndarray, row_ends) -> tuple[np.ndarray, np.ndarray]:
+    """Every ``_TAG_RE`` match, vectorized: ``(starts, ends)``, half-open.
+    A tag is ``<``, then ``[/!A-Za-z]``, then ``[^<>]*`` up to ``>``, so
+    it is exactly a ``<`` + opener char whose first delimiter after it
+    is a ``>`` — the delimiters being ``<``, ``>`` and the row ends
+    (``row_ends``: the end of every row holding a ``<``; a gap slot, or
+    ``len(cp)``). Taking the gaps as positions, not as newlines, matters:
+    ``[^<>]*`` crosses the newlines inside a row. The matches cannot
+    overlap (a tag holds no ``<`` but its first char), which is also
+    what ``finditer`` returns."""
+    n = len(cp)
+    lt = np.flatnonzero(cp == 0x3C)
+    p = lt[lt + 1 < n]
+    c = cp[p + 1]
+    low = c | 0x20
+    p = p[(c == 0x2F) | (c == 0x21) | ((low >= 0x61) & (low <= 0x7A))]
+    delim = np.sort(np.concatenate(
+        (lt, np.flatnonzero(cp == 0x3E), np.asarray(row_ends, np.int64))))
+    q = delim[np.searchsorted(delim, p, side="right")]
+    tag = q < n
+    p, q = p[tag], q[tag]
+    tag = cp[q] == 0x3E
+    return p[tag], q[tag] + 1
+
+
+def markup_mask(text: str, opaque: np.ndarray | None = None, rows=None,
+                cp: np.ndarray | None = None) -> np.ndarray:
     """Boolean mask of characters that belong to markup: opaque regions
-    (see :func:`opaque_mask`) plus tags.
+    (see :func:`opaque_mask`) plus tags (:func:`tag_spans`). ``cp``, if
+    given, is ``codepoints(text)``.
 
     Analog of the zero-probability background pixels in the reference's
     probability map (det.rs:339-346): markup never contributes to a
     detected region.
     """
-    # opaque_mask returns a fresh array — only a caller-supplied mask
-    # needs the defensive copy
-    mask = opaque_mask(text) if opaque is None else opaque.copy()
-    if "<" in text:  # exact gate: every tag match contains '<'
-        for m in _TAG_RE.finditer(text):
-            mask[m.start() : m.end()] = True
-    return mask
+    rows = _rows(text, rows)
+    mask = opaque_mask(text, rows) if opaque is None else opaque
+    if not rows:  # exact gate: every tag contains '<'
+        return mask if opaque is None else mask.copy()
+    s, e = tag_spans(codepoints(text) if cp is None else cp,
+                     [end for _, end in rows])
+    return mask | _span_mask(len(text), s, e)
 
 
-def anchor_mask(text: str, opaque: np.ndarray | None = None) -> np.ndarray:
+def anchor_mask(text: str, opaque: np.ndarray | None = None,
+                rows=None) -> np.ndarray:
     """Boolean mask of characters inside <a>…</a> (the link-density
-    numerator). Nested/unbalanced anchors handled with a depth counter;
-    an unclosed <a> extends to end of text. Anchor boundaries inside
-    opaque markup (comments / script bodies) are ignored — a commented-
-    out ``<a>`` must not flag the rest of the turn as link text."""
-    mask = np.zeros(len(text), dtype=bool)
-    if "<" not in text:  # exact gate: anchor boundaries require '<'
-        return mask
+    numerator). Nested/unbalanced anchors handled with a per-row depth
+    counter; an unclosed <a> extends to the end of its row. Anchor
+    boundaries inside opaque markup (comments / script bodies) are
+    ignored — a commented-out ``<a>`` must not flag the rest of the turn
+    as link text."""
+    rows = _rows(text, rows)
+    if not rows:  # exact gate: anchor boundaries require '<'
+        return np.zeros(len(text), dtype=bool)
     if opaque is None:
-        opaque = opaque_mask(text)
-    depth = 0
-    pos = 0
-    for m in _A_BOUND_RE.finditer(text):
-        if len(opaque) and opaque[m.start()]:
-            continue
+        opaque = opaque_mask(text, rows)
+    opq = opaque.tobytes()  # one byte per char: cheap scalar lookups
+    starts: list[int] = []
+    ends: list[int] = []
+    for s, e in rows:
+        depth = 0
+        pos = s
+        for m in _A_BOUND_RE.finditer(text, s, e):
+            p = m.start()
+            if opq[p]:
+                continue
+            if depth > 0:
+                starts.append(pos)
+                ends.append(p)
+            if text[p + 1] == "/":
+                depth = max(0, depth - 1)
+            else:
+                depth += 1
+            pos = m.end()
         if depth > 0:
-            mask[pos : m.start()] = True
-        if m.group(0)[1] == "/":
-            depth = max(0, depth - 1)
-        else:
-            depth += 1
-        pos = m.end()
-    if depth > 0:
-        mask[pos:] = True
-    return mask
+            starts.append(pos)
+            ends.append(e)
+    return _span_mask(len(text), starts, ends)
 
 
 def is_boiler_line(line: str) -> bool:
@@ -169,16 +251,29 @@ for _lo, _hi in _WORD_RANGES:
 assert not _WORD_LUT[0xFFFF]
 
 
-def word_char_mask(cp: np.ndarray) -> np.ndarray:
-    return np.take(_WORD_LUT, cp.astype(np.intp, copy=False), mode="clip")
-
-
 def punct_mask(cp: np.ndarray) -> np.ndarray:
     return np.take(_PUNCT_LUT, cp.astype(np.intp, copy=False), mode="clip")
 
 
-def is_punct_char(ch: str) -> bool:
-    return ch in PUNCTUATIONS
+# The markup-free scoring depends only on the codepoint, so every BMP
+# codepoint maps to one of four kinds (astral codepoints clip to 0xFFFF,
+# an OTHER like every astral codepoint): word/space/newline score
+# SCORE_WORD, punctuation SCORE_PUNCT (overriding word), control chars
+# but \n are BLANK (CTC blanks), the rest OTHER. ``char_scores`` and
+# the recognizer's flat decode both score through this one table.
+KIND_BLANK, KIND_WORD, KIND_PUNCT, KIND_OTHER = range(4)
+KIND_SCORE = np.array([SCORE_OTHER, SCORE_WORD, SCORE_PUNCT, SCORE_OTHER],
+                      dtype=np.float32)
+_KIND_LUT = np.full(0x10000, KIND_OTHER, dtype=np.uint8)
+_KIND_LUT[_WORD_LUT] = KIND_WORD
+_KIND_LUT[[0x20, _NL]] = KIND_WORD
+_KIND_LUT[_PUNCT_LUT] = KIND_PUNCT
+_KIND_LUT[[c for c in range(0x20) if c != _NL]] = KIND_BLANK
+assert not (_WORD_LUT[:0x20].any() or _PUNCT_LUT[:0x20].any())
+
+
+def char_kinds(cp: np.ndarray) -> np.ndarray:
+    return np.take(_KIND_LUT, cp.astype(np.intp, copy=False), mode="clip")
 
 
 def char_scores(text: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -190,31 +285,22 @@ def char_scores(text: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     index 0 (reset ``last_char``, emit nothing).
     """
     cp = codepoints(text)
-    n = len(cp)
-    scores = np.full(n, SCORE_OTHER, dtype=np.float32)
-    if n == 0:
-        return cp, scores, np.zeros(0, dtype=bool)
-
-    mk = markup_mask(text)
-    word = word_char_mask(cp)
-    punct = punct_mask(cp)
-    nl = cp == _NL
-    space = cp == 0x20
-    ctrl = (cp < 0x20) & ~nl  # control chars (tab already folded to space)
-
-    scores[word | space | nl] = SCORE_WORD
-    scores[punct] = SCORE_PUNCT
+    kind = char_kinds(cp)
+    scores = KIND_SCORE[kind]
+    blank = kind == KIND_BLANK  # control chars (tab already folded)
+    if "<" not in text and "\x1b" not in text:
+        return cp, scores, blank
+    mk = markup_mask(text, cp=cp)
     if mk.any():
         # punctuation adjacent to a markup span → borderline confidence
         # (exercises the rec.rs:373-377 branch: kept, last_char
         # untouched). With no markup, adj is all-false and these three
         # writes are no-ops — skipped.
+        n = len(cp)
         adj = np.zeros(n, dtype=bool)
         adj[:-1] |= mk[1:]
         adj[1:] |= mk[:-1]
-        scores[punct & adj & ~mk] = SCORE_EDGE_PUNCT
+        scores[(kind == KIND_PUNCT) & adj & ~mk] = SCORE_EDGE_PUNCT
         scores[mk] = SCORE_MARKUP
-        blank = ctrl & ~mk
-    else:
-        blank = ctrl
+        blank &= ~mk
     return cp, scores, blank

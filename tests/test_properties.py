@@ -112,7 +112,7 @@ single_line_texts = st.lists(
 
 @settings(max_examples=200, deadline=None)
 @given(single_line_texts)
-def test_single_line_fast_path_matches_general_path(text):
+def test_trailing_empty_line_does_not_change_boxes(text):
     """One markup-free line detects exactly as it does with a trailing
     empty line: the empty second line contributes no box and, with
     border ≤ 16, does not change the first line's clamps."""

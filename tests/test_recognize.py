@@ -149,11 +149,15 @@ def test_classify_block():
 
 # --- vectorized decode equals a literal transcription of rec.rs ----------
 
+def is_punct_char(ch: str) -> bool:
+    """The punctuation rule, written independently of the LUT the
+    vectorized decode uses."""
+    return ch in PUNCTUATIONS
+
+
 def _decode_rust_literal(cp, scores, blank, cfg=DEFAULT_CONFIG):
     """Per-char Python port of rec.rs:344-398, used ONLY as a test oracle
     for the vectorized decode."""
-    from sparkocr.textgrid import is_punct_char
-
     results = []
     last_char = None
     for i in range(len(cp)):
