@@ -4,17 +4,22 @@ vs extract_turn.
 The committed hypothesis suite (tests/test_fastbatch.py) runs 250
 derandomized examples per CI pass; this harness is the sustained
 version for pre-release confidence runs. Shape-biased random turns —
-mostly-eligible single-line / multi-line plain rows (so most rows
-actually exercise the flat machine) plus a hostile tail (markup, ESC,
+single-line / multi-line plain rows plus a hostile tail (markup, ESC,
 form-feed, entities incl. &#10;/&#60;/surrogate refs, lone and paired
-surrogates) that keeps the fallback gates honest — asserted
-match-or-fallback per row under seven configs (flagship, default,
-merge off, merge threshold 0, max_rec_lines=None, restricted
-dictionary, min_score=1.0). Every batch is also run through
-``fastbatch.extract_batch`` (the engine's one dispatch), which must
-answer every row byte-identically to the per-turn oracle: with no
-roles in the plain and allow_formfeed modes, with the roles array in
-the routing mode.
+surrogates) — asserted byte-identical per row under seven configs
+(flagship, default, merge off, merge threshold 0, max_rec_lines=None,
+restricted dictionary, min_score=1.0). ``batch_extract_simple`` must
+answer every row in the allow_formfeed and routing modes, and every
+row but the form-feed ones (held back as ``None``) in the plain mode.
+Every batch is also run through ``fastbatch.extract_batch`` (the
+engine's one dispatch), which must answer every row byte-identically
+to the per-turn oracle: with no roles in the plain and allow_formfeed
+modes, with the roles array in the routing mode.
+
+The "fast-path" shares quoted below are the rows ``batch_extract_simple``
+answered; up to round 6 the batch left null rows, surrogate rows and
+crops whose entities mint markup to the per-turn path, so the older
+sweeps read about 92.6%.
 
 Last full run (2026-08-19, 3000 batches x 64 rows, seeds 1000..3999,
 markup + document grammars, cycling plain/allow_formfeed/roles modes
@@ -62,6 +67,16 @@ the halves. A 300-batch sweep on a fresh seed range (seeds
 8100000..8100299, 64 rows) added 19,200 rows, 92.7% fast-path, 0
 divergences; a second one (seeds 8200000..8200299) added 19,200 rows,
 92.8% fast-path, 0 divergences.
+
+No residue (round 6, the batch answers every row: markup minted by
+entities is scored by the flat decode, null and surrogate rows get the
+per-turn error row in the batch): a 300-batch sweep on a fresh seed
+range (seeds 8300000..8300299, 64 rows) added 19,200 rows, 98.5%
+answered by ``batch_extract_simple`` (the rest are the plain mode's
+held-back form-feed rows), every row of the allow_formfeed and routing
+modes answered, 0 divergences. A second one on the 512-row geometry
+(seeds 8500000..8500299, so markup-bearing crops straddle the 256k-char
+decode blocks) added 153,600 rows, 98.6% answered, 0 divergences.
 
 Usage: python scripts/fuzz_fastbatch.py [n_batches] [batch_size] [seed0]
 (seed0 picks the base of the per-batch seed range — pass a fresh value
@@ -194,7 +209,7 @@ def main(n_batches=2000, batch_size=64, seed0=1000):
         if bi % 2:
             texts = _cut_pairs(rng, texts)
         name, cfg = CONFIGS[bi % len(CONFIGS)]
-        # cycle the engine's three modes: plain (\f rows fall back),
+        # cycle the engine's three modes: plain (\f rows held back),
         # allow_formfeed (\f rows run the stage-3 general machine), and
         # routing (roles array: tool+\f rows run the stage-4 document
         # machine, other \f rows run stage 3)
@@ -211,6 +226,10 @@ def main(n_batches=2000, batch_size=64, seed0=1000):
         try:
             n_fast = assert_matches(texts, cfg, allow_formfeed=aff,
                                     roles=roles)
+            # every row is answered; the plain mode holds \f rows back
+            held = 0 if aff or roles is not None else sum(
+                "\f" in t for t in texts)
+            assert n_fast == len(texts) - held, (n_fast, len(texts), held)
             assert_extract_batch(texts, cfg, roles=roles)
         except AssertionError as e:
             raise AssertionError(

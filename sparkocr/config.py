@@ -18,7 +18,7 @@ the default border expansion never crosses into a neighboring line band).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # --- detection constants (values from /root/reference/src/det.rs) -------
 THRESHOLD = 200          # binarization threshold on 0..255 scores (det.rs:33)

@@ -3,22 +3,21 @@
 Entry points (what the Spark engine's UDFs call):
 
 - ``extract_batch(texts, roles, config)`` — the one extraction
-  dispatch: every row is answered; the batch stages below answer what
-  they can and the residue runs the per-turn
-  ``pipeline.extract_turn_auto``. No other module decides which stage
-  a row takes: ``_stage`` is the one per-row decision. The result is
-  columnar: an Arrow ``RecordBatch`` with the engine's
+  dispatch: the batch stages below answer every row. No other module
+  decides which stage a row takes: ``_stage`` is the one per-row
+  decision. A null row and a surrogate-bearing row take no stage; they
+  get the per-turn path's error row (``_error_row``) in the batch. The
+  result is columnar: an Arrow ``RecordBatch`` with the engine's
   ``EXTRACT_RESULT_FIELDS`` columns, typed by Spark's own Arrow
   mapping, ready for ``mapInArrow`` to hand back as is. Its block
   columns are gathered straight from the flat decode's per-crop lists
-  in row order — no ``Block``/``TurnResult`` objects for batch rows;
-  only the residue rows' ``TurnResult`` objects are spliced in.
-  ``batch_extract_simple`` is the ``TurnResult`` view of the same
-  per-crop lists (residue rows ``None``), for callers that time the
-  batch stages alone.
-- ``recognize_batch(texts, config)`` — the RecognizeText kernel:
-  in-domain rows pool into the flat decode, the rest run
-  ``recognize_crop`` per row.
+  in row order — no ``Block``/``TurnResult`` objects. The per-turn
+  ``pipeline.extract_turn_auto`` is reached only to contain a stage or
+  a pooled decode that raised. ``batch_extract_simple`` is the
+  ``TurnResult`` view of the same per-crop lists, for callers that time
+  the batch stages alone.
+- ``recognize_batch(texts, config)`` — the RecognizeText kernel: every
+  row without a surrogate pools into the flat decode.
 
 A per-turn call pays a fixed cost of small numpy passes per row, so
 the batch stages detect and crop over whole batches and pool every
@@ -42,8 +41,7 @@ crop into ONE flat decode per batch. Three stages:
   regexes run per row so no markup bridges rows. No ``TurnGrid`` per
   row: ``detect.find_text_boxes_batch`` extracts every row's runs in
   one diff/searchsorted pass over the stream, and ``detect.crop_box``
-  reads each crop from it (markup blanked, so the canonical form is
-  normally markup-free and in the flat decode's domain).
+  reads each crop from it (markup blanked).
 - **document** — routing mode only: the rows
   ``pipeline.routes_document`` sends to the layout parser. The parse
   runs batched (``layout.parse_documents_batch``) and the body/table
@@ -51,40 +49,28 @@ crop into ONE flat decode per batch. Three stages:
 
 Crops from all stages are concatenated into ONE flat codepoint array
 (NUL separators) and decoded by the shared state machine
-(``recognize.decode_markup_free``: the class table scores each
-codepoint by its kind, and with no BORDERLINE kind — the default
-thresholds — the machine takes its "previous state-changing position
-= i-1" branch; ``recognize.decode`` stays the single home of the
-decode semantics, rec.rs:344-398) in a handful of numpy passes.
-Per-row Python shrinks to string slicing plus one small float32
-reduction per crop.
+(``recognize.decode_kinds``: ``textgrid.text_kinds`` gives each
+codepoint its scoring kind over the whole stream — the rule
+``char_scores`` reads too, markup kinds included — and the machine
+classifies the kinds, not the positions; ``recognize.decode`` stays the
+single home of the decode semantics, rec.rs:344-398) in a handful of
+numpy passes. Per-row Python shrinks to string slicing plus one small
+float32 reduction per crop.
 
-Byte-exactness contract: for every batch-answered turn the result
-equals the per-turn path EXACTLY (text, confidence bits, spans,
-geometry, block type) — enforced by the differential suite in
-tests/test_fastbatch.py. Anything the flat machine cannot reproduce
-bit-for-bit (entities decoding into markup, lone surrogates) is
-residue and falls back to the per-turn path; the decision errs toward
-fallback, never toward approximation.
+Byte-exactness contract: every row's result equals the per-turn path
+EXACTLY (text, confidence bits, spans, geometry, block type, error
+columns) — enforced by the differential suite in
+tests/test_fastbatch.py and by scripts/fuzz_fastbatch.py. A crop whose
+canonical form holds markup (an entity-minted tag, an ANSI run minted
+by ``&#27;``) scores through the markup kinds, exactly as
+``char_scores`` scores it; entity-minted newlines (``&#10;``) are plain
+``\n`` to the machine, and ``canonicalize`` caps the crop's line count
+at ``max_rec_lines`` on both paths.
 
-The domain gate is shared by all three stages (``_canon_in_domain``):
-a crop whose canonical form would make ``char_scores`` see a non-empty
-markup mask — entity decode minting real tags, an ANSI run surviving
-into the crop — falls the whole row back to the per-turn path, which
-owns the markup-scoring branch. Text that merely CONTAINS ``<`` but
-forms no tag (``<1notag>``) and lone ESC bytes the ANSI scanner does
-not match stay in-domain: both score identically on either path.
-
-Entity-minted newlines (``&#10;``) stay in-domain:
-detection geometry comes from the pre-canonicalize lines on both
-paths, and ``canonicalize`` caps the crop's line count at
-``max_rec_lines`` (no overflow is possible), so the flat machine
-scores/emits the minted ``\\n`` exactly as ``recognize_crop`` does —
-covered by the ``&#10;`` rows of the randomized differential test.
-The decode boundary rules are preserved across the flat array: the
-NUL separator is a CTC blank (resets ``last_char``, emits nothing)
-and the punct-collapse pass is crop-id-guarded so it never merges
-across crops.
+The decode boundary rules hold across the flat array: the NUL
+separator is a CTC blank (resets ``last_char``, emits nothing) and is
+never markup, no markup span or markup edge crosses it, and the
+punct-collapse pass is crop-id-guarded so it never merges across crops.
 """
 
 from __future__ import annotations
@@ -112,14 +98,21 @@ from .detect import (
     no_surrogates,
 )
 from .engine import EXTRACT_RESULT_FIELDS
-from .pipeline import Block, TurnResult, extract_turn_auto, routes_document
+from .pipeline import (
+    ERR_INFERENCE,
+    ERR_INPUT,
+    Block,
+    TurnResult,
+    extract_turn_auto,
+    routes_document,
+)
 from .recognize import (
     canonicalize,
     classify_block,
-    decode_markup_free,
+    decode_kinds,
     recognize_crop,
 )
-from .textgrid import is_boiler_line, markup_mask
+from .textgrid import is_boiler_line, text_kinds
 
 # the Arrow form of the engine's result columns (Spark's own type
 # mapping, so the engine can hand the batch to Spark as is)
@@ -133,14 +126,18 @@ _block_values = attrgetter(*_BLOCK_COLS)
 
 class _Pool:
     """One batch's flat-decode pool. ``spans[i]`` is row i's
-    ``(k0, k1)`` slice of the per-crop lists once a batch stage has
-    answered it (``k0 == k1``: no blocks) and ``None`` while the row is
-    residue. A crop's meta is ``(left, top, width, height, start, end,
-    block_type)``; ``block_type`` is ``None`` unless the stage already
-    knows it (the document stage's layout region)."""
+    ``(k0, k1)`` slice of the per-crop lists once the batch has
+    answered it (``k0 == k1``: no blocks) and ``None`` while it has not
+    — before its stage runs, or after its stage or the pooled decode
+    raised. ``errors`` maps the rows no stage takes to their
+    ``(error_code, error_msg)``. A crop's meta is ``(left, top, width,
+    height, start, end, block_type)``; ``block_type`` is ``None``
+    unless the stage already knows it (the document stage's layout
+    region)."""
 
     def __init__(self, n: int):
         self.spans: list = [None] * n
+        self.errors: dict[int, tuple] = {}
         self.canons: list[str] = []
         self.metas: list[tuple] = []
 
@@ -151,45 +148,39 @@ class _Pool:
         self.metas.extend(metas)
 
 
-def _canon_in_domain(canon: str) -> bool:
-    """True when the flat machine scores this canonical crop exactly as
-    ``char_scores`` would: the machine assumes the markup mask is empty,
-    so a crop is in-domain iff ``markup_mask(canon)`` marks nothing.
-    The substring scan is the exact fast gate (every tag/comment match
-    needs ``<``, every ANSI match needs ESC); when one of those chars IS
-    present the mask itself decides — e.g. ``<1notag>`` is not a tag and
-    stays in-domain, while entity-minted ``<i>`` or an ANSI run leaves."""
-    if "<" not in canon and "\x1b" not in canon:
-        return True
-    return not markup_mask(canon).any()
-
-
-def _stage(t, role, routing: bool, allow_formfeed: bool) -> str | None:
+def _stage(t, role) -> str | None:
     """THE per-row batch-stage decision: ``"plain"``, ``"markup"``,
-    ``"document"`` or ``None`` (residue: the per-turn path answers).
+    ``"document"`` or ``None`` (no stage: the row gets its error row,
+    ``_error_row``). ``role`` is ``None`` without routing.
 
-    - non-``str`` and surrogate-bearing rows are residue (see
-      ``detect.no_surrogates``: the per-turn path answers them with an
-      InferenceError row, which the flat machine's short-circuits
-      would not reproduce);
-    - form-feed rows: in routing mode (``routing``, a roles array is
-      given — even where this row's role is ``None``) the document rule
-      (``pipeline.routes_document``) picks ``"document"`` and every
-      other \\f row is ``"markup"``, the general machine
-      ``extract_turn_auto`` sends it to; without routing they are
-      ``"markup"`` only under ``allow_formfeed`` (``TurnGrid`` folds
-      \\f to \\n), else residue;
+    - null and surrogate-bearing rows take no stage (see
+      ``detect.no_surrogates``: the grid's UTF-32 encode would raise);
+    - form-feed rows: the document rule (``pipeline.routes_document``)
+      picks ``"document"``; every other \\f row is ``"markup"``, the
+      general machine, which folds \\f to \\n as ``extract_turn`` does;
     - ``<`` or ESC: ``"markup"``;
     - the rest, one line or many: ``"plain"``."""
-    if not isinstance(t, str) or not no_surrogates(t):
+    if t is None or not no_surrogates(t):
         return None
     if "\f" in t:
-        if routing:
-            return "document" if routes_document(t, role) else "markup"
-        return "markup" if allow_formfeed else None
+        return "document" if routes_document(t, role) else "markup"
     if "<" in t or "\x1b" in t:
         return "markup"
     return "plain"
+
+
+def _error_row(t) -> tuple:
+    """The per-turn path's ``(error_code, error_msg)`` for a row no
+    stage takes: a null row is an InputError; a surrogate-bearing row is
+    an InferenceError carrying the message of the UTF-32 encode that
+    fails on it (every fold before the per-turn encode keeps the
+    length, so the message's positions are the text's)."""
+    if t is None:
+        return ERR_INPUT, "null text"
+    try:
+        t.encode("utf-32-le")
+    except UnicodeEncodeError as e:
+        return ERR_INFERENCE, str(e)[:500]
 
 
 def _document_batch(d_rows, config: EngineConfig, pool: _Pool) -> None:
@@ -207,22 +198,13 @@ def _document_batch(d_rows, config: EngineConfig, pool: _Pool) -> None:
     texts = [t for _, t in d_rows]
     all_regions = parse_documents_batch(texts, config)
     for (i, _), regions in zip(d_rows, all_regions):
-        r_canons: list[str] = []
-        r_metas: list[tuple] = []
-        in_domain = True
-        for reg in regions:
-            if reg.region_type not in ("body", "table"):
-                continue
-            canon = canonicalize(reg.text, config.max_rec_lines)
-            if not _canon_in_domain(canon):
-                in_domain = False
-                break
-            r_canons.append(canon)
-            r_metas.append((0, reg.page * LINE_HEIGHT, reg.end - reg.start,
-                            LINE_HEIGHT, reg.start, reg.end,
-                            reg.region_type))
-        if in_domain:
-            pool.add(i, r_canons, r_metas)
+        kept = [reg for reg in regions
+                if reg.region_type in ("body", "table")]
+        pool.add(i, [canonicalize(reg.text, config.max_rec_lines)
+                     for reg in kept],
+                 [(0, reg.page * LINE_HEIGHT, reg.end - reg.start,
+                   LINE_HEIGHT, reg.start, reg.end, reg.region_type)
+                  for reg in kept])
 
 
 def _markup_batch(m_rows, config: EngineConfig, pool: _Pool) -> None:
@@ -232,26 +214,18 @@ def _markup_batch(m_rows, config: EngineConfig, pool: _Pool) -> None:
     table built once). Detection is ``detect.find_text_boxes_batch`` and
     crops come from ``crop_box`` reading that stream — the general
     path's own functions, whose one-text case ``extract_turn`` runs.
-    Successful rows append their crops to the shared flat-decode pool; a
-    row whose crop canonicalizes out of the flat machine's domain (see
-    ``_canon_in_domain``) stays residue (per-turn fallback)."""
+    Every row appends its crops to the shared flat-decode pool."""
     grid = TurnGrid([t for _, t in m_rows])
     all_boxes = find_text_boxes_batch(grid, config)
     for r, ((i, _), boxes) in enumerate(zip(m_rows, all_boxes)):
         r_canons: list[str] = []
         r_metas: list[tuple] = []
-        in_domain = True
         for box in boxes:
             crop, start, end = crop_box(grid, box, r)
-            canon = canonicalize(crop, config.max_rec_lines)
-            if not _canon_in_domain(canon):
-                in_domain = False   # markup scoring: per-turn path
-                break
-            r_canons.append(canon)
+            r_canons.append(canonicalize(crop, config.max_rec_lines))
             r_metas.append((box.left, box.top, box.width, box.height,
                             start, end, None))
-        if in_domain:
-            pool.add(i, r_canons, r_metas)
+        pool.add(i, r_canons, r_metas)
 
 
 def _plain_batch(p_rows, config: EngineConfig, pool: _Pool) -> None:
@@ -278,8 +252,8 @@ def _plain_batch(p_rows, config: EngineConfig, pool: _Pool) -> None:
     config is read once per batch: a one-line turn, nearly every row
     of a document-shaped corpus, pays the line loop for one line
     (about 1 µs a row over straight-line code; BENCH/SCALING_NOTES.md).
-    A row whose crop leaves the flat machine's domain (entity decode
-    minting '<'/ESC) stays residue (per-turn fallback)."""
+    A crop whose entities mint '<' or ESC pools like any other: the
+    flat decode scores its markup."""
     border = config.rect_border_size
     merge = config.merge_boxes
     threshold = config.merge_threshold
@@ -314,7 +288,6 @@ def _plain_batch(p_rows, config: EngineConfig, pool: _Pool) -> None:
             ltrb = _merge_ltrb(ltrb, threshold)
         r_canons: list[str] = []
         r_metas: list[tuple] = []
-        in_domain = True
         for left, top, right, bottom in ltrb:
             y0 = top // LINE_HEIGHT
             y1 = bottom // LINE_HEIGHT
@@ -332,36 +305,32 @@ def _plain_batch(p_rows, config: EngineConfig, pool: _Pool) -> None:
             else:
                 crop = "\n".join([ln[left:b_right]
                                   for ln in lines[y0:y1 + 1]])
-            canon = canonicalize(crop, max_lines)
-            if not _canon_in_domain(canon):
-                in_domain = False   # markup scoring: per-turn path
-                break
-            r_canons.append(canon)
+            r_canons.append(canonicalize(crop, max_lines))
             r_metas.append((left, top, b_right - left, bottom - top + 1,
                             start, end, None))
-        if in_domain:
-            pool.add(i, r_canons, r_metas)
+        pool.add(i, r_canons, r_metas)
 
 
-def _batch_stages(texts, config: EngineConfig, allow_formfeed: bool,
-                  roles) -> tuple[list, list[list]]:
-    """Run the batch stages over ``texts`` and decode their pool once.
-    Returns ``(spans, cols)``: ``cols`` are the per-crop block columns
-    (``_BLOCK_COLS`` order, pool order) and ``spans[i]`` is row i's
-    ``(k0, k1)`` slice of them, or ``None`` for a residue row that the
-    caller must run through the per-turn pipeline. Flags as in
-    ``batch_extract_simple``."""
+def _batch_stages(texts, config: EngineConfig, roles) -> tuple[_Pool, list]:
+    """Run the batch stages over ``texts`` (``str`` or ``None`` values)
+    and decode their pool once. Returns ``(pool, cols)``: ``cols`` are
+    the per-crop block columns (``_BLOCK_COLS`` order, pool order),
+    ``pool.spans[i]`` is row i's ``(k0, k1)`` slice of them and
+    ``pool.errors`` holds the error rows. A span is ``None`` only where
+    a stage or the pooled decode raised: the caller contains that row
+    with the per-turn pipeline. ``roles`` as in ``extract_batch``."""
     n = len(texts)
     pool = _Pool(n)
-    routing = roles is not None
     # each stage's rows, in row order: (row index, text)
     batched: dict[str, list[tuple]] = {"plain": [], "markup": [],
                                        "document": []}
     for i in range(n):
         t = texts[i]
-        stage = _stage(t, roles[i] if routing else None, routing,
-                       allow_formfeed)
-        if stage is not None:
+        stage = _stage(t, None if roles is None else roles[i])
+        if stage is None:
+            pool.add(i, [], [])
+            pool.errors[i] = _error_row(t)
+        else:
             batched[stage].append((i, t))
 
     for batch_fn, batch_rows in ((_plain_batch, batched["plain"]),
@@ -375,9 +344,8 @@ def _batch_stages(texts, config: EngineConfig, allow_formfeed: bool,
         except Exception:
             # defensive backstop (no known trigger — surrogates are
             # gated up front and the batch machines reuse the exact
-            # per-turn primitives): roll the pool back and send every
-            # row of this stage down the per-turn path, which
-            # re-derives any empty rows identically
+            # per-turn primitives): roll the pool back and leave every
+            # row of this stage to the caller's per-turn containment
             del pool.canons[n_can0:]
             del pool.metas[n_can0:]
             for i, _ in batch_rows:
@@ -385,15 +353,15 @@ def _batch_stages(texts, config: EngineConfig, allow_formfeed: bool,
 
     if pool.canons:
         try:
-            return pool.spans, _decode_flat(pool.canons, pool.metas, config)
+            return pool, _decode_flat(pool.canons, pool.metas, config)
         except Exception:
             # defensive backstop for a poison batch (no known trigger —
             # surrogates are gated up front and entity decode/NFC cannot
-            # mint them): retry nothing here — per-row fallback preserves
-            # the per-turn path's own poison-row containment
+            # mint them): every row with crops goes to the per-turn
+            # path, which keeps its own poison-row containment
             pool.spans = [None if s and s[0] != s[1] else s
                           for s in pool.spans]
-    return pool.spans, [[] for _ in _BLOCK_COLS]
+    return pool, [[] for _ in _BLOCK_COLS]
 
 
 def batch_extract_simple(
@@ -401,37 +369,25 @@ def batch_extract_simple(
     allow_formfeed: bool = False,
     roles=None,
 ) -> list:
-    """Process every eligible turn of ``texts`` (``str`` or ``None``
-    values) in one vectorized pass. Returns a list aligned with
-    ``texts``: a ``TurnResult`` where a fast path applied, ``None``
-    where the caller must run the per-turn pipeline. This is a
-    ``TurnResult`` view of the batch half of ``extract_batch``, which
-    answers the ``None`` rows too; call that unless the split itself
-    is measured.
-
-    ``allow_formfeed=True`` additionally sends form-feed rows through
-    the markup stage (byte-identical to ``extract_turn``, which folds
-    ``\\f`` to ``\\n``). ONLY valid when the caller's fallback is
-    ``extract_turn`` — with ``route_documents`` the router keys on
-    ``\\f`` and those rows must fall back to it instead.
-
-    ``roles`` (aligned with ``texts``) enables the ROUTING-mode
-    equivalent instead: form-feed turns the document rule routes run
-    the document stage (batched layout parse + pooled decode,
-    byte-identical to ``extract_turn_auto``'s document branch) and the
-    other form-feed turns run the markup stage (``extract_turn_auto``
-    sends exactly those to ``extract_turn``). Takes precedence over
-    ``allow_formfeed``."""
-    spans, cols = _batch_stages(texts, config, allow_formfeed, roles)
+    """The ``TurnResult`` view of ``extract_batch``'s batch stages, for
+    callers that time them alone: a list aligned with ``texts`` (``str``
+    or ``None`` values) holding, per row, the ``TurnResult`` that
+    ``extract_turn_auto(t, role)`` (with ``roles``) or ``extract_turn(t)``
+    (without) returns — or ``None`` where the caller must run the
+    per-turn pipeline itself: a row whose stage or pooled decode raised,
+    and, with no ``roles`` and ``allow_formfeed`` off, every form-feed
+    row (the batch still answers it; the view holds it back)."""
+    pool, cols = _batch_stages(texts, config, roles)
+    hold_ff = roles is None and not allow_formfeed
     out: list = []
-    for s in spans:
-        if s is None:
+    for i, (t, s) in enumerate(zip(texts, pool.spans)):
+        if s is None or (hold_ff and t is not None and "\f" in t):
             out.append(None)
             continue
         blocks = [Block(pos, *vals) for pos, vals in
                   enumerate(zip(*(c[s[0]:s[1]] for c in cols)))]
-        out.append(TurnResult(blocks=blocks,
-                              full_text="\n".join(cols[0][s[0]:s[1]])))
+        out.append(TurnResult(blocks, "\n".join(cols[0][s[0]:s[1]]),
+                              *pool.errors.get(i, (None, None))))
     return out
 
 
@@ -439,21 +395,23 @@ def extract_batch(texts, roles=None,
                   config: EngineConfig = DEFAULT_CONFIG) -> pa.RecordBatch:
     """Extract every row of ``texts`` (``str`` or ``None`` values) into
     one Arrow ``RecordBatch`` with the ``EXTRACT_RESULT_FIELDS``
-    columns, row i answering ``texts[i]``. The batch stages answer what
-    they can; every residue row runs the per-turn
-    ``pipeline.extract_turn_auto`` and its ``TurnResult`` is spliced
-    into the same columns.
+    columns, row i answering ``texts[i]`` exactly as the per-turn path
+    does. The batch stages answer every row; a row whose stage or
+    pooled decode raised runs the per-turn ``pipeline.extract_turn_auto``
+    and its ``TurnResult`` is spliced into the same columns.
 
     ``roles`` (aligned with ``texts``) turns on document routing,
     exactly ``extract_turn_auto(t, role)`` per row. ``roles=None`` means
     no routing, exactly ``extract_turn(t)`` per row: form-feed rows then
-    batch through the markup stage, and the residue call
-    ``extract_turn_auto(t, None)`` is ``extract_turn(t)``."""
-    spans, cols = _batch_stages(texts, config, roles is None, roles)
+    run the markup stage."""
+    pool, cols = _batch_stages(texts, config, roles)
+    spans = pool.spans
     n = len(texts)
     full_text: list = [None] * n
     error_code: list = [None] * n
     error_msg: list = [None] * n
+    for i, (code, msg) in pool.errors.items():
+        error_code[i], error_msg[i] = code, msg
     for i, s in enumerate(spans):
         if s is not None:
             full_text[i] = "\n".join(cols[0][s[0]:s[1]])
@@ -503,14 +461,13 @@ FLAT_DECODE_CHUNK = 1 << 18
 
 
 def decode_canons_flat(canons, config: EngineConfig):
-    """Decode MANY already-canonicalized, in-domain crops as one flat
-    codepoint array through the shared state machine. Returns
-    ``(texts, confs)`` aligned with ``canons`` — the (text, confidence)
-    pair ``recognize_crop`` computes per crop, bit-identical (float32
-    pairwise sum over the kept scores). Callers must pre-gate each
-    canon with ``_canon_in_domain`` (the scoring below is
-    ``char_scores`` with an empty markup mask) and keep surrogate
-    input out (the UTF-32 encode would raise).
+    """Decode MANY already-canonicalized crops as one flat codepoint
+    array through the shared state machine. Returns ``(texts, confs)``
+    aligned with ``canons`` — the (text, confidence) pair
+    ``recognize_crop`` computes per crop, bit-identical (float32
+    pairwise sum over the kept scores): the stream is scored by
+    ``text_kinds``, the rule ``char_scores`` reads, markup included.
+    Callers keep surrogate input out (the UTF-32 encode would raise).
 
     Decoding runs in crop-aligned blocks of ``FLAT_DECODE_CHUNK``
     chars (see its comment); each block is one call of the machine and
@@ -546,12 +503,18 @@ def _decode_canons_chunk(canons, config: EngineConfig):
     lens = np.fromiter((len(c) for c in canons), dtype=np.int64, count=k)
     seg = lens + 1  # each crop + its trailing separator (last has none)
     ids = np.repeat(np.arange(k, dtype=np.int32), seg)[:len(cp)]
+    # the crops that hold '<', as stream rows: the only crops a tag,
+    # comment or script can start in
+    rows = []
+    if "<" in flat:
+        starts = (np.cumsum(seg) - seg).tolist()
+        rows = [(a, a + len(c)) for a, c in zip(starts, canons) if "<" in c]
 
     # the shared machine over the WHOLE flat array in one call, scored
-    # by the class table (recognize.decode_markup_free — the
-    # markup-free char_scores). The NUL separators are BLANK: a crop
-    # boundary resets the state.
-    f_cp, f_sc, f_id = decode_markup_free(cp, config, ids)
+    # by the kind table (recognize.decode_kinds). The NUL separators
+    # are BLANK and never markup: a crop boundary resets the state.
+    f_cp, f_sc, f_id = decode_kinds(cp, text_kinds(flat, cp, rows), config,
+                                    ids)
 
     # per-crop slice bounds in the kept stream (f_id ascending)
     bounds = np.searchsorted(f_id, np.arange(k + 1))
@@ -585,45 +548,39 @@ def _decode_flat(canons, metas, config: EngineConfig) -> list[list]:
 
 def recognize_batch(texts, config: EngineConfig = DEFAULT_CONFIG):
     """Recognize each row of ``texts`` (already-``_clean_text``-ed
-    values) as one block. In-domain rows (markup-free canon, no
-    surrogates) pool into one flat decode; everything else goes through
-    ``recognize_crop`` per row — markup canons for the markup scoring
-    branch, surrogate rows so the per-row UTF-32 encode failure yields
-    an all-None row. ``None`` rows and poison rows stay all-None.
-    Returns ``(texts, confs, btypes)`` aligned with the input."""
+    values) as one block. Every row pools into one flat decode, except
+    ``None`` rows and rows whose canon holds a surrogate (the per-row
+    UTF-32 encode fails on it), which stay all-None. A pooled decode
+    that raises is contained per row by ``recognize_crop``, and a
+    poison row there stays all-None. Returns ``(texts, confs, btypes)``
+    aligned with the input."""
     n = len(texts)
     dec: list = [None] * n
     confs: list = [None] * n
     btypes: list = [None] * n
     pool_idx, pool_canons = [], []
-    resid = []  # row indices for the per-row path
     for i, text in enumerate(texts):
         if text is None:
             continue
         try:
             canon = canonicalize(text, config.max_rec_lines)
-            if no_surrogates(canon) and _canon_in_domain(canon):
-                pool_idx.append(i)
-                pool_canons.append(canon)
-                btypes[i] = classify_block(canon)
-                continue
-            resid.append(i)
         except Exception:  # poison row must not kill the task
-            pass
-    if pool_canons:
-        try:
-            p_texts, p_confs = decode_canons_flat(pool_canons, config)
-            for i, t, c in zip(pool_idx, p_texts, p_confs):
-                dec[i], confs[i] = t, c
-        except Exception:  # poison pool → per-row containment
-            resid.extend(pool_idx)
-            for i in pool_idx:
-                btypes[i] = None
-    for i in resid:
-        try:
-            decoded, conf, canon = recognize_crop(texts[i], config)
-            dec[i], confs[i] = decoded, conf
+            continue
+        if no_surrogates(canon):
+            pool_idx.append(i)
+            pool_canons.append(canon)
             btypes[i] = classify_block(canon)
-        except Exception:  # poison row must not kill the task
-            dec[i] = confs[i] = btypes[i] = None
+    if not pool_canons:
+        return dec, confs, btypes
+    try:
+        p_texts, p_confs = decode_canons_flat(pool_canons, config)
+        for i, t, c in zip(pool_idx, p_texts, p_confs):
+            dec[i], confs[i] = t, c
+    except Exception:  # poison pool → per-row containment
+        for i in pool_idx:
+            try:
+                dec[i], confs[i], canon = recognize_crop(texts[i], config)
+                btypes[i] = classify_block(canon)
+            except Exception:  # poison row must not kill the task
+                dec[i] = confs[i] = btypes[i] = None
     return dec, confs, btypes

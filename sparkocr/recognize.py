@@ -17,8 +17,8 @@ The decode state machine is fully vectorized (numpy): positions are
 classified RESET / HIGH / BORDERLINE; for every HIGH position the previous
 state-changing position decides duplicate suppression, computed with one
 running-max pass — or, when no position is BORDERLINE, simply i-1 — no
-per-char Python. Markup-free text (every batch crop) is classified
-through the class table (``decode_markup_free``), not per-char scores.
+per-char Python. The batch flat decode classifies every crop through
+the kind table (``decode_kinds``), not per-char scores.
 """
 
 from __future__ import annotations
@@ -31,9 +31,8 @@ import numpy as np
 from .config import DEFAULT_CONFIG, EngineConfig
 from .textgrid import (
     KIND_BLANK,
-    KIND_PUNCT,
+    KIND_IS_PUNCT,
     KIND_SCORE,
-    char_kinds,
     char_scores,
     punct_mask,
 )
@@ -128,9 +127,8 @@ def decode(
 
     This is THE single home of the decode state machine
     (``_classify`` → ``_emit`` → ``_punct_collapse``).
-    ``decode_markup_free`` — the Arrow-batch flat decode's entry —
-    feeds the same machine from the class table instead of per-char
-    scores.
+    ``decode_kinds`` — the Arrow-batch flat decode's entry — feeds
+    the same machine from the kind table instead of per-char scores.
     """
     n = len(cp)
     if n == 0:
@@ -199,30 +197,30 @@ def _emit(cp, high, borderline, punct, seg_ids):
 _KINDS = np.arange(len(KIND_SCORE))
 
 
-def decode_markup_free(cp: np.ndarray, config: EngineConfig,
-                       seg_ids: np.ndarray | None = None):
-    """``decode`` of ``char_scores``' markup-free scoring, from the
-    class table: the scoring depends only on the codepoint's kind
-    (``textgrid.char_kinds``), so ``_classify`` runs once on the four
-    kinds — ``config``'s (high, borderline) per kind — and the
-    per-position masks are lookups. No per-char score or threshold
-    pass; the kept characters' scores are looked up at the end.
-    Out-of-vocabulary characters (a ``config.dictionary``) become
-    BLANK. When no kind is BORDERLINE (the default thresholds), the
+def decode_kinds(cp: np.ndarray, kind: np.ndarray, config: EngineConfig,
+                 seg_ids: np.ndarray | None = None):
+    """``decode`` of ``char_scores``' scoring, from the kind table: the
+    score of a character is the score of its kind (``kind`` =
+    ``textgrid.text_kinds``), so ``_classify`` runs once on the kinds —
+    ``config``'s (high, borderline) per kind — and the per-position
+    masks are lookups. No per-char score or threshold pass; the kept
+    characters' scores are looked up at the end. Out-of-vocabulary
+    characters (a ``config.dictionary``) become BLANK. When no
+    POSITION is BORDERLINE (EDGE_PUNCT is a borderline kind under the
+    default thresholds, but only markup-bearing crops hold it), the
     machine takes its "previous state-changing position = i-1" branch.
     Same return as ``decode``."""
-    kind = char_kinds(cp)
     if config.dictionary is not None:
-        kind[~_in_vocab(cp, config.dictionary)] = KIND_BLANK
+        kind = np.where(_in_vocab(cp, config.dictionary), kind,
+                        np.uint8(KIND_BLANK))
     high, borderline = _classify(KIND_SCORE, _KINDS == KIND_BLANK,
-                                 _KINDS == KIND_PUNCT, config)
-    punct = kind == KIND_PUNCT
-    emit = _emit(cp, high[kind],
-                 borderline[kind] if borderline.any() else None, punct,
-                 seg_ids)
+                                 KIND_IS_PUNCT, config)
+    border = borderline[kind]
+    emit = _emit(cp, high[kind], border if border.any() else None,
+                 KIND_IS_PUNCT[kind], seg_ids)
     e_kind = kind[emit]
     return _punct_collapse(
-        cp[emit], KIND_SCORE[e_kind], e_kind == KIND_PUNCT,
+        cp[emit], KIND_SCORE[e_kind], KIND_IS_PUNCT[e_kind],
         seg_ids[emit] if seg_ids is not None else None)
 
 

@@ -9,8 +9,8 @@ tests/fixtures/ are generated by this implementation once and committed
 
 from __future__ import annotations
 
-from .config import DEFAULT_CONFIG, FLAGSHIP_CONFIG, EngineConfig
-from .pipeline import Block, TurnResult, extract_turn
+from .config import DEFAULT_CONFIG, EngineConfig
+from .pipeline import extract_turn
 
 
 def extract_turns(

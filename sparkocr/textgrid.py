@@ -15,9 +15,6 @@ from bisect import bisect_right
 import numpy as np
 
 from .config import (
-    GLYPH_BOTTOM,
-    GLYPH_TOP,
-    LINE_HEIGHT,
     PUNCTUATIONS,
     SCORE_EDGE_PUNCT,
     SCORE_MARKUP,
@@ -255,15 +252,23 @@ def punct_mask(cp: np.ndarray) -> np.ndarray:
     return np.take(_PUNCT_LUT, cp.astype(np.intp, copy=False), mode="clip")
 
 
-# The markup-free scoring depends only on the codepoint, so every BMP
-# codepoint maps to one of four kinds (astral codepoints clip to 0xFFFF,
-# an OTHER like every astral codepoint): word/space/newline score
-# SCORE_WORD, punctuation SCORE_PUNCT (overriding word), control chars
-# but \n are BLANK (CTC blanks), the rest OTHER. ``char_scores`` and
-# the recognizer's flat decode both score through this one table.
-KIND_BLANK, KIND_WORD, KIND_PUNCT, KIND_OTHER = range(4)
-KIND_SCORE = np.array([SCORE_OTHER, SCORE_WORD, SCORE_PUNCT, SCORE_OTHER],
+# The recognizer scores a character by its KIND. Away from markup the
+# kind depends only on the codepoint, so every BMP codepoint maps to one
+# of four base kinds (astral codepoints clip to 0xFFFF, an OTHER like
+# every astral codepoint): word/space/newline score SCORE_WORD,
+# punctuation SCORE_PUNCT (overriding word), control chars but \n are
+# BLANK (CTC blanks), the rest OTHER. ``text_kinds`` adds the three
+# markup kinds. ``char_scores`` and the recognizer's flat decode both
+# score through this one table.
+(KIND_BLANK, KIND_WORD, KIND_PUNCT, KIND_OTHER, KIND_EDGE_PUNCT,
+ KIND_MARKUP, KIND_MARKUP_PUNCT) = range(7)
+KIND_SCORE = np.array([SCORE_OTHER, SCORE_WORD, SCORE_PUNCT, SCORE_OTHER,
+                       SCORE_EDGE_PUNCT, SCORE_MARKUP, SCORE_MARKUP],
                       dtype=np.float32)
+# the punctuation kinds: the decode's punct threshold and repeat rule
+# key on the codepoint, so markup punctuation stays a kind of its own
+KIND_IS_PUNCT = np.isin(np.arange(len(KIND_SCORE)),
+                        (KIND_PUNCT, KIND_EDGE_PUNCT, KIND_MARKUP_PUNCT))
 _KIND_LUT = np.full(0x10000, KIND_OTHER, dtype=np.uint8)
 _KIND_LUT[_WORD_LUT] = KIND_WORD
 _KIND_LUT[[0x20, _NL]] = KIND_WORD
@@ -276,31 +281,40 @@ def char_kinds(cp: np.ndarray) -> np.ndarray:
     return np.take(_KIND_LUT, cp.astype(np.intp, copy=False), mode="clip")
 
 
+def text_kinds(text: str, cp: np.ndarray, rows=None) -> np.ndarray:
+    """Per character of ``text`` (``cp`` = ``codepoints(text)``), its
+    scoring kind: the codepoint's base kind, except that markup
+    characters (``markup_mask``) are MARKUP, or MARKUP_PUNCT when they
+    are punctuation, and punctuation next to markup is EDGE_PUNCT —
+    borderline confidence, which exercises the rec.rs:373-377 branch
+    (kept, last_char untouched). Markup is never BLANK.
+
+    ``rows`` as for the masks: over a stream of crops (each followed by
+    a separator that is never markup) it lists the crops that hold
+    ``<``, and since no markup span or edge crosses a separator, every
+    crop's kinds equal those of the crop alone."""
+    kind = char_kinds(cp)
+    if "<" not in text and "\x1b" not in text:  # exact gate, as the masks'
+        return kind
+    mk = markup_mask(text, rows=rows, cp=cp)
+    if mk.any():
+        adj = np.zeros(len(cp), dtype=bool)
+        adj[:-1] |= mk[1:]
+        adj[1:] |= mk[:-1]
+        punct = kind == KIND_PUNCT
+        kind[punct & adj] = KIND_EDGE_PUNCT
+        kind[mk] = np.where(punct[mk], KIND_MARKUP_PUNCT, KIND_MARKUP)
+    return kind
+
+
 def char_scores(text: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """The deterministic "recognition model" (analog of Rec::run_model's
     argmax+score pass, rec.rs:341-357): per character, a confidence in
-    [0,1] plus a blank mask.
+    [0,1] plus a blank mask, both read off ``text_kinds``.
 
     Returns ``(cp, scores, blank)`` where blank characters act like CTC
     index 0 (reset ``last_char``, emit nothing).
     """
     cp = codepoints(text)
-    kind = char_kinds(cp)
-    scores = KIND_SCORE[kind]
-    blank = kind == KIND_BLANK  # control chars (tab already folded)
-    if "<" not in text and "\x1b" not in text:
-        return cp, scores, blank
-    mk = markup_mask(text, cp=cp)
-    if mk.any():
-        # punctuation adjacent to a markup span → borderline confidence
-        # (exercises the rec.rs:373-377 branch: kept, last_char
-        # untouched). With no markup, adj is all-false and these three
-        # writes are no-ops — skipped.
-        n = len(cp)
-        adj = np.zeros(n, dtype=bool)
-        adj[:-1] |= mk[1:]
-        adj[1:] |= mk[:-1]
-        scores[(kind == KIND_PUNCT) & adj & ~mk] = SCORE_EDGE_PUNCT
-        scores[mk] = SCORE_MARKUP
-        blank &= ~mk
-    return cp, scores, blank
+    kind = text_kinds(text, cp)
+    return cp, KIND_SCORE[kind], kind == KIND_BLANK

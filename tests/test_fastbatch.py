@@ -1,9 +1,8 @@
-"""Differential suite for the Arrow-batch fast path (fastbatch.py):
-for every input, either the batch result is byte-identical to
-pipeline.extract_turn (text, confidence BITS, spans, geometry, block
-type) or the row is declared ineligible (None) and falls back. Same
-pattern as tests/test_batch_invariance.py. The same inputs also drive
-``extract_batch``, which must answer every row exactly."""
+"""Differential suite for the Arrow-batch kernels (fastbatch.py): for
+every input the batch result is byte-identical to pipeline.extract_turn
+(text, confidence BITS, spans, geometry, block type, error columns).
+Same pattern as tests/test_batch_invariance.py. The same inputs also
+drive ``extract_batch``, which must answer every row exactly."""
 
 import random
 
@@ -36,21 +35,26 @@ SIMPLE_TURNS = [
     "entities &amp; stay simple &quot;quoted&quot;",
 ]
 
-INELIGIBLE_TURNS = [
+# null, surrogate, form-feed and markup-minting rows: the batch answers
+# each with the per-turn path's row
+FORMER_RESIDUE_TURNS = [
     None,
     float("nan"),  # engine._clean_text maps to None before the call
-    "form\ffeed",  # NO stage takes \f: the document router
-    #              (extract_turn_auto) keys on it for tool turns
-    "<form\ffeed>",  # markup plus \f still falls back (router)
+    "form\ffeed",  # the flag-off view still holds \f rows back
+    "<form\ffeed>",
     "emoji \f😀 after a page break",
     "entity-minted markup &lt;script&gt; stays exact",
-    "multi\nline with entity-minted markup &lt;tag&gt; falls back",
-    # stage-3 rows whose CROP canonicalizes back into REAL markup
-    # leave the flat machine's domain (char_scores' markup branch)
+    "multi\nline with entity-minted markup &lt;tag&gt; scores as markup",
+    # crops that canonicalize back into REAL markup: the flat decode
+    # scores it through the markup kinds, as char_scores does
     "<b>tag</b> then minted &lt;i&gt; inside the crop",
     "markup <b>plus</b> a minted ansi run &#27;[31m colour",
-    # a document whose body region mints markup: stage 4 cannot take
-    # it, and the routed fallback differs from extract_turn
+    "a plain row whose entity mints ansi &#27;[31m colour here",
+    # minted tags at a crop's first and last character: the EDGE_PUNCT
+    # neighbours sit next to the flat stream's separators
+    "&lt;b&gt;!edge punctuation at both ends!&lt;/b&gt;",
+    "!&lt;i&gt;x&lt;/i&gt;!",
+    # a document whose body region mints markup (routing: stage 4)
     ("RUNNING HEAD\nbody with minted &lt;b&gt;markup&lt;/b&gt; here\n12\f"
      "RUNNING HEAD\nsecond page body | a | b |\n| c | d |\n13\f"
      "RUNNING HEAD\nthird page closing body line\n14"),
@@ -58,6 +62,10 @@ INELIGIBLE_TURNS = [
     "lone \ud800 surrogate in a long enough row",
     "paired \ud83d\ude00 surrogates in a long enough row",
     "x\ud800",  # too narrow for a box: still an error row per turn
+    "crlf\r\nthen a lone \udfff surrogate",
+    # a routed tool document that holds a surrogate
+    ("RUNNING HEAD\nbody with a lone \ud800 surrogate\n12\f"
+     "RUNNING HEAD\nsecond page body\n13"),
 ]
 
 MARKUP_TURNS = [
@@ -125,10 +133,22 @@ def test_simple_turns_match_and_take_the_fast_path():
     _assert_matches(SIMPLE_TURNS, min_eligible=len(SIMPLE_TURNS))
 
 
-def test_ineligible_shapes_fall_back():
-    got = batch_extract_simple(_cleaned(INELIGIBLE_TURNS), FLAGSHIP_CONFIG)
-    # None/ineligible rows must all be None (fallback), never a result
-    assert all(r is None for r in got)
+def test_former_residue_is_answered():
+    """Null, surrogate, entity-minted-markup and form-feed rows are all
+    answered by the batch, equal to ``extract_turn`` (or, with roles,
+    ``extract_turn_auto``); only the flag-off view (no roles,
+    ``allow_formfeed`` off) still holds the \\f rows back as ``None``."""
+    texts = _cleaned(FORMER_RESIDUE_TURNS)
+    ff = [t is not None and "\f" in t for t in texts]
+    got = batch_extract_simple(texts, FLAGSHIP_CONFIG)
+    assert [r is None for r in got] == ff
+    n_ff = sum(ff)
+    for cfg in (FLAGSHIP_CONFIG, DEFAULT_CONFIG):
+        assert _assert_matches(texts, cfg) == len(texts) - n_ff
+        _assert_matches(texts, cfg, allow_formfeed=True,
+                        min_eligible=len(texts))
+        _assert_matches(texts, cfg, roles=["tool"] * len(texts),
+                        min_eligible=len(texts))
 
 
 def test_markup_turns_match_and_take_the_fast_path():
@@ -190,14 +210,15 @@ def test_extract_batch_answers_every_row(routing):
     from sparkocr.fixtures import turns_pandas
 
     df = turns_pandas(seed=3, n_convs=40)
-    hand = _cleaned(SIMPLE_TURNS + INELIGIBLE_TURNS + MARKUP_TURNS
+    hand = _cleaned(SIMPLE_TURNS + FORMER_RESIDUE_TURNS + MARKUP_TURNS
                     + FORMFEED_TURNS + DOCUMENT_TURNS + MULTILINE_TURNS)
     cycle = ("user", "assistant", "tool")
     inputs = [
         (_cleaned(df["text"]), list(df["role"])),
         (hand, [cycle[i % 3] for i in range(len(hand))]),
         (DOCUMENT_TURNS, ["tool"] * len(DOCUMENT_TURNS)),
-        (_cleaned(INELIGIBLE_TURNS), ["tool"] * len(INELIGIBLE_TURNS)),
+        (_cleaned(FORMER_RESIDUE_TURNS),
+         ["tool"] * len(FORMER_RESIDUE_TURNS)),
     ]
     for texts, roles in inputs:
         for cfg in (FLAGSHIP_CONFIG, DEFAULT_CONFIG):
@@ -421,7 +442,7 @@ def test_transcript_mix_shares_match_documented():
     # the exact fixture the real-cluster transcript bench replicates
     df = turns_pandas(seed=3, n_convs=40)
     n = len(df)
-    plain = [t for t in df["text"] if _stage(t, None, False, False) == "plain"]
+    plain = [t for t in df["text"] if _stage(t, None) == "plain"]
     s1 = sum("\n" not in t and "\r" not in t for t in plain) / n
     s2 = len(plain) / n - s1
     markup = sum(isinstance(t, str) and "<" in t for t in df["text"]) / n

@@ -10,7 +10,6 @@ from sparkocr.recognize import (
     canonicalize,
     classify_block,
     decode,
-    predict_char_score,
     predict_str,
     predict_with_confidence,
 )

@@ -15,7 +15,7 @@ from sparkocr.engine import (
     ordered,
     with_rank,
 )
-from sparkocr.fixtures import generate_turns, turns_pandas
+from sparkocr.fixtures import turns_pandas
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 GOLDEN = os.path.join(HERE, "fixtures", "golden_extract.json")
@@ -231,7 +231,8 @@ def test_extract_arrow_boundary(engine, spark, case):
     """The cases the ``mapInArrow`` boundary changes: a timestamp
     passthrough (as ``streaming.quality_metrics_stream`` passes it),
     routing with a passthrough that drops ``role``, null/empty rows and
-    a batch whose every row is residue, and a zero-row input. The output
+    a batch of the rows the batch once left to the per-turn path (now
+    all answered in the batch), and a zero-row input. The output
     schema is exactly the passthrough fields plus
     ``EXTRACT_RESULT_FIELDS``; every row equals the per-turn pipeline
     (confidence as float32 bits)."""
@@ -243,10 +244,10 @@ def test_extract_arrow_boundary(engine, spark, case):
     from sparkocr.pipeline import extract_turn_auto
 
     df, residue = _boundary_frames(spark)
-    # the all-residue frame really is all residue, routed or not
+    # the former residue frame is answered in the batch, routed or not
     for ff, roles in ((True, None), (False, ["tool"] * len(RESIDUE_TEXTS))):
-        assert batch_extract_simple(RESIDUE_TEXTS, FLAGSHIP_CONFIG, ff,
-                                    roles) == [None] * 3
+        assert None not in batch_extract_simple(RESIDUE_TEXTS,
+                                                FLAGSHIP_CONFIG, ff, roles)
     passthrough, route = ("conv_id", "turn_idx", "role", "ts"), False
     if case == "route_drop_role":
         passthrough, route = ("conv_id", "turn_idx"), True

@@ -193,12 +193,17 @@ def test_long_s_script_opener_is_a_script():
     DEFAULT_CONFIG.with_min_score(0.96),         # words RESET
     DEFAULT_CONFIG.with_min_score(1.0).with_punct_min_score(0.35),
     DEFAULT_CONFIG.with_dictionary(tuple("helo wrd.!,\n")),
+    DEFAULT_CONFIG.with_punct_min_score(0.04),   # markup punct HIGH
+    DEFAULT_CONFIG.with_dictionary(tuple("helo wrd.!,\n<>/b[m")),
 ])
 def test_class_table_decode_equals_recognize_crop(cfg):
-    """``decode_canons_flat`` (``recognize.decode_markup_free``) equals
-    ``recognize_crop`` per crop — text and confidence bits — under
-    thresholds that make a BORDERLINE kind, make words RESET, and under
-    a dictionary."""
+    """``decode_canons_flat`` (``recognize.decode_kinds`` over
+    ``textgrid.text_kinds``) equals ``recognize_crop`` per crop — text
+    and confidence bits — under thresholds that make a BORDERLINE kind,
+    make words RESET, make markup punctuation HIGH, and under
+    dictionaries, for plain and markup-bearing crops alike: tags, ANSI,
+    comments, punctuation at markup edges and markup at a crop's first
+    and last character, next to the stream's separators."""
     import numpy as np
 
     from sparkocr.fastbatch import decode_canons_flat
@@ -206,7 +211,11 @@ def test_class_table_decode_equals_recognize_crop(cfg):
 
     raws = ["hello world!!", "..!!,,", "aa bb  cc", "", "x\ny..z",
             "日本語。。text", "\U0001F600 ok", "helo. wrd, hello!!!",
-            "a" * 300 + "..."]
+            "a" * 300 + "...",
+            "<b>bold</b> text!!", "x.<i>y</i>,z", "\x1b[31mred\x1b[0m.",
+            "<!-- c -->!", "!<b>!", "<1notag> stays text", "ends with <b>",
+            "!starts after a tag crop", "<b>", "&lt;i&gt;minted&lt;/i&gt;!",
+            "<!-- unclosed comment", "<script>x</script>..", "a <b\nc> d"]
     canons = [canonicalize(r, cfg.max_rec_lines) for r in raws]
     texts, confs = decode_canons_flat(canons, cfg)
     for c, t, f in zip(canons, texts, confs):
