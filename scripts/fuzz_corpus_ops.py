@@ -174,8 +174,6 @@ def make_corpus(rng: random.Random, n_docs: int, lo: int, hi: int,
 # ---------------------------------------------------------------------------
 
 def run_batch(spark, rng: random.Random, args) -> dict:
-    from pyspark.sql import functions as F
-
     from sparkocr.analysis import dedup_substrings, gopher_repetition_signals
     from sparkocr.lm import (
         UnigramLM,  # noqa: F401 (type only)

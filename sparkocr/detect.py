@@ -227,8 +227,7 @@ def find_text_boxes_batch(
 ) -> list[list[Box]]:
     """Detection over every row of a batch grid: one list of boxes per
     row. Order = discovery order: top line first, left to right within
-    a line (contour discovery order analog). A list of one-text grids
-    is joined into one stream first.
+    a line (contour discovery order analog).
 
     One diff/searchsorted pass over the stream replaces a per-line
     segment loop, and one per-line bincount/divide pass scores every
@@ -253,8 +252,6 @@ def find_text_boxes_batch(
     (the same page-fault effect measured on the flat decode — see
     fastbatch.FLAT_DECODE_CHUNK). Document pages and the ``blocks``
     verb make streams of several MB."""
-    if not isinstance(grid, TurnGrid):
-        grid = TurnGrid([g.text[:-1] for g in grid])
     n_rows = len(grid.line0) - 1
     out: list[list[Box]] = []
     r0 = 0

@@ -12,8 +12,10 @@ engine.rs:16-90) as DataFrame-returning functions.
 The reference's ``*Efficient`` requests differ only in choosing a crop
 strategy by cardinality (det.rs:167-171); Catalyst/AQE plans the same
 DataFrame either way, so they have no verb here. Per-row stage
-dispatch is ``fastbatch.extract_batch`` (its ``_stage``); the verbs
-only move columns in and out of it.
+dispatch is ``fastbatch._stage`` for every verb that detects, as one
+detector serves them all in the reference (det.rs:121-132): the verbs
+only move columns in and out of ``fastbatch.extract_batch`` (extract)
+and ``fastbatch.detect_batch`` (spans, blocks).
 
 Execution model: all per-turn compute runs in Arrow-batched Python
 (zero per-row Python UDFs): ``spans``, ``blocks`` and ``recognize`` are
@@ -45,14 +47,6 @@ from pyspark.sql.types import (
 
 from .barrier import pin
 from .config import FLAGSHIP_CONFIG, EngineConfig
-from .detect import (
-    TurnGrid,
-    box_span,
-    crop_box,
-    find_text_boxes,
-    find_text_boxes_batch,
-    no_surrogates,
-)
 
 # ---------------------------------------------------------------------------
 # schemas
@@ -100,37 +94,6 @@ def _clean_text(v) -> Optional[str]:
     if isinstance(v, float):  # NaN from pandas
         return None
     return v
-
-
-def _detect_rows(s, cfg, to_row) -> pd.Series:
-    """Shared body of the detection-only verbs: clean every row, build
-    ONE batch grid over the valid rows, detect the whole batch at once
-    and map each row's boxes through ``to_row(grid, row, boxes)``. A
-    surrogate-bearing row would fail the grid's UTF-32 encode, so it is
-    kept out up front and stays an empty result. If the batch call
-    raises, every row is retried alone on its own grid, and a row that
-    still raises gets ``[]``: one poison row never empties its
-    neighbours or kills the task."""
-    out: list = [[] for _ in range(len(s))]
-    texts, idx = [], []
-    for i, text in enumerate(s):
-        text = _clean_text(text)
-        if isinstance(text, str) and no_surrogates(text):
-            texts.append(text)
-            idx.append(i)
-    try:
-        grid = TurnGrid(texts)
-        for r, (i, boxes) in enumerate(
-                zip(idx, find_text_boxes_batch(grid, cfg))):
-            out[i] = to_row(grid, r, boxes)
-    except Exception:  # poison batch → per-row containment
-        for i, text in zip(idx, texts):
-            try:
-                grid = TurnGrid(text)
-                out[i] = to_row(grid, 0, find_text_boxes(grid, cfg))
-            except Exception:
-                out[i] = []
-    return pd.Series(out)
 
 
 # ---------------------------------------------------------------------------
@@ -208,19 +171,15 @@ class SparkOcrEngine:
         get (pos, box) rows."""
         cfg = self.config
 
-        def to_rows(grid, row, boxes):
-            rows = []
-            for b in boxes:
-                start, end = box_span(grid, b, row)
-                rows.append(
-                    {"left": b.left, "top": b.top, "width": b.width,
-                     "height": b.height, "start": start, "end": end}
-                )
-            return rows
-
         @F.pandas_udf(ArrayType(BOX_STRUCT))
         def detect_udf(s: pd.Series) -> pd.Series:
-            return _detect_rows(s, cfg, to_rows)
+            from .fastbatch import detect_batch
+
+            return pd.Series([
+                [{"left": left, "top": top, "width": width,
+                  "height": height, "start": start, "end": end}
+                 for _, left, top, width, height, start, end in row]
+                for row in detect_batch([_clean_text(v) for v in s], cfg)])
 
         return df.withColumn("boxes", detect_udf(F.col(text_col)))
 
@@ -230,12 +189,13 @@ class SparkOcrEngine:
         order."""
         cfg = self.config
 
-        def to_crops(grid, row, boxes):
-            return [crop_box(grid, b, row)[0] for b in boxes]
-
         @F.pandas_udf(ArrayType(StringType()))
         def crops_udf(s: pd.Series) -> pd.Series:
-            return _detect_rows(s, cfg, to_crops)
+            from .fastbatch import detect_batch
+
+            return pd.Series([
+                [c[0] for c in row]
+                for row in detect_batch([_clean_text(v) for v in s], cfg)])
 
         return df.withColumn("crops", crops_udf(F.col(text_col)))
 

@@ -16,6 +16,9 @@ Entry points (what the Spark engine's UDFs call):
   a pooled decode that raised. ``batch_extract_simple`` is the
   ``TurnResult`` view of the same per-crop lists, for callers that time
   the batch stages alone.
+- ``detect_batch(texts, config)`` — the ``spans``/``blocks`` kernel:
+  the same stages through the same ``_stage``, with no decode; each
+  row's crops and their geometry (``_detect_stages``).
 - ``recognize_batch(texts, config)`` — the RecognizeText kernel: every
   row without a surrogate pools into the flat decode.
 
@@ -47,8 +50,9 @@ crop into ONE flat decode per batch. Three stages:
   runs batched (``layout.parse_documents_batch``) and the body/table
   regions pool into the same flat decode.
 
-Crops from all stages are concatenated into ONE flat codepoint array
-(NUL separators) and decoded by the shared state machine
+The stages hand over raw crops. ``_decode_flat`` canonicalizes each
+crop once, concatenates them into ONE flat codepoint array (NUL
+separators) and decodes it with the shared state machine
 (``recognize.decode_kinds``: ``textgrid.text_kinds`` gives each
 codepoint its scoring kind over the whole stream — the rule
 ``char_scores`` reads too, markup kinds included — and the machine
@@ -94,6 +98,7 @@ from .detect import (
     TurnGrid,
     _merge_ltrb,
     crop_box,
+    find_text_boxes,
     find_text_boxes_batch,
     no_surrogates,
 )
@@ -130,21 +135,21 @@ class _Pool:
     answered it (``k0 == k1``: no blocks) and ``None`` while it has not
     — before its stage runs, or after its stage or the pooled decode
     raised. ``errors`` maps the rows no stage takes to their
-    ``(error_code, error_msg)``. A crop's meta is ``(left, top, width,
-    height, start, end, block_type)``; ``block_type`` is ``None``
-    unless the stage already knows it (the document stage's layout
-    region)."""
+    ``(error_code, error_msg)``. A crop is its raw text; its meta is
+    ``(left, top, width, height, start, end, block_type)``;
+    ``block_type`` is ``None`` unless the stage already knows it (the
+    document stage's layout region)."""
 
     def __init__(self, n: int):
         self.spans: list = [None] * n
         self.errors: dict[int, tuple] = {}
-        self.canons: list[str] = []
+        self.crops: list[str] = []
         self.metas: list[tuple] = []
 
-    def add(self, i: int, canons: list, metas: list) -> None:
-        k0 = len(self.canons)
-        self.spans[i] = (k0, k0 + len(canons))
-        self.canons.extend(canons)
+    def add(self, i: int, crops: list, metas: list) -> None:
+        k0 = len(self.crops)
+        self.spans[i] = (k0, k0 + len(crops))
+        self.crops.extend(crops)
         self.metas.extend(metas)
 
 
@@ -200,8 +205,7 @@ def _document_batch(d_rows, config: EngineConfig, pool: _Pool) -> None:
     for (i, _), regions in zip(d_rows, all_regions):
         kept = [reg for reg in regions
                 if reg.region_type in ("body", "table")]
-        pool.add(i, [canonicalize(reg.text, config.max_rec_lines)
-                     for reg in kept],
+        pool.add(i, [reg.text for reg in kept],
                  [(0, reg.page * LINE_HEIGHT, reg.end - reg.start,
                    LINE_HEIGHT, reg.start, reg.end, reg.region_type)
                   for reg in kept])
@@ -218,14 +222,14 @@ def _markup_batch(m_rows, config: EngineConfig, pool: _Pool) -> None:
     grid = TurnGrid([t for _, t in m_rows])
     all_boxes = find_text_boxes_batch(grid, config)
     for r, ((i, _), boxes) in enumerate(zip(m_rows, all_boxes)):
-        r_canons: list[str] = []
+        r_crops: list[str] = []
         r_metas: list[tuple] = []
         for box in boxes:
             crop, start, end = crop_box(grid, box, r)
-            r_canons.append(canonicalize(crop, config.max_rec_lines))
+            r_crops.append(crop)
             r_metas.append((box.left, box.top, box.width, box.height,
                             start, end, None))
-        pool.add(i, r_canons, r_metas)
+        pool.add(i, r_crops, r_metas)
 
 
 def _plain_batch(p_rows, config: EngineConfig, pool: _Pool) -> None:
@@ -257,7 +261,6 @@ def _plain_batch(p_rows, config: EngineConfig, pool: _Pool) -> None:
     border = config.rect_border_size
     merge = config.merge_boxes
     threshold = config.merge_threshold
-    max_lines = config.max_rec_lines
     for i, t in p_rows:
         if "\r" in t:
             t = t.replace("\r\n", " \n").replace("\r", "\n")
@@ -286,7 +289,7 @@ def _plain_batch(p_rows, config: EngineConfig, pool: _Pool) -> None:
                          bottom if bottom < bottom_max else bottom_max))
         if merge and len(ltrb) > 1:
             ltrb = _merge_ltrb(ltrb, threshold)
-        r_canons: list[str] = []
+        r_crops: list[str] = []
         r_metas: list[tuple] = []
         for left, top, right, bottom in ltrb:
             y0 = top // LINE_HEIGHT
@@ -305,20 +308,19 @@ def _plain_batch(p_rows, config: EngineConfig, pool: _Pool) -> None:
             else:
                 crop = "\n".join([ln[left:b_right]
                                   for ln in lines[y0:y1 + 1]])
-            r_canons.append(canonicalize(crop, max_lines))
+            r_crops.append(crop)
             r_metas.append((left, top, b_right - left, bottom - top + 1,
                             start, end, None))
-        pool.add(i, r_canons, r_metas)
+        pool.add(i, r_crops, r_metas)
 
 
-def _batch_stages(texts, config: EngineConfig, roles) -> tuple[_Pool, list]:
-    """Run the batch stages over ``texts`` (``str`` or ``None`` values)
-    and decode their pool once. Returns ``(pool, cols)``: ``cols`` are
-    the per-crop block columns (``_BLOCK_COLS`` order, pool order),
-    ``pool.spans[i]`` is row i's ``(k0, k1)`` slice of them and
-    ``pool.errors`` holds the error rows. A span is ``None`` only where
-    a stage or the pooled decode raised: the caller contains that row
-    with the per-turn pipeline. ``roles`` as in ``extract_batch``."""
+def _detect_stages(texts, config: EngineConfig, roles) -> _Pool:
+    """Run the batch stages over ``texts`` (``str`` or ``None`` values):
+    ``_stage`` picks each row's stage, and each stage adds its rows'
+    raw crops and metas to the returned pool. ``pool.errors`` holds the
+    rows no stage takes (their spans are empty). A span is ``None`` only
+    where a stage raised: the caller contains that row per turn.
+    ``roles`` as in ``extract_batch``."""
     n = len(texts)
     pool = _Pool(n)
     # each stage's rows, in row order: (row index, text)
@@ -338,7 +340,7 @@ def _batch_stages(texts, config: EngineConfig, roles) -> tuple[_Pool, list]:
                                  (_document_batch, batched["document"])):
         if not batch_rows:
             continue
-        n_can0 = len(pool.canons)
+        n_crop0 = len(pool.crops)
         try:
             batch_fn(batch_rows, config, pool)
         except Exception:
@@ -346,14 +348,24 @@ def _batch_stages(texts, config: EngineConfig, roles) -> tuple[_Pool, list]:
             # gated up front and the batch machines reuse the exact
             # per-turn primitives): roll the pool back and leave every
             # row of this stage to the caller's per-turn containment
-            del pool.canons[n_can0:]
-            del pool.metas[n_can0:]
+            del pool.crops[n_crop0:]
+            del pool.metas[n_crop0:]
             for i, _ in batch_rows:
                 pool.spans[i] = None
+    return pool
 
-    if pool.canons:
+
+def _batch_stages(texts, config: EngineConfig, roles) -> tuple[_Pool, list]:
+    """``_detect_stages``, then ONE flat decode of its pool. Returns
+    ``(pool, cols)``: ``cols`` are the per-crop block columns
+    (``_BLOCK_COLS`` order, pool order), ``pool.spans[i]`` is row i's
+    ``(k0, k1)`` slice of them and ``pool.errors`` holds the error rows.
+    A span is ``None`` only where a stage or the pooled decode raised:
+    the caller contains that row with the per-turn pipeline."""
+    pool = _detect_stages(texts, config, roles)
+    if pool.crops:
         try:
-            return pool, _decode_flat(pool.canons, pool.metas, config)
+            return pool, _decode_flat(pool.crops, pool.metas, config)
         except Exception:
             # defensive backstop for a poison batch (no known trigger —
             # surrogates are gated up front and entity decode/NFC cannot
@@ -362,6 +374,34 @@ def _batch_stages(texts, config: EngineConfig, roles) -> tuple[_Pool, list]:
             pool.spans = [None if s and s[0] != s[1] else s
                           for s in pool.spans]
     return pool, [[] for _ in _BLOCK_COLS]
+
+
+def detect_batch(texts, config: EngineConfig = DEFAULT_CONFIG) -> list:
+    """The ``spans``/``blocks`` kernel: ``extract_batch``'s stages
+    without the decode or routing. Per row of ``texts``
+    (``_clean_text``-ed values), its crops in detection order as
+    ``(crop, left, top, width, height, start, end)``, exactly what
+    ``find_text_boxes``/``box_span``/``crop_box`` give for the row
+    alone; ``[]`` for a null or surrogate-bearing row. A row whose
+    stage raised is detected alone, and gets ``[]`` if that raises."""
+    pool = _detect_stages(texts, config, None)
+    crops, metas = pool.crops, pool.metas
+    out: list = []
+    for t, s in zip(texts, pool.spans):
+        if s is not None:
+            out.append([(crops[k], *metas[k][:6]) for k in range(*s)])
+            continue
+        try:
+            grid = TurnGrid(t)
+            row = []
+            for b in find_text_boxes(grid, config):
+                crop, start, end = crop_box(grid, b)
+                row.append((crop, b.left, b.top, b.width, b.height,
+                            start, end))
+        except Exception:  # poison row must not kill the task
+            row = []
+        out.append(row)
+    return out
 
 
 def batch_extract_simple(
@@ -535,10 +575,14 @@ def _decode_canons_chunk(canons, config: EngineConfig):
     return texts, confs.tolist()
 
 
-def _decode_flat(canons, metas, config: EngineConfig) -> list[list]:
-    """Decode the pool and classify its crops: the per-crop block
-    columns in ``_BLOCK_COLS`` order. Document-stage crops carry their layout
-    region type in the meta instead of classifying the crop text."""
+def _decode_flat(crops, metas, config: EngineConfig) -> list[list]:
+    """Canonicalize the pool's crops, decode them and classify them:
+    the per-crop block columns in ``_BLOCK_COLS`` order. The one
+    ``canonicalize`` call of the batch stages. Document-stage crops
+    carry their layout region type in the meta instead of classifying
+    the crop text."""
+    max_lines = config.max_rec_lines
+    canons = [canonicalize(c, max_lines) for c in crops]
     texts, confs = decode_canons_flat(canons, config)
     *geom, rtypes = zip(*metas)
     btypes = [rt if rt is not None else classify_block(c)

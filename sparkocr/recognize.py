@@ -107,7 +107,6 @@ def decode(
     scores: np.ndarray,
     blank: np.ndarray,
     config: EngineConfig = DEFAULT_CONFIG,
-    seg_ids: np.ndarray | None = None,
 ):
     """R3+R4+R5 greedy decode. Returns (codepoints, scores) of the kept
     characters, in order. Semantics verbatim from rec.rs:344-398:
@@ -119,12 +118,6 @@ def decode(
     - else: last_char = None
     - post-pass: consecutive identical punctuation collapsed to the first
 
-    ``seg_ids`` (optional, same length as ``cp``) runs the identical
-    machine over a FLAT CONCATENATION of independent crops. With it,
-    the repeat rule and the punct collapse are additionally id-guarded
-    so no state crosses a crop boundary, and the return grows a third
-    element: the kept characters' segment ids.
-
     This is THE single home of the decode state machine
     (``_classify`` → ``_emit`` → ``_punct_collapse``).
     ``decode_kinds`` — the Arrow-batch flat decode's entry — feeds
@@ -132,7 +125,7 @@ def decode(
     """
     n = len(cp)
     if n == 0:
-        return (cp, scores) if seg_ids is None else (cp, scores, seg_ids)
+        return cp, scores
     if config.dictionary is not None:
         # out-of-vocabulary characters act as CTC blanks (the argmax can
         # only land inside the keys table, rec.rs:16; an unrecognizable
@@ -141,10 +134,8 @@ def decode(
     punct = punct_mask(cp)
     high, borderline = _classify(scores, blank, punct, config)
     emit = _emit(cp, high, borderline if borderline.any() else None, punct,
-                 seg_ids)
-    return _punct_collapse(
-        cp[emit], scores[emit], punct[emit],
-        seg_ids[emit] if seg_ids is not None else None)
+                 None)
+    return _punct_collapse(cp[emit], scores[emit], punct[emit], None)
 
 
 def _classify(scores, blank, punct, config: EngineConfig):
@@ -163,7 +154,8 @@ def _classify(scores, blank, punct, config: EngineConfig):
 
 def _emit(cp, high, borderline, punct, seg_ids):
     """The state machine: which positions are emitted. ``borderline``
-    is ``None`` when no position is BORDERLINE."""
+    is ``None`` when no position is BORDERLINE; ``seg_ids`` is
+    ``decode_kinds``' crop ids, ``None`` for one crop."""
     n = len(cp)
     if borderline is None:
         # every position is HIGH or RESET, both state-changing: the
@@ -198,7 +190,7 @@ _KINDS = np.arange(len(KIND_SCORE))
 
 
 def decode_kinds(cp: np.ndarray, kind: np.ndarray, config: EngineConfig,
-                 seg_ids: np.ndarray | None = None):
+                 seg_ids: np.ndarray):
     """``decode`` of ``char_scores``' scoring, from the kind table: the
     score of a character is the score of its kind (``kind`` =
     ``textgrid.text_kinds``), so ``_classify`` runs once on the kinds —
@@ -209,7 +201,11 @@ def decode_kinds(cp: np.ndarray, kind: np.ndarray, config: EngineConfig,
     POSITION is BORDERLINE (EDGE_PUNCT is a borderline kind under the
     default thresholds, but only markup-bearing crops hold it), the
     machine takes its "previous state-changing position = i-1" branch.
-    Same return as ``decode``."""
+
+    ``cp`` is a FLAT CONCATENATION of independent crops and ``seg_ids``
+    (same length) each position's crop id: the repeat rule and the
+    punct collapse are id-guarded so no state crosses a crop boundary.
+    Returns the kept characters' ``(codepoints, scores, crop ids)``."""
     if config.dictionary is not None:
         kind = np.where(_in_vocab(cp, config.dictionary), kind,
                         np.uint8(KIND_BLANK))
@@ -219,9 +215,8 @@ def decode_kinds(cp: np.ndarray, kind: np.ndarray, config: EngineConfig,
     emit = _emit(cp, high[kind], border if border.any() else None,
                  KIND_IS_PUNCT[kind], seg_ids)
     e_kind = kind[emit]
-    return _punct_collapse(
-        cp[emit], KIND_SCORE[e_kind], KIND_IS_PUNCT[e_kind],
-        seg_ids[emit] if seg_ids is not None else None)
+    return _punct_collapse(cp[emit], KIND_SCORE[e_kind],
+                           KIND_IS_PUNCT[e_kind], seg_ids[emit])
 
 
 def _punct_collapse(e_cp, e_sc, e_punct, e_id):

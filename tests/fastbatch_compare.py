@@ -9,8 +9,15 @@ from a bare interpreter."""
 import numpy as np
 
 from sparkocr.config import FLAGSHIP_CONFIG
+from sparkocr.detect import (
+    TurnGrid,
+    box_span,
+    crop_box,
+    find_text_boxes,
+    no_surrogates,
+)
 from sparkocr.engine import EXTRACT_RESULT_FIELDS
-from sparkocr.fastbatch import batch_extract_simple, extract_batch
+from sparkocr.fastbatch import batch_extract_simple, detect_batch, extract_batch
 from sparkocr.pipeline import extract_turn, extract_turn_auto
 
 
@@ -81,3 +88,24 @@ def assert_extract_batch(texts, config=FLAGSHIP_CONFIG, roles=None):
             assert a_bits == w_bits, (ascii(t), a_bits, w_bits)
             assert a == w, (ascii(t), a, w)
     return len(rows)
+
+
+def assert_detect_batch(texts, config=FLAGSHIP_CONFIG):
+    """The ``spans``/``blocks`` kernel: ``detect_batch`` gives every row
+    exactly what the per-turn ``find_text_boxes`` / ``box_span`` /
+    ``crop_box`` give for the row alone, and ``[]`` for a null or
+    surrogate-bearing row. Returns the row count."""
+    got = detect_batch(list(texts), config)
+    assert len(got) == len(texts), (len(got), len(texts))
+    for t, row in zip(texts, got):
+        if t is None or not no_surrogates(t):
+            assert row == [], ascii(t)
+            continue
+        grid = TurnGrid(t)
+        want = []
+        for b in find_text_boxes(grid, config):
+            crop, start, end = crop_box(grid, b)
+            assert (start, end) == box_span(grid, b), ascii(t)
+            want.append((crop, b.left, b.top, b.width, b.height, start, end))
+        assert row == want, ascii(t)
+    return len(got)

@@ -8,7 +8,6 @@ rows survive to the end, and the bookkeeping (stats, bins) agrees with
 the survivor set."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from sparkocr.corpus import build_training_corpus
 

@@ -8,9 +8,6 @@ block, crop-larger-than-block) and assert bit-identity against the
 single-block path, so a future edit that breaks alignment or drops the
 at-least-one-crop guarantee fails loudly rather than only at scale.
 """
-import numpy as np
-import pytest
-
 import sparkocr.detect as dt
 import sparkocr.fastbatch as fb
 from sparkocr.config import DEFAULT_CONFIG
@@ -68,25 +65,25 @@ def test_detection_blocking_bit_identical(monkeypatch):
         "<a href=x>link heavy</a> " * 6,
         "z" * 900,
         "[PAGE 3]\nreal body text under a boiler line",
-    ] * 5  # 35 grids, block boundaries land mid-pool
-    grids = [TurnGrid(t) for t in texts]
+    ] * 5  # 35 rows, block boundaries land mid-pool
+    grid = TurnGrid(texts)
     monkeypatch.setattr(dt, "DETECT_CHUNK", 1 << 30)
-    whole = dt.find_text_boxes_batch(grids, DEFAULT_CONFIG)
+    whole = dt.find_text_boxes_batch(grid, DEFAULT_CONFIG)
     for chunk in (1, 50, 400, 2048):
         monkeypatch.setattr(dt, "DETECT_CHUNK", chunk)
-        got = dt.find_text_boxes_batch(grids, DEFAULT_CONFIG)
+        got = dt.find_text_boxes_batch(grid, DEFAULT_CONFIG)
         assert got == whole
-    # and the blocked result still matches the per-grid function
+    # and the blocked result still matches the per-text function
     monkeypatch.setattr(dt, "DETECT_CHUNK", 128)
-    blocked = dt.find_text_boxes_batch(grids, DEFAULT_CONFIG)
-    per_grid = [dt.find_text_boxes(g, DEFAULT_CONFIG) for g in grids]
+    blocked = dt.find_text_boxes_batch(grid, DEFAULT_CONFIG)
+    per_grid = [dt.find_text_boxes(TurnGrid(t), DEFAULT_CONFIG)
+                for t in texts]
     assert blocked == per_grid
 
 
 def test_detection_oversized_single_grid(monkeypatch):
-    grids = [TurnGrid("tiny"), TurnGrid("w" * 4000 + "\nsecond line"),
-             TurnGrid("tail row")]
+    grid = TurnGrid(["tiny", "w" * 4000 + "\nsecond line", "tail row"])
     monkeypatch.setattr(dt, "DETECT_CHUNK", 1 << 30)
-    whole = dt.find_text_boxes_batch(grids, DEFAULT_CONFIG)
+    whole = dt.find_text_boxes_batch(grid, DEFAULT_CONFIG)
     monkeypatch.setattr(dt, "DETECT_CHUNK", 64)
-    assert dt.find_text_boxes_batch(grids, DEFAULT_CONFIG) == whole
+    assert dt.find_text_boxes_batch(grid, DEFAULT_CONFIG) == whole

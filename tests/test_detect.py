@@ -3,9 +3,6 @@ D1-D10). Constants and edge-case semantics are pinned to the reference:
 THRESHOLD=200, MIN_BOX_SIZE=5 (exclusive), border expansion with +1
 width/height, transitive merge with re-queue."""
 
-import numpy as np
-import pytest
-
 from sparkocr.config import (
     DEFAULT_CONFIG,
     EngineConfig,
@@ -280,8 +277,8 @@ def test_commented_out_script_opener_does_not_mask_to_eof():
 
 
 def test_find_text_boxes_batch_matches_per_grid():
-    """The batched detector (one diff/searchsorted pass over many
-    grids) must return EXACTLY find_text_boxes' boxes for every grid —
+    """The batched detector (one diff/searchsorted pass over a batch
+    grid) must return EXACTLY find_text_boxes' boxes for every row —
     including single-line rows (the fast path's documented equivalence
     with the general path), markup, ANSI, form-feed docs, boiler lines,
     and empty/whitespace rows."""
@@ -301,10 +298,9 @@ def test_find_text_boxes_batch_matches_per_grid():
     ]
     for cfg in (DEFAULT_CONFIG, EngineConfig(merge_boxes=False),
                 EngineConfig(rect_border_size=0)):
-        grids = [TurnGrid(t) for t in texts]
-        got = find_text_boxes_batch(grids, cfg)
-        for g, bs in zip(grids, got):
-            assert bs == find_text_boxes(g, cfg)
+        got = find_text_boxes_batch(TurnGrid(texts), cfg)
+        for t, bs in zip(texts, got):
+            assert bs == find_text_boxes(TurnGrid(t), cfg)
 
 
 # --- late-round-4 fast-path branches (byte-identity pins) ------------------
@@ -376,7 +372,7 @@ def test_merge_two_box_unroll_matches_fixpoint():
 def test_batched_boiler_gate_spans_grids():
     """Boiler zeroing in the batched detector is vectorized over the
     global char stream; bracket-bearing boiler lines must still score
-    zero when they sit in different grids of one block (and bracket
+    zero when they sit in different rows of one batch grid (and bracket
     lookalikes must stay on)."""
     from sparkocr.detect import find_text_boxes, find_text_boxes_batch
 
@@ -387,10 +383,9 @@ def test_batched_boiler_gate_spans_grids():
         "x = y + z is fine too",
         "[HEADER] masthead\nbody line survives",
     ]
-    grids = [TurnGrid(t) for t in texts]
-    got = find_text_boxes_batch(grids, DEFAULT_CONFIG)
-    for g, bs in zip(grids, got):
-        assert bs == find_text_boxes(g, DEFAULT_CONFIG)
+    got = find_text_boxes_batch(TurnGrid(texts), DEFAULT_CONFIG)
+    for t, bs in zip(texts, got):
+        assert bs == find_text_boxes(TurnGrid(t), DEFAULT_CONFIG)
 
 
 def test_boiler_gate_chars_cover_the_regex():

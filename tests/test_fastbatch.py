@@ -13,6 +13,7 @@ from sparkocr.config import DEFAULT_CONFIG, FLAGSHIP_CONFIG
 from sparkocr.fastbatch import batch_extract_simple
 
 # shared comparator home (also used by scripts/fuzz_fastbatch.py)
+from fastbatch_compare import assert_detect_batch as _assert_detect_batch
 from fastbatch_compare import assert_extract_batch as _assert_extract_batch
 from fastbatch_compare import assert_matches as _assert_matches
 
@@ -232,7 +233,8 @@ def test_extract_batch_poison_backstops(monkeypatch, poison):
     """A batch machine that raises sends its rows to the per-turn path:
     a failed flat decode hands back every row that had crops, a failed
     stage-3 pass rolls its crops out of the pool. Either way
-    ``extract_batch`` still answers every row exactly."""
+    ``extract_batch`` still answers every row exactly, and so does
+    ``detect_batch``, which detects a failed stage's rows one by one."""
     import sparkocr.fastbatch as fb
 
     hand = _cleaned(SIMPLE_TURNS + MARKUP_TURNS + FORMFEED_TURNS
@@ -252,6 +254,7 @@ def test_extract_batch_poison_backstops(monkeypatch, poison):
     for r in (roles, None):
         assert _assert_extract_batch(hand, FLAGSHIP_CONFIG,
                                      roles=r) == len(hand)
+    assert _assert_detect_batch(hand, FLAGSHIP_CONFIG) == len(hand)
     fast = batch_extract_simple(hand, FLAGSHIP_CONFIG, roles=roles)
     assert any(r is None for r in fast)
 

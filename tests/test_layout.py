@@ -3,9 +3,6 @@ offsets, and the Spark plumbing."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from sparkocr.layout import (
     PAGE_SEP,
     assemble_documents,

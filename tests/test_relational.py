@@ -4,9 +4,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
-from pyspark.sql import functions as F
-
 from sparkocr.relational import asof_join, interval_overlap_join
 
 T0 = dt.datetime(2026, 1, 1)

@@ -15,14 +15,15 @@ from hypothesis import strategies as st
 
 from sparkocr.config import DEFAULT_CONFIG, FLAGSHIP_CONFIG
 from sparkocr.detect import (
+    Box,
     TurnGrid,
     box_span,
     crop_box,
     find_text_boxes,
     find_text_boxes_batch,
 )
-from sparkocr.engine import SparkOcrEngine, _detect_rows
-from sparkocr.fastbatch import extract_batch
+from sparkocr.engine import SparkOcrEngine, _clean_text
+from sparkocr.fastbatch import detect_batch, extract_batch
 from sparkocr.textgrid import _TAG_RE, codepoints, tag_spans
 
 from fastbatch_compare import assert_extract_batch
@@ -77,12 +78,10 @@ def test_boundary_rows_batch_equals_one_row_batches_and_per_turn(cfg,
 
 
 def _verb_rows(texts, cfg):
-    s = pd.Series(texts, dtype=object)
-    spans = _detect_rows(s, cfg, lambda grid, row, boxes: [
-        (b, box_span(grid, b, row)) for b in boxes])
-    crops = _detect_rows(s, cfg, lambda grid, row, boxes: [
-        crop_box(grid, b, row)[0] for b in boxes])
-    return list(spans), list(crops)
+    rows = detect_batch([_clean_text(t) for t in texts], cfg)
+    spans = [[(Box(*c[1:5]), c[5:]) for c in row] for row in rows]
+    crops = [[c[0] for c in row] for row in rows]
+    return spans, crops
 
 
 def _per_turn(text, cfg):
@@ -94,8 +93,8 @@ def _per_turn(text, cfg):
 
 @pytest.mark.parametrize("cfg", [FLAGSHIP_CONFIG,
                                  DEFAULT_CONFIG.with_rect_border_size(0)])
-def test_detect_rows_equal_per_turn_detection(cfg):
-    """The spans/blocks verbs' batch body equals the per-turn
+def test_detect_batch_equals_per_turn_detection(cfg):
+    """The spans/blocks verbs' batch kernel equals the per-turn
     find_text_boxes / box_span / crop_box on every row; a surrogate row
     gives [] without emptying its neighbours, and null rows give []."""
     texts = BOUNDARY_ROWS + ["lone \ud800 surrogate " + _BODY, None,

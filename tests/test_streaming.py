@@ -3,8 +3,6 @@ append-only directory, and the watermarked metrics plan."""
 
 from __future__ import annotations
 
-import pytest
-
 from sparkocr.fixtures import turns_pandas
 from sparkocr.streaming import (
     TRANSCRIPT_SCHEMA,
