@@ -175,12 +175,7 @@ def make_corpus(rng: random.Random, n_docs: int, lo: int, hi: int,
 
 def run_batch(spark, rng: random.Random, args) -> dict:
     from sparkocr.analysis import dedup_substrings, gopher_repetition_signals
-    from sparkocr.lm import (
-        UnigramLM,  # noqa: F401 (type only)
-        perplexity_scores,
-        ppl_buckets,
-        train_unigram_lm,
-    )
+    from sparkocr.lm import perplexity_scores, ppl_buckets, train_unigram_lm
 
     rows = make_corpus(rng, args.docs, args.min_tokens, args.max_tokens,
                        args.whale_tokens)

@@ -88,6 +88,13 @@ with about 2% null rows planted): a 300-batch sweep on a fresh seed
 range (seeds 9200000..9200299, 64 rows) added 19,200 rows, 98.6%
 answered by ``batch_extract_simple``, 0 divergences in either kernel.
 
+Arrow boundary (round 6, the engine verbs hand ``detect_batch`` and
+``recognize_batch`` the ``str``/``None`` values of an Arrow column, so
+a null cell arrives as ``None`` and nothing else): a 300-batch sweep
+on a fresh seed range (seeds 9600000..9600299, 64 rows) added 19,200
+rows, 98.6% answered by ``batch_extract_simple``, 0 divergences in
+either kernel.
+
 Usage: python scripts/fuzz_fastbatch.py [n_batches] [batch_size] [seed0]
 (seed0 picks the base of the per-batch seed range — pass a fresh value
 for each sweep so ranges stay disjoint across runs)
@@ -245,8 +252,8 @@ def main(n_batches=2000, batch_size=64, seed0=1000):
                 "\f" in t for t in texts)
             assert n_fast == len(texts) - held, (n_fast, len(texts), held)
             assert_extract_batch(texts, cfg, roles=roles)
-            # with a few null rows planted (the engine hands a null or
-            # NaN cell to the kernel as None)
+            # with a few null rows planted (the engine hands a null
+            # cell to the kernel as None)
             assert_detect_batch([None if rng.random() < 0.02 else t
                                  for t in texts], cfg)
         except AssertionError as e:

@@ -5,8 +5,8 @@ Brand-new Spark-first design whose per-turn operator semantics mirror what
 ramudaderuta/rust-paddle-ocr computes (see SURVEY.md): detection finds
 content regions by text/link density on a character grid, recognition
 decodes each region through a CTC-style threshold cascade. All per-turn
-compute runs inside vectorized pandas/Arrow UDFs; everything relational
-stays in Catalyst-optimized DataFrame ops.
+compute runs inside vectorized Arrow UDFs and ``mapInArrow`` stages;
+everything relational stays in Catalyst-optimized DataFrame ops.
 
 Public surface map (reference analog in parens):
 

@@ -3,7 +3,7 @@
 Everything here is expressed with built-in ``pyspark.sql.functions``
 (JVM-side, whole-stage-codegen-able) — no Python in the hot path — except
 SimHash, which needs per-token hashing folds and runs as a vectorized
-pandas UDF. Each op is designed for the 100 TB shape:
+Arrow UDF. Each op is designed for the 100 TB shape:
 
 - exact dedup: one hash-shuffle on a 32-byte digest, not the payload
 - n-gram Jaccard near-dup: inverted-index token join (explode distinct
@@ -16,8 +16,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import LongType
 
 from .barrier import pin
@@ -207,10 +210,10 @@ def gopher_repetition_signals(
     hash-vectorized (the round-3 kernel materialized Python token
     tuples and Counters per n — ~9 full tuple-hash passes over a whale
     doc): each token is hashed ONCE (pandas' fixed-key vectorized
-    hash), one Karp-Rabin prefix transform is shared by every n (the
-    same O(n) renormalized-cumsum device as
-    :func:`_rolling_window_hashes`), and per n only a subtract/multiply
-    plus ``np.unique`` counting remains; duplicate-window coverage is a
+    hash), one Karp-Rabin prefix transform (:func:`_kr_windows`, the
+    same one :func:`_rolling_window_hashes` uses) is shared by every n,
+    and per n only a subtract/multiply plus ``np.unique`` counting
+    remains; duplicate-window coverage is a
     bincount range-mark instead of a Python loop. Counting by 64-bit
     window hash can merge two distinct grams with probability
     ~(windows²)·2⁻⁶⁴ — the same accepted class as every hash-keyed
@@ -218,7 +221,6 @@ def gopher_repetition_signals(
     still compares the few tied candidates as real token tuples, so the
     published deterministic order is preserved exactly. Null/empty text
     scores all-zero. Fractions round to 6 decimals."""
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     fields = (
@@ -254,21 +256,9 @@ def gopher_repetition_signals(
         tot = int(tok_lens.sum())
         # hash every token ONCE (vectorized, fixed-key — deterministic
         # across processes), then share one Karp-Rabin prefix transform
-        # across every n: h_i(n) = (Q_{i+n} − Q_i)·A^{i+n-1}
-        tok_h = pd.util.hash_array(np.asarray(toks, dtype=object))
-        with np.errstate(over="ignore"):
-            pow_a = np.empty(n_toks, dtype=np.uint64)
-            pow_a[0] = 1
-            if n_toks > 1:
-                np.cumprod(np.full(n_toks - 1, _KR_A, dtype=np.uint64),
-                           out=pow_a[1:])
-            pow_ainv = np.empty(n_toks, dtype=np.uint64)
-            pow_ainv[0] = 1
-            if n_toks > 1:
-                np.cumprod(np.full(n_toks - 1, _KR_AINV, dtype=np.uint64),
-                           out=pow_ainv[1:])
-            q = np.zeros(n_toks + 1, dtype=np.uint64)
-            np.cumsum(tok_h * pow_ainv, out=q[1:])
+        # across every n
+        window = _kr_windows(
+            pd.util.hash_array(np.asarray(toks, dtype=object)))
         top_vals: dict = {}
         dup_vals: dict = {}
         for n in sorted({*top_ns, *dup_ns}):
@@ -279,10 +269,8 @@ def gopher_repetition_signals(
                 if n in dup_ns:
                     dup_vals[n] = 0.0
                 continue
-            with np.errstate(over="ignore"):
-                h = (q[n:] - q[:-n]) * pow_a[n - 1:]
             uniq_first, inv, counts = np.unique(
-                h, return_index=True, return_inverse=True,
+                window(n), return_index=True, return_inverse=True,
                 return_counts=True)[1:]
             if n in top_ns:
                 cmax = int(counts.max())
@@ -307,12 +295,15 @@ def gopher_repetition_signals(
         return (vals + [top_vals[n] for n in top_ns]
                 + [dup_vals[n] for n in dup_ns])
 
-    @pandas_udf(out_type)
-    def battery(texts):  # type: ignore[no-untyped-def]
-        import pandas as pd
+    arrow_fields = list(to_arrow_type(out_type))
 
-        return pd.DataFrame(
-            [_one(t) for t in texts], columns=fields)
+    @F.arrow_udf(out_type)
+    def battery(texts: pa.Array) -> pa.Array:
+        rows = [_one(t) for t in texts.to_pylist()]
+        return pa.StructArray.from_arrays(
+            [pa.array([r[k] for r in rows], type=f.type)
+             for k, f in enumerate(arrow_fields)],
+            fields=arrow_fields)
 
     return spread_small_scan(df).select(
         F.col(key_col).alias("doc"),
@@ -549,19 +540,16 @@ def canonicalize_text(
     exactly. Arrow-batched narrow map (the per-string Python is the
     same budget the engine already spends per turn); NULL stays NULL.
     Replaces ``text_col`` in place unless ``out_col`` is given."""
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StringType
 
-    @pandas_udf(StringType())
-    def canon(texts):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
+    @F.arrow_udf(StringType())
+    def canon(texts: pa.Array) -> pa.Array:
         from sparkocr.recognize import canonicalize
 
-        return pd.Series([
+        return pa.array([
             None if t is None else canonicalize(t, max_lines=None)
-            for t in texts
-        ])
+            for t in texts.to_pylist()
+        ], type=pa.string())
 
     return df.withColumn(out_col or text_col, canon(F.col(text_col)))
 
@@ -812,60 +800,66 @@ _KR_A = 0x9E3779B97F4A7C15
 _KR_AINV = pow(_KR_A, -1, 1 << 64)
 
 
+def _kr_windows(t: np.ndarray):
+    """The Karp-Rabin prefix transform of a uint64 token-hash stream
+    ``t``, shared by every window length: returns ``window(n)``, the
+    uint64 hash of each stride-1 window of ``n`` tokens,
+
+        h_i = Σ_{j<n} t_{i+j} · A^{n-1-j}  (mod 2^64),
+
+    computed in O(1) per window via renormalized prefix sums: with
+    Q_m = Σ_{k<m} t_k·A^{-k}, h_i = (Q_{i+n} − Q_i) · A^{i+n-1} — the
+    position cancels, so equal windows hash equal wherever they sit.
+    ``window(n)`` is empty when ``t`` holds fewer than ``n`` tokens."""
+    with np.errstate(over="ignore"):
+        pow_a = np.full(t.shape[0], _KR_A, dtype=np.uint64)
+        pow_a[:1] = 1
+        np.cumprod(pow_a, out=pow_a)
+        pow_ainv = np.full(t.shape[0], _KR_AINV, dtype=np.uint64)
+        pow_ainv[:1] = 1
+        np.cumprod(pow_ainv, out=pow_ainv)
+        q = np.zeros(t.shape[0] + 1, dtype=np.uint64)
+        np.cumsum(t * pow_ainv, out=q[1:])
+
+    def window(n: int) -> np.ndarray:
+        with np.errstate(over="ignore"):
+            return (q[n:] - q[:-n]) * pow_a[n - 1:]
+
+    return window
+
+
 def _rolling_window_hashes(length: int):
-    """Arrow-batched kernel: token-xxhash64 array → array of Karp-Rabin
-    window hashes, one per stride-1 window of ``length`` tokens.
-
-        h_i = Σ_{j<L} t_{i+j} · A^{L-1-j}  (mod 2^64)
-
-    computed in O(n) per batch via renormalized prefix sums: with
-    Q_m = Σ_{k<m} t_k·A^{-k} over the batch-FLAT token stream,
-    h_i = (Q_{i+L} − Q_i) · A^{i+L-1} — the global position cancels, so
-    one cumsum over the whole Arrow batch serves every document and the
-    only per-row Python is an ndarray slice. Two equal windows hash
-    equal wherever they sit; differing windows collide with ~2⁻⁶⁴
-    probability over the already-uniform token hashes (like the direct
-    xxhash64 form this replaces — but NOT adversary-resistant: a crafted
-    corpus could engineer collisions, acceptable for dedup)."""
-    from pyspark.sql.functions import pandas_udf
+    """Arrow UDF: token-xxhash64 array → array of Karp-Rabin window
+    hashes, one per stride-1 window of ``length`` tokens
+    (:func:`_kr_windows`). One prefix transform over the batch-FLAT
+    token stream (``flatten()``) serves every document, since the
+    global position cancels; each document's windows are then one
+    gather by the list offsets, with no per-row Python. A document
+    shorter than ``length`` tokens (or null) gets no windows. Differing
+    windows collide with ~2⁻⁶⁴ probability over the already-uniform
+    token hashes (like the direct xxhash64 form this replaces — but
+    NOT adversary-resistant: a crafted corpus could engineer
+    collisions, acceptable for dedup)."""
     from pyspark.sql.types import ArrayType, LongType
 
-    @pandas_udf(ArrayType(LongType()))
-    def roll(tok_hashes):  # type: ignore[no-untyped-def]
-        import numpy as np
-        import pandas as pd
+    out_type = to_arrow_type(ArrayType(LongType()))
 
-        arrs = [np.asarray(a, dtype=np.int64).view(np.uint64)
-                for a in tok_hashes]
-        lens = np.array([len(a) for a in arrs], dtype=np.int64)
-        if lens.sum() == 0:
-            return pd.Series([np.empty(0, dtype=np.int64)] * len(arrs))
-        flat = np.concatenate(arrs) if arrs else np.empty(0, np.uint64)
-        T = flat.shape[0]
-        with np.errstate(over="ignore"):
-            pow_ainv = np.empty(T, dtype=np.uint64)
-            pow_ainv[0] = 1
-            if T > 1:
-                np.cumprod(np.full(T - 1, _KR_AINV, dtype=np.uint64),
-                           out=pow_ainv[1:])
-            pow_a = np.empty(T, dtype=np.uint64)
-            pow_a[0] = 1
-            if T > 1:
-                np.cumprod(np.full(T - 1, _KR_A, dtype=np.uint64),
-                           out=pow_a[1:])
-            q = np.zeros(T + 1, dtype=np.uint64)
-            np.cumsum(flat * pow_ainv, out=q[1:])
-            # h over every flat position; per-doc validity sliced below
-            h_flat = ((q[length:] - q[:-length])
-                      * pow_a[length - 1:]).view(np.int64) \
-                if T >= length else np.empty(0, np.int64)
-        starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        out = [
-            h_flat[s:s + n - length + 1] if n >= length
-            else np.empty(0, dtype=np.int64)
-            for s, n in zip(starts, lens)
-        ]
-        return pd.Series(out)
+    @F.arrow_udf(ArrayType(LongType()))
+    def roll(tok_hashes: pa.Array) -> pa.Array:
+        flat = tok_hashes.flatten().to_numpy(zero_copy_only=False)
+        h_flat = _kr_windows(flat.view(np.uint64))(length).view(np.int64)
+        # flatten() drops the values under null rows: their length is 0
+        lens = pc.list_value_length(tok_hashes).fill_null(0).to_numpy()
+        starts = np.cumsum(lens) - lens
+        counts = np.maximum(lens - length + 1, 0)
+        offsets = np.zeros(len(lens) + 1, dtype=np.int32)
+        np.cumsum(counts, out=offsets[1:])
+        # the k-th output window of a row sits at flat position
+        # start + (k - the row's first output slot)
+        take = (np.arange(offsets[-1])
+                + np.repeat(starts - offsets[:-1], counts))
+        return pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(h_flat[take]), type=out_type)
 
     return roll
 
@@ -2176,15 +2170,16 @@ def minhash_lsh_pairs(
 
 
 def simhash64(df: DataFrame, key_col: str, text_col: str = "text") -> DataFrame:
-    """64-bit SimHash over whitespace tokens (vectorized pandas UDF: the
-    per-bit majority fold has no good codegen form). Deterministic
-    blake2b-based token hashing — stable across processes/machines."""
+    """64-bit SimHash over whitespace tokens (vectorized Arrow UDF: the
+    per-bit majority fold has no good codegen form); a null or empty
+    text hashes to 0. Deterministic blake2b-based token hashing —
+    stable across processes/machines."""
     import hashlib
 
-    @F.pandas_udf(LongType())
-    def sim(s: pd.Series) -> pd.Series:
+    @F.arrow_udf(LongType())
+    def sim(s: pa.Array) -> pa.Array:
         out = np.zeros(len(s), dtype=np.int64)
-        for i, text in enumerate(s):
+        for i, text in enumerate(s.to_pylist()):
             if not text:
                 continue
             toks = text.split(" ")
@@ -2204,7 +2199,7 @@ def simhash64(df: DataFrame, key_col: str, text_col: str = "text") -> DataFrame:
                 if acc[b] > 0:
                     v |= np.uint64(1) << np.uint64(b)
             out[i] = np.int64(v.astype(np.int64))
-        return pd.Series(out)
+        return pa.array(out)
 
     return spread_small_scan(df).withColumn("simhash", sim(F.col(text_col)))
 
@@ -2254,7 +2249,7 @@ def simhash_neardup_pairs(
         )
     # materialize the (tiny) simhash table once: it feeds the hot-bucket
     # aggregate, the anti-join probe side, AND both self-join sides —
-    # without this the per-token pandas UDF would re-run for each
+    # without this the per-token Arrow UDF would re-run for each
     sh = simhash64(df, key_col, text_col).select(
         F.col(key_col).alias("doc"), "simhash"
     ).transform(pin)

@@ -13,7 +13,8 @@ import hashlib
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -227,22 +228,27 @@ def _seed_centroids(df: DataFrame, nlist: int, id_col: str,
 
 
 def _assign_udf(centroids: np.ndarray):
-    """Vectorized nearest-centroid assignment by cosine (pandas UDF —
+    """Vectorized nearest-centroid assignment by cosine (Arrow UDF —
     numpy matmul beats an nlist×dim Catalyst literal tree at any real
-    dim; the centroid matrix rides the closure, broadcast-sized)."""
+    dim; the centroid matrix rides the closure, broadcast-sized). A
+    batch's vectors are one ``reshape(-1, dim)`` of its flattened
+    values; a null or wrong-width vector fails the task."""
     from pyspark.sql.types import IntegerType
 
     C = centroids / np.maximum(
         np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
+    dim = C.shape[1]
 
-    @F.pandas_udf(IntegerType())
-    def assign(v: pd.Series) -> pd.Series:
-        if len(v) == 0:  # empty Arrow batch: np.stack would raise
-            return pd.Series([], dtype="int32")
-        M = np.stack(v.to_numpy()).astype(np.float64)
+    @F.arrow_udf(IntegerType())
+    def assign(v: pa.Array) -> pa.Array:
+        widths = pc.list_value_length(v).to_numpy(zero_copy_only=False)
+        if (widths != dim).any():  # a null width reads NaN here
+            raise ValueError(f"_assign_udf: a vector's width is not dim={dim}")
+        M = v.flatten().to_numpy(zero_copy_only=False)
+        M = M.astype(np.float64).reshape(-1, dim)
         M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
         sims = M @ C.T
-        return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
+        return pa.array(np.argmax(sims, axis=1).astype(np.int32))
 
     return assign
 
@@ -258,7 +264,7 @@ def ivf_index(
     """IVF coarse quantizer: deterministic seed centroids refined with
     ``iters`` Lloyd steps, every heavy step a DataFrame aggregation.
 
-    Per iteration: assign (vectorized pandas UDF) → per-(list, dim)
+    Per iteration: assign (vectorized Arrow UDF) → per-(list, dim)
     mean via posexplode + partial-agg groupBy (only (int, int, double)
     rows shuffle, never the vectors) → the nlist×dim centroid table
     (tiny by construction) comes back to the driver. Centroid means are
@@ -359,7 +365,7 @@ def cluster_neardup_pairs(
     Columns: (id_a, id_b, list_id, cosine)."""
     _, assigned = ivf_index(df, dim, nlist, iters, id_col, vec_col)
     # pin before the self-join: both sides derive from this plan, and
-    # left lazy the list_id pandas-UDF matmul + norm fold would run
+    # left lazy the list_id Arrow-UDF matmul + norm fold would run
     # twice per action (the round-2 'two extra corpus scans' class). At
     # 100 TB this materialization IS the bucketed-by-list_id write the
     # docstring prescribes.

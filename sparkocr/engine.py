@@ -18,23 +18,23 @@ only move columns in and out of ``fastbatch.extract_batch`` (extract)
 and ``fastbatch.detect_batch`` (spans, blocks).
 
 Execution model: all per-turn compute runs in Arrow-batched Python
-(zero per-row Python UDFs): ``spans``, ``blocks`` and ``recognize`` are
-pandas UDFs, and the fused ``extract`` is one narrow ``mapInArrow``
-stage — one job over the whole table with NO shuffle and no pandas in
-between, the columnar replacement for the reference's
-one-request-per-image worker loop (engine.rs:413-437).
+(zero per-row Python UDFs) with no pandas in between: ``spans``,
+``blocks`` and ``recognize`` are Arrow UDFs, and the fused ``extract``
+is one narrow ``mapInArrow`` stage — one job over the whole table with
+NO shuffle, the columnar replacement for the reference's
+one-request-per-image worker loop (engine.rs:413-437). Each verb hands
+its kernel the column's ``str``/``None`` values and types its result
+with ``to_arrow_type`` of the verb's Spark type.
 Ordering is never implicit: use ``ordered()`` / ``with_rank()`` before
 any order-sensitive sink (Catalyst does not preserve order through
 exchanges)."""
 
 from __future__ import annotations
 
-from typing import Optional
-
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
@@ -86,14 +86,6 @@ EXTRACT_RESULT_FIELDS = [
     StructField("error_code", StringType()),
     StructField("error_msg", StringType()),
 ]
-
-
-def _clean_text(v) -> Optional[str]:
-    if v is None:
-        return None
-    if isinstance(v, float):  # NaN from pandas
-        return None
-    return v
 
 
 # ---------------------------------------------------------------------------
@@ -170,16 +162,16 @@ class SparkOcrEngine:
         only). Box order = detection order; ``posexplode`` the column to
         get (pos, box) rows."""
         cfg = self.config
+        out_type = to_arrow_type(ArrayType(BOX_STRUCT))
 
-        @F.pandas_udf(ArrayType(BOX_STRUCT))
-        def detect_udf(s: pd.Series) -> pd.Series:
+        @F.arrow_udf(ArrayType(BOX_STRUCT))
+        def detect_udf(s: pa.Array) -> pa.Array:
             from .fastbatch import detect_batch
 
-            return pd.Series([
-                [{"left": left, "top": top, "width": width,
-                  "height": height, "start": start, "end": end}
-                 for _, left, top, width, height, start, end in row]
-                for row in detect_batch([_clean_text(v) for v in s], cfg)])
+            return pa.array(
+                [[c[1:] for c in row]
+                 for row in detect_batch(s.to_pylist(), cfg)],
+                type=out_type)
 
         return df.withColumn("boxes", detect_udf(F.col(text_col)))
 
@@ -188,14 +180,16 @@ class SparkOcrEngine:
         column — the cropped (markup-blanked) block texts, detection
         order."""
         cfg = self.config
+        out_type = to_arrow_type(ArrayType(StringType()))
 
-        @F.pandas_udf(ArrayType(StringType()))
-        def crops_udf(s: pd.Series) -> pd.Series:
+        @F.arrow_udf(ArrayType(StringType()))
+        def crops_udf(s: pa.Array) -> pa.Array:
             from .fastbatch import detect_batch
 
-            return pd.Series([
-                [c[0] for c in row]
-                for row in detect_batch([_clean_text(v) for v in s], cfg)])
+            return pa.array(
+                [[c[0] for c in row]
+                 for row in detect_batch(s.to_pylist(), cfg)],
+                type=out_type)
 
         return df.withColumn("crops", crops_udf(F.col(text_col)))
 
@@ -204,16 +198,16 @@ class SparkOcrEngine:
         row — the standalone Rec path, examples/simple.rs:74-89). Adds a
         ``recognized`` struct(text, confidence, block_type) column."""
         cfg = self.config
+        out_type = to_arrow_type(RECOGNIZED_STRUCT)
 
-        @F.pandas_udf(RECOGNIZED_STRUCT)
-        def rec_udf(s: pd.Series) -> pd.DataFrame:
+        @F.arrow_udf(RECOGNIZED_STRUCT)
+        def rec_udf(s: pa.Array) -> pa.Array:
             from .fastbatch import recognize_batch
 
-            texts, confs, btypes = recognize_batch(
-                [_clean_text(t) for t in s], cfg)
-            return pd.DataFrame(
-                {"text": texts, "confidence": confs, "block_type": btypes}
-            )
+            cols = recognize_batch(s.to_pylist(), cfg)
+            return pa.StructArray.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, out_type)],
+                fields=list(out_type))
 
         return df.withColumn("recognized", rec_udf(F.col(text_col)))
 

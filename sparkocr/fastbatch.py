@@ -378,8 +378,8 @@ def _batch_stages(texts, config: EngineConfig, roles) -> tuple[_Pool, list]:
 
 def detect_batch(texts, config: EngineConfig = DEFAULT_CONFIG) -> list:
     """The ``spans``/``blocks`` kernel: ``extract_batch``'s stages
-    without the decode or routing. Per row of ``texts``
-    (``_clean_text``-ed values), its crops in detection order as
+    without the decode or routing. Per row of ``texts`` (``str`` or
+    ``None`` values), its crops in detection order as
     ``(crop, left, top, width, height, start, end)``, exactly what
     ``find_text_boxes``/``box_span``/``crop_box`` give for the row
     alone; ``[]`` for a null or surrogate-bearing row. A row whose
@@ -591,8 +591,8 @@ def _decode_flat(crops, metas, config: EngineConfig) -> list[list]:
 
 
 def recognize_batch(texts, config: EngineConfig = DEFAULT_CONFIG):
-    """Recognize each row of ``texts`` (already-``_clean_text``-ed
-    values) as one block. Every row pools into one flat decode, except
+    """Recognize each row of ``texts`` (``str`` or ``None`` values) as
+    one block. Every row pools into one flat decode, except
     ``None`` rows and rows whose canon holds a surrogate (the per-row
     UTF-32 encode fails on it), which stay all-None. A pooled decode
     that raises is contained per row by ``recognize_crop``, and a

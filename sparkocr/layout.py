@@ -35,9 +35,10 @@ from collections import Counter
 from collections.abc import Iterator
 from dataclasses import dataclass
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -209,42 +210,37 @@ def parse_layout(
     config: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """Vectorized layout parse over a DataFrame of document payloads:
-    one narrow mapInPandas stage (no shuffle, like
-    ``SparkOcrEngine.extract``). Adds per-row page/region counts, the
-    classified region array, and ``body_text`` — body+table regions
-    joined in reading order (headers/footers/page numbers stripped, the
-    document-level boilerplate removal)."""
+    one narrow ``mapInArrow`` stage (no shuffle, and the passthrough
+    columns go back untouched, like ``SparkOcrEngine.extract``). Adds
+    per-row page/region counts, the classified region array, and
+    ``body_text`` — body+table regions joined in reading order
+    (headers/footers/page numbers stripped, the document-level
+    boilerplate removal)."""
     keep = [c for c in passthrough if c in df.columns]
     src = df.select(*keep, F.col(text_col).alias("__text__"))
     out_schema = StructType([df.schema[c] for c in keep] + PARSE_RESULT_FIELDS)
+    res_schema = to_arrow_schema(StructType(PARSE_RESULT_FIELDS))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            regions_col, body_col = [], []
-            n_pages_col, n_regions_col = [], []
-            texts = [None if (t is None or isinstance(t, float)) else t
-                     for t in pdf["__text__"]]
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            texts = batch.column("__text__").to_pylist()
             # every page of every payload in the Arrow batch shares one
             # vectorized detection pass
             all_regions = parse_documents_batch(texts, config)
-            for text, regions in zip(texts, all_regions):
-                regions_col.append([r.__dict__ for r in regions])
-                n_pages_col.append(len(text.split(PAGE_SEP)) if text else 0)
-                n_regions_col.append(len(regions))
-                body_col.append(
-                    "\n".join(
-                        r.text for r in regions
-                        if r.region_type in ("body", "table")
-                    )
-                )
-            out = pdf[keep].copy()
-            out["n_pages"] = pd.array(n_pages_col, dtype="int32")
-            out["n_regions"] = pd.array(n_regions_col, dtype="int32")
-            out["regions"] = regions_col
-            out["body_text"] = body_col
-            yield out
+            res = [
+                [len(t.split(PAGE_SEP)) if t else 0 for t in texts],
+                [len(regions) for regions in all_regions],
+                [[r.__dict__ for r in regions] for regions in all_regions],
+                ["\n".join(r.text for r in regions
+                           if r.region_type in ("body", "table"))
+                 for regions in all_regions],
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep]
+                + [pa.array(v, type=f.type) for v, f in zip(res, res_schema)],
+                names=keep + res_schema.names)
 
-    return src.mapInPandas(run, out_schema)
+    return src.mapInArrow(run, out_schema)
 
 
 def assemble_documents(

@@ -22,8 +22,8 @@ Three published-algorithm operator groups, each Spark-first:
   (distributed aggregation — the corpus-sized pass) and runs the
   inherently sequential merge loop on the driver over that bounded
   table, exactly as real tokenizer trainers do; encoding is a narrow
-  Arrow-batched pandas UDF with per-batch word caching and the merge
-  list broadcast in the closure.
+  Arrow UDF with per-batch word caching and the merge list broadcast in
+  the closure.
 
 Analog in the reference: the rec-stage dictionary (rec.rs:55-59 keys
 file → id↔token mapping) is the reference's tokenizer artifact; these
@@ -41,10 +41,13 @@ executors by broadcast.
 from __future__ import annotations
 
 import math
+import re
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .barrier import pin
 
@@ -811,7 +814,7 @@ def bpe_encode(
     Rank-greedy like GPT-2's encoder: repeatedly merge the
     lowest-ranked adjacent pair present in the word.
 
-    Execution: one Arrow-batched pandas UDF — a narrow map, no shuffle;
+    Execution: one Arrow UDF — a narrow map, no shuffle;
     the merge-rank dict rides the closure (broadcast by Spark as task
     state, bounded by ``num_merges``). Within a batch every distinct
     word is encoded once and cached — web text repeats words heavily,
@@ -857,7 +860,11 @@ def bpe_encode_ids(
 def _bpe_udf(ranks: dict, ids: dict | None, out_type):
     """The shared encode kernel: rank-greedy merge per word, per-batch
     word cache; with ``ids``, tokens map to vocab ids (−1 = unknown)."""
-    from pyspark.sql.functions import pandas_udf
+    arrow_type = to_arrow_type(out_type)
+    # the same explicit whitespace class as _tokens — Python's bare
+    # str.split() would also break on unicode spaces (NEL, NBSP) that
+    # the Spark-side trainer does not, skewing encode vs train
+    ws = re.compile(_WS_RE)
 
     def encode_word(word: str, cache: dict) -> list:
         hit = cache.get(word)
@@ -879,19 +886,11 @@ def _bpe_udf(ranks: dict, ids: dict | None, out_type):
         cache[word] = sym
         return sym
 
-    @pandas_udf(out_type)
-    def enc(texts):  # type: ignore[no-untyped-def]
-        import re
-
-        import pandas as pd
-
-        # the same explicit whitespace class as _tokens — Python's bare
-        # str.split() would also break on unicode spaces (NEL, NBSP)
-        # that the Spark-side trainer does not, skewing encode vs train
-        ws = re.compile("[ \t\n\r\f\x0b]+")
+    @F.arrow_udf(out_type)
+    def enc(texts: pa.Array) -> pa.Array:
         cache: dict = {}
         out = []
-        for t in texts:
+        for t in texts.to_pylist():
             if t is None:
                 out.append(None)
                 continue
@@ -900,6 +899,6 @@ def _bpe_udf(ranks: dict, ids: dict | None, out_type):
                 if w:
                     toks.extend(encode_word(w, cache))
             out.append(toks)
-        return pd.Series(out)
+        return pa.array(out, type=arrow_type)
 
     return enc

@@ -6,8 +6,8 @@ the ``FAKE`` header (used by tests/fixtures; fully reproducible), and a
 clearly-marked :class:`NotImplementedError` path for real formats (gated
 behind an import-try for PIL, which is absent here). Everything around
 the stub is real Spark engineering and is tested: the binary+metadata
-schema, Arrow transfer of bytes into pandas UDFs, batch shapes,
-per-row error capture and frame-explode plumbing.
+schema, Arrow transfer of bytes into ``mapInArrow`` stages, batch
+shapes, per-row error capture and frame-explode plumbing.
 
 Fake payload wire format (deterministic, versioned by the magic):
   ``FAKEIMG1`` + u16 width + u16 height + blake2b-derived pixel bytes
@@ -21,9 +21,10 @@ import struct
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -121,7 +122,8 @@ def image_features(
     passthrough: tuple = ("media_id", "kind", "width", "height"),
     n_bins: int = 8,
 ) -> DataFrame:
-    """Decode + feature-extract images in one narrow mapInPandas stage:
+    """Decode + feature-extract images in one narrow ``mapInArrow``
+    stage (passthrough columns go back untouched):
     per-image [mean, std, then an ``n_bins``-bin intensity histogram],
     all float32. Rows that fail to decode get a null feature vector and
     a ``decode_error`` message instead of killing the task (poison blobs
@@ -129,17 +131,18 @@ def image_features(
     keep = [c for c in passthrough if c in df.columns]
     src = df.select(*keep, F.col(payload_col).alias("__payload__"))
     out_schema = StructType([df.schema[c] for c in keep] + FEATURE_FIELDS)
+    res_schema = to_arrow_schema(StructType(FEATURE_FIELDS))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             feats, errs = [], []
-            for payload in pdf["__payload__"]:
+            for payload in batch.column("__payload__").to_pylist():
                 if payload is None:
                     feats.append(None)
                     errs.append("null payload")
                     continue
                 try:
-                    px = _decode_image(bytes(payload))
+                    px = _decode_image(payload)
                     # a header declaring width/height 0 decodes to an empty
                     # pixel array: mean/std would be NaN and hist/px.size a
                     # zero-divide — an all-NaN feature vector that poisons
@@ -155,12 +158,13 @@ def image_features(
                 except Exception as e:  # noqa: BLE001 - incl. NotImplementedError
                     feats.append(None)
                     errs.append(f"{type(e).__name__}: {e}"[:200])
-            out = pdf[keep].copy()
-            out["features"] = feats
-            out["decode_error"] = errs
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep]
+                + [pa.array(v, type=f.type)
+                   for v, f in zip((feats, errs), res_schema)],
+                names=keep + res_schema.names)
 
-    return src.mapInPandas(run, out_schema)
+    return src.mapInArrow(run, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -179,29 +183,26 @@ def sample_frames(
     passthrough: tuple = ("media_id",),
 ) -> DataFrame:
     """Explode videos into every-Nth-frame rows (frame 0 always kept).
-    One mapInPandas stage that *changes cardinality* — the table-
-    generating UDF shape; frame bytes are sliced zero-copy views of the
-    Arrow buffer until materialized per row."""
+    One ``mapInArrow`` stage that *changes cardinality* — the table-
+    generating UDF shape; each frame row's passthrough values are one
+    ``take`` of the batch's columns, by the index of its video row."""
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
     keep = [c for c in passthrough if c in df.columns]
     src = df.select(*keep, F.col(payload_col).alias("__payload__"))
     out_schema = StructType([df.schema[c] for c in keep] + FRAME_SCHEMA_FIELDS)
+    res_schema = to_arrow_schema(StructType(FRAME_SCHEMA_FIELDS))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {c: [] for c in keep}
-            fidx, fbytes = [], []
-            for i in range(len(pdf)):
-                payload = pdf["__payload__"].iloc[i]
-                if payload is None:
-                    continue
-                payload = bytes(payload)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            idx, fidx, fbytes = [], [], []
+            for i, payload in enumerate(batch.column("__payload__").to_pylist()):
                 # a blob truncated inside the 12-byte header would crash
                 # struct.unpack and fail the task — skip it like any
                 # other non-video payload (poison blobs must not fail a
                 # 100 TB job)
-                if len(payload) < 12 or payload[:8] != VID_MAGIC:
+                if payload is None or len(payload) < 12 \
+                        or payload[:8] != VID_MAGIC:
                     continue
                 n_frames, frame_len = struct.unpack("<HH", payload[8:12])
                 base = 12
@@ -213,16 +214,14 @@ def sample_frames(
                 else:
                     n_frames = 0
                 for j in range(0, n_frames, every_n):
-                    for c in keep:
-                        rows[c].append(pdf[c].iloc[i])
+                    idx.append(i)
                     fidx.append(j)
                     fbytes.append(payload[base + j * frame_len: base + (j + 1) * frame_len])
-            out = pd.DataFrame(rows | {"frame_idx": pd.array(fidx, dtype="int32"),
-                                       "frame": fbytes})
-            if len(out) == 0:
-                out = pd.DataFrame({c: pd.Series(dtype=object) for c in keep}
-                                   | {"frame_idx": pd.Series(dtype="int32"),
-                                      "frame": pd.Series(dtype=object)})
-            yield out
+            take = pa.array(idx, type=pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c).take(take) for c in keep]
+                + [pa.array(v, type=f.type)
+                   for v, f in zip((fidx, fbytes), res_schema)],
+                names=keep + res_schema.names)
 
-    return src.mapInPandas(run, out_schema)
+    return src.mapInArrow(run, out_schema)

@@ -12,7 +12,8 @@ importer re-reads only when its archive's ``(st_mtime_ns, st_size)``
 differs from the key stored on that importer at its last read, or when
 the stat fails, so a zip rewritten under the same path is still
 re-read by every importer of it. Where the stdlib reads lazily
-(``zipimporter._get_files``, 3.13+) nothing is patched."""
+(``zipimporter._get_files``, 3.13+) nothing is patched. The daemon
+also imports pandas before it forks its workers (see below)."""
 
 import os
 import zipimport
@@ -40,6 +41,11 @@ def install() -> None:
 
 if __name__ == "__main__":
     install()
+    # pyarrow imports pandas in a worker on its first ``pa.array`` call
+    # (its pandas shim probes the input), so every worker that builds an
+    # Arrow column pays that import; made here, before the daemon forks,
+    # it is paid once and every worker inherits it
+    import pandas  # noqa: F401
     from pyspark import daemon
 
     daemon.manager()

@@ -4,7 +4,7 @@ The reference operates on pixel buffers; this engine operates on a
 character grid: ``x`` = column within a line, ``y`` = line index scaled by
 ``LINE_HEIGHT`` sub-rows (see config.py). Everything here is deterministic
 and pure so the same code backs both the single-node oracle and the Spark
-pandas UDFs.
+Arrow stages.
 """
 
 from __future__ import annotations

@@ -575,17 +575,17 @@ def test_rolling_hash_kernel_math():
     """The Karp-Rabin kernel's renormalized-prefix form must equal a
     direct Horner evaluation of h_i = sum_j t_{i+j}*A^(L-1-j) mod 2^64,
     and equal windows must hash equal wherever they sit — across
-    positions, documents, and Arrow-batch layouts."""
+    positions, documents, and Arrow-batch layouts (a sliced array,
+    docs shorter than L, an empty batch)."""
     import random
 
-    import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from sparkocr.analysis import _KR_A, _rolling_window_hashes
 
     rng = random.Random(42)
     L = 5
-    kernel = _rolling_window_hashes(L).func  # unwrap the pandas_udf
+    kernel = _rolling_window_hashes(L).func  # unwrap the arrow_udf
 
     def horner(toks):
         out = []
@@ -597,24 +597,31 @@ def test_rolling_hash_kernel_math():
             out.append(h - (1 << 64) if h >= (1 << 63) else h)
         return out
 
+    def batch(docs):
+        return pa.array(docs, type=pa.list_(pa.int64()))
+
+    # docs shorter than L (down to empty) get no windows
     docs = [
         [rng.getrandbits(63) for _ in range(rng.randint(0, 30))]
         for _ in range(50)
     ]
-    docs = [d for d in docs if len(d) >= L]
-    got = kernel(pd.Series([np.array(d, dtype=np.int64) for d in docs]))
+    assert any(len(d) < L for d in docs)
+    got = kernel(batch(docs)).to_pylist()
+    assert len(got) == len(docs)
     for d, g in zip(docs, got):
-        assert list(g) == horner(d), "kernel != Horner evaluation"
+        assert g == horner(d), "kernel != Horner evaluation"
+
+    # a sliced array: the kernel reads its own offsets, not the parent's
+    got = kernel(batch(docs).slice(7, 30)).to_pylist()
+    assert got == [horner(d) for d in docs[7:37]]
+    assert kernel(batch([])).to_pylist() == []
 
     # position independence: the same window content in two different
     # docs, at different offsets, in different batch layouts
     win = [rng.getrandbits(63) for _ in range(L)]
     a = [rng.getrandbits(63) for _ in range(7)] + win
     b = win + [rng.getrandbits(63) for _ in range(3)]
-    (ha,), (hb,) = (
-        kernel(pd.Series([np.array(x, dtype=np.int64)]))
-        for x in (a, b)
-    )
+    (ha,), (hb,) = (kernel(batch([x])).to_pylist() for x in (a, b))
     assert ha[len(a) - L] == hb[0]
 
 

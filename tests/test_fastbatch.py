@@ -40,7 +40,6 @@ SIMPLE_TURNS = [
 # each with the per-turn path's row
 FORMER_RESIDUE_TURNS = [
     None,
-    float("nan"),  # engine._clean_text maps to None before the call
     "form\ffeed",  # the flag-off view still holds \f rows back
     "<form\ffeed>",
     "emoji \f😀 after a page break",
@@ -125,11 +124,6 @@ MULTILINE_TURNS = [
 ]
 
 
-def _cleaned(texts):
-    """What the engine hands the kernels: pandas NaN becomes None."""
-    return [t if isinstance(t, str) else None for t in texts]
-
-
 def test_simple_turns_match_and_take_the_fast_path():
     _assert_matches(SIMPLE_TURNS, min_eligible=len(SIMPLE_TURNS))
 
@@ -139,7 +133,7 @@ def test_former_residue_is_answered():
     answered by the batch, equal to ``extract_turn`` (or, with roles,
     ``extract_turn_auto``); only the flag-off view (no roles,
     ``allow_formfeed`` off) still holds the \\f rows back as ``None``."""
-    texts = _cleaned(FORMER_RESIDUE_TURNS)
+    texts = FORMER_RESIDUE_TURNS
     ff = [t is not None and "\f" in t for t in texts]
     got = batch_extract_simple(texts, FLAGSHIP_CONFIG)
     assert [r is None for r in got] == ff
@@ -204,22 +198,21 @@ def test_routing_mode_document_turns_match():
 @pytest.mark.parametrize("routing", [False, True], ids=["plain", "routing"])
 def test_extract_batch_answers_every_row(routing):
     """The engine's one dispatch: ``extract_batch`` answers every row of
-    the inputs above — fast-path and residue alike, null, NaN, \\f,
+    the inputs above — fast-path and residue alike, null, \\f,
     entity-minted markup and surrogate rows included — exactly as
     ``extract_turn`` (no routing) or ``extract_turn_auto(t, role)``
     (routing) does."""
     from sparkocr.fixtures import turns_pandas
 
     df = turns_pandas(seed=3, n_convs=40)
-    hand = _cleaned(SIMPLE_TURNS + FORMER_RESIDUE_TURNS + MARKUP_TURNS
-                    + FORMFEED_TURNS + DOCUMENT_TURNS + MULTILINE_TURNS)
+    hand = (SIMPLE_TURNS + FORMER_RESIDUE_TURNS + MARKUP_TURNS
+            + FORMFEED_TURNS + DOCUMENT_TURNS + MULTILINE_TURNS)
     cycle = ("user", "assistant", "tool")
     inputs = [
-        (_cleaned(df["text"]), list(df["role"])),
+        (list(df["text"]), list(df["role"])),
         (hand, [cycle[i % 3] for i in range(len(hand))]),
         (DOCUMENT_TURNS, ["tool"] * len(DOCUMENT_TURNS)),
-        (_cleaned(FORMER_RESIDUE_TURNS),
-         ["tool"] * len(FORMER_RESIDUE_TURNS)),
+        (FORMER_RESIDUE_TURNS, ["tool"] * len(FORMER_RESIDUE_TURNS)),
     ]
     for texts, roles in inputs:
         for cfg in (FLAGSHIP_CONFIG, DEFAULT_CONFIG):
@@ -237,8 +230,8 @@ def test_extract_batch_poison_backstops(monkeypatch, poison):
     ``detect_batch``, which detects a failed stage's rows one by one."""
     import sparkocr.fastbatch as fb
 
-    hand = _cleaned(SIMPLE_TURNS + MARKUP_TURNS + FORMFEED_TURNS
-                    + DOCUMENT_TURNS + MULTILINE_TURNS)
+    hand = (SIMPLE_TURNS + MARKUP_TURNS + FORMFEED_TURNS
+            + DOCUMENT_TURNS + MULTILINE_TURNS)
     roles = [("user", "assistant", "tool")[i % 3] for i in range(len(hand))]
     if poison == "decode":
         def boom(*a, **k):

@@ -22,7 +22,7 @@ circular) cannot. Derivation rules used, with their reference anchors:
   first (rec.rs:385-398); entities decode before scoring ("&amp;"→"&",
   "&lt;"→"<" which is then dropped as an "other" char).
 
-Each case runs through the REAL Spark engine (mapInPandas), not just
+Each case runs through the REAL Spark engine (mapInArrow), not just
 the per-turn function, covering CJK/EN/JA, HTML boilerplate, anchors,
 ANSI, tabs, and the borderline-punct branch.
 """
@@ -195,7 +195,7 @@ def test_handwritten_extract_turn(name, text, full_text, n_blocks, btypes):
 
 
 def test_handwritten_through_spark_engine(spark):
-    """The same fixtures through the real mapInPandas engine in one
+    """The same fixtures through the real mapInArrow engine in one
     DataFrame — Spark plumbing must not change any answer."""
     from sparkocr.engine import SparkOcrEngine
 

@@ -60,7 +60,7 @@ def test_parse_layout_spark(spark):
     assert "ACME Quarterly" not in out[0]["body_text"]  # header stripped
     assert "col_a" in out[0]["body_text"]               # tables kept
     assert out[1]["n_pages"] == 1
-    # plan shape: single mapInPandas over the scan, no shuffle
+    # plan shape: single mapInArrow over the scan, no shuffle
     plan = parse_layout(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 

@@ -1,5 +1,6 @@
 """Multimodal plumbing: binary+metadata schema, Arrow transfer into
-pandas UDFs, deterministic fake codec, error capture, frame explode."""
+``mapInArrow`` stages, deterministic fake codec, error capture, frame
+explode."""
 
 from __future__ import annotations
 

@@ -217,7 +217,6 @@ def test_cluster_neardup_equals_within_cluster_exact(spark):
 
 
 def _cdf(spark, rows):
-    from pyspark.sql import SparkSession  # noqa: F401
     return spark.createDataFrame(
         rows, "conv_id string, turn_idx long, n_tokens long")
 

@@ -94,16 +94,20 @@ def test_relational_ops_stay_in_codegen(spark, sf):
 
 def test_no_row_at_a_time_python_udfs_in_package(spark):
     """The input_hint mandates zero per-row Python: every UDF in the
-    package must be Arrow-vectorized (pandas_udf / mapInPandas), never
-    pyspark.sql.functions.udf."""
+    package must be Arrow-vectorized, never
+    pyspark.sql.functions.udf. A stateless stage crosses the boundary
+    as Arrow (arrow_udf / mapInArrow), never through pandas
+    (pandas_udf / mapInPandas); only the grouped applyInPandas stages
+    remain on pandas."""
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parents[1] / "sparkocr"
+    banned = ("F.udf(", "functions.udf(", "@udf", "pandas_udf(",
+              "mapInPandas(")
     offenders = []
     for p in root.glob("*.py"):
         src = p.read_text()
-        if "F.udf(" in src or "functions.udf(" in src or "@udf" in src:
-            offenders.append(p.name)
+        offenders += [(p.name, b) for b in banned if b in src]
     assert not offenders, offenders
 
 
