@@ -20,7 +20,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 from pyspark.sql.types import LongType
 
 from .barrier import pin
@@ -1109,6 +1109,40 @@ def stratified_sample(df: DataFrame, key_col: str = "source",
     )
 
 
+def _token_count(token_col: str):
+    """The packers' and windows' token column: a null count (a null-text
+    document) counts as 0 tokens, so it can never poison a prefix sum."""
+    return F.coalesce(F.col(token_col).cast("long"), F.lit(0)).alias(
+        "n_tokens")
+
+
+def _next_fit(toks: np.ndarray, cap: int) -> tuple[np.ndarray, np.ndarray]:
+    """Greedy next-fit of ``toks``, in order, into bins of at most ``cap``
+    tokens: a bin takes documents until the next one would overflow it,
+    and a document over ``cap`` sits alone in its bin. Returns each
+    document's bin (dense from 0) and its position inside the bin.
+
+    One step per bin, not per document: over the prefix sums ``c`` the
+    bin opened at ``s`` ends at the last ``e`` with ``c[e] - c[s] <=
+    cap``, one ``searchsorted`` (at least one document per bin)."""
+    toks = np.asarray(toks, dtype=np.int64)
+    if (toks < 0).any():
+        raise ValueError("token counts must be non-negative")
+    n = len(toks)
+    c = np.concatenate(([0], np.cumsum(toks)))
+    starts = []
+    s = 0
+    while s < n:
+        starts.append(s)
+        s = max(int(np.searchsorted(c, c[s] + cap, side="right")) - 1,
+                s + 1)
+    flags = np.zeros(n, dtype=np.int64)
+    flags[starts] = 1
+    bins = np.cumsum(flags) - 1
+    pos = np.arange(n) - np.asarray(starts, dtype=np.int64)[bins]
+    return bins, pos.astype(np.int32)
+
+
 def pack_sequences(
     df: DataFrame,
     max_tokens: int,
@@ -1121,11 +1155,13 @@ def pack_sequences(
     training bins (≤ ``max_tokens`` tokens per bin) — the batch-building
     step of a pretraining pipeline.
 
-    Packing is inherently sequential (the current bin's remaining budget
-    depends on every prior assignment), so it runs as an
-    ``applyInPandas`` scan per (group, shard) in a DETERMINISTIC order
-    (ascending ``id_col``): next-fit — append to the current bin until
-    the next document would overflow, then open a new bin. A document
+    Packing is sequential (the current bin's remaining budget depends
+    on every prior assignment), so each (group, shard) is one
+    ``applyInArrow`` group, packed by :func:`_next_fit` in a
+    DETERMINISTIC order (ascending ``id_col``): next-fit — append to the
+    current bin until the next document would overflow, then open a new
+    bin. A null token count packs as 0 tokens; a negative one raises
+    ``ValueError``. A document
     alone larger than ``max_tokens`` gets its own bin flagged
     ``oversize`` (callers chunk or drop those; silently truncating here
     would corrupt token accounting).
@@ -1159,36 +1195,17 @@ def pack_sequences(
         StructField("n_tokens", LongType()),
         StructField("oversize", IntegerType()),
     ])
+    schema = to_arrow_schema(out_schema)
 
-    def pack(key, pdf):
-        pdf = pdf.sort_values("id", kind="mergesort")
-        toks = pdf["n_tokens"].to_numpy(dtype=np.int64)
-        n = len(toks)
-        bins = np.zeros(n, dtype=np.int64)
-        pos = np.zeros(n, dtype=np.int32)
-        cur_bin, cur_sum, cur_pos = 0, 0, 0
-        for i in range(n):
-            t = int(toks[i])
-            if cur_pos > 0 and cur_sum + t > max_tokens:
-                cur_bin += 1
-                cur_sum, cur_pos = 0, 0
-            bins[i] = cur_bin
-            pos[i] = cur_pos
-            cur_sum += t
-            cur_pos += 1
-            if t > max_tokens:
-                # the oversize doc closed ITS bin: nothing joins it
-                cur_bin += 1
-                cur_sum, cur_pos = 0, 0
-        return pd.DataFrame({
-            "group": np.repeat(key[0], n),
-            "shard": np.repeat(np.int32(key[1]), n),
-            "bin": bins,
-            "pos": pos,
-            "id": pdf["id"].to_numpy(),
-            "n_tokens": toks,
+    def pack(tbl):
+        tbl = tbl.sort_by("id")
+        toks = tbl["n_tokens"].to_numpy()
+        bins, pos = _next_fit(toks, max_tokens)
+        return pa.table({
+            "group": tbl["group"], "shard": tbl["shard"], "bin": bins,
+            "pos": pos, "id": tbl["id"], "n_tokens": toks,
             "oversize": (toks > max_tokens).astype(np.int32),
-        })
+        }, schema=schema)
 
     narrow = df.select(
         F.col(group_col).cast("string").alias("group"),
@@ -1196,9 +1213,9 @@ def pack_sequences(
         .cast("int").alias("shard"),
         # id untouched: type preserved end to end (see docstring)
         F.col(id_col).alias("id"),
-        F.col(token_col).cast("long").alias("n_tokens"),
+        _token_count(token_col),
     )
-    return narrow.groupBy("group", "shard").applyInPandas(pack, out_schema)
+    return narrow.groupBy("group", "shard").applyInArrow(pack, out_schema)
 
 
 def chunk_conversations(
@@ -1219,8 +1236,9 @@ def chunk_conversations(
     the packer).
 
     Greedy boundaries depend on every prior turn, so each conversation
-    is one sequential ``applyInPandas`` scan over its (order, n_tokens)
-    rows — turn TEXT never enters the chunker; callers join chunk ids
+    is one ``applyInArrow`` group over its (order, n_tokens) rows, cut
+    by the packer's :func:`_next_fit` (null counts as 0 tokens, negative
+    raises) — turn TEXT never enters the chunker; callers join chunk ids
     back by (conv, turn). Group size is one conversation (naturally
     bounded — the conv_id skew story of the extract engine does not
     apply to a per-conv scan of ~8-byte rows).
@@ -1240,41 +1258,24 @@ def chunk_conversations(
         StructField("n_tokens", LongType()),
         StructField("oversize", IntegerType()),
     ])
+    schema = to_arrow_schema(out_schema)
 
-    def chunk(key, pdf):
-        pdf = pdf.sort_values("turn", kind="mergesort")
-        toks = pdf["n_tokens"].to_numpy(dtype=np.int64)
-        n = len(toks)
-        chunks = np.zeros(n, dtype=np.int64)
-        pos = np.zeros(n, dtype=np.int32)
-        cur, cur_sum, cur_pos = 0, 0, 0
-        for i in range(n):
-            t = int(toks[i])
-            if cur_pos > 0 and cur_sum + t > max_tokens:
-                cur += 1
-                cur_sum, cur_pos = 0, 0
-            chunks[i] = cur
-            pos[i] = cur_pos
-            cur_sum += t
-            cur_pos += 1
-            if t > max_tokens:
-                cur += 1
-                cur_sum, cur_pos = 0, 0
-        return pd.DataFrame({
-            "conv": np.repeat(key[0], n),
-            "chunk": chunks,
-            "pos": pos,
-            "turn": pdf["turn"].to_numpy(dtype=np.int64),
-            "n_tokens": toks,
+    def chunk(tbl):
+        tbl = tbl.sort_by("turn")
+        toks = tbl["n_tokens"].to_numpy()
+        chunks, pos = _next_fit(toks, max_tokens)
+        return pa.table({
+            "conv": tbl["conv"], "chunk": chunks, "pos": pos,
+            "turn": tbl["turn"], "n_tokens": toks,
             "oversize": (toks > max_tokens).astype(np.int32),
-        })
+        }, schema=schema)
 
     narrow = df.select(
         F.col(conv_col).cast("string").alias("conv"),
         F.col(order_col).cast("long").alias("turn"),
-        F.col(token_col).cast("long").alias("n_tokens"),
+        _token_count(token_col),
     )
-    return narrow.groupBy("conv").applyInPandas(chunk, out_schema)
+    return narrow.groupBy("conv").applyInArrow(chunk, out_schema)
 
 
 def sft_context_windows(
@@ -1296,56 +1297,52 @@ def sft_context_windows(
     ``n_ctx_turns`` 0 and ``ctx_start`` = its own turn — visible to the
     caller's policy, never silently dropped.
 
-    Execution mirrors :func:`chunk_conversations`: turn TEXT never
-    enters the operator — one per-conversation ``applyInPandas`` over
-    (turn, role, n_tokens) rows, with the window starts found by one
-    vectorized ``searchsorted`` over the conversation's token prefix
-    sums (O(n log n) per conversation, whale-proof). Pair
-    materialization is :func:`assemble_sft_pairs`."""
+    Execution is two JVM window passes over skinny (turn, role,
+    n_tokens) rows — turn TEXT never enters the operator. Per
+    conversation in turn order: the row number ``rn`` and the exclusive
+    token prefix ``pre`` (a null count is 0 tokens). A target's context
+    then starts right after the last row that does not fit, the last
+    row with ``pre`` at least ``budget + 1`` below the target's: its
+    ``rn``, inclusive prefix and next turn are maxima over a
+    ``rangeBetween(unboundedPreceding, -budget - 1)`` frame ordered by
+    ``pre``. That frame only grows, so each conversation is one pass at
+    any budget; a sliding ``rangeBetween(-budget, 0)`` frame would
+    re-aggregate its whole buffer at every row. Pair materialization
+    is :func:`assemble_sft_pairs`."""
     if budget_tokens <= 0:
         raise ValueError("budget_tokens must be positive")
-    from pyspark.sql.types import (IntegerType, LongType, StringType,
-                                   StructField, StructType)
-
-    out_schema = StructType([
-        StructField("conv", StringType()),
-        StructField("turn", LongType()),
-        StructField("ctx_start", LongType()),
-        StructField("n_ctx_turns", IntegerType()),
-        StructField("ctx_n_tokens", LongType()),
-    ])
-
-    def windows(key, pdf):
-        pdf = pdf.sort_values("turn", kind="mergesort")
-        # a NULL token count would cast NaN → INT64_MIN and wreck the
-        # prefix sums' monotonicity (searchsorted then returns garbage
-        # silently); a null-text turn contributes zero tokens instead
-        toks = pdf["n_tokens"].fillna(0).to_numpy(dtype=np.int64)
-        turns = pdf["turn"].to_numpy(dtype=np.int64)
-        pre = np.concatenate(([0], np.cumsum(toks)))[:-1]  # pre[i]=sum(<i)
-        tgt = np.flatnonzero(
-            (pdf["role"] == target_role).to_numpy())
-        if len(tgt) == 0:
-            return pd.DataFrame(
-                {c.name: pd.Series(dtype=object) for c in out_schema})
-        # smallest j with pre[j] >= pre[i] - B; pre nondecreasing
-        js = np.searchsorted(pre, pre[tgt] - budget_tokens, side="left")
-        js = np.minimum(js, tgt)  # context never includes the target
-        return pd.DataFrame({
-            "conv": np.repeat(key[0], len(tgt)),
-            "turn": turns[tgt],
-            "ctx_start": turns[js],
-            "n_ctx_turns": (tgt - js).astype(np.int32),
-            "ctx_n_tokens": pre[tgt] - pre[js],
-        })
-
-    narrow = df.select(
-        F.col(conv_col).cast("string").alias("conv"),
-        F.col(order_col).cast("long").alias("turn"),
-        F.col(role_col).cast("string").alias("role"),
-        F.col(token_col).cast("long").alias("n_tokens"),
+    by_turn = Window.partitionBy("conv").orderBy("turn")
+    cut = Window.partitionBy("conv").orderBy("pre").rangeBetween(
+        Window.unboundedPreceding, -budget_tokens - 1)
+    return (
+        df.select(
+            F.col(conv_col).cast("string").alias("conv"),
+            F.col(order_col).cast("long").alias("turn"),
+            F.col(role_col).cast("string").alias("role"),
+            _token_count(token_col),
+        )
+        .withColumn("rn", F.row_number().over(by_turn))
+        .withColumn("pre", F.coalesce(F.sum("n_tokens").over(
+            by_turn.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)))
+        .withColumn("next_turn", F.lead("turn").over(by_turn))
+        .withColumn("first_turn", F.first("turn").over(by_turn))
+        .select(
+            "conv", "turn", "role", "rn", "pre", "first_turn",
+            F.max("rn").over(cut).alias("cut_rn"),
+            F.max(F.col("pre") + F.col("n_tokens")).over(cut)
+            .alias("cut_pre"),
+            F.max("next_turn").over(cut).alias("cut_next"),
+        )
+        .where(F.col("role") == target_role)
+        .select(
+            "conv", "turn",
+            F.coalesce("cut_next", "first_turn").alias("ctx_start"),
+            (F.col("rn") - F.coalesce("cut_rn", F.lit(0)) - 1)
+            .alias("n_ctx_turns"),
+            (F.col("pre") - F.coalesce("cut_pre", F.lit(0)))
+            .alias("ctx_n_tokens"),
+        )
     )
-    return narrow.groupBy("conv").applyInPandas(windows, out_schema)
 
 
 def assemble_sft_pairs(
@@ -1365,9 +1362,9 @@ def assemble_sft_pairs(
     sides by conv to make the equi-part exchange-free). Zero-context
     targets appear with an empty array."""
     # windows fans out below (context join + target join); without a
-    # boundary the per-conv applyInPandas would execute once per
-    # consumer — the rows are skinny (5 scalars per target turn), so
-    # the materialization is cheap at any scale
+    # boundary its window plan (two sorts per conversation) would
+    # execute once per consumer — the rows are skinny (5 scalars per
+    # target turn), so the materialization is cheap at any scale
     windows = windows.transform(pin)
     t = df.select(
         F.col(conv_col).cast("string").alias("conv"),

@@ -395,9 +395,10 @@ def build_sft_corpus(
         funnel.append(("decontamination", base))
 
     # materialized HERE so the returned windows and the pair assembly
-    # share one evaluation of the dedup/decontaminate/window pipeline
-    # (assemble_sft_pairs re-checkpoints its copy — a cheap second pass
-    # over already-materialized skinny rows, not a recompute)
+    # share one evaluation of the dedup/decontaminate pipeline and of
+    # the window plan's two per-conversation sorts (assemble_sft_pairs
+    # re-checkpoints its copy — a cheap second pass over already-
+    # materialized skinny rows, not a recompute)
     windows = sft_context_windows(
         base, budget_tokens,
         target_role=target_role).transform(pin)

@@ -82,51 +82,21 @@ def extract_stream(
 
 
 def dedupe_stream(src: DataFrame) -> DataFrame:
-    """Custom stateful operator: exactly-once turn dedupe across
-    micro-batches via ``applyInPandasWithState``.
+    """Exactly-once turn dedupe across micro-batches: Spark's streaming
+    ``dropDuplicates`` on (conv_id, turn_idx).
 
     An at-least-once upstream (replayed kafka offsets, re-dropped files)
     can deliver the same (conv_id, turn_idx) twice, possibly in
-    different micro-batches — beyond ``dropDuplicates``' power without a
-    watermark-bounded buffer. State per conv_id is the set of turn_idx
-    already emitted (a per-conversation bitmap at scale); a turn passes
-    through iff its index is unseen. First-writer-wins, deterministic.
+    different micro-batches. The state store keeps every key already
+    emitted, with no watermark, so a replay is dropped however late it
+    arrives; within a batch the first copy seen passes. A null
+    ``turn_idx`` has no dedupe identity and is dropped (poison-row
+    policy: it must not kill the query). ``dropDuplicatesWithinWatermark``
+    would bound the state but let a replay later than the watermark
+    through.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = TRANSCRIPT_SCHEMA
-    state_schema = StructType([StructField("seen", StringType())])
-
-    def dedupe(key, pdfs, state: GroupState):
-        seen = set()
-        if state.exists:
-            (seen_csv,) = state.get
-            if seen_csv:
-                seen = set(int(x) for x in seen_csv.split(","))
-        frames = []
-        for pdf in pdfs:
-            # poison-row policy: a null turn_idx (NaN after Arrow->pandas)
-            # has no dedupe identity and must not kill the query — drop it
-            pdf = pdf[pdf["turn_idx"].notna()]
-            fresh = pdf[~pdf["turn_idx"].isin(seen)]
-            # dedupe within the batch too, keeping first occurrence
-            fresh = fresh[~fresh["turn_idx"].duplicated()]
-            seen.update(int(t) for t in fresh["turn_idx"])
-            frames.append(fresh)
-        # NOTE on state shape: a CSV int-set is fine for conversation-
-        # sized groups; at 10^12 turns swap for a range-compressed
-        # bitmap (turn_idx is dense per conv) and a ProcessingTime
-        # timeout to expire finished conversations.
-        state.update((",".join(str(t) for t in seen),))
-        out = pd.concat(frames) if frames else pd.DataFrame()
-        if len(out):
-            yield out
-
-    return src.groupBy("conv_id").applyInPandasWithState(
-        dedupe, out_schema, state_schema, "append",
-        GroupStateTimeout.NoTimeout,
-    )
+    return src.where(F.col("turn_idx").isNotNull()).dropDuplicates(
+        ["conv_id", "turn_idx"])
 
 
 def quality_metrics_stream(

@@ -143,11 +143,11 @@ def test_build_on_real_testdata(spark):
 
 def test_pipeline_plan_has_one_python_stage(spark):
     """The only Python in the composed plan is the packer's
-    applyInPandas; every cleaning stage stays JVM-side."""
+    applyInArrow; every cleaning stage stays JVM-side."""
     docs = _mk_docs(spark)
     out = build_training_corpus(docs, boiler_min_df=3, substr_min_len=6)
     plan = out["packed"]._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert plan.count("FlatMapGroupsInArrow") == 1
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
 

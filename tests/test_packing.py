@@ -221,6 +221,71 @@ def _cdf(spark, rows):
         rows, "conv_id string, turn_idx long, n_tokens long")
 
 
+def _greedy_loop(toks, cap):
+    """The greedy next-fit spec, written straight: one step per doc,
+    (bin, pos) per doc; a doc over ``cap`` closes its own bin."""
+    out = []
+    cur, cur_sum, cur_pos = 0, 0, 0
+    for n in toks:
+        if cur_pos > 0 and cur_sum + n > cap:
+            cur, cur_sum, cur_pos = cur + 1, 0, 0
+        out.append((cur, cur_pos))
+        cur_sum += n
+        cur_pos += 1
+        if n > cap:
+            cur, cur_sum, cur_pos = cur + 1, 0, 0
+    return out
+
+
+def test_next_fit_kernel_matches_greedy_loop():
+    """The per-bin prefix-sum kernel against the per-doc loop, no Spark:
+    zero-token docs, oversize docs first and last, exact fits, n = 0."""
+    import numpy as np
+    from sparkocr.analysis import _next_fit
+
+    rng = np.random.default_rng(7)
+    cases = [([], 5), ([0, 0, 0], 5), ([9, 1, 2], 5), ([1, 2, 9], 5),
+             ([9], 5), ([5, 0, 5, 0], 5), ([9, 0, 0, 9, 0], 5)]
+    for _ in range(2000):
+        n = int(rng.integers(0, 40))
+        cap = int(rng.integers(1, 50))
+        toks = rng.integers(0, 60, n)
+        toks[rng.random(n) < 0.2] = 0
+        if n and rng.random() < 0.5:
+            toks[[0, -1]] = cap + rng.integers(1, 20, 2)
+        cases.append((toks.tolist(), cap))
+    for toks, cap in cases:
+        bins, pos = _next_fit(np.array(toks, dtype=np.int64), cap)
+        assert list(zip(bins.tolist(), pos.tolist())) == \
+            _greedy_loop(toks, cap), (toks, cap)
+    with pytest.raises(ValueError):
+        _next_fit(np.array([3, -1, 2]), 5)
+
+
+def test_null_token_count_packs_as_zero(spark):
+    """A null count is 0 tokens in both packers, never a NaN cast to
+    INT64_MIN that lets every doc share one bin."""
+    from sparkocr.analysis import chunk_conversations
+    rows = [(0, "a", 5), (1, "a", None), (2, "a", 7), (3, "a", 9)]
+    got = sorted((r["id"], r["bin"], r["pos"], r["n_tokens"]) for r in
+                 pack_sequences(_df(spark, rows), max_tokens=10).collect())
+    assert got == [(0, 0, 0, 5), (1, 0, 1, 0), (2, 1, 0, 7), (3, 2, 0, 9)]
+    crows = [("c", i, n) for i, _, n in rows]
+    got = sorted((r["turn"], r["chunk"], r["pos"], r["n_tokens"]) for r in
+                 chunk_conversations(_cdf(spark, crows), 10).collect())
+    assert got == [(0, 0, 0, 5), (1, 0, 1, 0), (2, 1, 0, 7), (3, 2, 0, 9)]
+
+
+def test_negative_token_count_raises(spark):
+    from sparkocr.analysis import chunk_conversations
+    rows = [(0, "a", 5), (1, "a", -3), (2, "a", 7)]
+    with pytest.raises(Exception, match="non-negative"):
+        pack_sequences(_df(spark, rows), max_tokens=10).collect()
+    with pytest.raises(Exception, match="non-negative"):
+        chunk_conversations(
+            _cdf(spark, [("c", i, n) for i, _, n in rows]), 10).collect()
+
+
 def test_chunk_conversations_hand_golden(spark):
     from sparkocr.analysis import chunk_conversations
     rows = [("c", 0, 30), ("c", 1, 30), ("c", 2, 10),   # 30+30 | next
@@ -255,15 +320,10 @@ def test_chunk_conversations_matches_reference_loop(spark):
     for c, t, n in rows:
         by_conv.setdefault(c, []).append((t, n))
     for c, turns in by_conv.items():
-        cur, cur_sum, cur_pos = 0, 0, 0
-        for t, n in sorted(turns):
-            if cur_pos > 0 and cur_sum + n > B:
-                cur, cur_sum, cur_pos = cur + 1, 0, 0
-            want[(c, t)] = (cur, cur_pos, int(n > B))
-            cur_sum += n
-            cur_pos += 1
-            if n > B:
-                cur, cur_sum, cur_pos = cur + 1, 0, 0
+        turns.sort()
+        placed = _greedy_loop([n for _, n in turns], B)
+        for (t, n), (ch, pos) in zip(turns, placed):
+            want[(c, t)] = (ch, pos, int(n > B))
     got = {(r["conv"], r["turn"]): (r["chunk"], r["pos"], r["oversize"])
            for r in chunk_conversations(
                _cdf(spark, rows).repartition(7), B).collect()}

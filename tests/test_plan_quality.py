@@ -95,15 +95,15 @@ def test_relational_ops_stay_in_codegen(spark, sf):
 def test_no_row_at_a_time_python_udfs_in_package(spark):
     """The input_hint mandates zero per-row Python: every UDF in the
     package must be Arrow-vectorized, never
-    pyspark.sql.functions.udf. A stateless stage crosses the boundary
-    as Arrow (arrow_udf / mapInArrow), never through pandas
-    (pandas_udf / mapInPandas); only the grouped applyInPandas stages
-    remain on pandas."""
+    pyspark.sql.functions.udf. Every stage crosses the boundary as
+    Arrow (arrow_udf / mapInArrow / applyInArrow), never through pandas
+    (pandas_udf / mapInPandas / applyInPandas, whose prefix also
+    matches applyInPandasWithState)."""
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parents[1] / "sparkocr"
     banned = ("F.udf(", "functions.udf(", "@udf", "pandas_udf(",
-              "mapInPandas(")
+              "mapInPandas(", "applyInPandas")
     offenders = []
     for p in root.glob("*.py"):
         src = p.read_text()

@@ -127,7 +127,7 @@ class TestWhaleConversation:
 
     def test_sft_chunking_survives_the_whale_conv(self, spark):
         """The SFT-path half of the conversation-whale claim: the
-        greedy chunker scans each conversation as ONE applyInPandas
+        greedy chunker scans each conversation as ONE applyInArrow
         group — the whale conv is a single 30k-row group of 8-byte
         rows, which must stay cheap (the chunker's docstring argues
         per-conv groups are 'naturally bounded'; this plants the

@@ -97,11 +97,17 @@ def test_dedupe_stream_exactly_once_across_batches(spark, tmp_path):
     assert spark.read.parquet(out).count() == cut
 
     # batch 2: remaining turns PLUS a full replay of batch 1 — the
-    # replayed turns must be dropped by state that outlived the batch
+    # replayed turns must be dropped by state that outlived the batch —
+    # plus an in-batch duplicate of a fresh turn and a null-turn_idx row
     import pandas as pd
-    _write_batch(spark, pd.concat([pdf.iloc[cut:], pdf.iloc[:cut]]), src)
+    fresh = pdf.iloc[cut:]
+    batch2 = pd.concat([fresh, pdf.iloc[:cut], fresh.iloc[:1],
+                        fresh.iloc[:1].assign(turn_idx=None)])
+    batch2["turn_idx"] = batch2["turn_idx"].astype("Int32")
+    _write_batch(spark, batch2, src)
     run_batch()
     got = spark.read.parquet(out)
     assert got.count() == len(pdf)
     keys = [(r["conv_id"], r["turn_idx"]) for r in got.collect()]
     assert len(set(keys)) == len(keys) == len(pdf)
+    assert set(keys) == set(zip(pdf["conv_id"], pdf["turn_idx"]))
