@@ -862,7 +862,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from sparkocr.lm import dsir_sample
 
         docs = _t(spark, sf, "documents")
-        weights = docs.select(
+        # an empty document has no log weight: Spark's log(0) is null
+        # where DuckDB's ln(0) raises, so both sides sample only n >= 1
+        weights = docs.where(F.col("n_chars") >= 1).select(
             "doc_id",
             F.round(F.log(F.col("n_chars").cast("double")) - F.lit(5.7),
                     6).alias("log_w"))
@@ -1798,14 +1800,20 @@ def oracle_sql() -> dict[str, str]:
         """,
         "dsir_chunk_documents": """
             WITH RECURSIVE weights AS (
+              -- n_chars >= 1 as in the Spark op: ln(0) raises here
+              -- where Spark's log(0) is null
               SELECT doc_id,
                      round(ln(CAST(n_chars AS DOUBLE)) - 5.7, 6) AS log_w
-              FROM documents
+              FROM documents WHERE n_chars >= 1
             ), gumbel AS (
               -- the sampler's seedless-deterministic Gumbel key: u from
               -- the first 12 md5 hex digits of the key (48 bits, exact
               -- in a double), g = -ln(-ln(u)); same double rounding as
-              -- the Spark op (log_w to 6dp, then the sum to 6dp)
+              -- the Spark op (log_w to 6dp, then the sum to 6dp). The
+              -- 6dp keys match only because the JVM's log and DuckDB's
+              -- (the platform libm's) agree to within an ulp: a value
+              -- within an ulp of a rounding boundary (none in the
+              -- data) could round apart
               SELECT doc_id, log_w,
                      round(log_w + -ln(-ln(
                        (CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))

@@ -394,6 +394,40 @@ def test_chunk_oracle_cte_matches_kernel_randomized(spark):
     assert got == want
 
 
+def test_dsir_chunk_query_and_oracle_skip_empty_documents(spark, tmp_path):
+    """An empty document has no DSIR log weight: DuckDB's ln(0) raises
+    where Spark's log(0) is null, so the contract query and its oracle
+    both sample only documents with n_chars >= 1, and both still chunk
+    every document."""
+    import random
+
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    rng = random.Random(5)
+    rows = [(d, "" if d % 9 == 0 else " ".join(
+        "w%d" % rng.randrange(9) for _ in range(rng.randrange(1, 400))),
+        f"src{d % 4}") for d in range(60)]
+    rows = [(d, t, s, len(t)) for d, t, s in rows]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, source string, n_chars long"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    got = entrymod.queries()["dsir_chunk_documents"](spark, str(tmp_path))
+    got = sorted(tuple(r) for r in got.collect())
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/documents.parquet/*.parquet')")
+    want = sorted(con.execute(
+        entrymod.oracle_sql()["dsir_chunk_documents"]).fetchall())
+    assert [r for r in got if r[0] == "dsir"] == [
+        r for r in want if r[0] == "dsir"]
+    assert got == want
+    empty = {str(d) for d, _, _, n in rows if n == 0}
+    assert not empty & {r[1] for r in got if r[0] == "dsir"}
+    assert sum(r[0] == "chunk" for r in got) == len(rows)
+
+
 # ---------------------------------------------------------------------------
 # sft_mask_spans
 

@@ -1,16 +1,19 @@
 """The Python-worker daemon of local sessions (``sparkocr.pydaemon``):
-a zip archive's directory is re-read by ``importlib.invalidate_caches()``
-only when the archive changed, per importer, and the workers of the
-test session run under it."""
+it imports pyspark and py4j from their installed copies when those
+match Spark's zips, a zip archive's directory is re-read by
+``importlib.invalidate_caches()`` only when the archive changed, per
+importer, and the workers of the test session run under it."""
 
 import importlib
 import os
+import subprocess
 import sys
 import uuid
 import zipfile
 import zipimport
 
 import pyarrow as pa
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -66,6 +69,73 @@ def test_zip_directory_reread_only_when_archive_changes(tmp_path, monkeypatch):
     assert reads.count(zpath) == 2
     assert importlib.import_module(b).Y == 2
     assert importlib.import_module(f"{pkg}.sub").Z == 3
+
+
+def _package(root, pkg, version_py):
+    os.makedirs(os.path.join(root, pkg))
+    for name, src in (("__init__.py", ""), ("version.py", version_py)):
+        with open(os.path.join(root, pkg, name), "w") as f:
+            f.write(src)
+    return str(root)
+
+
+def test_shipped_zip_dropped_only_for_a_same_version_twin(tmp_path):
+    zpath = str(tmp_path / "pyspark.zip")
+    _write_zip(zpath, {"pyspark/__init__.py": "",
+                       "pyspark/version.py": "__version__: str = '4.1.2'\n"})
+    same = _package(tmp_path / "same", "pyspark", "__version__ = '4.1.2'\n")
+    other = _package(tmp_path / "other", "pyspark", "__version__ = '4.0.0'\n")
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+
+    assert pydaemon.redundant_zips([zpath, empty, same]) == [zpath]
+    assert pydaemon.redundant_zips([zpath, other]) == []
+    assert pydaemon.redundant_zips([zpath, empty]) == []
+    # only the first directory copy on the path counts: it is the one
+    # that would be imported
+    assert pydaemon.redundant_zips([zpath, other, same]) == []
+    # a zip of another package is never dropped
+    lib = str(tmp_path / "lib.zip")
+    _write_zip(lib, {"lib/__init__.py": ""})
+    assert pydaemon.redundant_zips([lib, same]) == []
+
+
+def test_importing_the_package_imports_no_pyspark():
+    # ``python -m sparkocr.pydaemon`` imports the package before its
+    # ``__main__`` drops the zips: a pyspark import there would load
+    # the zip's copy first
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = "import sparkocr, sys; print(sorted(m for m in sys.modules " \
+           "if m.split('.')[0] in ('pyspark', 'py4j')))"
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, check=True,
+                         capture_output=True, text=True).stdout
+    assert out.strip() == "[]"
+
+
+def test_session_workers_import_the_installed_pyspark(spark):
+    def probe(batches):
+        import os
+
+        import py4j
+        import pyspark
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({
+            "pyspark": [pyspark.__file__], "py4j": [py4j.__file__],
+            "path": [os.environ["PYTHONPATH"]]})
+
+    rows = spark.range(0, 4, 1, 4).mapInArrow(
+        probe, "pyspark string, py4j string, path string").collect()
+    # the daemon's PYTHONPATH, as Spark set it, names the shipped zips
+    shipped = rows[0].path.split(os.pathsep)
+    zips = [p for p in shipped if p.endswith(".zip")]
+    assert len(zips) >= 2
+    if pydaemon.redundant_zips(shipped + sys.path) != zips:
+        pytest.skip("Spark's zips have no installed twins of their version")
+    for r in rows:
+        for f in (r.pyspark, r.py4j):
+            assert ".zip" + os.sep not in f, f
 
 
 def test_session_workers_run_the_daemon_patch(spark):
